@@ -97,9 +97,16 @@ private[graft] object StandingIndex {
   def readMetaRow(spark: SparkSession, path: String): MetaRow = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val conf = spark.sparkContext.hadoopConfiguration
-    val dataFile = listDataFiles(spark, path).headOption.getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no parquet data file under meta sidecar dir $path"))
+    val dataFile = listDataFiles(spark, path) match {
+      case Seq(f) => f
+      case Seq() => throw new java.io.FileNotFoundException(
+        s"no parquet data file under meta sidecar dir $path")
+      // a leftover beside a fresh publish (an interrupted overwrite):
+      // reading either one would be an arbitrary pick
+      case many => throw new IllegalStateException(
+        s"meta sidecar dir $path holds ${many.size} data files, expected one: " +
+          many.map(_.getName).sorted.mkString(", "))
+    }
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
         dataFile)

@@ -4,7 +4,7 @@ import graft.operators.Dedup
 import graft.sources.{Csv, Sinks}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The reference's extract → transform → load DAG re-expressed as an
   * in-process pipeline (SURVEY.md §2.10 O1-O4, §3.3).
@@ -49,15 +49,21 @@ object Etl {
     * with one extra count job and keeps every stage distributed — the
     * 100 TB-safe replacement for both monotonically_increasing_id
     * (nondeterministic) and row_number() over a global Window (collapses
-    * to one task).
+    * to one task). An existing `id` column is replaced in place, as the
+    * reference's `withColumn("id", ...)` does (DAG/ETL.py); `orderCol`
+    * may be that column.
     */
   def withDeterministicId(df: DataFrame, orderCol: String): DataFrame = {
     val spark = df.sparkSession
     val sorted = df.repartitionByRange(col(orderCol)).sortWithinPartitions(col(orderCol))
-    val withIdx = sorted.rdd.zipWithIndex.map { case (row, idx) =>
-      Row.fromSeq(row.toSeq :+ idx)
+    val fields = sorted.schema.fields
+    val existing = fields.indexWhere(f => spark.sessionState.conf.resolver(f.name, "id"))
+    val (at, replaced) = if (existing < 0) (fields.length, 0) else (existing, 1)
+    val withIdx = sorted.rdd.zipWithIndex().map { case (row, idx) =>
+      Row.fromSeq(row.toSeq.patch(at, Seq(idx), replaced))
     }
-    spark.createDataFrame(withIdx, sorted.schema.add("id", LongType, nullable = false))
+    spark.createDataFrame(withIdx, StructType(
+      fields.patch(at, Seq(StructField("id", LongType, nullable = false)), replaced)))
   }
 
   /** load: write through the sink abstraction (K3/K4). */

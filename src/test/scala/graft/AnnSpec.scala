@@ -1477,6 +1477,19 @@ class AnnSpec extends SparkSpec {
     }
   }
 
+  test("a meta sidecar dir with a leftover second data file fails loudly") {
+    import graft.operators.StandingIndex
+    val dir = java.nio.file.Files.createTempDirectory("graft_meta2").toString + "/meta"
+    StandingIndex.publishMetaRow(spark, dir, Seq("n" -> StandingIndex.MetaLong(3L)))
+    assert(StandingIndex.readMetaRow(spark, dir).get[Long]("n") == 3L)
+    // an interrupted overwrite's leftover beside the fresh file
+    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "part-00000.parquet"),
+      java.nio.file.Paths.get(dir, "part-00001.parquet"))
+    val e = intercept[IllegalStateException](StandingIndex.readMetaRow(spark, dir))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("2 data files"),
+      e.getMessage)
+  }
+
   test("annSearchAuto's SQ8 recall claim tracks the published configuration") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sq8claim")
       .toString

@@ -83,161 +83,263 @@ class ConnectedComponentsSpec extends SparkSpec {
     n.map(x => x -> find(x)).toMap
   }
 
+  private val broadcastBounds = Seq("spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+  /** Runs `body` with both broadcast bounds at -1, which turns run()'s
+    * driver finish off, so every edge set takes the star loop; the
+    * session's own settings are restored afterwards.
+    */
+  private def onStarLoop[T](body: => T): T = {
+    val saved = broadcastBounds.map(k => k -> spark.conf.getAll.get(k))
+    broadcastBounds.foreach(spark.conf.set(_, "-1"))
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The parity cases run on both CC paths: the session default, where
+    * these small edge sets finish on the driver, and the star loop.
+    */
+  private def onBothPaths(body: => Unit): Unit = {
+    withClue("[driver finish] ")(body)
+    withClue("[star loop] ")(onStarLoop(body))
+  }
+
   test("CC matches union-find on random graphs (seeded)") {
-    val rnd = new scala.util.Random(7)
-    for (trial <- 1 to 3) {
-      val n = 60 + trial * 40
-      val ids = (0L until n.toLong)
-      val edges = (0 until n * 2).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      val got = ConnectedComponents.run(
-        ids.toDF("id"), edges.toDF("src", "dst"))
-        .as[(Long, Long)].collect().toMap
-      val expected = unionFind(ids, edges)
-      // canonicalize: component labels must equal min member id
-      assert(got == expected, s"trial $trial")
+    onBothPaths {
+      val rnd = new scala.util.Random(7)
+      for (trial <- 1 to 3) {
+        val n = 60 + trial * 40
+        val ids = (0L until n.toLong)
+        val edges = (0 until n * 2).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        val got = ConnectedComponents.run(
+          ids.toDF("id"), edges.toDF("src", "dst"))
+          .as[(Long, Long)].collect().toMap
+        val expected = unionFind(ids, edges)
+        // canonicalize: component labels must equal min member id
+        assert(got == expected, s"trial $trial")
+      }
     }
   }
 
   test("CC on a path graph (worst case for plain label propagation)") {
-    val n = 200L
-    val ids = (0L until n)
-    val edges = (0L until n - 1).map(i => (i, i + 1))
-    val got = ConnectedComponents.run(ids.toDF("id"), edges.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    assert(got.values.toSet == Set(0L))
+    onBothPaths {
+      val n = 200L
+      val ids = (0L until n)
+      val edges = (0L until n - 1).map(i => (i, i + 1))
+      val got = ConnectedComponents.run(ids.toDF("id"), edges.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      assert(got.values.toSet == Set(0L))
+    }
   }
 
   test("isolated vertices are their own component") {
-    val got = ConnectedComponents.run(
-      Seq(1L, 2L, 3L).toDF("id"), Seq((1L, 2L)).toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+    onBothPaths {
+      val got = ConnectedComponents.run(
+        Seq(1L, 2L, 3L).toDF("id"), Seq((1L, 2L)).toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+    }
+  }
+
+  test("self-loops and duplicate edges only") {
+    onBothPaths {
+      // all self-loops: the normalized edge set is empty
+      val loops = Seq((1L, 1L), (2L, 2L), (2L, 2L))
+      assert(ConnectedComponents.run(Seq(1L, 2L, 3L).toDF("id"),
+          loops.toDF("src", "dst")).as[(Long, Long)].collect().toMap ==
+        Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+      // repeated and mirrored copies of two edges among self-loops
+      val edges = Seq((2L, 3L), (3L, 2L), (2L, 3L), (4L, 4L), (6L, 5L),
+        (5L, 6L), (6L, 6L), (6L, 5L))
+      val ids = 1L to 7L
+      val got = ConnectedComponents.run(ids.toDF("id"), edges.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      assert(got == unionFind(ids, edges))
+      assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 4L, 5L -> 5L,
+        6L -> 5L, 7L -> 7L))
+    }
+  }
+
+  test("the edge count picks the path: no star round under the bound, rounds at -1") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val n = 200L
+    val ids = (0L until n).toDF("id")
+    val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // a star round is the only CC query with a window (the star steps'
+    // min over partition by src)
+    val rounds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("Window") => rounds.incrementAndGet()
+        case _ =>
+      }
+    }
+    // listener events are async and the bus API is private[spark]:
+    // drain by polling the counters until they are stable twice over
+    def drain(): Unit = {
+      var last = (-1, -1); var stable = 0
+      while (stable < 2) {
+        Thread.sleep(150)
+        val now = (jobs.get(), rounds.get())
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+    }
+    def profile(body: => Unit): (Int, Int) = {
+      drain()
+      val (j0, r0) = (jobs.get(), rounds.get())
+      body
+      drain()
+      (jobs.get() - j0, rounds.get() - r0)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      def labels() = ConnectedComponents.run(ids, edges).as[(Long, Long)].collect()
+      val (driverJobs, driverRounds) = profile(assert(labels().forall(_._2 == 0L)))
+      val (loopJobs, loopRounds) = profile(onStarLoop(assert(labels().forall(_._2 == 0L))))
+      assert(driverRounds == 0, s"$driverRounds star rounds under the bound")
+      assert(loopRounds >= 1, "no star round with the bounds at -1")
+      assert(driverJobs < loopJobs, s"driver finish $driverJobs jobs vs loop $loopJobs")
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("incrementalAssign equals the full recompute: bridge merge, attach, isolated") {
-    import org.apache.spark.sql.functions.col
-    // standing corpus: components {1,2} (label 1) and {5,6} (label 5)
-    val corpusVerts = Seq(1L, 2L, 5L, 6L).toDF("id")
-    val corpusEdges = Seq((1L, 2L), (5L, 6L)).toDF("src", "dst")
-    val standing = ConnectedComponents.run(corpusVerts, corpusEdges)
-    // batch: 3 bridges the two standing components; 10 attaches to {5,6};
-    // 7 is isolated; 0 attaches to {5,6} and is SMALLER than the label
-    val batchVerts = Seq(3L, 10L, 7L, 0L).toDF("id")
-    val batchEdges = Seq((3L, 1L), (3L, 5L), (10L, 6L), (0L, 6L))
-      .toDF("src", "dst")
-    val got = ConnectedComponents
-      .incrementalAssign(standing, batchVerts, batchEdges)
-      .as[(Long, Long)].collect().toMap
-    // full recompute over the whole graph gives the ground truth
-    val full = ConnectedComponents.run(
-        corpusVerts.unionByName(batchVerts),
-        corpusEdges.unionByName(batchEdges))
-      .as[(Long, Long)].collect().toMap
-    assert(got == full.filter(kv => Set(3L, 10L, 7L, 0L)(kv._1)))
-    // the merge + the smaller-than-label batch id: everything touching
-    // {5,6} or the bridge collapses to min id 0
-    assert(got(3L) == 0L && got(10L) == 0L && got(0L) == 0L)
-    assert(got(7L) == 7L)
+    onBothPaths {
+      import org.apache.spark.sql.functions.col
+      // standing corpus: components {1,2} (label 1) and {5,6} (label 5)
+      val corpusVerts = Seq(1L, 2L, 5L, 6L).toDF("id")
+      val corpusEdges = Seq((1L, 2L), (5L, 6L)).toDF("src", "dst")
+      val standing = ConnectedComponents.run(corpusVerts, corpusEdges)
+      // batch: 3 bridges the two standing components; 10 attaches to {5,6};
+      // 7 is isolated; 0 attaches to {5,6} and is SMALLER than the label
+      val batchVerts = Seq(3L, 10L, 7L, 0L).toDF("id")
+      val batchEdges = Seq((3L, 1L), (3L, 5L), (10L, 6L), (0L, 6L))
+        .toDF("src", "dst")
+      val got = ConnectedComponents
+        .incrementalAssign(standing, batchVerts, batchEdges)
+        .as[(Long, Long)].collect().toMap
+      // full recompute over the whole graph gives the ground truth
+      val full = ConnectedComponents.run(
+          corpusVerts.unionByName(batchVerts),
+          corpusEdges.unionByName(batchEdges))
+        .as[(Long, Long)].collect().toMap
+      assert(got == full.filter(kv => Set(3L, 10L, 7L, 0L)(kv._1)))
+      // the merge + the smaller-than-label batch id: everything touching
+      // {5,6} or the bridge collapses to min id 0
+      assert(got(3L) == 0L && got(10L) == 0L && got(0L) == 0L)
+      assert(got(7L) == 7L)
 
-    // seeded random graph: parity on every batch vertex
-    val rng = new scala.util.Random(7)
-    val n = 60
-    val allEdges = (1 to 80).map(_ =>
-      (rng.nextInt(n).toLong, rng.nextInt(n).toLong)).filter(e => e._1 != e._2)
-    val (corpusIds, batchIds) = (0L until n).partition(_ % 4 != 0)
-    val cE = allEdges.filter(e =>
-      corpusIds.contains(e._1) && corpusIds.contains(e._2))
-    val bE = allEdges.filter(e =>
-      batchIds.contains(e._1) || batchIds.contains(e._2))
-    val st = ConnectedComponents.run(corpusIds.toDF("id"), cE.toDF("src", "dst"))
-    val inc = ConnectedComponents.incrementalAssign(
-        st, batchIds.toDF("id"), bE.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    val fullR = ConnectedComponents.run(
-        (0L until n).toDF("id"), allEdges.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    batchIds.foreach { b =>
-      assert(inc(b) == fullR(b), s"batch vertex $b: ${inc(b)} vs ${fullR(b)}")
+      // seeded random graph: parity on every batch vertex
+      val rng = new scala.util.Random(7)
+      val n = 60
+      val allEdges = (1 to 80).map(_ =>
+        (rng.nextInt(n).toLong, rng.nextInt(n).toLong)).filter(e => e._1 != e._2)
+      val (corpusIds, batchIds) = (0L until n).partition(_ % 4 != 0)
+      val cE = allEdges.filter(e =>
+        corpusIds.contains(e._1) && corpusIds.contains(e._2))
+      val bE = allEdges.filter(e =>
+        batchIds.contains(e._1) || batchIds.contains(e._2))
+      val st = ConnectedComponents.run(corpusIds.toDF("id"), cE.toDF("src", "dst"))
+      val inc = ConnectedComponents.incrementalAssign(
+          st, batchIds.toDF("id"), bE.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      val fullR = ConnectedComponents.run(
+          (0L until n).toDF("id"), allEdges.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      batchIds.foreach { b =>
+        assert(inc(b) == fullR(b), s"batch vertex $b: ${inc(b)} vs ${fullR(b)}")
+      }
     }
   }
 
   test("mergeRepublish equals the full recompute over corpus + batch") {
-    // bridge fixture: batch 3 bridges {1,2} and {5,6}; 0 attaches below
-    // the label; 7 isolated — the republished standing must relabel BOTH
-    // bridged components to the new minimum 0
-    val corpusVerts = Seq(1L, 2L, 5L, 6L).toDF("id")
-    val corpusEdges = Seq((1L, 2L), (5L, 6L)).toDF("src", "dst")
-    val standing = ConnectedComponents.run(corpusVerts, corpusEdges)
-    val batchVerts = Seq(3L, 10L, 7L, 0L).toDF("id")
-    val batchEdges = Seq((3L, 1L), (3L, 5L), (10L, 6L), (0L, 6L))
-      .toDF("src", "dst")
-    val got = ConnectedComponents
-      .mergeRepublish(standing, batchVerts, batchEdges)
-      .as[(Long, Long)].collect().toMap
-    val full = ConnectedComponents.run(
-        corpusVerts.unionByName(batchVerts),
-        corpusEdges.unionByName(batchEdges))
-      .as[(Long, Long)].collect().toMap
-    assert(got == full)
-    // every corpus member of the bridged components really relabeled
-    assert(Seq(1L, 2L, 5L, 6L).forall(got(_) == 0L))
+    onBothPaths {
+      // bridge fixture: batch 3 bridges {1,2} and {5,6}; 0 attaches below
+      // the label; 7 isolated — the republished standing must relabel BOTH
+      // bridged components to the new minimum 0
+      val corpusVerts = Seq(1L, 2L, 5L, 6L).toDF("id")
+      val corpusEdges = Seq((1L, 2L), (5L, 6L)).toDF("src", "dst")
+      val standing = ConnectedComponents.run(corpusVerts, corpusEdges)
+      val batchVerts = Seq(3L, 10L, 7L, 0L).toDF("id")
+      val batchEdges = Seq((3L, 1L), (3L, 5L), (10L, 6L), (0L, 6L))
+        .toDF("src", "dst")
+      val got = ConnectedComponents
+        .mergeRepublish(standing, batchVerts, batchEdges)
+        .as[(Long, Long)].collect().toMap
+      val full = ConnectedComponents.run(
+          corpusVerts.unionByName(batchVerts),
+          corpusEdges.unionByName(batchEdges))
+        .as[(Long, Long)].collect().toMap
+      assert(got == full)
+      // every corpus member of the bridged components really relabeled
+      assert(Seq(1L, 2L, 5L, 6L).forall(got(_) == 0L))
 
-    // seeded random graph: republish parity on EVERY vertex
-    val rng = new scala.util.Random(11)
-    val n = 60
-    val allEdges = (1 to 80).map(_ =>
-      (rng.nextInt(n).toLong, rng.nextInt(n).toLong)).filter(e => e._1 != e._2)
-    val (corpusIds, batchIds) = (0L until n).partition(_ % 4 != 0)
-    val cE = allEdges.filter(e =>
-      corpusIds.contains(e._1) && corpusIds.contains(e._2))
-    val bE = allEdges.filter(e =>
-      batchIds.contains(e._1) || batchIds.contains(e._2))
-    val st = ConnectedComponents.run(corpusIds.toDF("id"), cE.toDF("src", "dst"))
-    val rep = ConnectedComponents.mergeRepublish(
-        st, batchIds.toDF("id"), bE.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    val fullR = ConnectedComponents.run(
-        (0L until n).toDF("id"), allEdges.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    assert(rep == fullR)
+      // seeded random graph: republish parity on EVERY vertex
+      val rng = new scala.util.Random(11)
+      val n = 60
+      val allEdges = (1 to 80).map(_ =>
+        (rng.nextInt(n).toLong, rng.nextInt(n).toLong)).filter(e => e._1 != e._2)
+      val (corpusIds, batchIds) = (0L until n).partition(_ % 4 != 0)
+      val cE = allEdges.filter(e =>
+        corpusIds.contains(e._1) && corpusIds.contains(e._2))
+      val bE = allEdges.filter(e =>
+        batchIds.contains(e._1) || batchIds.contains(e._2))
+      val st = ConnectedComponents.run(corpusIds.toDF("id"), cE.toDF("src", "dst"))
+      val rep = ConnectedComponents.mergeRepublish(
+          st, batchIds.toDF("id"), bE.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      val fullR = ConnectedComponents.run(
+          (0L until n).toDF("id"), allEdges.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      assert(rep == fullR)
+    }
   }
 
   test("fixpoint: serve -> republish -> serve equals one big run") {
-    // day 0 corpus, day 1 batch folded in by republish, day 2 batch
-    // served against the REPUBLISHED standing: labels must equal the
-    // single full run over all three days — the write-once/serve-many
-    // contract composed across days.
-    val rng = new scala.util.Random(23)
-    val n = 90
-    val allEdges = (1 to 130).map(_ =>
-      (rng.nextInt(n).toLong, rng.nextInt(n).toLong)).filter(e => e._1 != e._2)
-    val day0 = (0L until n).filter(_ % 3 == 0)
-    val day1 = (0L until n).filter(_ % 3 == 1)
-    val day2 = (0L until n).filter(_ % 3 == 2)
-    def within(ids: Seq[Long]) = allEdges.filter(e =>
-      ids.contains(e._1) && ids.contains(e._2))
-    val e0 = within(day0)
-    // day-1 edges: both endpoints in day0 ∪ day1, at least one in day1
-    val e1 = within(day0 ++ day1).filterNot(e0.contains)
-    val e2 = allEdges.filterNot(e => day2.forall(d => e._1 != d && e._2 != d))
-    val st0 = ConnectedComponents.run(day0.toDF("id"), e0.toDF("src", "dst"))
-    val st1 = ConnectedComponents.mergeRepublish(
-      st0, day1.toDF("id"), e1.toDF("src", "dst"))
-    val served2 = ConnectedComponents.incrementalAssign(
-        st1, day2.toDF("id"), e2.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    val full = ConnectedComponents.run(
-        (0L until n).toDF("id"),
-        (e0 ++ e1 ++ e2).toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    day2.foreach { b =>
-      assert(served2(b) == full(b), s"day-2 vertex $b: ${served2(b)} vs ${full(b)}")
+    onBothPaths {
+      // day 0 corpus, day 1 batch folded in by republish, day 2 batch
+      // served against the REPUBLISHED standing: labels must equal the
+      // single full run over all three days — the write-once/serve-many
+      // contract composed across days.
+      val rng = new scala.util.Random(23)
+      val n = 90
+      val allEdges = (1 to 130).map(_ =>
+        (rng.nextInt(n).toLong, rng.nextInt(n).toLong)).filter(e => e._1 != e._2)
+      val day0 = (0L until n).filter(_ % 3 == 0)
+      val day1 = (0L until n).filter(_ % 3 == 1)
+      val day2 = (0L until n).filter(_ % 3 == 2)
+      def within(ids: Seq[Long]) = allEdges.filter(e =>
+        ids.contains(e._1) && ids.contains(e._2))
+      val e0 = within(day0)
+      // day-1 edges: both endpoints in day0 ∪ day1, at least one in day1
+      val e1 = within(day0 ++ day1).filterNot(e0.contains)
+      val e2 = allEdges.filterNot(e => day2.forall(d => e._1 != d && e._2 != d))
+      val st0 = ConnectedComponents.run(day0.toDF("id"), e0.toDF("src", "dst"))
+      val st1 = ConnectedComponents.mergeRepublish(
+        st0, day1.toDF("id"), e1.toDF("src", "dst"))
+      val served2 = ConnectedComponents.incrementalAssign(
+          st1, day2.toDF("id"), e2.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      val full = ConnectedComponents.run(
+          (0L until n).toDF("id"),
+          (e0 ++ e1 ++ e2).toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      day2.foreach { b =>
+        assert(served2(b) == full(b), s"day-2 vertex $b: ${served2(b)} vs ${full(b)}")
+      }
+      // and the republished frame itself is min-labeled (valid next-day
+      // standing): label <= id everywhere, every label is a member id
+      val st1m = st1.as[(Long, Long)].collect().toMap
+      assert(st1m.forall { case (id, c) => c <= id })
+      assert(st1m.values.toSet.subsetOf(st1m.keySet))
     }
-    // and the republished frame itself is min-labeled (valid next-day
-    // standing): label <= id everywhere, every label is a member id
-    val st1m = st1.as[(Long, Long)].collect().toMap
-    assert(st1m.forall { case (id, c) => c <= id })
-    assert(st1m.values.toSet.subsetOf(st1m.keySet))
   }
 
   test("mergeRepublish with an empty batch returns the standing frame verbatim") {
@@ -341,6 +443,27 @@ class ConnectedComponentsSpec extends SparkSpec {
       val ss = ConnectedComponents.smallStar(ls)
       assertNormalized(ss, s"smallStar round $round")
       e = ss.localCheckpoint(false)
+    }
+  }
+
+  test("star steps take int and decimal src/dst and emit long ids") {
+    // direct callers (probes, specs) may hand the steps non-long ids;
+    // both steps cast at entry, so the output keeps the long-ids contract
+    // (without the cast, type coercion widens int ids to long but carries
+    // decimal ids through as decimals)
+    val ints = Seq((7, 1), (3, 1), (9, 3), (8, 4)).toDF("src", "dst")
+    val longs = ints.select($"src".cast("long"), $"dst".cast("long"))
+    val wantLarge = ConnectedComponents.largeStar(longs).as[(Long, Long)].collect().toSet
+    val wantSmall = ConnectedComponents.smallStar(longs).as[(Long, Long)].collect().toSet
+    for (t <- Seq("int", "decimal(20,0)")) {
+      val e = ints.select($"src".cast(t).as("src"), $"dst".cast(t).as("dst"))
+      val ls = ConnectedComponents.largeStar(e)
+      val ss = ConnectedComponents.smallStar(e)
+      Seq(ls, ss).foreach { df =>
+        assert(df.schema.fields.map(_.dataType.typeName).toSeq == Seq("long", "long"), t)
+      }
+      assert(ls.as[(Long, Long)].collect().toSet == wantLarge, t)
+      assert(ss.as[(Long, Long)].collect().toSet == wantSmall, t)
     }
   }
 

@@ -67,6 +67,26 @@ class EtlSpec extends SparkSpec {
     assert(a.map(_._2).toSeq == a.indices.map(_.toLong))   // dense 0..n-1 in key order
   }
 
+  test("withDeterministicId replaces an existing id column in place") {
+    val df = Seq((10L, "b", 5), (20L, "a", 3), (30L, "c", 4)).toDF("id", "name", "ord")
+    val byOrd = Etl.withDeterministicId(df, "ord")
+    assert(byOrd.columns.toSeq == Seq("id", "name", "ord"))
+    assert(byOrd.select("name", "id").as[(String, Long)].collect().toMap ==
+      Map("a" -> 0L, "c" -> 1L, "b" -> 2L))
+    // the order column may be the id being replaced
+    assert(Etl.withDeterministicId(df, "id").select("name", "id")
+      .as[(String, Long)].collect().toMap == Map("b" -> 0L, "a" -> 1L, "c" -> 2L))
+    // the ETL transform over a CSV that carries its own id column
+    val d = tmpDir("graft_csv_id")
+    Seq((7, "Acme GmbH", "DE1"), (3, "Acme GmbH", "DE1"), (5, "Beta AG", "DE2"))
+      .toDF("id", "Name", "IBAN")
+      .coalesce(1).write.mode("overwrite").option("header", true).csv(d)
+    Etl.extract(spark, d)
+    val out = Etl.transform(spark, Seq("Name", "IBAN"), "id")
+    assert(out.columns.toSeq == Seq("id", "Name", "IBAN"))
+    assert(out.select("id").as[Long].collect().sorted.toSeq == Seq(0L, 1L))
+  }
+
   test("console sink (K5): show and printSchema run") {
     val df = Csv.readAllString(spark, csvDir)
     df.printSchema()
