@@ -20,16 +20,14 @@ import org.apache.spark.sql.functions._
   * large-star step.
   *
   * Small edge sets finish on the driver instead: when the normalized
-  * edge checkpoint's row count (already observed, no extra job) times
-  * 24 B fits the broadcast bound
-  * (`spark.sql.adaptive.autoBroadcastJoinThreshold`, else
-  * `spark.sql.autoBroadcastJoinThreshold`) and is at most 400k rows, the
-  * checkpoint is collected once and a min-root union-find over primitive
-  * arrays emits the same (member -> root) stars the loop converges to.
-  * Overhead, not compute, sets the loop's cost at that size: ~5 jobs a
-  * round. The 400k cap is the measured crossover with the loop's best
-  * case (see `DriverFinishMaxEdges`). A negative bound turns the driver
-  * finish off. Labels are identical on both paths.
+  * edge checkpoint's row count (already observed, no extra job) is at
+  * most 400k, the checkpoint is collected once and a min-root
+  * union-find over primitive arrays emits the same (member -> root)
+  * stars the loop converges to. Overhead, not compute, sets the loop's
+  * cost at that size: ~5 jobs a round. The 400k cap is the measured
+  * crossover with the loop's best case (see `DriverFinishMaxEdges`); the
+  * size alone picks the path, no conf does. Labels are identical on
+  * both paths.
   */
 object ConnectedComponents {
 
@@ -175,7 +173,7 @@ object ConnectedComponents {
         least(col("src").cast("long"), col("dst").cast("long")).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct())
-    if (sig._1 > 0L && finishesOnDriver(e, sig._1)) e = driverStars(e)
+    if (sig._1 > 0L && sig._1 <= driverFinishCap.value) e = driverStars(e)
     else {
       var converged = sig._1 == 0L
       var it = 0
@@ -197,17 +195,12 @@ object ConnectedComponents {
       .select(col("id"), coalesce(col("mc"), col("id")).as("component"))
   }
 
-  /** Bytes of one normalized edge as an UnsafeRow: an 8-byte null
-    * bitset plus two longs.
-    */
-  private val EdgeRowBytes = 24L
-
-  /** Largest normalized edge set the driver finish takes, whatever the
-    * broadcast bound says: the measured crossover. run() on both paths,
-    * local[4] with 4 shuffle partitions on a 4-vCPU VM, median of 5
-    * (ms, driver finish / star loop):
+  /** Largest normalized edge set the driver finish takes: the measured
+    * crossover. [[graft.tools.CcCrossoverProbe]] times run() on both
+    * paths; local[4] with 4 shuffle partitions on a 4-vCPU VM, median of
+    * 5 (ms, driver finish / star loop):
     *
-    * | edges | random graph, one giant component | 3-vertex stars (the loop's best case, 2 rounds) |
+    * | edges | random graph, one giant component | disjoint 3-vertex paths (the loop's best case, 2 rounds) |
     * |---|---|---|
     * | 10k | 392 / 2239 | 312 / 755 |
     * | 100k | 763 / 4268 | 968 / 1804 |
@@ -216,27 +209,29 @@ object ConnectedComponents {
     *
     * The paths tie near 400k edges on the loop's best case, where the
     * star frame's local relation costs about as much to plan and
-    * broadcast as the loop's rounds. That is just under the default
-    * 10 MB bound (436,906 edges), so the cap binds when the bound is
-    * raised.
+    * broadcast as the loop's rounds (a second run on the same VM read
+    * 2630 / 3015 there, every other cell within 15% of the table).
+    *
+    * No perfbench workload comes near the cap (a traced run's
+    * `cc.run.shuffle_mb` stays under 0.3 MB, edge sets of tens of
+    * thousands of rows at most), so the benchmark exercises only the
+    * driver finish; ClusterSpec covers both paths.
     */
   private val DriverFinishMaxEdges = 400000L
 
-  /** The driver finish applies when the normalized edge set, `n` rows
-    * of [[EdgeRowBytes]], fits the broadcast bound AQE already applies:
-    * `spark.sql.adaptive.autoBroadcastJoinThreshold`, else
-    * `spark.sql.autoBroadcastJoinThreshold` — the bound users already set
-    * to mean "small enough to pass through the driver". A negative bound
-    * turns it off. `n` is the initial checkpoint's observed count, so the
-    * choice costs no job.
+  /** The driver finish's cap on the current thread: [[DriverFinishMaxEdges]]
+    * unless a spec or probe overrides it. A seam, not a user option: it
+    * moves only the CC path choice, never a conf, so the plans of other
+    * joins stay as they are.
     */
-  private def finishesOnDriver(e: DataFrame, n: Long): Boolean = {
-    val conf = e.sparkSession.sessionState.conf
-    val bound = conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADAPTIVE_AUTO_BROADCASTJOIN_THRESHOLD)
-      .getOrElse(conf.autoBroadcastJoinThreshold)
-    bound >= 0L && n <= DriverFinishMaxEdges && n <= bound / EdgeRowBytes
-  }
+  private[graft] val driverFinishCap =
+    new scala.util.DynamicVariable[Long](DriverFinishMaxEdges)
+
+  /** Runs `body` with every CC run it starts on this thread on the star
+    * loop.
+    */
+  private[graft] def onStarLoop[T](body: => T): T =
+    driverFinishCap.withValue(0L)(body)
 
   /** Driver finish: collect the normalized edge checkpoint once (one job,
     * packed per partition into primitive arrays) and run a min-root

@@ -215,24 +215,6 @@ object ScaleProbe {
       ((System.nanoTime() - t0) / 1e9, n)
     }
 
-    // The CC probes price the distributed star loop their exponents were
-    // recorded on: both broadcast bounds at -1 turn ConnectedComponents'
-    // driver finish off, so no size-dependent switch of path (small edge
-    // sets finish on the driver under the bound) bends the curve between
-    // 1x and 10x. The bounds also plan the probe body's other joins
-    // without broadcast.
-    def onStarLoop(f: => Long): Long = {
-      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      val saved = keys.map(k => k -> spark.conf.getAll.get(k))
-      keys.foreach(spark.conf.set(_, "-1"))
-      try f
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-
     val probes: Seq[(String, DataFrame => Long)] = Seq(
       "exact_dedup" -> (d => Dedup.exact(d, Seq("text")).count()),
       "fingerprint_groups" -> (d =>
@@ -320,8 +302,11 @@ object ScaleProbe {
       // replication-saturated sort windows; runtime must track edges x
       // O(log n) rounds, never the component-pair potential (which the
       // count-based audit never expands). Run on the star loop
-      // (onStarLoop), the path its recorded exponent priced.
-      "snm_tc_closure" -> { d => onStarLoop {
+      // (ConnectedComponents.onStarLoop), the path its recorded exponent
+      // priced, so no size-dependent switch to the driver finish bends
+      // the curve; the seam sets no conf, so the other joins keep their
+      // plans.
+      "snm_tc_closure" -> { d => ConnectedComponents.onStarLoop {
         val keyed = d.withColumn("k", substring(col("text"), 1, 24))
         val union = Linker.sortedNeighborhoodMulti(keyed, "doc_id", "k",
           Seq(col("k"), reverse(col("k"))), 10, 5)
@@ -509,7 +494,7 @@ object ScaleProbe {
         if (seeds.isEmpty) 0L
         else PageRank.ranksPersonalized(edges, "src", "dst", "w", seeds, 5).count()
       }),
-      "connected_components" -> (d => onStarLoop {
+      "connected_components" -> (d => ConnectedComponents.onStarLoop {
         val pairs = Winnow.sharedFingerprintPairs(d, "doc_id", "text", 2)
         ConnectedComponents.run(
           d.select(col("doc_id").as("id")),
@@ -653,8 +638,10 @@ object ScaleProbe {
       // exactly what this exponent prices: the condensed CC's node set
       // stays batch-sized at every R; only the variant-index candidate
       // join sees the grown postings. The timed serve runs on the star
-      // loop (onStarLoop), the path its recorded exponent priced; so do
-      // cc_full_recompute and cc_republish_serve, its comparison rows.
+      // loop (ConnectedComponents.onStarLoop, no conf touched, so the
+      // other joins keep their plans), the path its recorded exponent
+      // priced; so do cc_full_recompute and cc_republish_serve, its
+      // comparison rows.
       "cc_assign_serve" -> (() => idxProbe("cc_assign_serve", replicateCust) { (d, dir, _) =>
         ConnectedComponents.run(d.select(col("id")),
             EditDistanceJoin.idPairs(d, "id", "key", 1)
@@ -670,8 +657,9 @@ object ScaleProbe {
           .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
         val intra = EditDistanceJoin.idPairs(batch, "id", "key", 1)
           .select(col("id_a").as("src"), col("id_b").as("dst"))
-        onStarLoop(ConnectedComponents.incrementalAssign(standing,
-          batch.select("id"), cross.unionByName(intra)).count())
+        ConnectedComponents.onStarLoop(
+          ConnectedComponents.incrementalAssign(standing,
+            batch.select("id"), cross.unionByName(intra)).count())
       }),
       // the ALTERNATIVE the incremental serve replaces, at the same
       // corpus sizes: a FULL recompute over corpus ∪ batch (pair join +
@@ -684,9 +672,10 @@ object ScaleProbe {
         val batch = custBase.filter(col("id") % 3 === 0)
           .select((col("id") + 900000000L).as("id"), col("key"))
         val all = d.unionByName(batch)
-        onStarLoop(ConnectedComponents.run(all.select(col("id")),
-          EditDistanceJoin.idPairs(all, "id", "key", 1)
-            .select(col("id_a").as("src"), col("id_b").as("dst"))).count())
+        ConnectedComponents.onStarLoop(
+          ConnectedComponents.run(all.select(col("id")),
+            EditDistanceJoin.idPairs(all, "id", "key", 1)
+              .select(col("id_a").as("src"), col("id_b").as("dst"))).count())
       }),
       // the nightly republish at the same sizes: its claim is "condensed
       // CC on the batch + ONE corpus-linear equi-join on the label
@@ -707,8 +696,9 @@ object ScaleProbe {
           .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
         val intra = EditDistanceJoin.idPairs(batch, "id", "key", 1)
           .select(col("id_a").as("src"), col("id_b").as("dst"))
-        onStarLoop(ConnectedComponents.mergeRepublish(standing,
-          batch.select("id"), cross.unionByName(intra)).count())
+        ConnectedComponents.onStarLoop(
+          ConnectedComponents.mergeRepublish(standing,
+            batch.select("id"), cross.unionByName(intra)).count())
       })
     )
     val idxResults = idxProbes

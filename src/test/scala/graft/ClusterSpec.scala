@@ -83,29 +83,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     n.map(x => x -> find(x)).toMap
   }
 
-  private val broadcastBounds = Seq("spark.sql.autoBroadcastJoinThreshold",
-    "spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-  /** Runs `body` with both broadcast bounds at -1, which turns run()'s
-    * driver finish off, so every edge set takes the star loop; the
-    * session's own settings are restored afterwards.
-    */
-  private def onStarLoop[T](body: => T): T = {
-    val saved = broadcastBounds.map(k => k -> spark.conf.getAll.get(k))
-    broadcastBounds.foreach(spark.conf.set(_, "-1"))
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** The parity cases run on both CC paths: the session default, where
     * these small edge sets finish on the driver, and the star loop.
     */
   private def onBothPaths(body: => Unit): Unit = {
     withClue("[driver finish] ")(body)
-    withClue("[star loop] ")(onStarLoop(body))
+    withClue("[star loop] ")(ConnectedComponents.onStarLoop(body))
   }
 
   test("CC matches union-find on random graphs (seeded)") {
@@ -164,7 +147,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
-  test("the edge count picks the path: no star round under the bound, rounds at -1") {
+  test("the edge count alone picks the path: no star round under the cap, whatever the broadcast bounds") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val n = 200L
@@ -203,10 +186,23 @@ class ConnectedComponentsSpec extends SparkSpec {
     try {
       def labels() = ConnectedComponents.run(ids, edges).as[(Long, Long)].collect()
       val (driverJobs, driverRounds) = profile(assert(labels().forall(_._2 == 0L)))
-      val (loopJobs, loopRounds) = profile(onStarLoop(assert(labels().forall(_._2 == 0L))))
-      assert(driverRounds == 0, s"$driverRounds star rounds under the bound")
-      assert(loopRounds >= 1, "no star round with the bounds at -1")
+      val (loopJobs, loopRounds) = profile(
+        ConnectedComponents.onStarLoop(assert(labels().forall(_._2 == 0L))))
+      assert(driverRounds == 0, s"$driverRounds star rounds under the cap")
+      assert(loopRounds >= 1, "no star round on the star loop")
       assert(driverJobs < loopJobs, s"driver finish $driverJobs jobs vs loop $loopJobs")
+      // turning broadcast joins off is no reason to leave the driver finish
+      val bounds = Seq("spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      val saved = bounds.map(k => k -> spark.conf.getAll.get(k))
+      bounds.foreach(spark.conf.set(_, "-1"))
+      val (_, noBroadcastRounds) =
+        try profile(assert(labels().forall(_._2 == 0L)))
+        finally saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      assert(noBroadcastRounds == 0, s"$noBroadcastRounds star rounds with broadcast off")
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
