@@ -2075,7 +2075,8 @@ object SparkEntry {
 
     // ---- Filter/projection pushdown showcase: the predicate and the
     // 3-column projection both reach the parquet scan (PushedFilters +
-    // pruned ReadSchema — verified by graft.tools.ExplainAll). At 100 TB
+    // pruned ReadSchema — ExplainAll, round 1; PlanGuaranteesSpec pins
+    // both). At 100 TB
     // this is the difference between scanning 3 columns of matching
     // row groups and scanning everything.
     "q_filter_pushdown" -> ((s, dir) =>

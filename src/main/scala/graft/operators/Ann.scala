@@ -767,7 +767,7 @@ object Ann {
     // partition — but the compute lives AFTER the fan-out (|corpus| ×
     // m·ks d2 evaluations, ~4M on the sf0.1 fixture), and a coalesced
     // plan runs it single-threaded (measured 2 s of the old 4.1 s
-    // q_pq_search, graft.tools.PqProfile). A user-specified count is
+    // q_pq_search, PqProfile, round 10). A user-specified count is
     // exempt from AQE coalescing.
     val nPart = emb.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt

@@ -56,15 +56,17 @@ object ConnectedComponents {
     * through the repartition into the join-probe subtree (differentiating
     * it from the aggregate's child), and `m` is consumed twice (join
     * build side + the union's m-branch) — so one round really ran ~8
-    * shuffles + 3 broadcast builds (CcPlanProbe, executed plan, 8 jobs a
-    * round). With `min(dst) over (partition by src)` the step needs ONE
-    * hash(src) exchange, no join and no broadcast: both output branches
-    * read the identical window subtree (their filters reference
-    * non-partition columns, so they cannot be pushed below the window,
-    * and the identical subtrees reuse one materialized stage), and the
-    * window's ENSURE_REQUIREMENTS exchange stays AQE-coalescible
+    * shuffles + 3 broadcast builds (CcPlanProbe, round 19: executed
+    * plan, 8 jobs a round). With `min(dst) over (partition by src)` the
+    * step needs ONE hash(src) exchange, no join and no broadcast: both
+    * output branches read the identical window subtree (their filters
+    * reference non-partition columns, so they cannot be pushed below the
+    * window, and the identical subtrees reuse one materialized stage),
+    * and the window's ENSURE_REQUIREMENTS exchange stays AQE-coalescible
     * (scale-adaptive, guide §2). Per round: 3 exchanges total (two
-    * window exchanges + the output distinct), 0 broadcasts. Shuffle
+    * window exchanges + the output distinct), 0 broadcasts, 4 jobs on
+    * the final adaptive plan; ClusterSpec's "one star round" test pins
+    * at most 3 exchanges, no broadcast and at most 5 jobs. Shuffle
     * bytes at scale drop too: the agg+join form re-shuffled the
     * symmetrized frame for the probe AND (partially aggregated) for each
     * m consumer. Skew posture is unchanged — the old join probe already

@@ -160,7 +160,7 @@ object EditDistanceJoin {
     // lives AFTER the ~(len·k)-way generator fan-out, so the coalesced
     // plan runs the whole neighborhood expansion single-threaded
     // (measured: a 1.7-2.4 s one-task stage inside q_link_agg_lev,
-    // graft.tools.LinkAggAudit — the same AQE blind spot as the PQ
+    // LinkAggAudit, round 11 — the same AQE blind spot as the PQ
     // codeword fan-out in Ann.pqCodesLong). A user-specified count is
     // exempt from AQE coalescing. The repartition column must NOT be
     // `key`: the groupBy child is already hash-partitioned on key, so a
@@ -323,7 +323,7 @@ object EditDistanceJoin {
     // sizes — on a low-cardinality dictionary that is corpus-scale output
     // (the sf0.1 part table holds 64 distinct names across 20k rows:
     // 659 key pairs expand to ~1.4M rows, measured 1.4 s in ONE task,
-    // graft.tools.LinkAggAudit). Spreading the verified pairs before the
+    // LinkAggAudit, round 11). Spreading the verified pairs before the
     // expansion keeps the fan-out parallel at any scale.
     val leftExpanded = verified.repartition(nPart, col("left_key"))
       .join(lk.select(col("id").as("left_id"), col("key").as("left_key")),

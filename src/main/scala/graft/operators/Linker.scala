@@ -559,7 +559,7 @@ object Linker {
     * that self-joined comp into explicit pairs paid a 12.5M-row shuffle
     * join on the sf0.1 fixture's single giant component: 12.5 s vs this
     * form's 8.6 s, which decomposes as truth 4.5 s + three passes 4.2 s
-    * + CC 3.6 s overlapped — graft.tools.TcProfile; the remaining cost
+    * + CC 3.6 s overlapped — TcProfile, round 10; the remaining cost
     * IS the audit's exact-truth contract, not the closure). truth and
     * union are localCheckpointed — each feeds two consumers (both audit
     * rows; the CC edges), and recomputing them means re-running the lev

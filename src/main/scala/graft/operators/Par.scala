@@ -22,7 +22,10 @@ package graft.operators
   * Determinism: each section is an independent, self-contained Spark
   * pipeline; concurrent submission changes scheduling order only, never
   * any section's result. The first section failure is rethrown after
-  * all threads finish (no half-running leftovers).
+  * all threads finish (no half-running leftovers), with every other
+  * section's failure attached via `addSuppressed`. Failing siblings are
+  * waited for, not cancelled: the sections run in the caller's job
+  * group, so cancelling that group would cancel the caller too.
   */
 private[graft] object Par {
   def sections[A](thunks: (() => A)*): Seq[A] = {
@@ -39,7 +42,11 @@ private[graft] object Par {
       t
     }
     threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
     results.toSeq.map(_.asInstanceOf[A])
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.reflect.ClassTag
+
 /** The shared machinery of the five standing ANN index lifecycles
   * (round-18 item 4): flat SQ8, sign, PQ flat, PQ-by-cell, SQ8-by-cell
   * each publish a layout plus a contract, append under frozen publish
@@ -27,7 +29,9 @@ private[graft] object StandingIndex {
     * in the same dir layout (one data file under `path/`), so Spark and
     * DuckDB readers are unaffected. Values are typed via [[MetaVal]]
     * (the sidecars only ever carry int/long/double scalars, nullable
-    * for unaudited figures).
+    * for unaudited figures). The new row is written whole under a hidden
+    * name (readers skip dot-files) and only then renamed over the old
+    * one, so an interrupted publish leaves the old row readable.
     */
   sealed trait MetaVal
   final case class MetaInt(v: Int) extends MetaVal
@@ -43,13 +47,12 @@ private[graft] object StandingIndex {
 
   def publishMetaRow(spark: SparkSession, path: String,
                      cols: Seq[(String, MetaVal)]): Unit = {
-    import org.apache.parquet.schema.{PrimitiveType, Type, Types}
+    import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
+    import org.apache.parquet.schema.{PrimitiveType, Type}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    if (fs.exists(root) && !fs.delete(root, true))
-      throw new java.io.IOException(s"publishMetaRow: delete of $path failed")
     val fields = cols.map { case (name, v) =>
       val tn = v match {
         case MetaInt(_)                      => INT32
@@ -60,10 +63,12 @@ private[graft] object StandingIndex {
     }
     val schema = new org.apache.parquet.schema.MessageType("meta",
       fields: _*)
-    val file = new org.apache.hadoop.fs.Path(root, "part-00000.parquet")
+    val file = new Path(root, "part-00000.parquet")
+    val tmp = new Path(root, ".part-00000.parquet.tmp")
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(file, conf))
+        .fromPath(tmp, conf))
+      .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
       .withType(schema).build()
     try {
       val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
@@ -75,6 +80,23 @@ private[graft] object StandingIndex {
       }
       writer.write(g)
     } finally writer.close()
+    // a checksummed FS keeps a hidden .crc beside the data file: drop the
+    // old one first, so no reader checks the new bytes against it
+    fs match {
+      case c: ChecksumFileSystem =>
+        c.getRawFileSystem.delete(c.getChecksumFile(file), false)
+      case _ =>
+    }
+    // local rename(2) replaces the old file atomically; a store whose
+    // rename refuses an existing target gets delete-then-rename
+    if (!fs.rename(tmp, file) &&
+        !(fs.delete(file, false) && fs.rename(tmp, file)))
+      throw new java.io.IOException(s"publishMetaRow: rename into $path failed")
+    // an older layout's data file or commit marker would read as a
+    // second row beside the new one
+    fs.listStatus(root).map(_.getPath)
+      .filter(p => p.getName != file.getName && !p.getName.startsWith("."))
+      .foreach(fs.delete(_, true))
   }
 
   /** Tolerant reader over a published meta row: fields added to a
@@ -83,16 +105,31 @@ private[graft] object StandingIndex {
     * sidecar-schema addition reads as None/default on old indexes).
     * Driver-side parquet-hadoop read (round 19) — a one-row contract
     * fetch must not cost a Spark job; reads Spark-written sidecars
-    * unchanged (standard parquet primitives).
+    * unchanged (standard parquet primitives). Reads are type-checked: a
+    * field read as the wrong type fails here, naming field and path.
     */
-  final class MetaRow(vals: Map[String, Any]) {
-    def opt[T](name: String)(implicit ct: scala.reflect.ClassTag[T])
-        : Option[T] =
-      vals.get(name).map(_.asInstanceOf[T])
-    def get[T](name: String)(implicit ct: scala.reflect.ClassTag[T]): T =
-      vals.getOrElse(name, throw new NoSuchElementException(
-        s"meta row has no field '$name'")).asInstanceOf[T]
+  final class MetaRow(path: String, vals: Map[String, Any]) {
+    def opt[T](name: String)(implicit ct: ClassTag[T]): Option[T] =
+      vals.get(name).map(checked[T](name, _))
+    def get[T](name: String)(implicit ct: ClassTag[T]): T =
+      checked[T](name, vals.getOrElse(name, throw new NoSuchElementException(
+        s"meta sidecar $path has no field '$name'")))
+    private def checked[T](name: String, v: Any)(implicit ct: ClassTag[T]): T = {
+      val want = boxed.getOrElse(ct.runtimeClass, ct.runtimeClass)
+      if (!want.isInstance(v)) throw new IllegalStateException(
+        s"meta sidecar $path: field '$name' is " +
+          s"${v.getClass.getSimpleName}, read as ${want.getSimpleName}")
+      v.asInstanceOf[T]
+    }
   }
+
+  /** The values are boxed; a primitive ClassTag names the unboxed class. */
+  private val boxed: Map[Class[_], Class[_]] = Map(
+    classOf[Int] -> classOf[java.lang.Integer],
+    classOf[Long] -> classOf[java.lang.Long],
+    classOf[Double] -> classOf[java.lang.Double],
+    classOf[Float] -> classOf[java.lang.Float],
+    classOf[Boolean] -> classOf[java.lang.Boolean])
 
   def readMetaRow(spark: SparkSession, path: String): MetaRow = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -128,7 +165,7 @@ private[graft] object StandingIndex {
             s"meta sidecar field ${f.getName} has unsupported type $other")
         }))
       }.toMap
-      new MetaRow(vals)
+      new MetaRow(path, vals)
     } finally reader.close()
   }
 

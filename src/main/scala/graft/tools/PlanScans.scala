@@ -5,12 +5,14 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** The executed-plan scan-metric walker shared by the dev measurement
-  * tools (DppCheck, ScaleProbe's lifecycle probes, IvfSq8Tune) — one
+  * tools (ScaleProbe's lifecycle probes, IvfSq8Tune; earlier DppCheck,
+  * round 14) — one
   * home for the AQE node unwrapping, so a Spark-version change to the
   * wrapper shapes is one edit (round-17 review: four verbatim copies
   * had accumulated across the tools). Read metrics only AFTER executing
   * the df's own plan (collect, not count — count() runs a separate
-  * execution and leaves these metrics at zero; the [[DppCheck]] trap).
+  * execution and leaves these metrics at zero; the trap DppCheck hit in
+  * round 14).
   */
 object PlanScans {
   def allScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {

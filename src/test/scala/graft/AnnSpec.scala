@@ -1490,6 +1490,40 @@ class AnnSpec extends SparkSpec {
       e.getMessage)
   }
 
+  test("a meta publish that fails before its rename leaves the old row readable") {
+    import graft.operators.StandingIndex
+    val dir = java.nio.file.Files.createTempDirectory("graft_meta3").toString + "/meta"
+    // a publish over an older, Spark-written sidecar replaces its data
+    // file and commit marker
+    spark.range(1).select(lit(3L).as("n")).coalesce(1).write.parquet(dir)
+    StandingIndex.publishMetaRow(spark, dir, Seq("n" -> StandingIndex.MetaLong(4L)))
+    assert(StandingIndex.readMetaRow(spark, dir).get[Long]("n") == 4L)
+    assert(new java.io.File(dir).list().filterNot(_.startsWith(".")).toSeq ==
+      Seq("part-00000.parquet"))
+    // parquet rejects an empty schema when the writer is built, i.e.
+    // mid-publish: a publish that deleted the old row before writing the
+    // new one would lose it here
+    val e = intercept[org.apache.parquet.schema.InvalidSchemaException](
+      StandingIndex.publishMetaRow(spark, dir, Seq.empty))
+    assert(e.getMessage.contains("empty group"), e.getMessage)
+    assert(StandingIndex.readMetaRow(spark, dir).get[Long]("n") == 4L)
+  }
+
+  test("a meta sidecar field read as the wrong type names field, path and types") {
+    import graft.operators.StandingIndex
+    val dir = java.nio.file.Files.createTempDirectory("graft_meta4").toString + "/meta"
+    spark.range(1).select(lit(0.5f).as("f"), lit(7).as("i"))
+      .coalesce(1).write.parquet(dir)
+    val m = StandingIndex.readMetaRow(spark, dir)
+    assert(m.get[Float]("f") == 0.5f && m.opt[Int]("i").contains(7))
+    val asDouble = intercept[IllegalStateException](m.get[Double]("f"))
+    val asLong = intercept[IllegalStateException](m.opt[Long]("i"))
+    for ((e, field, actual, read) <- Seq((asDouble, "'f'", "Float", "Double"),
+                                         (asLong, "'i'", "Integer", "Long")))
+      assert(Seq(dir, field, actual, read).forall(e.getMessage.contains),
+        e.getMessage)
+  }
+
   test("annSearchAuto's SQ8 recall claim tracks the published configuration") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sq8claim")
       .toString

@@ -77,7 +77,7 @@ class AqePlanSpec extends SparkSpec {
     // same shape — a tiny distinct-key exchange feeding a ~(len·k)-way
     // generator fan-out; unpinned, AQE coalesced it and the whole
     // neighborhood expansion ran in ONE task (1.7-2.4 s inside
-    // q_link_agg_lev, graft.tools.LinkAggAudit). The pin hashes on gid
+    // q_link_agg_lev, LinkAggAudit, round 11). The pin hashes on gid
     // (a key-column repartition is elided as redundant with the groupBy).
     for ((q, minPins) <- Seq("q_pq_search" -> 2, "q_pq_probe" -> 1,
                              "q_link_pairs_lev" -> 1)) {

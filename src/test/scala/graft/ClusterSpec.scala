@@ -3,6 +3,7 @@ package graft
 import graft.operators.{ConnectedComponents, GreedyCluster}
 import org.apache.spark.sql.functions._
 
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 
 class GreedyClusterSpec extends SparkSpec {
@@ -91,6 +92,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     withClue("[star loop] ")(ConnectedComponents.onStarLoop(body))
   }
 
+  /** Listener events are async and the bus API is private[spark]: drain
+    * by polling the counters until they are stable twice over.
+    */
+  private def drain(counters: AtomicInteger*): Unit = {
+    var last = Seq.empty[Int]; var stable = 0
+    while (stable < 2) {
+      Thread.sleep(150)
+      val now = counters.map(_.get())
+      if (now == last) stable += 1 else { stable = 0; last = now }
+    }
+  }
+
   test("CC matches union-find on random graphs (seeded)") {
     onBothPaths {
       val rnd = new scala.util.Random(7)
@@ -153,10 +166,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     val n = 200L
     val ids = (0L until n).toDF("id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new AtomicInteger(0)
     // a star round is the only CC query with a window (the star steps'
     // min over partition by src)
-    val rounds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val rounds = new AtomicInteger(0)
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -165,21 +178,11 @@ class ConnectedComponentsSpec extends SparkSpec {
         case _ =>
       }
     }
-    // listener events are async and the bus API is private[spark]:
-    // drain by polling the counters until they are stable twice over
-    def drain(): Unit = {
-      var last = (-1, -1); var stable = 0
-      while (stable < 2) {
-        Thread.sleep(150)
-        val now = (jobs.get(), rounds.get())
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-    }
     def profile(body: => Unit): (Int, Int) = {
-      drain()
+      drain(jobs, rounds)
       val (j0, r0) = (jobs.get(), rounds.get())
       body
-      drain()
+      drain(jobs, rounds)
       (jobs.get() - j0, rounds.get() - r0)
     }
     spark.sparkContext.addSparkListener(l)
@@ -440,6 +443,45 @@ class ConnectedComponentsSpec extends SparkSpec {
       assertNormalized(ss, s"smallStar round $round")
       e = ss.localCheckpoint(false)
     }
+  }
+
+  test("one star round: at most 3 shuffle exchanges, no broadcast, at most 5 jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    // The round-19 shape of one largeStar + smallStar round: each step is
+    // one window exchange, plus smallStar's output distinct. The agg+join
+    // form it replaced ran ~8 shuffles, 3 broadcast builds and 8 jobs a
+    // round while its static plan looked shared, so this reads the FINAL
+    // adaptive plan. Input: a 2,000-edge binary tree, normalized and
+    // checkpointed the way run() feeds the loop.
+    val e0 = (1L to 2000L).map(i => (i, math.max(i / 2, 1L))).toDF("src", "dst")
+      .select(greatest($"src", $"dst").as("src"), least($"src", $"dst").as("dst"))
+      .where($"src" =!= $"dst").distinct().localCheckpoint(false)
+    val round = ConnectedComponents.smallStar(ConnectedComponents.largeStar(e0))
+    val jobs = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val roundJobs = try {
+      drain(jobs)
+      val j0 = jobs.get()
+      // collect() drives this frame's own adaptive plan to its final form
+      round.collect()
+      drain(jobs)
+      jobs.get() - j0
+    } finally spark.sparkContext.removeSparkListener(l)
+    val plan = round.queryExecution.executedPlan
+    assert(plan.toString.contains("isFinalPlan=true"), plan)
+    // query stages unwrap to their exchanges; a ReusedExchangeExec is a
+    // leaf, so a reused stage is not counted twice
+    val helper = new AdaptiveSparkPlanHelper {}
+    val shuffles = helper.collect(plan) { case s: ShuffleExchangeExec => s }
+    val broadcasts = helper.collect(plan) { case b: BroadcastExchangeExec => b }
+    assert(shuffles.size <= 3, s"${shuffles.size} shuffle exchanges:\n$plan")
+    assert(broadcasts.isEmpty, s"${broadcasts.size} broadcast exchanges:\n$plan")
+    assert(roundJobs <= 5, s"$roundJobs jobs for one round:\n$plan")
   }
 
   test("star steps take int and decimal src/dst and emit long ids") {
