@@ -104,20 +104,15 @@ object Dedup {
   /** Publish a STANDING key index for [[incremental]] — the
     * write-once/serve-many pattern ([[NearDup.writeBandIndexBucketed]])
     * applied to the exact tier: the corpus's distinct keys as a BUCKETED
-    * catalog table (bucketBy + per-bucket single sorted file via the
-    * pre-write repartition), so each batch's anti join consumes the
-    * index's layout in place — no corpus-side shuffle or sort per batch,
-    * and the distinct is paid once at publish time instead of inside
-    * every serve-side anti join. Files land under `dir`; bucket metadata
-    * lives in the catalog (Spark persists it nowhere else).
+    * catalog table ([[graft.sources.Layout.publishBucketed]]), so each
+    * batch's anti join consumes the index's layout in place — no
+    * corpus-side shuffle or sort per batch, and the distinct is paid once
+    * at publish time instead of inside every serve-side anti join.
     */
   def writeKeyIndexBucketed(corpus: DataFrame, key: String, dir: String,
                             tableName: String, numBuckets: Int = 8): Unit =
-    corpus.select(key).distinct()
-      .repartition(numBuckets, col(key))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, key).sortBy(key)
-      .option("path", dir).saveAsTable(tableName)
+    graft.sources.Layout.publishBucketed(corpus.select(key).distinct(), key,
+      tableName, dir, numBuckets)
 
   /** [[incremental]] against a persisted [[writeKeyIndexBucketed]]
     * table: only genuinely novel batch rows survive, and the standing
@@ -143,29 +138,9 @@ object Dedup {
     * q_dedup_incr_appended shares the monolithic form's oracle).
     */
   def appendKeyIndexBucketed(novelBatch: DataFrame, key: String,
-                             tableName: String): Unit = {
-    // bucket count comes from the TABLE, not a parameter — the appended
-    // files must carry the publish-time spec whatever it was
-    val numBuckets = graft.sources.Layout.bucketCountOf(
-      novelBatch.sparkSession, tableName)
-    novelBatch.select(key).distinct()
-      .repartition(numBuckets, col(key))
-      .write.mode("append").format("parquet")
-      .bucketBy(numBuckets, key).sortBy(key)
-      .saveAsTable(tableName)
-  }
-
-  /** COMPACTION — the fourth lifecycle verb (publish / serve / append /
-    * compact): each [[appendKeyIndexBucketed]] lays down one file per
-    * bucket it touches, so after N daily appends the serve's anti join
-    * scans N small files per bucket. Rewrites the table in place under
-    * its own catalog bucket spec ([[graft.sources.Layout.compactBucketed]])
-    * — serve-identical before/after (LayoutSpec), back to one file per
-    * bucket. Returns the post-compaction file count.
-    */
-  def compactKeyIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-                              tableName: String): Int =
-    graft.sources.Layout.compactBucketed(spark, tableName)
+                             tableName: String): Unit =
+    graft.sources.Layout.appendBucketed(novelBatch.select(key).distinct(),
+      key, tableName)
 
   /** Streaming twin of content-fingerprint dedup ([[TextOps.fingerprintGroups]]
     * collapsed to survivors): first-ARRIVAL document per md5-of-normalized-

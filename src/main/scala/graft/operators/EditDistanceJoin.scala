@@ -149,31 +149,9 @@ object EditDistanceJoin {
     * 100 TB). A partitioned hash join on the variant key is the scalable
     * plan.
     */
-  private def halfIdPairs(base: DataFrame, maxDist: Int): DataFrame = {
-    // Null keys produce no pairs (levenshtein(null, _) is null -> the
-    // verify drops them), so exclude them before grouping.
-    val keyed = base.filter(col("key").isNotNull)
-    val dk = keyed.groupBy("key").agg(min(col("id")).as("gid"))
-    // Explicit partition count before the variant explode: AQE sizes the
-    // post-groupBy exchange by its INPUT bytes (a few hundred KB of
-    // distinct keys) and coalesces it to ONE partition — but the compute
-    // lives AFTER the ~(len·k)-way generator fan-out, so the coalesced
-    // plan runs the whole neighborhood expansion single-threaded
-    // (measured: a 1.7-2.4 s one-task stage inside q_link_agg_lev,
-    // LinkAggAudit, round 11 — the same AQE blind spot as the PQ
-    // codeword fan-out in Ann.pqCodesLong). A user-specified count is
-    // exempt from AQE coalescing. The repartition column must NOT be
-    // `key`: the groupBy child is already hash-partitioned on key, so a
-    // same-column repartition is elided as redundant and the coalescible
-    // groupBy exchange is all that remains (verified in the physical
-    // plan); `gid` forces a fresh user-pinned exchange.
-    val nPart = base.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val variants = dk.repartition(nPart, col("gid"))
-      .withColumn("__len", length(col("key")))
-      .select(col("gid"), col("__len"),
-        explode(graft.functions.deletion_variant_hashes(col("key"), maxDist))
-          .as("__v"))
+  private def halfIdPairs(keyed: DataFrame, maxDist: Int): DataFrame = {
+    val dk = distinctKeys(keyed)
+    val variants = variantPostings(dk, maxDist)
     // Length band: lev(a,b) <= k forces |len(a)-len(b)| <= k, so the
     // cheap precomputed-length comparison runs at hash-probe time and
     // spares the distinct (and the verify) the candidates it can reject —
@@ -198,7 +176,7 @@ object EditDistanceJoin {
     // expansion multiplies them by both groups' sizes — on a corpus with
     // few distinct keys AQE's coalesced one-partition exchange would run
     // that corpus-scale fan-out single-threaded.
-    val cross = verified.repartition(nPart, col("key_a"))
+    val cross = verified.repartition(shufflePartitions(keyed), col("key_a"))
       .join(keyed.select(col("id").as("__ia"), col("key").as("key_a")), "key_a")
       .join(keyed.select(col("id").as("__ib"), col("key").as("key_b")), "key_b")
       .select(when(col("__ia") < col("__ib"),
@@ -223,6 +201,52 @@ object EditDistanceJoin {
     cross.unionByName(intra)
   }
 
+  /** `df`'s (id, key) rows. Null keys produce no pairs
+    * (levenshtein(null, _) is null, so the verify would drop them), so
+    * they are excluded before any grouping.
+    */
+  private def keyedRows(df: DataFrame, idCol: String,
+                        keyCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(keyCol).as("key"))
+      .filter(col("key").isNotNull)
+
+  /** The duplicate-key skew guard ([[halfIdPairs]]): one (key, gid) row
+    * per distinct key, gid = the key's min id, so the variant join sees
+    * each key once however often it repeats.
+    */
+  private def distinctKeys(keyed: DataFrame): DataFrame =
+    keyed.groupBy("key").agg(min(col("id")).as("gid"))
+
+  private def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** The (gid, __len, __v) deletion-variant postings of distinct keys:
+    * one row per <=maxDist-deletion variant hash, with the key length
+    * for the length band.
+    *
+    * Explicit partition count before the variant explode: AQE sizes the
+    * post-groupBy exchange by its INPUT bytes (a few hundred KB of
+    * distinct keys) and coalesces it to ONE partition — but the compute
+    * lives AFTER the ~(len·k)-way generator fan-out, so the coalesced
+    * plan runs the whole neighborhood expansion single-threaded
+    * (measured: a 1.7-2.4 s one-task stage inside q_link_agg_lev,
+    * LinkAggAudit, round 11 — the same AQE blind spot as the PQ
+    * codeword fan-out in Ann.pqCodesLong). A user-specified count is
+    * exempt from AQE coalescing. The repartition column must NOT be
+    * `key`: the groupBy child is already hash-partitioned on key, so a
+    * same-column repartition is elided as redundant and the coalescible
+    * groupBy exchange is all that remains (verified in the physical
+    * plan); `gid` forces a fresh user-pinned exchange. A bucketed
+    * publish's repartition AFTER the explode is the write-side layout,
+    * so the expansion still computes at this parallelism.
+    */
+  private def variantPostings(dk: DataFrame, maxDist: Int): DataFrame =
+    dk.repartition(shufflePartitions(dk), col("gid"))
+      .withColumn("__len", length(col("key")))
+      .select(col("gid"), col("__len"),
+        explode(graft.functions.deletion_variant_hashes(col("key"), maxDist))
+          .as("__v"))
+
   /** Undirected verified id pairs (id_a < id_b) with lev <= maxDist — the
     * edge-list form for graph consumers ([[ConnectedComponents]]): skips
     * the directed/reflexive expansion that [[pairs]] performs (the key
@@ -232,8 +256,7 @@ object EditDistanceJoin {
     */
   def idPairs(df: DataFrame, idCol: String, keyCol: String,
               maxDist: Int): DataFrame =
-    halfIdPairs(df.select(col(idCol).as("id"), col(keyCol).as("key")), maxDist)
-      .select("id_a", "id_b")
+    halfIdPairs(keyedRows(df, idCol, keyCol), maxDist).select("id_a", "id_b")
 
   /** Cross-table edit-distance match: every `left` row paired with every
     * `right` (dictionary) row within lev <= maxDist — the master-data /
@@ -264,28 +287,12 @@ object EditDistanceJoin {
     // key-membership expansion. Equal left/right keys are a legitimate
     // cross-table match (dist 0) and survive naturally — they share every
     // variant and pass the verify.
-    val lk = left.select(col(leftId).as("id"), col(leftKey).as("key"))
-      .filter(col("key").isNotNull)
-    val rk = right.select(col(rightId).as("id"), col(rightKey).as("key"))
-      .filter(col("key").isNotNull)
-    def distinctKeys(df: DataFrame): DataFrame =
-      df.groupBy("key").agg(min(col("id")).as("gid"))
-    // Same explicit-count pin as [[halfIdPairs]]: the distinct-key
-    // exchange is tiny by bytes, so AQE would coalesce it to one
-    // partition ahead of the variant fan-out (and the pin must hash on
-    // `gid`, not `key`, or it is elided as redundant with the groupBy).
-    val nPart = left.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    def explodeSide(dk: DataFrame): DataFrame =
-      dk.repartition(nPart, col("gid"))
-        .withColumn("__len", length(col("key")))
-        .select(col("gid"), col("__len"),
-          explode(graft.functions.deletion_variant_hashes(col("key"), maxDist))
-            .as("__v"))
+    val lk = keyedRows(left, leftId, leftKey)
+    val rk = keyedRows(right, rightId, rightKey)
     val ldk = distinctKeys(lk)
     val rdk = distinctKeys(rk)
-    matchAgainstPostings(lk, explodeSide(ldk), ldk,
-      explodeSide(rdk), rdk, rk, maxDist, nPart)
+    matchAgainstPostings(lk, variantPostings(ldk, maxDist), ldk,
+      variantPostings(rdk, maxDist), rdk, rk, maxDist)
   }
 
   /** Shared core of [[pairsAgainst]] and [[pairsAgainstIndex]]: the
@@ -297,7 +304,7 @@ object EditDistanceJoin {
   private def matchAgainstPostings(lk: DataFrame, lPost: DataFrame,
                                    ldk: DataFrame, rPost: DataFrame,
                                    rdk: DataFrame, rk: DataFrame,
-                                   maxDist: Int, nPart: Int,
+                                   maxDist: Int,
                                    expandRight: Boolean = true): DataFrame = {
     // hint on the RIGHT (dictionary) side: the hinted side is the
     // hash-build side, and the dictionary is the bounded one — building
@@ -325,7 +332,8 @@ object EditDistanceJoin {
     // 659 key pairs expand to ~1.4M rows, measured 1.4 s in ONE task,
     // LinkAggAudit, round 11). Spreading the verified pairs before the
     // expansion keeps the fan-out parallel at any scale.
-    val leftExpanded = verified.repartition(nPart, col("left_key"))
+    val leftExpanded = verified.repartition(shufflePartitions(lk),
+        col("left_key"))
       .join(lk.select(col("id").as("left_id"), col("key").as("left_key")),
         "left_key")
     if (expandRight)
@@ -353,19 +361,10 @@ object EditDistanceJoin {
     */
   def writeVariantIndex(right: DataFrame, rightId: String, rightKey: String,
                         maxDist: Int, dir: String, numFiles: Int = 8): Unit = {
-    val rk = right.select(col(rightId).as("id"), col(rightKey).as("key"))
-      .filter(col("key").isNotNull)
-    val rdk = rk.groupBy("key").agg(min(col("id")).as("gid"))
-    val nPart = right.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    // same explode-fan-out pin as pairsAgainst (gid, not key)
-    val postings = rdk.repartition(nPart, col("gid"))
-      .withColumn("__len", length(col("key")))
-      .select(col("gid"), col("__len"),
-        explode(graft.functions.deletion_variant_hashes(col("key"), maxDist))
-          .as("__v"))
-    graft.sources.Layout.writeClustered(postings, s"$dir/postings",
-      numFiles, "__v")
+    val rk = keyedRows(right, rightId, rightKey)
+    val rdk = distinctKeys(rk)
+    graft.sources.Layout.writeClustered(variantPostings(rdk, maxDist),
+      s"$dir/postings", numFiles, "__v")
     rdk.write.mode("overwrite").parquet(s"$dir/keys")
     rk.write.mode("overwrite").parquet(s"$dir/members")
     import right.sparkSession.implicits._
@@ -387,8 +386,8 @@ object EditDistanceJoin {
     */
   def pairsAgainstIndex(left: DataFrame, leftId: String, leftKey: String,
                         maxDist: Int, indexDir: String): DataFrame =
-    serveAgainstIndex(left, leftId, leftKey, maxDist, indexDir,
-      expandRight = true)
+    serveAgainst(left, leftId, leftKey, maxDist, indexDir,
+      t => left.sparkSession.read.parquet(s"$indexDir/$t"), expandRight = true)
 
   /** [[pairsAgainstIndex]] collapsed to KEY-level matches: one row per
     * (left_id, matched right KEY), the right side carried by its
@@ -406,87 +405,57 @@ object EditDistanceJoin {
     */
   def repsAgainstIndex(left: DataFrame, leftId: String, leftKey: String,
                        maxDist: Int, indexDir: String): DataFrame =
-    serveAgainstIndex(left, leftId, leftKey, maxDist, indexDir,
-      expandRight = false)
+    serveAgainst(left, leftId, leftKey, maxDist, indexDir,
+      t => left.sparkSession.read.parquet(s"$indexDir/$t"), expandRight = false)
 
-  private def serveAgainstIndex(left: DataFrame, leftId: String,
-                                leftKey: String, maxDist: Int,
-                                indexDir: String,
-                                expandRight: Boolean): DataFrame = {
-    val spark = left.sparkSession
-    val indexedDist = spark.read.parquet(s"$indexDir/meta")
-      .head().getInt(0)
-    require(maxDist <= indexedDist,
-      s"index at $indexDir holds <=$indexedDist-deletion postings; " +
-        s"serving maxDist=$maxDist would need variants it never generated")
-    val (lk, ldk, lPost, nPart) = explodeLeft(left, leftId, leftKey, maxDist)
-    matchAgainstPostings(lk, lPost, ldk,
-      spark.read.parquet(s"$indexDir/postings"),
-      spark.read.parquet(s"$indexDir/keys"),
-      spark.read.parquet(s"$indexDir/members"), maxDist, nPart, expandRight)
-  }
-
-  /** Batch-side preparation shared by every index serve: keyed rows,
-    * distinct keys (skew guard), and the pinned variant explode.
+  /** Every variant-index serve: the batch side's keyed rows, distinct
+    * keys and variant postings meet the index's `postings`/`keys`/
+    * `members`, read through `table`: parquet dirs under the flat
+    * index's dir, `<tablePrefix>_<name>` catalog tables for the bucketed.
+    * The index's `meta` max_dist bounds the serve-time `maxDist`; the
+    * refusal names `index`, the dir or the table prefix.
     */
-  private def explodeLeft(left: DataFrame, leftId: String, leftKey: String,
-                          maxDist: Int): (DataFrame, DataFrame, DataFrame, Int) = {
-    val lk = left.select(col(leftId).as("id"), col(leftKey).as("key"))
-      .filter(col("key").isNotNull)
-    val ldk = lk.groupBy("key").agg(min(col("id")).as("gid"))
-    val nPart = left.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val lPost = ldk.repartition(nPart, col("gid"))
-      .withColumn("__len", length(col("key")))
-      .select(col("gid"), col("__len"),
-        explode(graft.functions.deletion_variant_hashes(col("key"), maxDist))
-          .as("__v"))
-    (lk, ldk, lPost, nPart)
+  private def serveAgainst(left: DataFrame, leftId: String, leftKey: String,
+                           maxDist: Int, index: String,
+                           table: String => DataFrame,
+                           expandRight: Boolean): DataFrame = {
+    val indexedDist = table("meta").head().getInt(0)
+    require(maxDist <= indexedDist,
+      s"index $index holds <=$indexedDist-deletion postings; " +
+        s"serving maxDist=$maxDist would need variants it never generated")
+    val lk = keyedRows(left, leftId, leftKey)
+    val ldk = distinctKeys(lk)
+    matchAgainstPostings(lk, variantPostings(ldk, maxDist), ldk,
+      table("postings"), table("keys"), table("members"), maxDist,
+      expandRight)
   }
 
   /** [[writeVariantIndex]] as BUCKETED catalog tables — the variant
     * tier's 100 TB layout ([[NearDup.writeBandIndexBucketed]] reasoning):
-    * `<tablePrefix>_postings` bucketBy(__v) so the candidate equi-join
+    * `<tablePrefix>_postings` bucketed by __v so the candidate equi-join
     * consumes the standing side's layout with NO index-side exchange
     * (only the batch's exploded variants shuffle to meet it),
-    * `<tablePrefix>_keys` bucketBy(gid) for the verify re-attach,
-    * `<tablePrefix>_members` bucketBy(key) for the id-level expansion —
+    * `<tablePrefix>_keys` bucketed by gid for the verify re-attach,
+    * `<tablePrefix>_members` bucketed by key for the id-level expansion —
     * and, unlike the flat layout, a shape that supports INCREMENTAL
     * publish ([[appendVariantIndexBucketed]]): bucketed appends keep the
     * bucket spec (Spark verifies it against the table), so the serve
     * join's no-shuffle property survives day-N appends. Files land under
-    * `dir`; bucket metadata lives in the catalog. The pre-write
-    * repartition on each bucket column yields one file per bucket.
+    * `dir`; bucket metadata lives in the catalog
+    * ([[graft.sources.Layout.publishBucketed]]: one file per bucket).
     */
   def writeVariantIndexBucketed(right: DataFrame, rightId: String,
                                 rightKey: String, maxDist: Int, dir: String,
                                 tablePrefix: String,
                                 numBuckets: Int = 8): Unit = {
-    val rk = right.select(col(rightId).as("id"), col(rightKey).as("key"))
-      .filter(col("key").isNotNull)
-    val rdk = rk.groupBy("key").agg(min(col("id")).as("gid"))
-    val nPart = right.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    // same explode-fan-out pin as writeVariantIndex (gid, not key); the
-    // bucket repartition AFTER the explode is the write-side layout, so
-    // the neighborhood expansion still computes at nPart parallelism
-    rdk.repartition(nPart, col("gid"))
-      .withColumn("__len", length(col("key")))
-      .select(col("gid"), col("__len"),
-        explode(graft.functions.deletion_variant_hashes(col("key"), maxDist))
-          .as("__v"))
-      .repartition(numBuckets, col("__v"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "__v").sortBy("__v")
-      .option("path", s"$dir/postings").saveAsTable(s"${tablePrefix}_postings")
-    rdk.repartition(numBuckets, col("gid"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "gid").sortBy("gid")
-      .option("path", s"$dir/keys").saveAsTable(s"${tablePrefix}_keys")
-    rk.repartition(numBuckets, col("key"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "key").sortBy("key")
-      .option("path", s"$dir/members").saveAsTable(s"${tablePrefix}_members")
+    val rk = keyedRows(right, rightId, rightKey)
+    val rdk = distinctKeys(rk)
+    def publish(df: DataFrame, key: String, t: String): Unit =
+      graft.sources.Layout.publishBucketed(df, key, s"${tablePrefix}_$t",
+        s"$dir/$t", numBuckets)
+    publish(variantPostings(rdk, maxDist), "__v", "postings")
+    publish(rdk, "gid", "keys")
+    publish(rk, "key", "members")
     import right.sparkSession.implicits._
     Seq(maxDist).toDF("max_dist").write.mode("overwrite").format("parquet")
       .option("path", s"$dir/meta").saveAsTable(s"${tablePrefix}_meta")
@@ -536,38 +505,17 @@ object EditDistanceJoin {
                                  keyCol: String, tablePrefix: String): Unit = {
     val spark = batch.sparkSession
     val maxDist = spark.table(s"${tablePrefix}_meta").head().getInt(0)
-    // bucket counts come from the TABLES, not a parameter — the appended
-    // files must carry each table's publish-time spec whatever it was
-    def buckets(t: String): Int =
-      graft.sources.Layout.bucketCountOf(spark, s"${tablePrefix}_$t")
-    val bk = batch.select(col(idCol).as("id"), col(keyCol).as("key"))
-      .filter(col("key").isNotNull)
+    val bk = keyedRows(batch, idCol, keyCol)
     // Novelty is PINNED before any table mutates: the anti join reads
     // `members`, and appending members first would make every batch key
     // look standing (nothing novel -> postings silently skipped).
     val novel = novelKeysAgainstMembers(bk, tablePrefix)
       .localCheckpoint(true)
-    val mB = buckets("members")
-    bk.repartition(mB, col("key"))
-      .write.mode("append").format("parquet")
-      .bucketBy(mB, "key").sortBy("key")
-      .saveAsTable(s"${tablePrefix}_members")
-    val kB = buckets("keys")
-    novel.repartition(kB, col("gid"))
-      .write.mode("append").format("parquet")
-      .bucketBy(kB, "gid").sortBy("gid")
-      .saveAsTable(s"${tablePrefix}_keys")
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pB = buckets("postings")
-    novel.repartition(nPart, col("gid"))
-      .withColumn("__len", length(col("key")))
-      .select(col("gid"), col("__len"),
-        explode(graft.functions.deletion_variant_hashes(col("key"), maxDist))
-          .as("__v"))
-      .repartition(pB, col("__v"))
-      .write.mode("append").format("parquet")
-      .bucketBy(pB, "__v").sortBy("__v")
-      .saveAsTable(s"${tablePrefix}_postings")
+    // each table's bucket count comes from the catalog, not a parameter
+    graft.sources.Layout.appendBucketed(bk, "key", s"${tablePrefix}_members")
+    graft.sources.Layout.appendBucketed(novel, "gid", s"${tablePrefix}_keys")
+    graft.sources.Layout.appendBucketed(variantPostings(novel, maxDist), "__v",
+      s"${tablePrefix}_postings")
   }
 
   /** The append's novelty check, shaped for the standing side: the
@@ -592,35 +540,23 @@ object EditDistanceJoin {
     */
   private[graft] def novelKeysAgainstMembers(bk: DataFrame,
                                              tablePrefix: String): DataFrame =
-    bk.groupBy("key").agg(min(col("id")).as("gid"))
+    distinctKeys(bk)
       .join(bk.sparkSession.table(s"${tablePrefix}_members")
           .select("key").hint("merge"),
         Seq("key"), "left_anti")
 
-  /** COMPACTION for the variant tier's bucketed tables — the fourth
-    * lifecycle verb alongside [[writeVariantIndexBucketed]] (publish),
+  /** COMPACTION for the variant tier — the fourth lifecycle verb
+    * alongside [[writeVariantIndexBucketed]] (publish),
     * [[pairsAgainstIndexBucketed]] (serve) and
     * [[appendVariantIndexBucketed]] (append): N daily appends leave N
-    * file sets per bucket; this rewrites postings/keys/members in place
-    * under their own catalog bucket specs
-    * ([[graft.sources.Layout.compactBucketed]]), serve-identical
-    * before/after. The meta table never grows, so it is left alone.
-    * Returns files per table after compaction (postings, keys, members).
-    */
-  def compactVariantIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-                                  tablePrefix: String): (Int, Int, Int) =
-    (graft.sources.Layout.compactBucketed(spark, s"${tablePrefix}_postings"),
-     graft.sources.Layout.compactBucketed(spark, s"${tablePrefix}_keys"),
-     graft.sources.Layout.compactBucketed(spark, s"${tablePrefix}_members"))
-
-  /** The compaction POLICY over this tier's three tables — the
-    * multi-table twin of
+    * file sets per bucket. The multi-table twin of
     * [[graft.sources.Layout.compactBucketedIfNeeded]]: one nightly call
-    * per tier. Each table decides on its own files-per-bucket depth
-    * (appends write one file set per table per batch, but a batch can
-    * miss buckets in one table and not another, so depths drift apart).
-    * Returns per-table Some(fileCountAfter)/None:
-    * (postings, keys, members).
+    * per tier (`maxFilesPerBucket = 0` forces all three rewrites; the
+    * meta table never grows, so it is left alone). Each table decides
+    * on its own files-per-bucket depth (appends write one file set per
+    * table per batch, but a batch can miss buckets in one table and not
+    * another, so depths drift apart). Returns per-table
+    * Some(fileCountAfter)/None: (postings, keys, members).
     */
   def compactVariantIndexBucketedIfNeeded(
       spark: org.apache.spark.sql.SparkSession, tablePrefix: String,
@@ -641,8 +577,8 @@ object EditDistanceJoin {
   def pairsAgainstIndexBucketed(left: DataFrame, leftId: String,
                                 leftKey: String, maxDist: Int,
                                 tablePrefix: String): DataFrame =
-    serveAgainstTables(left, leftId, leftKey, maxDist, tablePrefix,
-      expandRight = true)
+    serveAgainst(left, leftId, leftKey, maxDist, tablePrefix,
+      t => left.sparkSession.table(s"${tablePrefix}_$t"), expandRight = true)
 
   /** [[repsAgainstIndex]] over the bucketed tables — see
     * [[appendVariantIndexBucketed]] for the rep-id note under appends.
@@ -650,24 +586,8 @@ object EditDistanceJoin {
   def repsAgainstIndexBucketed(left: DataFrame, leftId: String,
                                leftKey: String, maxDist: Int,
                                tablePrefix: String): DataFrame =
-    serveAgainstTables(left, leftId, leftKey, maxDist, tablePrefix,
-      expandRight = false)
-
-  private def serveAgainstTables(left: DataFrame, leftId: String,
-                                 leftKey: String, maxDist: Int,
-                                 tablePrefix: String,
-                                 expandRight: Boolean): DataFrame = {
-    val spark = left.sparkSession
-    val indexedDist = spark.table(s"${tablePrefix}_meta").head().getInt(0)
-    require(maxDist <= indexedDist,
-      s"index tables $tablePrefix hold <=$indexedDist-deletion postings; " +
-        s"serving maxDist=$maxDist would need variants they never generated")
-    val (lk, ldk, lPost, nPart) = explodeLeft(left, leftId, leftKey, maxDist)
-    matchAgainstPostings(lk, lPost, ldk,
-      spark.table(s"${tablePrefix}_postings"),
-      spark.table(s"${tablePrefix}_keys"),
-      spark.table(s"${tablePrefix}_members"), maxDist, nPart, expandRight)
-  }
+    serveAgainst(left, leftId, leftKey, maxDist, tablePrefix,
+      t => left.sparkSession.table(s"${tablePrefix}_$t"), expandRight = false)
 
   /** Winner policy over [[pairsAgainst]]: ONE canonical dictionary entry
     * per matched left row — minimum distance, ties broken by minimum
@@ -713,7 +633,8 @@ object EditDistanceJoin {
                   col("b.id").as("id_b"), col("b.key").as("key_b"))
 
       case DeletionNeighborhood =>
-        val half = halfIdPairs(base, maxDist)
+        val keyed = keyedRows(df, idCol, keyCol)
+        val half = halfIdPairs(keyed, maxDist)
         // Rebuild full directed semantics in ONE pass over `half` (a plain
         // `half union half.mirror` would execute the join twice — measured
         // 2x wall time): explode each undirected pair into both directions,
@@ -724,7 +645,7 @@ object EditDistanceJoin {
                    col("id_a").as("id_b"), col("key_a").as("key_b")))).as("p"))
           .select(col("p.id_a").as("id_a"), col("p.key_a").as("key_a"),
                   col("p.id_b").as("id_b"), col("p.key_b").as("key_b"))
-        both.union(base.filter(col("key").isNotNull)
+        both.union(keyed
           .select(col("id").as("id_a"), col("key").as("key_a"),
             col("id").as("id_b"), col("key").as("key_b")))
     }
@@ -751,14 +672,13 @@ object EditDistanceJoin {
       case Naive =>
         agg(pairs(df, idCol, keyCol, maxDist, Naive))
       case DeletionNeighborhood =>
-        val base = df.select(col(idCol).as("id"), col(keyCol).as("key"))
-        val directed = halfIdPairs(base, maxDist)
+        val keyed = keyedRows(df, idCol, keyCol)
+        val directed = halfIdPairs(keyed, maxDist)
           .select(explode(array(
             struct(col("id_a"), col("key_b")),
             struct(col("id_b").as("id_a"), col("key_a").as("key_b")))).as("p"))
           .select(col("p.id_a").as("id_a"), col("p.key_b").as("key_b"))
-          .union(base.filter(col("key").isNotNull)
-            .select(col("id").as("id_a"), col("key").as("key_b")))
+          .union(keyed.select(col("id").as("id_a"), col("key").as("key_b")))
         agg(directed)
     }
   }

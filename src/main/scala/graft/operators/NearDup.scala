@@ -480,13 +480,10 @@ object NearDup {
   def writeBandIndex(corpus: DataFrame, idCol: String, textCol: String,
                      n: Int, dir: String, numFiles: Int = 8): Unit = {
     val sh = shingles(corpus, idCol, textCol, n).localCheckpoint(true)
-    val post = minhashSignatures(sh)
-      .select(col("id"), explode(array(bandKeyCols(
-        k => col(s"h$k")): _*)).as("bkey"))
-    graft.sources.Layout.writeClustered(post, s"$dir/postings", numFiles, "bkey")
-    graft.sources.Layout.writeClustered(
-      sh.groupBy("id").agg(sort_array(collect_set(col("shingle"))).as("ss")),
-      s"$dir/sets", numFiles, "id")
+    graft.sources.Layout.writeClustered(bandPostingRows(sh),
+      s"$dir/postings", numFiles, "bkey")
+    graft.sources.Layout.writeClustered(shingleSets(sh), s"$dir/sets",
+      numFiles, "id")
   }
 
   /** Incremental near-dup pairs of a new batch against a PERSISTED
@@ -523,16 +520,10 @@ object NearDup {
                              tablePrefix: String,
                              numBuckets: Int = 8): Unit = {
     val sh = shingles(corpus, idCol, textCol, n).localCheckpoint(true)
-    minhashSignatures(sh)
-      .select(col("id"), explode(array(bandKeyCols(
-        k => col(s"h$k")): _*)).as("bkey"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "bkey").sortBy("bkey")
-      .option("path", s"$dir/postings").saveAsTable(s"${tablePrefix}_postings")
-    sh.groupBy("id").agg(sort_array(collect_set(col("shingle"))).as("ss"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "id").sortBy("id")
-      .option("path", s"$dir/sets").saveAsTable(s"${tablePrefix}_sets")
+    graft.sources.Layout.publishBucketed(bandPostingRows(sh), "bkey",
+      s"${tablePrefix}_postings", s"$dir/postings", numBuckets)
+    graft.sources.Layout.publishBucketed(shingleSets(sh), "id",
+      s"${tablePrefix}_sets", s"$dir/sets", numBuckets)
   }
 
   /** INCREMENTAL PUBLISH for the LSH tier — the missing third verb of
@@ -556,44 +547,33 @@ object NearDup {
   def appendBandIndexBucketed(batch: DataFrame, idCol: String,
                               textCol: String, n: Int,
                               tablePrefix: String): Unit = {
-    // bucket counts come from the TABLES, not a parameter — the appended
-    // files must carry each table's publish-time spec whatever it was
-    val spark = batch.sparkSession
     val sh = shingles(batch, idCol, textCol, n).localCheckpoint(true)
+    graft.sources.Layout.appendBucketed(bandPostingRows(sh), "bkey",
+      s"${tablePrefix}_postings")
+    graft.sources.Layout.appendBucketed(shingleSets(sh), "id",
+      s"${tablePrefix}_sets")
+  }
+
+  /** The (id, bkey) band postings and (id, ss) sorted shingle sets of a
+    * shingle frame — the rows every band-index publish and append writes.
+    */
+  private def bandPostingRows(sh: DataFrame): DataFrame =
     minhashSignatures(sh)
       .select(col("id"), explode(array(bandKeyCols(
         k => col(s"h$k")): _*)).as("bkey"))
-      .write.mode("append").format("parquet")
-      .bucketBy(graft.sources.Layout.bucketCountOf(
-        spark, s"${tablePrefix}_postings"), "bkey").sortBy("bkey")
-      .saveAsTable(s"${tablePrefix}_postings")
+
+  private def shingleSets(sh: DataFrame): DataFrame =
     sh.groupBy("id").agg(sort_array(collect_set(col("shingle"))).as("ss"))
-      .write.mode("append").format("parquet")
-      .bucketBy(graft.sources.Layout.bucketCountOf(
-        spark, s"${tablePrefix}_sets"), "id").sortBy("id")
-      .saveAsTable(s"${tablePrefix}_sets")
-  }
 
-  /** COMPACTION for the LSH tier's bucketed tables — the fourth
-    * lifecycle verb: each [[appendBandIndexBucketed]] adds a file set
-    * per bucket, and after N appends the serve scans N small files per
-    * bucket. Rewrites both tables in place under their own catalog
-    * bucket specs ([[graft.sources.Layout.compactBucketed]]),
-    * serve-identical before/after (LayoutSpec prices the pattern;
-    * IndexServeProbe prices this tier's serve at 1 vs many appends).
-    * Returns (postings files, sets files) after compaction.
-    */
-  def compactBandIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-                               tablePrefix: String): (Int, Int) =
-    (graft.sources.Layout.compactBucketed(spark, s"${tablePrefix}_postings"),
-     graft.sources.Layout.compactBucketed(spark, s"${tablePrefix}_sets"))
-
-  /** The compaction POLICY over this tier's table pair — the multi-table
-    * twin of [[graft.sources.Layout.compactBucketedIfNeeded]], so the
-    * nightly job needs one call per TIER, not one per table. Each table
-    * decides on its own files-per-bucket depth (appends lay one file set
-    * on both tables per batch, but a batch whose rows miss some buckets
-    * skips those files, so depths can drift apart). Returns per-table
+  /** COMPACTION for the LSH tier's table pair — the fourth lifecycle
+    * verb: each [[appendBandIndexBucketed]] adds a file set per bucket,
+    * and after N appends the serve scans N small files per bucket. The
+    * multi-table twin of [[graft.sources.Layout.compactBucketedIfNeeded]],
+    * so the nightly job needs one call per TIER, not one per table
+    * (`maxFilesPerBucket = 0` forces both rewrites). Each table decides
+    * on its own files-per-bucket depth (appends lay one file set on both
+    * tables per batch, but a batch whose rows miss some buckets skips
+    * those files, so depths can drift apart). Returns per-table
     * Some(fileCountAfter) where the threshold fired, None where it
     * didn't: (postings, sets).
     */
@@ -632,14 +612,12 @@ object NearDup {
     val sets = setsRaw.select(col("id").as("corpus_id"), col("ss").as("ss_c"))
     // batch scan shared by its postings and its verify sets
     val shB = shingles(batch, idCol, textCol, n).localCheckpoint(true)
-    val postB = minhashSignatures(shB)
-      .select(col("id").as("batch_id"), explode(array(bandKeyCols(
-        k => col(s"h$k")): _*)).as("bkey"))
+    val postB = bandPostingRows(shB)
+      .select(col("id").as("batch_id"), col("bkey"))
     val cands = postB.hint("shuffle_hash").join(post, "bkey")
       .select(col("batch_id"), col("corpus_id")).distinct()
-    val setsB = shB.groupBy("id")
-      .agg(sort_array(collect_set(col("shingle"))).as("ss_b"))
-      .select(col("id").as("batch_id"), col("ss_b"))
+    val setsB = shingleSets(shB)
+      .select(col("id").as("batch_id"), col("ss").as("ss_b"))
     cands
       .join(setsB, "batch_id")
       .join(sets, "corpus_id")
@@ -743,11 +721,8 @@ object NearDup {
     * occur inside the decimal hash values, so the encoding is injective).
     */
   def bandPostings(df: DataFrame, idCol: String, textCol: String,
-                   n: Int): DataFrame = {
-    val sig = minhashSignatures(shingles(df, idCol, textCol, n))
-    sig.select(col("id"), explode(array(bandKeyCols(
-      k => col(s"h$k")): _*)).as("bkey"))
-  }
+                   n: Int): DataFrame =
+    bandPostingRows(shingles(df, idCol, textCol, n))
 
   private def bandKeyCols(h: Int => Column): Seq[Column] =
     (0 until Bands).map { b =>

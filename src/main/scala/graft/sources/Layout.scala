@@ -194,6 +194,37 @@ object Layout {
       s.isFile && s.getPath.getName.endsWith(".parquet"))
   }
 
+  /** Publish `df` as a BUCKETED catalog table — the one write every
+    * standing index tier uses ([[graft.operators.Dedup]] key index,
+    * [[graft.operators.NearDup]] band index,
+    * [[graft.operators.EditDistanceJoin]] variant index): bucketBy +
+    * sortBy on `key`, files under `dir`, bucket metadata in the catalog
+    * (Spark persists it nowhere else). The pre-write repartition on the
+    * bucket column with the bucket count puts each bucket's rows in one
+    * task, so the table lands at ONE file per bucket whatever the
+    * session's shuffle partitions (without it every upstream partition
+    * writes its own file per bucket: 8 files per bucket at 8 partitions,
+    * LayoutSpec). A user-specified count is exempt from AQE coalescing.
+    */
+  def publishBucketed(df: DataFrame, key: String, tableName: String,
+                      dir: String, numBuckets: Int): Unit =
+    df.repartition(numBuckets, col(key))
+      .write.mode(SaveMode.Overwrite).format("parquet")
+      .bucketBy(numBuckets, key).sortBy(key)
+      .option("path", dir).saveAsTable(tableName)
+
+  /** Append `df` to a table [[publishBucketed]] wrote, under the table's
+    * own bucket count ([[bucketCountOf]]) and the same one-file-per-bucket
+    * pre-write repartition: each append adds at most one file per bucket.
+    */
+  def appendBucketed(df: DataFrame, key: String, tableName: String): Unit = {
+    val n = bucketCountOf(df.sparkSession, tableName)
+    df.repartition(n, col(key))
+      .write.mode(SaveMode.Append).format("parquet")
+      .bucketBy(n, key).sortBy(key)
+      .saveAsTable(tableName)
+  }
+
   /** Bucket count of a bucketed catalog table. The append verbs derive
     * their write-side spec from the TABLE's own metadata instead of
     * trusting a caller-supplied count — Spark rejects a mismatch loudly,

@@ -9,9 +9,20 @@ import org.apache.spark.sql.SparkSession
   * ("all" dumps every declared query). Data dir from SPARK_GRAFT_SF_DIR
   * (default sf0.1 — the bench's scale), cores from SPARK_GRAFT_CPUS so the
   * dumped plan is the bench session's plan shape (shuffle.partitions
-  * included).
+  * included). Each query runs before its plan is dumped, so with AQE on
+  * the dump is the final adaptive plan, the one that ran ([[formatted]]).
   */
 object PlanDump {
+  /** `.explain("formatted")` of the plan `df` runs: executes the frame's
+    * OWN QueryExecution first (a noop write or count() would run a
+    * separate one and leave this one at isFinalPlan=false).
+    */
+  def formatted(df: org.apache.spark.sql.DataFrame): String = {
+    df.queryExecution.toRdd.foreach(_ => ())
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query...|all>")
     val outDir = java.nio.file.Paths.get(args(0))
@@ -36,9 +47,7 @@ object PlanDump {
         case None => System.err.println(s"[plandump] unknown query: $name")
         case Some(fn) =>
           try {
-            val df = fn(spark, sfDir)
-            val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
+            val txt = formatted(fn(spark, sfDir))
             java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
               txt.getBytes("UTF-8"))
             println(s"[plandump] wrote ${name}_$suffix.txt")

@@ -5,8 +5,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** The executed-plan scan-metric walker shared by the dev measurement
-  * tools (ScaleProbe's lifecycle probes, IvfSq8Tune; earlier DppCheck,
-  * round 14) — one
+  * tools (ScaleProbe's lifecycle probes, IvfSq8Tune, PqServeSweep;
+  * earlier DppCheck, round 14) — one
   * home for the AQE node unwrapping, so a Spark-version change to the
   * wrapper shapes is one edit (round-17 review: four verbatim copies
   * had accumulated across the tools). Read metrics only AFTER executing

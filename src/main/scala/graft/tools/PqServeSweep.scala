@@ -62,29 +62,14 @@ object PqServeSweep {
           .write.mode("overwrite").format("noop").save())
       // code-scan I/O per layout: the pruning claim is about BYTES, and
       // single-node wall time at fixture scale is compute-bound — read
-      // the scan node's own metrics after an executed probe-bounded
-      // serve on each layout
+      // the scan node's own metrics off the final adaptive plan of an
+      // executed probe-bounded serve on each layout
       def scanIo(sub: String, p: org.apache.spark.sql.Column): (Long, Long) = {
-        // AQE's adaptive wrapper hides the scan leaves from the plan
-        // walk below; DPP is independent of AQE, so measure with it off
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
-          val df = Ann.pqSearchIndexed(emb, "vec_id", "embedding",
-            PqFixture.model, p, 5, s"$dir/$sub", Some(IvfFixture.model),
-            nProbe = 8)
-          df.collect() // execute THIS QueryExecution so its metrics fill
-          if (sys.env.contains("PQ_SWEEP_DEBUG"))
-            println(s"[debug $sub] " + df.queryExecution.executedPlan.toString
-              .linesIterator.filter(l => l.contains("dynamicpruning") ||
-                l.contains("PartitionFilters") || l.contains("Scan parquet"))
-              .mkString("\n"))
-          val scans = df.queryExecution.executedPlan.collectLeaves()
-          .collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
-          .filter(_.metrics.contains("filesSize"))
-          .filter(_.relation.location.rootPaths.exists(_.toString.contains(sub)))
-          (scans.map(_.metrics("numFiles").value).sum,
-           scans.map(_.metrics("filesSize").value).sum)
-        } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+        val df = Ann.pqSearchIndexed(emb, "vec_id", "embedding",
+          PqFixture.model, p, 5, s"$dir/$sub", Some(IvfFixture.model),
+          nProbe = 8)
+        df.collect() // execute THIS QueryExecution so its metrics fill
+        PlanScans.scanOf(df, s"/$sub")
       }
       val ex = serve("flat", Int.MaxValue)
       val pr = serve("flat", 8)

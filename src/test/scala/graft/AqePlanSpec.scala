@@ -91,4 +91,12 @@ class AqePlanSpec extends SparkSpec {
         s"$q has a coalescible repartition back in the plan:\n$p")
     }
   }
+
+  test("PlanDump dumps the final adaptive plan, not the initial one") {
+    import org.apache.spark.sql.functions.col
+    val df = spark.range(1000).groupBy((col("id") % 7).as("k")).count()
+    val dump = graft.tools.PlanDump.formatted(df)
+    assert(dump.contains("isFinalPlan=true"), dump)
+    assert(!dump.contains("isFinalPlan=false"), dump)
+  }
 }

@@ -74,7 +74,7 @@ class LayoutSpec extends SparkSpec {
       .as[(String, Long)].collect().toSet
     val filesBefore = parquetFiles(s"$dir/t").size
     assert(filesBefore > 4, s"appends must accumulate files, saw $filesBefore")
-    val filesAfter = Dedup.compactKeyIndexBucketed(spark, tbl)
+    val filesAfter = Layout.compactBucketed(spark, tbl)
     // one file per bucket restored, nothing a query can observe changed
     assert(filesAfter == 4, s"filesAfter=$filesAfter")
     assert(parquetFiles(s"$dir/t").size == 4)
@@ -462,6 +462,57 @@ class LayoutSpec extends SparkSpec {
       "graft_spec_empty_vr_keys", "graft_spec_empty_vr_members",
       "graft_spec_empty_vr_meta").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  // Every standing tier writes through Layout.publishBucketed /
+  // appendBucketed, so each bucketed table is published at one file per
+  // bucket and an append adds at most one more. Eight shuffle partitions
+  // with coalescing off keep the upstream partitions apart as they are
+  // at real sizes; at fixture sizes AQE merges them into one, which
+  // hides a writer that skips the pre-write repartition (such a writer
+  // lays down one file per bucket per upstream partition: 8.0 here).
+  test("every bucketed tier publishes one file per bucket and appends at most one more") {
+    import graft.operators.{Dedup, EditDistanceJoin, NearDup, TextOps}
+    val confs = Seq("spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val dir = tmpDir("onefile")
+    val docs = Tables.documents(spark, sf0001)
+    val fp = docs.select(col("doc_id"),
+      TextOps.fingerprint(col("text")).as("fp"))
+    val names = Tables.customer(spark, sf0001)
+      .select(col("c_custkey"), col("c_name"))
+    val even = col("doc_id") % 2 === 0
+    val evenC = col("c_custkey") % 2 === 0
+    val tables = Seq("fp", "lsh_postings", "lsh_sets", "vr_postings",
+      "vr_keys", "vr_members").map(t => s"graft_spec_onefile_$t")
+    def depths = tables.map(t => t -> Layout.filesPerBucket(spark, t))
+    try {
+      Dedup.writeKeyIndexBucketed(fp.filter(even).select("fp"), "fp",
+        s"$dir/fp", "graft_spec_onefile_fp", numBuckets = 4)
+      NearDup.writeBandIndexBucketed(docs.filter(even), "doc_id", "text", 3,
+        s"$dir/lsh", "graft_spec_onefile_lsh", numBuckets = 4)
+      EditDistanceJoin.writeVariantIndexBucketed(names.filter(evenC),
+        "c_custkey", "c_name", 1, s"$dir/vr", "graft_spec_onefile_vr",
+        numBuckets = 4)
+      val published = depths
+      assert(published.forall(_._2 == 1.0), published)
+      Dedup.appendKeyIndexBucketed(Dedup.incrementalAgainstIndex(
+          fp.filter(!even), "fp", "graft_spec_onefile_fp"),
+        "fp", "graft_spec_onefile_fp")
+      NearDup.appendBandIndexBucketed(docs.filter(!even), "doc_id", "text",
+        3, "graft_spec_onefile_lsh")
+      EditDistanceJoin.appendVariantIndexBucketed(names.filter(!evenC),
+        "c_custkey", "c_name", "graft_spec_onefile_vr")
+      val appended = depths
+      assert(appended.forall(d => d._2 >= 1.0 && d._2 <= 2.0), appended)
+    } finally {
+      saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      (tables :+ "graft_spec_onefile_vr_meta").foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
   }
 
   test("writeHilbertOrdered envelopes are at least as tight as Z-order's") {
