@@ -221,6 +221,58 @@ object SparkEntry {
       base.toString
     }
 
+  /** Catalog table prefix of a [[cachedPublish]] dir: its leaf, with
+    * every character a table name cannot hold (the leaf carries `sf0.1`
+    * and the host token) turned to '_'. The catalog is the SparkContext's,
+    * so the tables live exactly as long as the per-JVM publish they
+    * belong to.
+    */
+  private def publishTablePrefix(pub: String): String =
+    java.nio.file.Paths.get(pub).getFileName.toString
+      .replaceAll("[^A-Za-z0-9_]", "_")
+
+  /** The standing CC labels and bucketed variant index over the customer
+    * `c_custkey % 3 != 0` slice, published once per JVM — shared by
+    * q_cluster_cc_serve and q_cluster_cc_republish (one publish covers
+    * both rows). Returns the standing labels and the index's table
+    * prefix.
+    */
+  private def ccStanding(s: SparkSession, dir: String,
+                         corpus: DataFrame): (DataFrame, String) = {
+    val pub = cachedPublish("cc_standing", dir) { root =>
+      ConnectedComponents.run(
+          corpus.select(col("c_custkey").as("id")),
+          EditDistanceJoin.idPairs(corpus, "c_custkey", "c_name", 1)
+            .select(col("id_a").as("src"), col("id_b").as("dst")))
+        .write.mode("overwrite").parquet(s"$root/standing")
+      EditDistanceJoin.writeVariantIndexBucketed(
+        corpus.select(col("c_custkey"), col("c_name")),
+        "c_custkey", "c_name", 1, s"$root/varidx", publishTablePrefix(root))
+    }
+    (s.read.parquet(s"$pub/standing"), publishTablePrefix(pub))
+  }
+
+  /** Incremental near-dedup served from BUCKETED index tables (bucketBy
+    * bkey/id through the catalog): today's batch (src0) against the
+    * standing corpus (everything else) — the 100 TB form where the
+    * standing index joins IN PLACE: no index-side exchange, only the
+    * small batch shuffles to the bucket layout (plan-asserted in
+    * NearDupSpec). The oracle replays the full LSH+verify recompute;
+    * hash equality proves the publish/serve roundtrip lossless. Bound to
+    * q_near_dedup_incremental and q_near_dedup_incr_bucketed.
+    */
+  private def nearDupIncrBucketed(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    // Unique catalog names per run (see q_dedup_incr_indexed note).
+    val tmp = scratchDir("graft_lsh_bidx")
+    val tbl = tmp.getFileName.toString
+    NearDup.writeBandIndexBucketed(docs.filter(col("source") =!= "src0"),
+      "doc_id", "text", 3, tmp.toString, tbl)
+    NearDup.incrementalNearDupPairsBucketed(
+      docs.filter(col("source") === "src0"),
+      "doc_id", "text", 3, 0.5, tbl)
+  }
+
   /** Flagship (soulutionOne.py end-to-end shape, Spark-native): dedup the
     * counterparty-like customer table, then link near-duplicate names and
     * aggregate member sets per cluster. Driver smoke-checks rows>0 on sf0.001.
@@ -448,7 +500,9 @@ object SparkEntry {
       // INDEPENDENT (the serve below needs both) — overlapped
       // (Par.sections, guide §2.6): the index write back-fills the CC
       // rounds' scheduling gaps. Same artifacts, same labels.
-      val tmp = scratchDir("graft_cc_var_idx").toString
+      // Unique catalog names per run (see q_dedup_incr_indexed note).
+      val tmp = scratchDir("graft_cc_var_idx")
+      val tbl = tmp.getFileName.toString
       var standing: org.apache.spark.sql.DataFrame = null
       operators.Par.sections(
         () => standing = ConnectedComponents.run(
@@ -456,18 +510,18 @@ object SparkEntry {
             EditDistanceJoin.idPairs(corpus, "c_custkey", "c_name", 1)
               .select(col("id_a").as("src"), col("id_b").as("dst")))
           .localCheckpoint(true),
-        () => EditDistanceJoin.writeVariantIndex(
+        () => EditDistanceJoin.writeVariantIndexBucketed(
           corpus.select(col("c_custkey"), col("c_name")),
-          "c_custkey", "c_name", 1, tmp))
+          "c_custkey", "c_name", 1, tmp.toString, tbl))
       // reps, not pairs: CC needs ONE edge per (batch id, matched key) —
       // equal keys already share a standing component, so the key's
       // representative member reaches the whole group and the right-
       // membership fan-out would be pure waste (serve 7.1 -> 6.5 s,
       // IndexServeProbe; the residual is the SymSpell candidate join
       // itself, not the expansion).
-      val crossEdges = EditDistanceJoin.repsAgainstIndex(
+      val crossEdges = EditDistanceJoin.repsAgainstIndexBucketed(
           batch.select(col("c_custkey"), col("c_name")),
-          "c_custkey", "c_name", 1, tmp)
+          "c_custkey", "c_name", 1, tbl)
         .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
       val batchEdges = EditDistanceJoin.idPairs(batch, "c_custkey", "c_name", 1)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -488,20 +542,10 @@ object SparkEntry {
       val c = Tables.customer(s, dir)
       val corpus = c.filter(col("c_custkey") % 3 =!= 0)
       val batch = c.filter(col("c_custkey") % 3 === 0)
-      val pub = cachedPublish("cc_standing", dir) { root =>
-        ConnectedComponents.run(
-            corpus.select(col("c_custkey").as("id")),
-            EditDistanceJoin.idPairs(corpus, "c_custkey", "c_name", 1)
-              .select(col("id_a").as("src"), col("id_b").as("dst")))
-          .write.mode("overwrite").parquet(s"$root/standing")
-        EditDistanceJoin.writeVariantIndex(
-          corpus.select(col("c_custkey"), col("c_name")),
-          "c_custkey", "c_name", 1, s"$root/varidx")
-      }
-      val standing = s.read.parquet(s"$pub/standing")
-      val crossEdges = EditDistanceJoin.repsAgainstIndex(
+      val (standing, tbl) = ccStanding(s, dir, corpus)
+      val crossEdges = EditDistanceJoin.repsAgainstIndexBucketed(
           batch.select(col("c_custkey"), col("c_name")),
-          "c_custkey", "c_name", 1, s"$pub/varidx")
+          "c_custkey", "c_name", 1, tbl)
         .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
       val batchEdges = EditDistanceJoin.idPairs(batch, "c_custkey", "c_name", 1)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -527,20 +571,10 @@ object SparkEntry {
       val c = Tables.customer(s, dir)
       val corpus = c.filter(col("c_custkey") % 3 =!= 0)
       val batch = c.filter(col("c_custkey") % 3 === 0)
-      val pub = cachedPublish("cc_standing", dir) { root =>
-        ConnectedComponents.run(
-            corpus.select(col("c_custkey").as("id")),
-            EditDistanceJoin.idPairs(corpus, "c_custkey", "c_name", 1)
-              .select(col("id_a").as("src"), col("id_b").as("dst")))
-          .write.mode("overwrite").parquet(s"$root/standing")
-        EditDistanceJoin.writeVariantIndex(
-          corpus.select(col("c_custkey"), col("c_name")),
-          "c_custkey", "c_name", 1, s"$root/varidx")
-      }
-      val standing = s.read.parquet(s"$pub/standing")
-      val crossEdges = EditDistanceJoin.repsAgainstIndex(
+      val (standing, tbl) = ccStanding(s, dir, corpus)
+      val crossEdges = EditDistanceJoin.repsAgainstIndexBucketed(
           batch.select(col("c_custkey"), col("c_name")),
-          "c_custkey", "c_name", 1, s"$pub/varidx")
+          "c_custkey", "c_name", 1, tbl)
         .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
       val batchEdges = EditDistanceJoin.idPairs(batch, "c_custkey", "c_name", 1)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -1271,39 +1305,15 @@ object SparkEntry {
         "doc_id", "text", 3, 0.3)
     }),
 
-    // ---- Incremental near-dedup against a PERSISTED standing LSH index
+    // ---- Incremental near-dedup against a standing LSH index
     // (write-once/serve-many — the IvfFixture pattern for text): the
-    // standing corpus's band postings + verify shingle sets are
-    // published to bkey-/id-clustered parquet and today's batch (src0)
-    // joins the FROZEN index, so the corpus contributes a scan per
-    // batch, never recompute. The oracle replays the full LSH+verify
-    // recompute; hash equality proves the persisted path lossless.
-    "q_near_dedup_incremental" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val tmp = scratchDir("graft_lsh_idx").toString
-      NearDup.writeBandIndex(docs.filter(col("source") =!= "src0"),
-        "doc_id", "text", 3, tmp)
-      NearDup.incrementalNearDupPairs(docs.filter(col("source") === "src0"),
-        "doc_id", "text", 3, 0.5, tmp)
-    }),
-
-    // ---- The same incremental serve against BUCKETED index tables
-    // (bucketBy bkey/id through the catalog) — the 100 TB form where
-    // the standing index joins IN PLACE: no index-side exchange, only
-    // the small batch shuffles to the bucket layout (plan-asserted in
-    // NearDupSpec). Same oracle as the parquet form: identical results
-    // prove the bucketed write/read roundtrip lossless.
-    "q_near_dedup_incr_bucketed" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // Unique catalog names per run (see q_dedup_incr_indexed note).
-      val tmp = scratchDir("graft_lsh_bidx")
-      val tbl = tmp.getFileName.toString
-      NearDup.writeBandIndexBucketed(docs.filter(col("source") =!= "src0"),
-        "doc_id", "text", 3, tmp.toString, tbl)
-      NearDup.incrementalNearDupPairsBucketed(
-        docs.filter(col("source") === "src0"),
-        "doc_id", "text", 3, 0.5, tbl)
-    }),
+    // standing corpus's band postings + verify shingle sets publish
+    // once and today's batch (src0) joins the FROZEN index, so the
+    // corpus contributes a scan per batch, never recompute. The LSH
+    // tier has one index layout, so both names run one body
+    // (nearDupIncrBucketed) and keep their oracle rows.
+    "q_near_dedup_incremental" -> nearDupIncrBucketed _,
+    "q_near_dedup_incr_bucketed" -> nearDupIncrBucketed _,
 
     // ---- The LSH tier's INCREMENTAL PUBLISH: build the standing index
     // WITHOUT yesterday's batch (src1), append src1 via
@@ -2017,8 +2027,9 @@ object SparkEntry {
           sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("revenue_cents"),
           count_distinct(col("o_custkey")).as("n_customers"))),
 
-    // ---- Bucketed co-located join: both tables written bucketBy(8) on
-    // the join key, so the sort-merge join consumes bucket files directly
+    // ---- Bucketed co-located join: both tables published in 8 buckets
+    // on the join key (Layout.publishBucketed, one file per bucket), so
+    // the sort-merge join consumes bucket files directly
     // — ZERO exchanges feeding the join (the only shuffle left is the
     // final small aggregate; asserted in DedupSpec's plan test). The
     // "merge" hint keeps Catalyst from broadcasting the small dim, which
@@ -2031,12 +2042,10 @@ object SparkEntry {
       val tmp = tmpPath.toString
       // Unique catalog names per run (see q_dedup_incr_indexed note).
       val base = tmpPath.getFileName.toString
-      Tables.orders(s, dir).write.mode("overwrite").format("parquet")
-        .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", s"$tmp/orders_b").saveAsTable(s"${base}_orders")
-      Tables.customer(s, dir).write.mode("overwrite").format("parquet")
-        .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", s"$tmp/customer_b").saveAsTable(s"${base}_customer")
+      sources.Layout.publishBucketed(Tables.orders(s, dir), "o_custkey",
+        s"${base}_orders", s"$tmp/orders_b", 8)
+      sources.Layout.publishBucketed(Tables.customer(s, dir), "c_custkey",
+        s"${base}_customer", s"$tmp/customer_b", 8)
       s.table(s"${base}_orders").hint("merge")
         .join(s.table(s"${base}_customer"),
           col("o_custkey") === col("c_custkey"))
@@ -2581,11 +2590,14 @@ object SparkEntry {
           concat(expr("substring(p_name, 1, CAST((p_partkey DIV 5) % length(p_name) AS INT))"),
             expr("substring(p_name, CAST((p_partkey DIV 5) % length(p_name) AS INT) + 2)"))
             .as("dirty_name"))
-      val tmp = scratchDir("graft_var_idx").toString
-      EditDistanceJoin.writeVariantIndex(
+      // Unique catalog names per run (see q_dedup_incr_indexed note).
+      val tmp = scratchDir("graft_var_idx")
+      val tbl = tmp.getFileName.toString
+      EditDistanceJoin.writeVariantIndexBucketed(
         parts.select(col("p_partkey"), col("p_name")), "p_partkey", "p_name",
-        1, tmp)
-      EditDistanceJoin.pairsAgainstIndex(dirty, "dirty_id", "dirty_name", 1, tmp)
+        1, tmp.toString, tbl)
+      EditDistanceJoin.pairsAgainstIndexBucketed(
+          dirty, "dirty_id", "dirty_name", 1, tbl)
         .withColumn("dist", col("dist").cast("long"))
     }),
 
@@ -4594,8 +4606,8 @@ object SparkEntry {
         "RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)"),
     "q_dict_match" -> sqlDictMatchOracle,
     // Served from the standing variant index — result-identical by the
-    // publish/serve roundtrip argument (EditDistanceJoin.pairsAgainstIndex
-    // Scaladoc); equality against the SAME naive replay proves it.
+    // publish/serve roundtrip argument
+    // (EditDistanceJoin.pairsAgainstIndexBucketed Scaladoc); equality against the SAME naive replay proves it.
     "q_dict_match_indexed" -> sqlDictMatchOracle,
     // write(%7!=0) + append(%7==0) reconstructs the FULL dictionary, so
     // the monolithic replay is the exact oracle — equality proves the

@@ -315,7 +315,7 @@ object ConnectedComponents {
     * `batchEdges` = (src, dst) where at
     * least one endpoint is a batch id (pair the batch against the
     * corpus's standing variant/band index to get these without a corpus
-    * scan — [[EditDistanceJoin.pairsAgainstIndex]],
+    * scan — [[EditDistanceJoin.repsAgainstIndexBucketed]],
     * [[NearDup.incrementalNearDupPairsBucketed]]). Returns (id,
     * component) for the batch ids. Merged standing components are
     * visible to the caller as rows of the SAME output where a batch id

@@ -295,7 +295,8 @@ object EditDistanceJoin {
       variantPostings(rdk, maxDist), rdk, rk, maxDist)
   }
 
-  /** Shared core of [[pairsAgainst]] and [[pairsAgainstIndex]]: the
+  /** Shared core of [[pairsAgainst]] and the variant-index serves
+    * ([[pairsAgainstIndexBucketed]], [[repsAgainstIndexBucketed]]): the
     * candidate equi-join over variant postings, narrow distinct, key
     * re-attach + banded verify, and the pinned membership expansion —
     * with the dictionary side's postings/keys/members supplied by the
@@ -353,95 +354,18 @@ object EditDistanceJoin {
     * service freezes its dictionary for months while dirty batches
     * arrive, so the dictionary's distinct-key variant explosion — the
     * whole right half of the candidate join — persists once and every
-    * batch reads it as a scan. Published under `dir`:
-    * `postings` (gid, __len, __v) clustered by variant hash (the join
-    * key, so file stats prune probes), `keys` (key, gid) for the verify
-    * re-attach, `members` (id, key) for the id-level expansion.
-    * The skew guard is baked at publish time (distinct keys only).
-    */
-  def writeVariantIndex(right: DataFrame, rightId: String, rightKey: String,
-                        maxDist: Int, dir: String, numFiles: Int = 8): Unit = {
-    val rk = keyedRows(right, rightId, rightKey)
-    val rdk = distinctKeys(rk)
-    graft.sources.Layout.writeClustered(variantPostings(rdk, maxDist),
-      s"$dir/postings", numFiles, "__v")
-    rdk.write.mode("overwrite").parquet(s"$dir/keys")
-    rk.write.mode("overwrite").parquet(s"$dir/members")
-    import right.sparkSession.implicits._
-    Seq(maxDist).toDF("max_dist").write.mode("overwrite")
-      .parquet(s"$dir/meta")
-  }
-
-  /** [[pairsAgainst]] served from a persisted [[writeVariantIndex]]:
-    * only the BATCH side explodes at query time; its variants join the
-    * standing postings, and the verify/expansion read the persisted
-    * keys/members tables. RESULT-IDENTICAL to pairsAgainst for the same
-    * dictionary and the same `maxDist` (the caller's contract — a
-    * smaller serve-time maxDist is also exact, since the length band
-    * and verify tighten on it; a LARGER one would need postings the
-    * index never generated and is the one misuse, so it is checked
-    * against the persisted `max_dist` marker). Oracled as
-    * q_dict_match_indexed with q_dict_match's own replay oracle —
-    * equality proves the publish/serve roundtrip lossless.
-    */
-  def pairsAgainstIndex(left: DataFrame, leftId: String, leftKey: String,
-                        maxDist: Int, indexDir: String): DataFrame =
-    serveAgainst(left, leftId, leftKey, maxDist, indexDir,
-      t => left.sparkSession.read.parquet(s"$indexDir/$t"), expandRight = true)
-
-  /** [[pairsAgainstIndex]] collapsed to KEY-level matches: one row per
-    * (left_id, matched right KEY), the right side carried by its
-    * REPRESENTATIVE member id (the index's gid = min right id per key)
-    * instead of expanding to every member — output (left_id, left_key,
-    * right_rep_id, right_key, dist). The verified key-pair set is
-    * IDENTICAL to pairsAgainstIndex's (this skips only the right-
-    * membership fan-out), so for consumers that need connectivity or a
-    * canonical representative rather than every duplicate row —
-    * component assignment ([[ConnectedComponents.incrementalAssign]]:
-    * equal keys share a standing component, so an edge to the
-    * representative reaches the whole group), correction-to-canonical —
-    * the result is equivalent at a fraction of the rows on duplicate-
-    * heavy dictionaries.
-    */
-  def repsAgainstIndex(left: DataFrame, leftId: String, leftKey: String,
-                       maxDist: Int, indexDir: String): DataFrame =
-    serveAgainst(left, leftId, leftKey, maxDist, indexDir,
-      t => left.sparkSession.read.parquet(s"$indexDir/$t"), expandRight = false)
-
-  /** Every variant-index serve: the batch side's keyed rows, distinct
-    * keys and variant postings meet the index's `postings`/`keys`/
-    * `members`, read through `table`: parquet dirs under the flat
-    * index's dir, `<tablePrefix>_<name>` catalog tables for the bucketed.
-    * The index's `meta` max_dist bounds the serve-time `maxDist`; the
-    * refusal names `index`, the dir or the table prefix.
-    */
-  private def serveAgainst(left: DataFrame, leftId: String, leftKey: String,
-                           maxDist: Int, index: String,
-                           table: String => DataFrame,
-                           expandRight: Boolean): DataFrame = {
-    val indexedDist = table("meta").head().getInt(0)
-    require(maxDist <= indexedDist,
-      s"index $index holds <=$indexedDist-deletion postings; " +
-        s"serving maxDist=$maxDist would need variants it never generated")
-    val lk = keyedRows(left, leftId, leftKey)
-    val ldk = distinctKeys(lk)
-    matchAgainstPostings(lk, variantPostings(ldk, maxDist), ldk,
-      table("postings"), table("keys"), table("members"), maxDist,
-      expandRight)
-  }
-
-  /** [[writeVariantIndex]] as BUCKETED catalog tables — the variant
-    * tier's 100 TB layout ([[NearDup.writeBandIndexBucketed]] reasoning):
-    * `<tablePrefix>_postings` bucketed by __v so the candidate equi-join
-    * consumes the standing side's layout with NO index-side exchange
-    * (only the batch's exploded variants shuffle to meet it),
-    * `<tablePrefix>_keys` bucketed by gid for the verify re-attach,
-    * `<tablePrefix>_members` bucketed by key for the id-level expansion —
-    * and, unlike the flat layout, a shape that supports INCREMENTAL
-    * publish ([[appendVariantIndexBucketed]]): bucketed appends keep the
-    * bucket spec (Spark verifies it against the table), so the serve
-    * join's no-shuffle property survives day-N appends. Files land under
-    * `dir`; bucket metadata lives in the catalog
+    * batch reads it as a scan. Published as BUCKETED catalog tables:
+    * `<tablePrefix>_postings` (gid, __len, __v) bucketed by __v so the
+    * candidate equi-join consumes the standing side's layout with NO
+    * index-side exchange (only the batch's exploded variants shuffle to
+    * meet it), `<tablePrefix>_keys` (key, gid) bucketed by gid for the
+    * verify re-attach, `<tablePrefix>_members` (id, key) bucketed by key
+    * for the id-level expansion, and `<tablePrefix>_meta` holding the
+    * published `max_dist`. The skew guard is baked at publish time
+    * (distinct keys only). Bucketed appends keep the bucket spec (Spark
+    * verifies it against the table), so the serve join's no-shuffle
+    * property survives day-N appends ([[appendVariantIndexBucketed]]).
+    * Files land under `dir`; bucket metadata lives in the catalog
     * ([[graft.sources.Layout.publishBucketed]]: one file per bucket).
     */
   def writeVariantIndexBucketed(right: DataFrame, rightId: String,
@@ -466,10 +390,10 @@ object EditDistanceJoin {
     * .mergeRepublish]] folds a served batch into the standing LABELS,
     * tomorrow's serve also needs the batch's NAMES in the variant index,
     * and until this verb existed the only way to get them there was a
-    * full [[writeVariantIndex]] over the grown corpus — the corpus-scan
-    * publish the tier exists to amortize. This appends the batch's
-    * slice of each index table instead (cost tracks the batch, never
-    * the corpus), under the tables' own bucket specs, so the serve
+    * full [[writeVariantIndexBucketed]] over the grown corpus — the
+    * corpus-scan publish the tier exists to amortize. This appends the
+    * batch's slice of each index table instead (cost tracks the batch,
+    * never the corpus), under the tables' own bucket specs, so the serve
     * contract survives unchanged.
     *
     * Per-table semantics (what keeps append ≡ rebuild):
@@ -568,26 +492,69 @@ object EditDistanceJoin {
      graft.sources.Layout.compactBucketedIfNeeded(
        spark, s"${tablePrefix}_members", maxFilesPerBucket))
 
-  /** [[pairsAgainstIndex]] served from the BUCKETED tables
+  /** [[pairsAgainst]] served from a standing variant index
     * ([[writeVariantIndexBucketed]], possibly grown by
-    * [[appendVariantIndexBucketed]]): result-identical, but the
-    * candidate join consumes the postings' bucket layout — no
-    * index-side shuffle (plan-asserted in EditDistanceJoinSpec).
+    * [[appendVariantIndexBucketed]]): only the BATCH side explodes at
+    * query time; its variants join the standing postings in place (the
+    * candidate join consumes the postings' bucket layout — no index-side
+    * shuffle, plan-asserted in EditDistanceJoinSpec), and the verify/
+    * expansion read the standing keys/members tables. RESULT-IDENTICAL
+    * to pairsAgainst for the same dictionary and the same `maxDist` (the
+    * caller's contract — a smaller serve-time maxDist is also exact,
+    * since the length band and verify tighten on it; a LARGER one would
+    * need postings the index never generated and is the one misuse, so
+    * it is checked against the published `max_dist`). Oracled as
+    * q_dict_match_indexed with q_dict_match's own replay oracle —
+    * equality proves the publish/serve roundtrip lossless.
     */
   def pairsAgainstIndexBucketed(left: DataFrame, leftId: String,
                                 leftKey: String, maxDist: Int,
                                 tablePrefix: String): DataFrame =
     serveAgainst(left, leftId, leftKey, maxDist, tablePrefix,
-      t => left.sparkSession.table(s"${tablePrefix}_$t"), expandRight = true)
+      expandRight = true)
 
-  /** [[repsAgainstIndex]] over the bucketed tables — see
-    * [[appendVariantIndexBucketed]] for the rep-id note under appends.
+  /** [[pairsAgainstIndexBucketed]] collapsed to KEY-level matches: one
+    * row per (left_id, matched right KEY), the right side carried by its
+    * REPRESENTATIVE member id (the index's gid = min right id per key)
+    * instead of expanding to every member — output (left_id, left_key,
+    * right_rep_id, right_key, dist). The verified key-pair set is
+    * IDENTICAL to the pairs form's (this skips only the right-membership
+    * fan-out), so for consumers that need connectivity or a canonical
+    * representative rather than every duplicate row — component
+    * assignment ([[ConnectedComponents.incrementalAssign]]: equal keys
+    * share a standing component, so an edge to the representative
+    * reaches the whole group), correction-to-canonical — the result is
+    * equivalent at a fraction of the rows on duplicate-heavy
+    * dictionaries (the cc_assign serve went 7.1 -> 6.5 s against the
+    * pairs form, IndexServeProbe, measured on the retired flat layout).
+    * See [[appendVariantIndexBucketed]] for the rep-id note under
+    * appends.
     */
   def repsAgainstIndexBucketed(left: DataFrame, leftId: String,
                                leftKey: String, maxDist: Int,
                                tablePrefix: String): DataFrame =
     serveAgainst(left, leftId, leftKey, maxDist, tablePrefix,
-      t => left.sparkSession.table(s"${tablePrefix}_$t"), expandRight = false)
+      expandRight = false)
+
+  /** Every variant-index serve: the batch side's keyed rows, distinct
+    * keys and variant postings meet the `<tablePrefix>_postings`/`_keys`/
+    * `_members` tables. The index's `_meta` max_dist bounds the
+    * serve-time `maxDist`.
+    */
+  private def serveAgainst(left: DataFrame, leftId: String, leftKey: String,
+                           maxDist: Int, tablePrefix: String,
+                           expandRight: Boolean): DataFrame = {
+    def table(t: String) = left.sparkSession.table(s"${tablePrefix}_$t")
+    val indexedDist = table("meta").head().getInt(0)
+    require(maxDist <= indexedDist,
+      s"index $tablePrefix holds <=$indexedDist-deletion postings; " +
+        s"serving maxDist=$maxDist would need variants it never generated")
+    val lk = keyedRows(left, leftId, leftKey)
+    val ldk = distinctKeys(lk)
+    matchAgainstPostings(lk, variantPostings(ldk, maxDist), ldk,
+      table("postings"), table("keys"), table("members"), maxDist,
+      expandRight)
+  }
 
   /** Winner policy over [[pairsAgainst]]: ONE canonical dictionary entry
     * per matched left row — minimum distance, ties broken by minimum

@@ -464,56 +464,22 @@ object NearDup {
     * [[crossJaccardPairs]] against the full corpus does — corpus-sized
     * work per batch), a nightly job writes the two relations every
     * batch needs and the per-batch cost drops to batch-sized compute
-    * plus an equi-join against the index:
+    * plus an equi-join against the index. Spark persists bucket
+    * metadata only through the catalog, so both are saved as BUCKETED
+    * tables with their files under `$dir`:
     *
-    *   - `$dir/postings` — (id, bkey) MinHash band postings (the
-    *     [[bandPostings]] keys), range-clustered by bkey so a probe
-    *     with few distinct band keys prunes parquet row groups;
-    *   - `$dir/sets` — (id, ss) sorted distinct shingle sets,
-    *     id-clustered, for the exact verify step.
+    *   - `<tablePrefix>_postings` — (id, bkey) MinHash band postings
+    *     (the [[bandPostings]] keys), bucketed by bkey;
+    *   - `<tablePrefix>_sets` — (id, ss) sorted distinct shingle sets,
+    *     bucketed by id, for the exact verify step.
     *
-    * The corpus shingle scan runs ONCE and feeds both files. At 100 TB
-    * the upgrade path is bucketed tables on the join keys (bkey / id)
-    * so the serve-side join needs no index-side shuffle at all; the
-    * clustered-parquet layout here is the catalog-free equivalent.
-    */
-  def writeBandIndex(corpus: DataFrame, idCol: String, textCol: String,
-                     n: Int, dir: String, numFiles: Int = 8): Unit = {
-    val sh = shingles(corpus, idCol, textCol, n).localCheckpoint(true)
-    graft.sources.Layout.writeClustered(bandPostingRows(sh),
-      s"$dir/postings", numFiles, "bkey")
-    graft.sources.Layout.writeClustered(shingleSets(sh), s"$dir/sets",
-      numFiles, "id")
-  }
-
-  /** Incremental near-dup pairs of a new batch against a PERSISTED
-    * standing index ([[writeBandIndex]]) — candidates from the batch's
-    * band keys equi-joined with the frozen postings (shuffle_hash build
-    * on the bounded batch side), exact Jaccard verified against the
-    * frozen shingle sets. Result-identical to recomputing LSH+verify
-    * over batch x corpus (the oracle replays exactly that recompute),
-    * but the standing corpus contributes only an index SCAN per batch.
-    * Output: (batch_id, corpus_id, n_common, jacc), jacc >= threshold.
-    */
-  def incrementalNearDupPairs(batch: DataFrame, idCol: String,
-                              textCol: String, n: Int, threshold: Double,
-                              indexDir: String): DataFrame = {
-    val spark = batch.sparkSession
-    incrementalServe(batch, idCol, textCol, n, threshold,
-      spark.read.parquet(s"$indexDir/postings"),
-      spark.read.parquet(s"$indexDir/sets"))
-  }
-
-  /** [[writeBandIndex]] as BUCKETED catalog tables — the declared 100 TB
-    * upgrade path made concrete: Spark persists bucket metadata only
-    * through the catalog, so `<tablePrefix>_postings` (bucketBy bkey)
-    * and `<tablePrefix>_sets` (bucketBy id) are saved as tables with
-    * their files under `$dir`. A serve-side join against the postings
-    * then needs NO index-side exchange at all — the bucketed scan
-    * reports hashpartitioning(bkey) and only the (small) batch side
-    * shuffles to meet it (plan-asserted in NearDupSpec); at 100 TB
-    * that is the difference between joining the standing index in
-    * place and re-shuffling the corpus on every nightly batch.
+    * The corpus shingle scan runs ONCE and feeds both tables. A
+    * serve-side join against the postings needs NO index-side exchange
+    * at all — the bucketed scan reports hashpartitioning(bkey) and only
+    * the (small) batch side shuffles to meet it (plan-asserted in
+    * NearDupSpec); at 100 TB that is the difference between joining the
+    * standing index in place and re-shuffling the corpus on every
+    * nightly batch.
     */
   def writeBandIndexBucketed(corpus: DataFrame, idCol: String,
                              textCol: String, n: Int, dir: String,
@@ -585,31 +551,26 @@ object NearDup {
      graft.sources.Layout.compactBucketedIfNeeded(
        spark, s"${tablePrefix}_sets", maxFilesPerBucket))
 
-  /** [[incrementalNearDupPairs]] served from the BUCKETED index tables
-    * ([[writeBandIndexBucketed]]): result-identical, but the candidate
-    * join consumes the postings' bucket layout — no index-side shuffle.
+  /** Incremental near-dup pairs of a new batch against a STANDING index
+    * ([[writeBandIndexBucketed]], possibly grown by
+    * [[appendBandIndexBucketed]]) — candidates from the batch's band keys
+    * equi-joined with the standing postings in place (shuffle_hash build
+    * on the bounded batch side; no index-side shuffle), exact Jaccard
+    * verified against the standing shingle sets. Result-identical to
+    * recomputing LSH+verify over batch x corpus (the oracle replays
+    * exactly that recompute), but the standing corpus contributes only
+    * an index SCAN per batch. Output: (batch_id, corpus_id, n_common,
+    * jacc), jacc >= threshold.
     */
   def incrementalNearDupPairsBucketed(batch: DataFrame, idCol: String,
                                       textCol: String, n: Int,
                                       threshold: Double,
                                       tablePrefix: String): DataFrame = {
     val spark = batch.sparkSession
-    incrementalServe(batch, idCol, textCol, n, threshold,
-      spark.table(s"${tablePrefix}_postings"),
-      spark.table(s"${tablePrefix}_sets"))
-  }
-
-  /** The per-batch serving join both incremental forms share: batch
-    * postings × index postings on bkey (shuffle_hash build on the
-    * bounded batch side), exact Jaccard verify against the index's
-    * shingle sets.
-    */
-  private def incrementalServe(batch: DataFrame, idCol: String,
-                               textCol: String, n: Int, threshold: Double,
-                               postRaw: DataFrame,
-                               setsRaw: DataFrame): DataFrame = {
-    val post = postRaw.select(col("id").as("corpus_id"), col("bkey"))
-    val sets = setsRaw.select(col("id").as("corpus_id"), col("ss").as("ss_c"))
+    val post = spark.table(s"${tablePrefix}_postings")
+      .select(col("id").as("corpus_id"), col("bkey"))
+    val sets = spark.table(s"${tablePrefix}_sets")
+      .select(col("id").as("corpus_id"), col("ss").as("ss_c"))
     // batch scan shared by its postings and its verify sets
     val shB = shingles(batch, idCol, textCol, n).localCheckpoint(true)
     val postB = bandPostingRows(shB)
@@ -761,8 +722,8 @@ object NearDup {
       idCol, textCol, tsCol, n, windowLen, watermark)
 
   /** [[nearDupGateStream]] with the standing side read from a PERSISTED
-    * band-posting index ([[writeBandIndex]] / [[writeBandIndexBucketed]]
-    * `postings` relation) instead of recomputed from corpus text — the
+    * band-posting index (the [[writeBandIndexBucketed]] `_postings`
+    * table) instead of recomputed from corpus text — the
     * production wiring: the nightly index job publishes, the 24/7
     * admission gate serves. Same checkpoint-once lifecycle (the distinct
     * over the postings runs once per query construction, micro-batches

@@ -335,32 +335,15 @@ private[graft] object StandingIndex {
 
   /** The cell-partitioned compaction MECHANISM (one copy for every cell
     * tier — PQ-by-cell and SQ8-by-cell route here): rewrite `rows` back
-    * to one file per cell via a staging dir (an in-place overwrite
-    * deletes the very files its job would read), then swap staging into
-    * place. Crash window: the delete→rename swap is not atomic — a
-    * crash between the two leaves the index ABSENT at `dir` with the
-    * full compacted copy intact at `dir__compact_staging` (recover by
-    * renaming it back). Run from the nightly maintenance window like
-    * every compact verb. Returns the post-swap data-file count.
+    * to one file per cell through [[graft.sources.Layout.stagedSwap]]
+    * (crash window and recovery documented there). Run from the nightly
+    * maintenance window like every compact verb. Returns the post-swap
+    * data-file count.
     */
   def compactCellsStagingSwap(spark: SparkSession, dir: String,
                               rows: DataFrame, verb: String): Int = {
-    val staging = dir.stripSuffix("/") + "__compact_staging"
-    writeCells(rows, staging, "overwrite")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    // A failed delete must be loud: on HDFS-semantics filesystems a
-    // rename into a still-existing directory nests staging INSIDE it
-    // and returns true, so old and compacted copies would coexist while
-    // the verb reports success with an inflated file count.
-    if (fs.exists(root) && !fs.delete(root, true))
-      throw new java.io.IOException(
-        s"$verb: delete of $dir failed; compacted index left at staging")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), root))
-      throw new java.io.IOException(
-        s"$verb: rename $staging -> $dir failed; " +
-          "compacted index left at staging")
+    graft.sources.Layout.stagedSwap(spark, dir, verb)(
+      writeCells(rows, _, "overwrite"))
     listDataFiles(spark, dir).size
   }
 

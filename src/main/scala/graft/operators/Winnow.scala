@@ -339,7 +339,8 @@ object Winnow {
   /** Load a [[writeEvalNgramIndex]] gram set, enforcing the `n` marker:
     * a serve-time `n` different from the published one would join
     * differently-shaped grams, silently match nothing, and report every
-    * doc clean — the same misuse [[EditDistanceJoin.pairsAgainstIndex]]
+    * doc clean — the same misuse
+    * [[EditDistanceJoin.pairsAgainstIndexBucketed]]
     * guards with its `max_dist` marker, so the same require here.
     */
   private def readEvalNgramIndex(spark: SparkSession, indexDir: String,

@@ -21,34 +21,51 @@ import org.apache.spark.sql.functions.{col, count, expr, lit, pmod}
 object Layout {
 
   /** Rewrite `inDir` (parquet) into `outDir` as ~`targetBytes`-sized
-    * files. File count is computed from the ACTUAL on-disk byte size (via
-    * the Hadoop FS listing, so it works on any supported filesystem),
-    * never hardcoded. Uses coalesce when shrinking the file count — a
-    * narrow, shuffle-free merge; compaction must not cost a full
-    * re-shuffle of the table.
+    * files ([[sizedRead]]). Returns the data file count written.
     */
   def compact(spark: SparkSession, inDir: String, outDir: String,
               targetBytes: Long = 128L << 20): Int = {
-    val path = new org.apache.hadoop.fs.Path(inDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.listStatus(path).filter(_.isFile)
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    sizedRead(spark, inDir, targetBytes)
+      .write.mode(SaveMode.Overwrite).parquet(outDir)
+    // Report what actually landed (AQE/empty-partition elision may merge
+    // below the plan), so callers can log honest compaction ratios.
+    dataFileCount(spark, outDir)
+  }
+
+  /** `dir`'s rows in one partition per ~`targetBytes` of its data files.
+    * The count comes from the ACTUAL on-disk byte size (via the Hadoop FS
+    * listing, so it works on any supported filesystem), never hardcoded.
+    * Uses coalesce when shrinking the file count — a narrow,
+    * shuffle-free merge; compaction must not cost a full re-shuffle of
+    * the table.
+    */
+  private def sizedRead(spark: SparkSession, dir: String,
+                        targetBytes: Long): DataFrame = {
+    val totalBytes = dataFiles(spark, dir).map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(inDir)
+    val df = spark.read.parquet(dir)
     // coalesce CAPS the partition count, it never raises it: when Spark's
     // read-side bin-packing already merged the small files into fewer
     // scan partitions than nFiles (low-core hosts, large
     // maxPartitionBytes), coalesce(nFiles) would silently emit those few
     // oversized files instead. Growing the count needs the shuffle.
-    val sized =
-      if (df.rdd.getNumPartitions >= nFiles) df.coalesce(nFiles)
-      else df.repartition(nFiles)
-    sized.write.mode(SaveMode.Overwrite).parquet(outDir)
-    // Report what actually landed (AQE/empty-partition elision may merge
-    // below the plan), so callers can log honest compaction ratios.
-    val out = new org.apache.hadoop.fs.Path(outDir)
-    fs.listStatus(out).count(s =>
-      s.isFile && s.getPath.getName.endsWith(".parquet"))
+    if (df.rdd.getNumPartitions >= nFiles) df.coalesce(nFiles)
+    else df.repartition(nFiles)
+  }
+
+  /** The DATA files of a plain (unpartitioned) parquet dir: hidden and
+    * in-progress leftovers ('.'/'_'-prefixed) are invisible to a read,
+    * so no count or byte sizing here may include them.
+    */
+  private def dataFiles(spark: SparkSession,
+                        dir: String): Array[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .filter { s =>
+        val n = s.getPath.getName
+        s.isFile && n.endsWith(".parquet") &&
+          !n.startsWith("_") && !n.startsWith(".")
+      }
   }
 
   /** Data-file count of a plain (flat, unpartitioned) parquet dir — the
@@ -59,61 +76,50 @@ object Layout {
     * for bucketed tables, minus the bucket dimension (a flat dir IS one
     * bucket).
     */
-  def dataFileCount(spark: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).count { s =>
-      val n = s.getPath.getName
-      s.isFile && n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }
+  def dataFileCount(spark: SparkSession, dir: String): Int =
+    dataFiles(spark, dir).length
+
+  /** The swap every in-place compaction shares ([[compactDir]],
+    * [[compactBucketed]], the cell tiers'
+    * [[graft.operators.StandingIndex.compactCellsStagingSwap]]): an
+    * overwrite of `dir` would delete the very files its job reads, so
+    * `write` materializes the compacted copy ONCE into
+    * `dir__compact_staging`, then `dir` is deleted and staging renamed
+    * into place. A failed delete is loud: on HDFS-semantics filesystems a
+    * rename into a still-existing dir nests staging INSIDE it and returns
+    * true, so old and compacted copies would coexist while the verb
+    * reports success. Crash window: between delete and rename the index
+    * is absent at `dir` with the full compacted copy intact at staging —
+    * recover by renaming it back; run from the nightly maintenance
+    * window, never concurrent with serves.
+    */
+  private[graft] def stagedSwap(spark: SparkSession, dir: String,
+                                verb: String)(write: String => Unit): Unit = {
+    val staging = dir.stripSuffix("/") + "__compact_staging"
+    write(staging)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root) && !fs.delete(root, true))
+      throw new java.io.IOException(
+        s"$verb: delete of $dir failed; compacted copy left at staging")
+    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), root))
+      throw new java.io.IOException(
+        s"$verb: rename $staging -> $dir failed; compacted copy left at staging")
   }
 
   /** Compact a plain parquet dir IN PLACE — the shared flat-index
     * maintenance verb ([[graft.operators.Ann.compactSq8Index]] /
     * [[Ann.compactSignIndex]] wrap it onto their code/sig subdirs;
     * [[compact]] stays the two-dir form for tables whose callers manage
-    * locations). Same sizing rule as [[compact]] (~`targetBytes` files
-    * from the ACTUAL on-disk byte size, coalesce when shrinking), same
-    * staging-swap dance as [[compactBucketed]] and
-    * [[Ann.compactPqIndexByCell]]: an overwrite would delete the very
-    * files its job reads, so materialize to `dir__compact_staging`
-    * first, then delete-and-rename into place — with the loud-delete
-    * guard (a false-returning delete on HDFS semantics would nest
-    * staging INSIDE the stale dir and report success). Crash window as
-    * documented on the PQ verb: between delete and rename the index is
-    * absent at `dir` with the full compacted copy intact at staging —
-    * recover by renaming it back; run from the nightly maintenance
-    * window, never concurrent with serves. Returns the data file count
-    * after compaction.
+    * locations). Same [[sizedRead]] sizing as [[compact]], then the
+    * [[stagedSwap]] (crash window and recovery documented there).
+    * Returns the data file count after compaction.
     */
   def compactDir(spark: SparkSession, dir: String,
                  targetBytes: Long = 128L << 20): Int = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same DATA-file predicate as dataFileCount: hidden/in-progress
-    // leftovers ('.'/'_'-prefixed) are invisible to the read below, so
-    // counting their bytes here would size the rewrite off files it
-    // won't rewrite (review round 17)
-    val totalBytes = fs.listStatus(root).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getLen).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val staging = dir.stripSuffix("/") + "__compact_staging"
-    val df = spark.read.parquet(dir)
-    val sized =
-      if (df.rdd.getNumPartitions >= nFiles) df.coalesce(nFiles)
-      else df.repartition(nFiles)
-    sized.write.mode(SaveMode.Overwrite).parquet(staging)
-    if (fs.exists(root) && !fs.delete(root, true))
-      throw new java.io.IOException(
-        s"compactDir: delete of $dir failed; compacted copy left at staging")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), root))
-      throw new java.io.IOException(
-        s"compactDir: rename $staging -> $dir failed; " +
-          "compacted copy left at staging")
+    val sized = sizedRead(spark, dir, targetBytes)
+    stagedSwap(spark, dir, "compactDir")(
+      sized.write.mode(SaveMode.Overwrite).parquet(_))
     dataFileCount(spark, dir)
   }
 
@@ -163,35 +169,40 @@ object Layout {
     * appends, before and after compaction, is priced in
     * IndexServeProbe).
     *
-    * Mechanics: the current content FIRST materializes to a staging dir
-    * beside the table's location (Spark cannot overwrite a table it is
-    * reading, and the overwrite deletes the old files before the new
-    * job could read them), then rewrites from staging under the same
-    * spec with the one-file-per-bucket pre-write repartition, then the
-    * staging dir is deleted. Two sequential writes of the table's bytes
-    * — the honest price of an in-place rewrite; at 100 TB this runs as
-    * the same nightly maintenance window as the appends it cleans up
-    * after. Returns the data file count after compaction.
+    * Mechanics: the bucketed, sorted files are written ONCE, into the
+    * [[stagedSwap]] staging dir beside the table's location under a
+    * temporary catalog name (a bucketed write goes through the catalog);
+    * the swap moves them into place, then the table's file listing is
+    * refreshed and the temporary entry dropped (an external entry: the
+    * drop deletes no files). Crash window and recovery are
+    * [[stagedSwap]]'s; a crash also leaves the temporary entry, which the
+    * next compaction overwrites. Returns the data file count after
+    * compaction.
     */
   def compactBucketed(spark: SparkSession, tableName: String): Int = {
     val (meta, spec) = bucketedMeta(spark, tableName)
     val location = meta.location.toString
-    val staging = location.stripSuffix("/") + "__compact_staging"
-    spark.table(tableName).write.mode(SaveMode.Overwrite).parquet(staging)
-    val writer = spark.read.parquet(staging)
-      .repartition(spec.numBuckets, spec.bucketColumnNames.map(col): _*)
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-        spec.bucketColumnNames.tail: _*)
-    (if (spec.sortColumnNames.nonEmpty)
-       writer.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-     else writer)
-      .option("path", location).saveAsTable(tableName)
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    fs.listStatus(new org.apache.hadoop.fs.Path(location)).count(s =>
-      s.isFile && s.getPath.getName.endsWith(".parquet"))
+    val staged = s"${tableName}__compacting"
+    stagedSwap(spark, location, "compactBucketed") { staging =>
+      // read as plain parquet, not through the catalog: over a bucketed
+      // scan the planner drops the repartition below as already
+      // satisfied, then un-buckets the scan as unneeded, and every split
+      // task writes its own file per bucket
+      val writer = spark.read.schema(meta.schema).parquet(location)
+        .repartition(spec.numBuckets, spec.bucketColumnNames.map(col): _*)
+        .write.mode(SaveMode.Overwrite).format("parquet")
+        .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
+          spec.bucketColumnNames.tail: _*)
+      (if (spec.sortColumnNames.nonEmpty)
+         writer.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
+       else writer)
+        .option("path", staging).saveAsTable(staged)
+    }
+    spark.catalog.refreshTable(tableName)
+    spark.sessionState.catalog.dropTable(
+      org.apache.spark.sql.catalyst.TableIdentifier(staged),
+      ignoreIfNotExists = true, purge = false)
+    dataFileCount(spark, location)
   }
 
   /** Publish `df` as a BUCKETED catalog table — the one write every
@@ -257,18 +268,10 @@ object Layout {
     */
   def filesPerBucket(spark: SparkSession, tableName: String): Double = {
     val (meta, _) = bucketedMeta(spark, tableName)
-    val location = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val perBucket = fs.listStatus(location).toSeq
-      .filter { s =>
-        val n = s.getPath.getName
-        // Exclude hidden/in-progress files (._*, _SUCCESS-style): a
-        // reader never scans them, so counting them (they'd group into
-        // the stray -1 bucket) could spuriously fire nightly compaction
-        // on files that cost no serve anything.
-        s.isFile && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }
+    // data files only: hidden/in-progress files (they'd group into the
+    // stray -1 bucket) could spuriously fire nightly compaction on files
+    // that cost no serve anything
+    val perBucket = dataFiles(spark, meta.location.toString).toSeq
       .groupBy(_.getPath.getName match {
         // toLongOption, not toInt: the regex accepts ANY trailing digit
         // group, so a stray file whose name ends in a huge digit run
@@ -293,11 +296,11 @@ object Layout {
     * own work (README "index lifecycle" ledger — serve at 20 appends
     * reads ~20× the file count for the same bytes), while a nightly
     * append cadence means 16 files ≈ two weeks of batches — compaction
-    * then costs two rewrites of the table against ~14 days of
+    * then costs one rewrite of the table against ~14 days of
     * accumulated scan overhead. Call this from the same nightly job
     * that runs the append verbs; it is deliberately NOT called inside
     * the appends themselves, because an append that sometimes costs
-    * 2× the table size would make the measured flat append exponents
+    * a table-sized write would make the measured flat append exponents
     * (ScaleProbe) unpredictable for the scheduler.
     */
   def compactBucketedIfNeeded(spark: SparkSession, tableName: String,

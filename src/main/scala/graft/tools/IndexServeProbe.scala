@@ -123,11 +123,11 @@ object IndexServeProbe {
             expr("substring(p_name, 1, CAST((p_partkey DIV 5) % length(p_name) AS INT))"),
             expr("substring(p_name, CAST((p_partkey DIV 5) % length(p_name) AS INT) + 2)"))
             .as("dirty_name"))
-      val (pub, _) = time(EditDistanceJoin.writeVariantIndex(
+      val (pub, _) = time(EditDistanceJoin.writeVariantIndexBucketed(
         parts.select(col("p_partkey"), col("p_name")), "p_partkey", "p_name",
-        1, s"$scratch/var_idx"))
-      val srv = serveMin(3)(EditDistanceJoin.pairsAgainstIndex(
-        dirty, "dirty_id", "dirty_name", 1, s"$scratch/var_idx"))
+        1, s"$scratch/var_idx", "idxprobe_var"))
+      val srv = serveMin(3)(EditDistanceJoin.pairsAgainstIndexBucketed(
+        dirty, "dirty_id", "dirty_name", 1, "idxprobe_var"))
       results += (("dict_variants", pub, srv))
     }
 
@@ -145,15 +145,15 @@ object IndexServeProbe {
               .idPairs(corpus, "c_custkey", "c_name", 1)
               .select(col("id_a").as("src"), col("id_b").as("dst")))
           .write.mode("overwrite").parquet(s"$scratch/cc_labels")
-        EditDistanceJoin.writeVariantIndex(
+        EditDistanceJoin.writeVariantIndexBucketed(
           corpus.select(col("c_custkey"), col("c_name")),
-          "c_custkey", "c_name", 1, s"$scratch/cc_var_idx")
+          "c_custkey", "c_name", 1, s"$scratch/cc_var_idx", "idxprobe_cc_var")
       }
       val standing = spark.read.parquet(s"$scratch/cc_labels")
       def edges = {
-        val cross = EditDistanceJoin.repsAgainstIndex(
+        val cross = EditDistanceJoin.repsAgainstIndexBucketed(
             batch.select(col("c_custkey"), col("c_name")),
-            "c_custkey", "c_name", 1, s"$scratch/cc_var_idx")
+            "c_custkey", "c_name", 1, "idxprobe_cc_var")
           .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
         val intra = EditDistanceJoin.idPairs(batch, "c_custkey", "c_name", 1)
           .select(col("id_a").as("src"), col("id_b").as("dst"))

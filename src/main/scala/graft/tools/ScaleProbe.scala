@@ -642,18 +642,19 @@ object ScaleProbe {
       // other joins keep their plans), the path its recorded exponent
       // priced; so do cc_full_recompute and cc_republish_serve, its
       // comparison rows.
-      "cc_assign_serve" -> (() => idxProbe("cc_assign_serve", replicateCust) { (d, dir, _) =>
+      "cc_assign_serve" -> (() => idxProbe("cc_assign_serve", replicateCust) { (d, dir, tbl) =>
         ConnectedComponents.run(d.select(col("id")),
             EditDistanceJoin.idPairs(d, "id", "key", 1)
               .select(col("id_a").as("src"), col("id_b").as("dst")))
           .write.mode("overwrite").parquet(s"$dir/standing")
-        EditDistanceJoin.writeVariantIndex(d, "id", "key", 1, s"$dir/varidx")
-      } { (_, dir, _) =>
+        EditDistanceJoin.writeVariantIndexBucketed(d, "id", "key", 1,
+          s"$dir/varidx", tbl)
+      } { (_, dir, tbl) =>
         val batch = custBase.filter(col("id") % 3 === 0)
           .select((col("id") + 900000000L).as("id"), col("key"))
         val standing = spark.read.parquet(s"$dir/standing")
-        val cross = EditDistanceJoin.repsAgainstIndex(
-            batch, "id", "key", 1, s"$dir/varidx")
+        val cross = EditDistanceJoin.repsAgainstIndexBucketed(
+            batch, "id", "key", 1, tbl)
           .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
         val intra = EditDistanceJoin.idPairs(batch, "id", "key", 1)
           .select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -681,18 +682,19 @@ object ScaleProbe {
       // CC on the batch + ONE corpus-linear equi-join on the label
       // column" — so the exponent must sit between cc_assign_serve's
       // flat and the corpus growth rate, far below cc_full_recompute.
-      "cc_republish_serve" -> (() => idxProbe("cc_republish_serve", replicateCust) { (d, dir, _) =>
+      "cc_republish_serve" -> (() => idxProbe("cc_republish_serve", replicateCust) { (d, dir, tbl) =>
         ConnectedComponents.run(d.select(col("id")),
             EditDistanceJoin.idPairs(d, "id", "key", 1)
               .select(col("id_a").as("src"), col("id_b").as("dst")))
           .write.mode("overwrite").parquet(s"$dir/standing")
-        EditDistanceJoin.writeVariantIndex(d, "id", "key", 1, s"$dir/varidx")
-      } { (_, dir, _) =>
+        EditDistanceJoin.writeVariantIndexBucketed(d, "id", "key", 1,
+          s"$dir/varidx", tbl)
+      } { (_, dir, tbl) =>
         val batch = custBase.filter(col("id") % 3 === 0)
           .select((col("id") + 900000000L).as("id"), col("key"))
         val standing = spark.read.parquet(s"$dir/standing")
-        val cross = EditDistanceJoin.repsAgainstIndex(
-            batch, "id", "key", 1, s"$dir/varidx")
+        val cross = EditDistanceJoin.repsAgainstIndexBucketed(
+            batch, "id", "key", 1, tbl)
           .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
         val intra = EditDistanceJoin.idPairs(batch, "id", "key", 1)
           .select(col("id_a").as("src"), col("id_b").as("dst"))

@@ -249,11 +249,13 @@ class EditDistanceJoinSpec extends SparkSpec {
         expr("concat(substring(c_name, 1, CAST((c_custkey DIV 10) % length(c_name) AS INT)), " +
           "substring(c_name, CAST((c_custkey DIV 10) % length(c_name) AS INT) + 2))").as("dname"))
     val dir = java.nio.file.Files.createTempDirectory("varidx").toString
-    EditDistanceJoin.writeVariantIndex(dict, "c_custkey", "c_name", 2, dir)
+    val tbl = "graft_spec_varidx"
+    EditDistanceJoin.writeVariantIndexBucketed(dict, "c_custkey", "c_name", 2,
+      dir, tbl)
     val direct2 = rows(EditDistanceJoin.pairsAgainst(
       mangled, "did", "dname", dict, "c_custkey", "c_name", 2))
-    val served2 = rows(EditDistanceJoin.pairsAgainstIndex(
-      mangled, "did", "dname", 2, dir))
+    val served2 = rows(EditDistanceJoin.pairsAgainstIndexBucketed(
+      mangled, "did", "dname", 2, tbl))
     assert(served2 == direct2)
     assert(served2.nonEmpty)
     // serving a SMALLER maxDist against the bigger index is exact too
@@ -261,27 +263,31 @@ class EditDistanceJoinSpec extends SparkSpec {
     // tighten on the serve-time distance)
     val direct1 = rows(EditDistanceJoin.pairsAgainst(
       mangled, "did", "dname", dict, "c_custkey", "c_name", 1))
-    val served1 = rows(EditDistanceJoin.pairsAgainstIndex(
-      mangled, "did", "dname", 1, dir))
+    val served1 = rows(EditDistanceJoin.pairsAgainstIndexBucketed(
+      mangled, "did", "dname", 1, tbl))
     assert(served1 == direct1)
     // a LARGER one needs postings the index never generated: refused
     val e = intercept[IllegalArgumentException] {
-      EditDistanceJoin.pairsAgainstIndex(mangled, "did", "dname", 3, dir)
+      EditDistanceJoin.pairsAgainstIndexBucketed(mangled, "did", "dname", 3, tbl)
     }
     assert(e.getMessage.contains("maxDist=3"))
 
     // reps form: same verified (left_id, right_key) matches, right side
     // collapsed to the key's representative (min right id)
-    val reps = EditDistanceJoin.repsAgainstIndex(mangled, "did", "dname", 2, dir)
+    val reps = EditDistanceJoin.repsAgainstIndexBucketed(
+        mangled, "did", "dname", 2, tbl)
       .select("left_id", "right_rep_id", "right_key", "dist")
       .as[(Long, Long, String, Int)].collect().toSet
-    val pairs2 = EditDistanceJoin.pairsAgainstIndex(mangled, "did", "dname", 2, dir)
+    val pairs2 = EditDistanceJoin.pairsAgainstIndexBucketed(
+        mangled, "did", "dname", 2, tbl)
       .select("left_id", "right_id", "right_key", "dist")
       .as[(Long, Long, String, Int)].collect()
     val collapsed = pairs2.groupBy(r => (r._1, r._3, r._4))
       .map { case ((lid, rkey, d), rows) => (lid, rows.map(_._2).min, rkey, d) }
       .toSet
     assert(reps == collapsed)
+    Seq("postings", "keys", "members", "meta")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${tbl}_$t"))
   }
 
   test("bucketed variant index: append equals monolithic rebuild, no index-side shuffle") {

@@ -229,14 +229,15 @@ class EmptyInputSpec extends SparkSpec {
     assert(NearDup.jaccardPairsPrefix(noDocs, "doc_id", "text", 3, 0.5)
       .count() == 0)
     // persisted LSH index written from an empty corpus still serves
-    // (empty-but-typed parquet), and an empty batch probes it cleanly
+    // (empty-but-typed tables), and an empty batch probes it cleanly
     val dir = java.nio.file.Files.createTempDirectory("graft_empty_idx")
       .toString
-    NearDup.writeBandIndex(noDocs, "doc_id", "text", 3, dir)
-    assert(NearDup.incrementalNearDupPairs(noDocs, "doc_id", "text", 3,
-      0.5, dir).count() == 0)
-    assert(NearDup.incrementalNearDupPairs(someDocs, "doc_id", "text", 3,
-      0.5, dir).count() == 0)
+    NearDup.writeBandIndexBucketed(noDocs, "doc_id", "text", 3, dir,
+      "graft_spec_empty_idx")
+    assert(NearDup.incrementalNearDupPairsBucketed(noDocs, "doc_id", "text",
+      3, 0.5, "graft_spec_empty_idx").count() == 0)
+    assert(NearDup.incrementalNearDupPairsBucketed(someDocs, "doc_id", "text",
+      3, 0.5, "graft_spec_empty_idx").count() == 0)
     // multi-pass SNM: empty corpus through each pass and the audit
     val noKeys = Seq.empty[(Long, String)].toDF("id", "key")
     assert(Linker.sortedNeighborhoodMulti(noKeys, "id", "key",

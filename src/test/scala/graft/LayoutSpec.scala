@@ -101,6 +101,51 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
+  test("compactBucketed writes the table's bytes once: one staged bucketed write, then the swap") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val dir = tmpDir("bonce")
+    val tbl = "graft_spec_compact_once"
+    // rows wide enough that data, not per-file overhead, dominates bytes
+    def batch(lo: Long, hi: Long) = spark.range(lo, hi).select(
+      concat(lit("k"), (col("id") * 7919 % 100003).cast("string")).as("k"),
+      col("id"), sha2(col("id").cast("string"), 256).as("payload"))
+    Layout.publishBucketed(batch(0, 20000), "k", tbl, s"$dir/t", 4)
+    (1 to 3).foreach(i =>
+      Layout.appendBucketed(batch(i * 20000L, (i + 1) * 20000L), "k", tbl))
+    val before = spark.table(tbl).orderBy("id").collect().toSeq
+    val dataBytes = parquetFiles(s"$dir/t").map(_.length).sum
+    val written = new java.util.concurrent.atomic.AtomicLong(0L)
+    def drain(): Unit = {
+      var last = -1L; var stable = 0
+      while (stable < 2) {
+        Thread.sleep(150)
+        val now = written.get()
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+    }
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.outputMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(l)
+    val filesAfter = try {
+      drain()
+      written.set(0L)
+      val n = Layout.compactBucketed(spark, tbl)
+      drain()
+      n
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(written.get() > 0L)
+    assert(written.get() < 1.5 * dataBytes,
+      s"compaction wrote ${written.get()} bytes for a $dataBytes-byte table")
+    assert(filesAfter == 4 && parquetFiles(s"$dir/t").size == 4)
+    assert(spark.table(tbl).orderBy("id").collect().toSeq == before)
+    assert(!new java.io.File(s"$dir/t__compact_staging").exists())
+    assert(!spark.catalog.tableExists(s"${tbl}__compacting"))
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
   // The policy to the mechanism above: fires only past the threshold,
   // and a firing is exactly one compactBucketed (one file per bucket,
   // serve unchanged). Thresholds chosen so the SAME table exercises both

@@ -67,15 +67,26 @@ class NearDupSpec extends SparkSpec {
     val corpus = docs.filter($"source" =!= "src0")
     val batch = docs.filter($"source" === "src0")
     val dir = java.nio.file.Files.createTempDirectory("graft_bidx").toString
-    NearDup.writeBandIndex(corpus, "doc_id", "text", 3, s"$dir/plain")
-    val viaParquet = NearDup.incrementalNearDupPairs(batch, "doc_id",
-        "text", 3, 0.3, s"$dir/plain")
+    // second path: the all-pairs MinHash-LSH + verify over corpus ∪ batch,
+    // cut down to the batch x corpus pairs and oriented (batch, corpus)
+    val batchIds = batch.select($"doc_id".as("bid"))
+    val viaRecompute = NearDup.minhashNearDupPairs(
+        corpus.unionByName(batch), "doc_id", "text", 3, 0.3)
+      .join(batchIds.as("ba"), $"id_a" === $"ba.bid", "left")
+      .join(batchIds.as("bb"), $"id_b" === $"bb.bid", "left")
+      .filter($"ba.bid".isNull =!= $"bb.bid".isNull)
+      .select(
+        org.apache.spark.sql.functions.when($"ba.bid".isNotNull, $"id_a")
+          .otherwise($"id_b").as("batch_id"),
+        org.apache.spark.sql.functions.when($"ba.bid".isNotNull, $"id_b")
+          .otherwise($"id_a").as("corpus_id"),
+        $"n_common", $"jacc")
       .as[(Long, Long, Long, Double)].collect().toSet
     NearDup.writeBandIndexBucketed(corpus, "doc_id", "text", 3,
       s"$dir/bucketed", "graft_spec_idx")
     val bucketed = NearDup.incrementalNearDupPairsBucketed(batch, "doc_id",
       "text", 3, 0.3, "graft_spec_idx")
-    assert(bucketed.as[(Long, Long, Long, Double)].collect().toSet == viaParquet)
+    assert(bucketed.as[(Long, Long, Long, Double)].collect().toSet == viaRecompute)
     // the candidate join consumes the postings' bucket layout: the scan
     // is bucketed and the ONLY bkey exchange is the batch side's —
     // a second one would mean the index got re-shuffled per batch
@@ -433,7 +444,8 @@ class NearDupSpec extends SparkSpec {
       (101L, "an entirely different standing corpus document about spark jobs"))
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft_gate_idx").toString
-    NearDup.writeBandIndex(corpus, "doc_id", "text", 3, dir)
+    NearDup.writeBandIndexBucketed(corpus, "doc_id", "text", 3, dir,
+      "graft_spec_gate_idx")
     val rows = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river",
         ts("2026-01-01 10:05:00")),
@@ -442,7 +454,7 @@ class NearDupSpec extends SparkSpec {
     val ms = MemoryStream[(Long, String, java.sql.Timestamp)]
     val q = NearDup.nearDupGateStreamIndexed(
       ms.toDS().toDF("doc_id", "text", "ts"),
-      spark.read.parquet(s"$dir/postings"), "doc_id", "text", "ts")
+      spark.table("graft_spec_gate_idx_postings"), "doc_id", "text", "ts")
       .writeStream.outputMode("append")
       .format("memory").queryName("neardup_gate_idx").start()
     try {

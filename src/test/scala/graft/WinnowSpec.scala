@@ -158,7 +158,7 @@ class WinnowSpec extends SparkSpec {
     // serving with an n different from the published index would join
     // differently-shaped grams, match NOTHING, and report every doc
     // clean — the persisted n marker must reject it loudly instead
-    // (the writeVariantIndex max_dist guard, mirrored on this tier)
+    // (the writeVariantIndexBucketed max_dist guard, mirrored on this tier)
     val eN = intercept[IllegalArgumentException] {
       Winnow.ngramContaminationAgainstIndex(train, "doc_id", "text", dir, n = 7)
     }
