@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Distributed connected components over an undirected edge list, using the
   * alternating large-star / small-star algorithm (Kiveris et al., "Connected
@@ -175,7 +182,7 @@ object ConnectedComponents {
         least(col("src").cast("long"), col("dst").cast("long")).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct())
-    if (sig._1 > 0L && sig._1 <= driverFinishCap.value) e = driverStars(e)
+    if (sig._1 > 0L && sig._1 <= driverFinishCap.value.edges) e = driverStars(e)
     else {
       var converged = sig._1 == 0L
       var it = 0
@@ -198,7 +205,7 @@ object ConnectedComponents {
   }
 
   /** Largest normalized edge set the driver finish takes: the measured
-    * crossover. [[graft.tools.CcCrossoverProbe]] times run() on both
+    * crossover. [[graft.tools.DriverCrossoverProbe]] times run() on both
     * paths; local[4] with 4 shuffle partitions on a 4-vCPU VM, median of
     * 5 (ms, driver finish / star loop):
     *
@@ -221,36 +228,131 @@ object ConnectedComponents {
     */
   private val DriverFinishMaxEdges = 400000L
 
-  /** The driver finish's cap on the current thread: [[DriverFinishMaxEdges]]
-    * unless a spec or probe overrides it. A seam, not a user option: it
-    * moves only the CC path choice, never a conf, so the plans of other
-    * joins stay as they are.
+  /** Largest input, in rows, the small-input driver paths take: the
+    * batch side of the variant-index serves
+    * ([[EditDistanceJoin.pairsAgainstIndexBucketed]],
+    * [[EditDistanceJoin.repsAgainstIndexBucketed]]), the keyed rows of
+    * [[EditDistanceJoin.idPairs]] and the batch edges of
+    * [[incrementalAssign]] and [[mergeRepublish]]. At or under it the
+    * input is collected once and the operation finishes on the driver,
+    * touching standing tables only through broadcast probes; above it
+    * the distributed plan runs, after the one capped collect that
+    * found the input too big.
+    *
+    * The cap is the measured crossover of the variant serve, the one
+    * driver path whose cost grows fast with the batch: a batch key
+    * brings ~250 variant hashes at maxDist 2, and each comes back from
+    * `_postings` to the driver. [[graft.tools.DriverCrossoverProbe]]
+    * `serve` times each operation on both paths against an 8,000-name
+    * index at maxDist 2, the largest any query row uses; local[4] with
+    * 4 shuffle partitions on a 4-vCPU VM, median of 5 (ms, driver path /
+    * the distributed plan that runs above the cap, whose condensed CC
+    * keeps [[run]]'s driver finish; the assign's input is the reps ∪
+    * idPairs edges):
+    *
+    * | batch rows | reps serve | idPairs | incrementalAssign (edges) |
+    * |---|---|---|---|
+    * | 120 | 729 / 1042 | 191 / 584 | 203 / 566 (190) |
+    * | 250 | 689 / 793 | 204 / 615 | 164 / 417 (411) |
+    * | 300 | 731 / 787 | 181 / 422 | 164 / 381 (491) |
+    * | 375 | 820 / 775 | 211 / 405 | 124 / 298 (563) |
+    * | 500 | 837 / 562 | 236 / 355 | 129 / 326 (795) |
+    * | 1000 | 1694 / 815 | 415 / 492 | 147 / 392 (1555) |
+    * | 2000 | 3277 / 951 | 649 / 598 | 178 / 380 (3096) |
+    *
+    * The reps serve wins up to 300 rows and loses from 375 (earlier
+    * runs read a tie at 300–375); `idPairs` wins up to 1,000 rows and
+    * loses narrowly at 2,000, and the condensed CC wins at every size
+    * measured. So the one cap sits at the serve's crossover. perfbench's
+    * daily batches (120 rows, ~100–330 edges) fall under it, except the
+    * rare batch of more than 300 edges, whose labels take the
+    * distributed plan; `link_batch`'s `idPairs` (~1,900 rows) falls
+    * above it.
+    */
+  private val DriverMaxRows = 300
+
+  /** The driver paths' caps: normalized edges for [[run]]'s driver
+    * finish, input rows for the small-input paths ([[DriverMaxRows]]).
+    */
+  private[graft] final case class DriverCaps(edges: Long, rows: Int)
+
+  /** The driver paths' caps on the current thread: [[DriverFinishMaxEdges]]
+    * and [[DriverMaxRows]] unless a spec or probe overrides them. A seam,
+    * not a user option: it moves only the path choices, never a conf,
+    * so the plans of other joins stay as they are.
     */
   private[graft] val driverFinishCap =
-    new scala.util.DynamicVariable[Long](DriverFinishMaxEdges)
+    new scala.util.DynamicVariable(DriverCaps(DriverFinishMaxEdges, DriverMaxRows))
 
-  /** Runs `body` with every CC run it starts on this thread on the star
-    * loop.
+  /** Runs `body` with every driver path off: CC runs it starts on this
+    * thread take the star loop, and the serves, `idPairs` and the
+    * condensed CC take their distributed plans.
     */
   private[graft] def onStarLoop[T](body: => T): T =
-    driverFinishCap.withValue(0L)(body)
+    driverFinishCap.withValue(DriverCaps(0L, 0))(body)
 
-  /** Driver finish: collect the normalized edge checkpoint once (one job,
-    * packed per partition into primitive arrays) and run a min-root
-    * union-find over the sorted distinct endpoint ids with an int parent
-    * array. Union links the larger root under the smaller, so every
-    * root is its component's minimum index — the minimum member id,
-    * since ids are sorted. Returns the (member -> root) star frame the
-    * star loop converges to (roots omitted, as in the loop's output), so
-    * the final vertex join is shared and labels are identical at any
-    * parallelism.
+  /** `f` over `df`'s internal rows, run as one SQL execution, so the
+    * driver paths' collects reach listeners and the UI like any action.
     */
-  private def driverStars(e: DataFrame): DataFrame = {
-    val ends = e.queryExecution.toRdd.mapPartitions { rows =>
-      val b = new scala.collection.mutable.ArrayBuilder.ofLong
-      rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
-      Iterator.single(b.result())
-    }.collect().flatten
+  private def withRows[T](df: DataFrame)(f: RDD[InternalRow] => T): T = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(f(qe.toRdd))
+  }
+
+  /** `df`'s rows (copied) when it has at most the row cap of them, else
+    * None. One job, each partition returning at most cap + 1 rows; no
+    * job when the cap is 0.
+    */
+  private[graft] def smallRows(df: DataFrame): Option[Array[InternalRow]] = {
+    val cap = driverFinishCap.value.rows
+    if (cap <= 0) None
+    else {
+      val rows = withRows(df)(_.mapPartitions(_.take(cap + 1).map(_.copy())).collect())
+      if (rows.length <= cap) Some(rows) else None
+    }
+  }
+
+  /** Every row of `df`, copied, in one collect. */
+  private[graft] def collectRows(df: DataFrame): Array[InternalRow] =
+    withRows(df)(_.map(_.copy()).collect())
+
+  /** A local frame of internal rows under `schema` (names, types and
+    * nullability as given).
+    */
+  private[graft] def localFrame(spark: SparkSession, schema: StructType,
+                                rows: Seq[InternalRow]): DataFrame =
+    DatasetBridge.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** A local one-column relation `__probe` of `values`: the build side
+    * of a broadcast probe of a standing table (no literal IN list, whose
+    * physical planning grows with the list).
+    */
+  private[graft] def probeKeys(spark: SparkSession, dataType: DataType,
+                               values: Seq[Any]): DataFrame =
+    localFrame(spark, StructType(Seq(StructField("__probe", dataType,
+      nullable = false))), values.map(InternalRow(_)))
+
+  /** The rows of `standing` whose `column` holds one of `values`, in
+    * `standing`'s column order: a left-semi broadcast join against
+    * [[probeKeys]], collected.
+    */
+  private[graft] def probe(standing: DataFrame, column: String,
+                           values: Seq[Any]): Array[InternalRow] =
+    if (values.isEmpty) Array.empty
+    else {
+      val keys = probeKeys(standing.sparkSession,
+        standing.schema(column).dataType, values)
+      collectRows(standing.join(broadcast(keys),
+        standing(column) === keys("__probe"), "left_semi"))
+    }
+
+  /** Min-root union-find over endpoint pairs `ends` (a0, b0, a1, b1, ...):
+    * the sorted distinct ids, and each one's root index. Union links the
+    * larger root under the smaller, so every root is its component's
+    * minimum index — the minimum member id, since ids are sorted.
+    */
+  private def unionFind(ends: Array[Long]): (Array[Long], Array[Int]) = {
     val sorted = ends.clone()
     java.util.Arrays.sort(sorted)
     var m = 0
@@ -273,8 +375,24 @@ object ConnectedComponents {
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
       i += 2
     }
-    val stars = (0 until m).iterator.map(k => (ids(k), ids(find(k))))
-      .filter(p => p._1 != p._2).toSeq
+    (ids, Array.tabulate(m)(find))
+  }
+
+  /** Driver finish: collect the normalized edge checkpoint once (one job,
+    * packed per partition into primitive arrays) and run [[unionFind]]
+    * over it. Returns the (member -> root) star frame the star loop
+    * converges to (roots omitted, as in the loop's output), so the final
+    * vertex join is shared and labels are identical at any parallelism.
+    */
+  private def driverStars(e: DataFrame): DataFrame = {
+    val ends = withRows(e)(_.mapPartitions { rows =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator.single(b.result())
+    }.collect()).flatten
+    val (ids, root) = unionFind(ends)
+    val stars = ids.indices.iterator.filter(k => root(k) != k)
+      .map(k => (ids(k), ids(root(k)))).toSeq
     e.sparkSession.createDataFrame(stars).toDF("src", "dst")
   }
 
@@ -326,10 +444,20 @@ object ConnectedComponents {
     */
   def incrementalAssign(standing: DataFrame, batchVerts: DataFrame,
                         batchEdges: DataFrame): DataFrame = {
-    val cc = condensedCc(standing, batchEdges)
-    batchVerts.select(col("id").cast("long").as("id"))
-      .join(cc, Seq("id"), "left")
+    val ids = batchVerts.select(col("id").cast("long").as("id"))
+    def assign(cc: DataFrame) = ids.join(cc, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    condensedCc(standing, batchEdges) match {
+      case Right(cc) => assign(cc)
+      // driver path: a small batch's ids are labeled here too
+      case Left(labels) =>
+        val plan = assign(broadcast(labelFrame(standing.sparkSession, labels)))
+        smallRows(ids).fold(plan)(rows => localFrame(plan.sparkSession,
+          plan.schema, rows.toSeq.map { r =>
+            if (r.isNullAt(0)) InternalRow(null, null)
+            else InternalRow(r.getLong(0), labels.getOrElse(r.getLong(0), r.getLong(0)))
+          }))
+    }
   }
 
   /** CC over the CONDENSED graph (batch ids + standing component labels
@@ -342,11 +470,36 @@ object ConnectedComponents {
     * comparison per matched edge endpoint — it flags label > id on
     * edge-touched rows only (see [[incrementalAssign]]'s contract note
     * for what it cannot catch).
+    *
+    * At most [[DriverMaxRows]] batch edges take [[driverCondensedCc]]
+    * instead: the same condensed graph and labels, built on the driver
+    * and returned as a Left map.
     */
-  private def condensedCc(standing: DataFrame,
-                          batchEdges: DataFrame): DataFrame = {
+  private def condensedCc(standing: DataFrame, batchEdges: DataFrame)
+      : Either[Map[Long, Long], DataFrame] = {
     val lab = standing.select(col("id").cast("long").as("__sid"),
       col("component").cast("long").as("__slabel"))
+    val edges = batchEdges.select(col("src").cast("long"), col("dst").cast("long"))
+    smallRows(edges).fold[Either[Map[Long, Long], DataFrame]](
+      Right(distributedCondensedCc(lab, edges)))(e => Left(driverCondensedCc(lab, e)))
+  }
+
+  /** The driver path's condensed labels as a local (id, component)
+    * frame.
+    */
+  private def labelFrame(spark: SparkSession, labels: Map[Long, Long]): DataFrame =
+    localFrame(spark,
+      StructType(Seq(StructField("id", LongType, nullable = false),
+        StructField("component", LongType, nullable = false))),
+      labels.iterator.map { case (id, c) => InternalRow(id, c) }.toSeq)
+
+  private val MinLabelMessage =
+    "incrementalAssign/mergeRepublish require min-label standing " +
+      "components (label = min member id, ConnectedComponents.run's " +
+      "output); found label > id"
+
+  private def distributedCondensedCc(lab: DataFrame,
+                                     edges: DataFrame): DataFrame = {
     def condense(e: DataFrame, end: String): DataFrame =
       e.join(lab, e(end) === col("__sid"), "left")
         // coalesce(assert_true(..), label): assert_true is NULL whenever
@@ -358,9 +511,7 @@ object ConnectedComponents {
         // caller's contract.
         .withColumn(end, coalesce(
           assert_true(col("__slabel").isNull || col("__slabel") <= col("__sid"),
-            lit("incrementalAssign/mergeRepublish require min-label standing " +
-              "components (label = min member id, ConnectedComponents.run's " +
-              "output); found label > id")),
+            lit(MinLabelMessage)),
           col("__slabel"), col(end)))
         .drop("__sid", "__slabel")
     // PIN the condensed edges before handing them to run(): ce is
@@ -375,13 +526,45 @@ object ConnectedComponents {
     // re-evaluation work whose cost is box-state-dependent (the
     // q_cluster_cc_incremental driver-window inflation — README noise
     // log, round 15, before/after stage profiles).
-    val ce = condense(condense(
-      batchEdges.select(col("src").cast("long"), col("dst").cast("long")),
-      "src"), "dst").localCheckpoint(true)
+    val ce = condense(condense(edges, "src"), "dst").localCheckpoint(true)
     val verts = ce.select(col("src").as("id"))
       .unionByName(ce.select(col("dst").as("id")))
       .distinct()
     run(verts, ce)
+  }
+
+  /** [[condensedCc]] for collected batch edges: the standing labels of
+    * the edges' endpoints come back through one broadcast probe, each
+    * endpoint is replaced by its label (kept when it has none), and
+    * [[unionFind]] labels the condensed graph. Same rules as the
+    * distributed plan: an edge with a null endpoint joins nothing (its
+    * other endpoint is still a node), and an edge-touched label > id
+    * raises the min-label error. Returns (node -> component) for every
+    * condensed node.
+    */
+  private def driverCondensedCc(lab: DataFrame,
+                                edges: Array[InternalRow]): Map[Long, Long] = {
+    val ends = edges.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(r.getLong))
+    val labels = probe(lab, "__sid", ends.distinct.toSeq)
+      .groupBy(_.getLong(0))
+      .map { case (id, rows) =>
+        id -> rows.map { r =>
+          if (r.isNullAt(1)) id
+          else {
+            require(r.getLong(1) <= id, MinLabelMessage)
+            r.getLong(1)
+          }
+        }.distinct
+      }
+    // each edge links every condensed node its endpoints map to
+    val pairs = new scala.collection.mutable.ArrayBuilder.ofLong
+    edges.foreach { r =>
+      val nodes = (0 to 1).filterNot(r.isNullAt).map(r.getLong)
+        .flatMap(x => labels.getOrElse(x, Array(x)))
+      nodes.foreach { n => pairs += nodes.head; pairs += n }
+    }
+    val (ids, root) = unionFind(pairs.result())
+    ids.indices.iterator.map(k => ids(k) -> ids(root(k))).toMap
   }
 
   /** NIGHTLY RE-PUBLISH — the write half that completes the standing-CC
@@ -412,7 +595,11 @@ object ConnectedComponents {
     */
   def mergeRepublish(standing: DataFrame, batchVerts: DataFrame,
                      batchEdges: DataFrame): DataFrame = {
+    // the driver path's labels join like the distributed plan's, by
+    // shuffle: a broadcast join would write the standing's own file
+    // layout back and add the batch's partitions to it every night
     val cc = condensedCc(standing, batchEdges)
+      .fold(labelFrame(standing.sparkSession, _).hint("merge"), identity)
     val relabeled = standing
       .select(col("id").cast("long").as("id"),
         col("component").cast("long").as("component"))

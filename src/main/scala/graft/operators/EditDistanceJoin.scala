@@ -1,7 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -255,8 +259,53 @@ object EditDistanceJoin {
     * values in idCol (same contract as [[pairs]]).
     */
   def idPairs(df: DataFrame, idCol: String, keyCol: String,
-              maxDist: Int): DataFrame =
-    halfIdPairs(keyedRows(df, idCol, keyCol), maxDist).select("id_a", "id_b")
+              maxDist: Int): DataFrame = {
+    val keyed = keyedRows(df, idCol, keyCol)
+    val plan = halfIdPairs(keyed, maxDist).select("id_a", "id_b")
+    ConnectedComponents.smallRows(keyed)
+      .flatMap(driverIdPairs(_, keyed.schema("id").dataType, plan, maxDist))
+      .getOrElse(plan)
+  }
+
+  /** [[idPairs]] on the driver, for keyed rows at most
+    * [[ConnectedComponents]]' row cap: the same steps as [[halfIdPairs]]
+    * over the collected rows — distinct keys with gid = min id, variant
+    * hashes from [[deletionVariantHashes]], the half-ordered gid_a <
+    * gid_b candidates within the `numChars` length band, the verify
+    * with Spark's own `UTF8String.levenshteinDistance(_, maxDist)`, and
+    * the cross- and intra-group expansions oriented id_a < id_b — into a
+    * local frame with `plan`'s schema. None (the distributed plan runs)
+    * when an id is null, the one case the orientation rules would need
+    * Spark's null semantics for.
+    */
+  private def driverIdPairs(rows: Array[InternalRow], idType: DataType,
+                            plan: DataFrame,
+                            maxDist: Int): Option[DataFrame] =
+    if (rows.exists(_.isNullAt(0))) None
+    else {
+      val ord = TypeUtils.getInterpretedOrdering(idType)
+      val groups = rows.groupBy(_.getUTF8String(1)).toArray
+      val keys = groups.map(_._1)
+      val ids = groups.map(_._2.map(_.get(0, idType)))
+      val gid = ids.map(_.min(ord))
+      val lens = keys.map(_.numChars)
+      val byHash = mutable.LongMap.empty[List[Int]]
+      for (i <- keys.indices; v <- deletionVariantHashes(keys(i).toString, maxDist))
+        byHash(v) = i :: byHash.getOrElse(v, Nil)
+      val cand = mutable.HashSet.empty[(Int, Int)]
+      for (sharing <- byHash.valuesIterator if sharing.lengthCompare(1) > 0;
+           a <- sharing; b <- sharing
+           if ord.lt(gid(a), gid(b)) && math.abs(lens(a) - lens(b)) <= maxDist)
+        cand += ((a, b))
+      val out = mutable.ArrayBuffer.empty[InternalRow]
+      for ((a, b) <- cand
+           if keys(a).levenshteinDistance(keys(b), maxDist) >= 0;
+           x <- ids(a); y <- ids(b))
+        out += (if (ord.lt(x, y)) InternalRow(x, y) else InternalRow(y, x))
+      for (g <- ids; x <- g; y <- g if ord.lt(x, y)) out += InternalRow(x, y)
+      Some(ConnectedComponents.localFrame(plan.sparkSession, plan.schema,
+        out.toSeq))
+    }
 
   /** Cross-table edit-distance match: every `left` row paired with every
     * `right` (dictionary) row within lev <= maxDist — the master-data /
@@ -428,7 +477,7 @@ object EditDistanceJoin {
   def appendVariantIndexBucketed(batch: DataFrame, idCol: String,
                                  keyCol: String, tablePrefix: String): Unit = {
     val spark = batch.sparkSession
-    val maxDist = spark.table(s"${tablePrefix}_meta").head().getInt(0)
+    val maxDist = indexedMaxDist(spark, tablePrefix)
     val bk = keyedRows(batch, idCol, keyCol)
     // Novelty is PINNED before any table mutates: the anti join reads
     // `members`, and appending members first would make every batch key
@@ -538,22 +587,105 @@ object EditDistanceJoin {
 
   /** Every variant-index serve: the batch side's keyed rows, distinct
     * keys and variant postings meet the `<tablePrefix>_postings`/`_keys`/
-    * `_members` tables. The index's `_meta` max_dist bounds the
-    * serve-time `maxDist`.
+    * `_members` tables — on the driver ([[driverServe]]) for a batch of
+    * at most [[ConnectedComponents]]' row cap. The index's `_meta`
+    * max_dist bounds the serve-time `maxDist`.
     */
   private def serveAgainst(left: DataFrame, leftId: String, leftKey: String,
                            maxDist: Int, tablePrefix: String,
                            expandRight: Boolean): DataFrame = {
-    def table(t: String) = left.sparkSession.table(s"${tablePrefix}_$t")
-    val indexedDist = table("meta").head().getInt(0)
+    val spark = left.sparkSession
+    def table(t: String) = spark.table(s"${tablePrefix}_$t")
+    val indexedDist = indexedMaxDist(spark, tablePrefix)
     require(maxDist <= indexedDist,
       s"index $tablePrefix holds <=$indexedDist-deletion postings; " +
         s"serving maxDist=$maxDist would need variants it never generated")
     val lk = keyedRows(left, leftId, leftKey)
     val ldk = distinctKeys(lk)
-    matchAgainstPostings(lk, variantPostings(ldk, maxDist), ldk,
+    val plan = matchAgainstPostings(lk, variantPostings(ldk, maxDist), ldk,
       table("postings"), table("keys"), table("members"), maxDist,
       expandRight)
+    ConnectedComponents.smallRows(lk).fold(plan)(
+      driverServe(_, lk.schema("id").dataType, plan, table, maxDist,
+        expandRight))
+  }
+
+  /** The variant index's published `max_dist`, read from its `_meta`
+    * table's files on the driver (no Spark job).
+    */
+  private def indexedMaxDist(spark: org.apache.spark.sql.SparkSession,
+                             tablePrefix: String): Int = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${tablePrefix}_meta"))
+    StandingIndex.readMetaRow(spark, meta.location.toString).get[Int]("max_dist")
+  }
+
+  /** [[serveAgainst]] on the driver, for a batch of at most
+    * [[ConnectedComponents]]' row cap: the batch's keys, lengths
+    * (`numChars`) and variant hashes ([[deletionVariantHashes]]) are
+    * computed here, and the standing tables are read only through
+    * broadcast joins against local relations: `_postings` by the
+    * batch's hashes, broadcast in turn against `_keys` by gid, and for
+    * the pairs form `_members` by the verified keys
+    * ([[ConnectedComponents.probe]]). The candidate, band,
+    * verify (Spark's own `UTF8String.levenshteinDistance`) and
+    * expansion rules are [[matchAgainstPostings]]'s; a batch key whose
+    * ids are all null has no gid there and matches nothing here either.
+    * Returns a local frame with `plan`'s schema.
+    */
+  private def driverServe(lk: Array[InternalRow], idType: DataType,
+                          plan: DataFrame, table: String => DataFrame,
+                          maxDist: Int, expandRight: Boolean): DataFrame = {
+    val byKey = lk.groupBy(_.getUTF8String(1))
+      .filter(_._2.exists(!_.isNullAt(0))).toArray
+    val keys = byKey.map(_._1)
+    val lens = keys.map(_.numChars)
+    val variants = keys.map(k => deletionVariantHashes(k.toString, maxDist))
+    // one query for postings and keys: the postings that share a batch
+    // hash, joined to their keys
+    val postings = table("postings")
+    val keyTable = table("keys")
+    val gidType = keyTable.schema("gid").dataType
+    val hashes = ConnectedComponents.probeKeys(postings.sparkSession,
+      LongType, variants.flatten.distinct.toSeq)
+    val matched = postings.join(broadcast(hashes),
+      postings("__v") === hashes("__probe"), "left_semi")
+    val posted = if (keys.isEmpty) Array.empty[InternalRow]
+      else ConnectedComponents.collectRows(keyTable
+          .join(broadcast(matched), keyTable("gid") === matched("gid"))
+          .select(keyTable("gid"), keyTable("key"), matched("__len"),
+            matched("__v")))
+    // one pass over the postings: each one's batch keys by hash, kept
+    // within the length band, gives the distinct (batch key, gid)
+    // candidates and the candidate gids' keys
+    val batchByHash = mutable.LongMap.empty[List[Int]]
+    for (i <- keys.indices; v <- variants(i))
+      batchByHash(v) = i :: batchByHash.getOrElse(v, Nil)
+    val cand = mutable.HashSet.empty[(Int, Any)]
+    val rightKeys = mutable.HashMap.empty[Any, mutable.Set[UTF8String]]
+    for (p <- posted; i <- batchByHash.getOrElse(p.getLong(3), Nil)
+         if math.abs(lens(i) - p.getInt(2)) <= maxDist) {
+      val g = p.get(0, gidType)
+      cand += ((i, g))
+      rightKeys.getOrElseUpdate(g, mutable.HashSet.empty) += p.getUTF8String(1)
+    }
+    val verified = for ((i, g) <- cand.toSeq; rk <- rightKeys(g)
+                        if keys(i).levenshteinDistance(rk, maxDist) >= 0)
+      yield (i, rk, g, keys(i).levenshteinDistance(rk))
+    def leftIds(i: Int) = byKey(i)._2.iterator.map(_.get(0, idType))
+    val out = if (expandRight) {
+      val members = table("members").select("id", "key")
+      val memberType = members.schema("id").dataType
+      val byRightKey = ConnectedComponents.probe(members, "key",
+          verified.map(_._2).distinct)
+        .groupBy(_.getUTF8String(1))
+      for ((i, rk, _, d) <- verified; l <- leftIds(i);
+           m <- byRightKey.getOrElse(rk, Array.empty))
+        yield InternalRow(l, keys(i), m.get(0, memberType), rk, d)
+    } else
+      for ((i, rk, g, d) <- verified; l <- leftIds(i))
+        yield InternalRow(l, keys(i), g, rk, d)
+    ConnectedComponents.localFrame(plan.sparkSession, plan.schema, out)
   }
 
   /** Winner policy over [[pairsAgainst]]: ONE canonical dictionary entry

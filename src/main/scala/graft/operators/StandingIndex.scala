@@ -169,8 +169,9 @@ private[graft] object StandingIndex {
     } finally reader.close()
   }
 
-  /** Recursive listing of an index dir's parquet DATA files (committer
-    * droppings excluded) — the one walk behind the byte pricer, the
+  /** Recursive listing of an index dir's parquet DATA files
+    * ([[graft.sources.Layout.isDataFile]], the predicate Layout's
+    * one-level walk shares) — the one walk behind the byte pricer, the
     * footer counters and the compaction-depth counters, so their file
     * filters can never drift from each other.
     */
@@ -183,9 +184,7 @@ private[graft] object StandingIndex {
       .empty[org.apache.hadoop.fs.LocatedFileStatus]
     while (it.hasNext) {
       val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && name.endsWith(".parquet") &&
-          !name.startsWith("_") && !name.startsWith(".")) buf += f
+      if (graft.sources.Layout.isDataFile(f)) buf += f
     }
     buf.toSeq
   }

@@ -53,19 +53,24 @@ object Layout {
     else df.repartition(nFiles)
   }
 
-  /** The DATA files of a plain (unpartitioned) parquet dir: hidden and
-    * in-progress leftovers ('.'/'_'-prefixed) are invisible to a read,
-    * so no count or byte sizing here may include them.
+  /** The one data-file predicate: a `.parquet` file that a read would
+    * see. Hidden and in-progress leftovers ('.'/'_'-prefixed: `_SUCCESS`,
+    * `.crc` checksums, `._in_progress` writes) are invisible to a read,
+    * so no count, byte sizing or footer read may include them.
+    */
+  private[graft] def isDataFile(s: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** The DATA files ([[isDataFile]]) directly under a plain
+    * (unpartitioned) parquet dir.
     */
   private def dataFiles(spark: SparkSession,
                         dir: String): Array[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
-      .filter { s =>
-        val n = s.getPath.getName
-        s.isFile && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }
+      .filter(isDataFile)
   }
 
   /** Data-file count of a plain (flat, unpartitioned) parquet dir — the

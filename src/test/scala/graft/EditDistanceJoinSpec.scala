@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.EditDistanceJoin
+import graft.operators.{ConnectedComponents, EditDistanceJoin}
 import graft.operators.EditDistanceJoin.{DeletionNeighborhood, Naive, deletionVariants}
 import org.apache.spark.sql.functions.{expr, levenshtein}
 
@@ -346,8 +346,13 @@ class EditDistanceJoinSpec extends SparkSpec {
     // the serve join still consumes the bucket layout after the append:
     // the index scan is bucketed and the only __v exchange is the batch
     // side's — a second one would mean the standing postings re-shuffle
-    // on every serve
-    val plan = viaAppend.queryExecution.executedPlan.toString
+    // on every serve. This 15-row batch takes the driver path by
+    // default, whose result is a local relation; the distributed plan
+    // is pinned here, the driver path's probes in the driver-path test.
+    val plan = ConnectedComponents.onStarLoop(
+        EditDistanceJoin.pairsAgainstIndexBucketed(
+          mangled, "did", "dname", 1, "graft_spec_vidx"))
+      .queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     assert(plan.contains("Bucketed: true"), plan)
     assert(plan.linesIterator
