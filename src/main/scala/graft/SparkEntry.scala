@@ -1620,7 +1620,7 @@ object SparkEntry {
         "embedding", tmp)
       Ann.appendSq8Index(emb.filter(col("vec_id") % 8 === 0), "vec_id",
         "embedding", tmp)
-      require(Ann.compactSq8IndexIfNeeded(s, tmp, maxFiles = 1).nonEmpty,
+      require(sources.Layout.compactIfNeeded(s, s"$tmp/codes", 1).nonEmpty,
         "flat compaction policy must fire at depth 2")
       Ann.sq8SearchIndexed(emb, "vec_id", "embedding",
         col("vec_id") % 50 === 0, 5, tmp)
@@ -1638,7 +1638,7 @@ object SparkEntry {
         "embedding", tmp, candidates = 50)
       Ann.appendSignIndex(emb.filter(col("vec_id") % 8 === 0), "vec_id",
         "embedding", tmp)
-      require(Ann.compactSignIndexIfNeeded(s, tmp, maxFiles = 1).nonEmpty,
+      require(sources.Layout.compactIfNeeded(s, s"$tmp/sigs", 1).nonEmpty,
         "flat compaction policy must fire at depth 2")
       Ann.hammingSearchIndexed(emb, "vec_id", "embedding",
         col("vec_id") % 50 === 0, 5, tmp)
@@ -1666,8 +1666,7 @@ object SparkEntry {
         "embedding", tmp, IvfFixture.model)
       Ann.appendSq8IndexByCell(emb.filter(col("vec_id") % 8 === 0), "vec_id",
         "embedding", tmp, IvfFixture.model)
-      require(
-        Ann.compactSq8IndexByCellIfNeeded(s, tmp, maxFilesPerCell = 1).nonEmpty,
+      require(sources.Layout.compactIfNeeded(s, s"$tmp/codes", 1).nonEmpty,
         "cell compaction policy must fire at depth 2")
       Ann.sq8SearchByCell(emb, "vec_id", "embedding",
         col("vec_id") % 50 === 0, 5, tmp, IvfFixture.model)
@@ -2812,8 +2811,7 @@ object SparkEntry {
         "vec_id", "embedding", PqFixture.model, tmp, IvfFixture.model)
       Ann.appendPqIndexByCell(emb.filter(col("vec_id") % 8 === 0),
         "vec_id", "embedding", PqFixture.model, tmp, IvfFixture.model)
-      require(Ann.compactPqIndexByCellIfNeeded(s, tmp,
-        maxFilesPerCell = 1).nonEmpty,
+      require(sources.Layout.compactIfNeeded(s, tmp, 1).nonEmpty,
         "cell compaction policy must fire at depth 2")
       Ann.pqSearchIndexed(emb, "vec_id", "embedding", PqFixture.model,
         col("vec_id") % 50 === 0, 5, tmp, Some(IvfFixture.model),

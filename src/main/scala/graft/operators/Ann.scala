@@ -914,8 +914,8 @@ object Ann {
     * Each append lays down at most one file per touched cell (the
     * pre-write repartition) — after N appends a probed cell scans N
     * files, the same small-files drift every bucketed tier has; run
-    * [[compactPqIndexByCellIfNeeded]] from the same nightly job, like
-    * every other tier.
+    * [[graft.sources.Layout.compactIfNeeded]] on `dir` from the same
+    * nightly job, like every other tier.
     */
   def appendPqIndexByCell(embBatch: DataFrame, idCol: String,
                           embCol: String, model: PqModel, dir: String,
@@ -923,76 +923,6 @@ object Ann {
     StandingIndex.writeCells(
       pqCodesLong(embBatch, idCol, embCol, model, Some(coarse)), dir,
       "append")
-
-  // Data-file walks live in [[StandingIndex]] (the one walk the byte
-  // pricer, footer counters and compaction counters share, so their
-  // file filters can never drift apart); local alias for brevity.
-  private def listDataFiles(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Seq[org.apache.hadoop.fs.Path] =
-    StandingIndex.listDataFiles(spark, dir)
-
-  /** Data-file count of the DEEPEST cell of a cell-partitioned code
-    * index — the compaction-trigger signal, same shape as
-    * [[graft.sources.Layout.filesPerBucket]]'s skew-honest form: appends
-    * touch only the cells their batch lands in, so the deepest cell
-    * (where probe-bounded serves pay the per-file overhead) can run well
-    * ahead of the table-wide average. Groups data files by their
-    * `cell=K` parent directory and returns the max. REJECTS a flat
-    * [[writePqIndex]] dir loudly (all files would share the root parent,
-    * so the "deepest cell" would be the total file count and the
-    * compaction policy would fire data-dependently around append ~17,
-    * then crash in the verb's own layout check — better to fail at the
-    * first nightly call with the routing answer).
-    */
-  def pqFilesPerCell(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): Double = {
-    val files = listDataFiles(spark, dir)
-    val perCell = files.groupBy(_.getParent.getName).map {
-      case (parent, fs) => (parent, fs.size)
-    }
-    require(perCell.keys.forall(_.startsWith("cell=")),
-      s"$dir is not a cell-partitioned PQ index (data files outside " +
-        "cell= directories); flat indexes compact with " +
-        "graft.sources.Layout.compact")
-    if (perCell.isEmpty) 0.0 else perCell.values.max.toDouble
-  }
-
-  /** Compact a cell-partitioned code index in place — the maintenance
-    * verb the PQ tier's append story needs for symmetry with
-    * [[graft.sources.Layout.compactBucketed]]: rewrite the code table
-    * (codes-sized — never a re-encode; the codebooks don't enter) back
-    * to one file per cell, changing nothing a serve can observe (the
-    * layout stays partition-pruned; AnnSpec pins serve parity). The
-    * staging-swap mechanism, crash window and nightly-window rule are
-    * [[StandingIndex.compactCellsStagingSwap]]'s.
-    */
-  def compactPqIndexByCell(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Int = {
-    val (codes, partitioned) = readCodeIndex(spark, dir)
-    require(partitioned,
-      s"$dir is not a cell-partitioned PQ index (no cell= directories); " +
-        "flat indexes compact with graft.sources.Layout.compact")
-    StandingIndex.compactCellsStagingSwap(spark, dir, codes,
-      "compactPqIndexByCell")
-  }
-
-  /** The compaction POLICY to [[compactPqIndexByCell]]'s mechanism —
-    * [[graft.sources.Layout.compactBucketedIfNeeded]]'s rule applied to
-    * the cell tier: compact when the DEEPEST cell has accumulated more
-    * than `maxFilesPerCell` data files ([[pqFilesPerCell]]), else do
-    * nothing. Same default threshold of 16, cited to the same
-    * IndexServeProbe drift measurement (files-per-unit-of-layout is the
-    * serve overhead in both layouts; a probed serve reads nProbe cells'
-    * files, so per-cell depth is exactly its per-file cost multiplier).
-    * Call from the nightly append job; deliberately not from inside
-    * [[appendPqIndexByCell]] (the append-cost-predictability argument).
-    */
-  def compactPqIndexByCellIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                                   dir: String,
-                                   maxFilesPerCell: Int = 16): Option[Int] =
-    if (pqFilesPerCell(spark, dir) > maxFilesPerCell)
-      Some(compactPqIndexByCell(spark, dir))
-    else None
 
   /** The production probe bound for [[pqSearchAuto]]'s bounded branch:
     * nProbe=8 of the 16-cell coarse quantizer — the PqTune frontier's
@@ -1076,8 +1006,8 @@ object Ann {
     * The code table holds exactly m rows per vector (one per subspace,
     * both layouts), so footer row counts / m IS the corpus size; the
     * file count a listing walks is what the compaction policy bounds
-    * ([[compactPqIndexByCellIfNeeded]]), so the walk stays thousands of
-    * footers at worst, not corpus-scale. This is how [[pqSearchAuto]]
+    * ([[graft.sources.Layout.compactIfNeeded]]), so the walk stays
+    * thousands of footers at worst, not corpus-scale. This is how [[pqSearchAuto]]
     * prices its dispatch against a standing index: the whole point of
     * the probed branch is sublinear I/O, so the chooser deciding FOR it
     * must not itself pay a corpus-scale action (round-14 verdict).
@@ -1598,28 +1528,6 @@ object Ann {
           sq8IndexScale(embBatch.sparkSession, dir)).as("qv")),
       s"$dir/codes")
 
-  /** Compact the SQ8 tier's standing codes in place — the flat-index
-    * counterpart of [[compactPqIndexByCell]] (round-17 item 3: the flat
-    * appends accumulate one parquet file per batch forever, so the
-    * serve's stage-1 scan pays N file opens for the same bytes). Wraps
-    * [[graft.sources.Layout.compactDir]] onto `dir/codes`; the one-row
-    * scale sidecar never accumulates and is left alone. Codes-sized,
-    * never a re-encode (the frozen scale doesn't enter); changes nothing
-    * a serve can observe (AnnSpec pins serve parity). Nightly-window
-    * rules and crash recovery as documented on compactDir.
-    */
-  def compactSq8Index(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Int =
-    graft.sources.Layout.compactDir(spark, s"$dir/codes")
-
-  /** [[graft.sources.Layout.compactDirIfNeeded]]'s policy on the SQ8
-    * code dir — same measured 16-file threshold, same call-from-the-
-    * nightly-append-job contract as every other tier's policy verb.
-    */
-  def compactSq8IndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, maxFiles: Int = 16): Option[Int] =
-    graft.sources.Layout.compactDirIfNeeded(spark, s"$dir/codes", maxFiles)
-
   /** Serve against a standing SQ8 index: stage 1 scans the published
     * int8 codes (4x fewer bytes than the float column, quantization
     * amortized at publish), stage 2 fetches floats for the candidate set
@@ -1697,7 +1605,8 @@ object Ann {
     * didn't clear) — plus the publish-time corpus size for the drift
     * guard (routing recall is corpus-dependent through the centroids,
     * the sign-tier rule). Serve with [[sq8SearchByCell]]; compact with
-    * [[compactSq8IndexByCellIfNeeded]]. Returns the scale it froze.
+    * [[graft.sources.Layout.compactIfNeeded]] on `dir/codes`. Returns
+    * the scale it froze.
     */
   def writeSq8IndexByCell(emb: DataFrame, idCol: String, embCol: String,
                           dir: String, coarse: IvfModel,
@@ -1733,7 +1642,8 @@ object Ann {
     * by the SAME centroids the publish used, append under the cell
     * directories. One file per touched cell per batch — the same
     * small-files drift as every partitioned tier, cleaned by
-    * [[compactSq8IndexByCellIfNeeded]] from the nightly job. The
+    * [[graft.sources.Layout.compactIfNeeded]] on `dir/codes` from the
+    * nightly job. The
     * partitioned pre-write repartition skips empty batches, so no
     * empty-batch guard is needed (the appendPqIndexByCell precedent).
     */
@@ -1748,17 +1658,6 @@ object Ann {
           sq8QuantCol(col(embCol), meta.scale).as("qv")),
       s"$dir/codes", "append")
   }
-
-  /** The cell tier's compaction policy applied to the SQ8 cell dir —
-    * [[compactPqIndexByCellIfNeeded]] IS the mechanism (it is
-    * schema-agnostic: it rewrites whatever cell-partitioned rows the dir
-    * holds); this alias just routes it at the right subdir with the
-    * tier's name on it.
-    */
-  def compactSq8IndexByCellIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                                    dir: String,
-                                    maxFilesPerCell: Int = 16): Option[Int] =
-    compactPqIndexByCellIfNeeded(spark, s"$dir/codes", maxFilesPerCell)
 
   /** Probed serve against a standing [[writeSq8IndexByCell]] index:
     * rank the nProbe best cells per query by the SAME argmax score the
@@ -2030,7 +1929,7 @@ object Ann {
     val metaPath = new org.apache.hadoop.fs.Path(s"$dir/meta")
     val fs = metaPath.getFileSystem(conf)
     if (!fs.exists(metaPath) && fs.exists(new org.apache.hadoop.fs.Path(dir))) {
-      val rootFiles = StandingIndex.listDataFileStatuses(spark, dir)
+      val rootFiles = graft.sources.Layout.dataFilesUnder(spark, dir)
         .filterNot(_.getPath.toString.contains("/sigs/"))
       require(rootFiles.isEmpty,
         s"sign index at $dir has the pre-round-17 flat layout " +
@@ -2062,24 +1961,6 @@ object Ann {
           sigInput(embCol, meta.dims))
         .select(col("vec_id") +: sigCols(meta.lanes, "sig_"): _*)
     }, s"$dir/sigs")
-
-  /** Compact the sign tier's standing signature files in place —
-    * [[compactSq8Index]]'s twin on `dir/sigs` (the one-row meta sidecar
-    * never accumulates). Signature-sized, nothing recomputed; serve
-    * parity and the drift guard's footer count are both unaffected
-    * (compaction rewrites the same rows into fewer files).
-    */
-  def compactSignIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Int =
-    graft.sources.Layout.compactDir(spark, s"$dir/sigs")
-
-  /** [[graft.sources.Layout.compactDirIfNeeded]]'s policy on the sign
-    * signature dir — same measured 16-file threshold, same nightly-job
-    * contract.
-    */
-  def compactSignIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, maxFiles: Int = 16): Option[Int] =
-    graft.sources.Layout.compactDirIfNeeded(spark, s"$dir/sigs", maxFiles)
 
   /** Serve against a standing sign index: stage 1 scans ~16 bytes per
     * corpus vector. `candidates` <= 0 (the default) serves at the

@@ -409,8 +409,10 @@ object EditDistanceJoin {
     * index-side exchange (only the batch's exploded variants shuffle to
     * meet it), `<tablePrefix>_keys` (key, gid) bucketed by gid for the
     * verify re-attach, `<tablePrefix>_members` (id, key) bucketed by key
-    * for the id-level expansion, and `<tablePrefix>_meta` holding the
-    * published `max_dist`. The skew guard is baked at publish time
+    * for the id-level expansion, and a one-row `meta` sidecar holding the
+    * published `max_dist` ([[StandingIndex.publishMetaRow]]: written on
+    * the driver, crash-safe, no catalog entry; [[metaDir]] finds it
+    * beside `_postings`). The skew guard is baked at publish time
     * (distinct keys only). Bucketed appends keep the bucket spec (Spark
     * verifies it against the table), so the serve join's no-shuffle
     * property survives day-N appends ([[appendVariantIndexBucketed]]).
@@ -429,9 +431,9 @@ object EditDistanceJoin {
     publish(variantPostings(rdk, maxDist), "__v", "postings")
     publish(rdk, "gid", "keys")
     publish(rk, "key", "members")
-    import right.sparkSession.implicits._
-    Seq(maxDist).toDF("max_dist").write.mode("overwrite").format("parquet")
-      .option("path", s"$dir/meta").saveAsTable(s"${tablePrefix}_meta")
+    StandingIndex.publishMetaRow(right.sparkSession,
+      metaDir(right.sparkSession, tablePrefix),
+      Seq("max_dist" -> StandingIndex.MetaInt(maxDist)))
   }
 
   /** INCREMENTAL PUBLISH for the variant tier — the verb that closes the
@@ -518,29 +520,6 @@ object EditDistanceJoin {
           .select("key").hint("merge"),
         Seq("key"), "left_anti")
 
-  /** COMPACTION for the variant tier — the fourth lifecycle verb
-    * alongside [[writeVariantIndexBucketed]] (publish),
-    * [[pairsAgainstIndexBucketed]] (serve) and
-    * [[appendVariantIndexBucketed]] (append): N daily appends leave N
-    * file sets per bucket. The multi-table twin of
-    * [[graft.sources.Layout.compactBucketedIfNeeded]]: one nightly call
-    * per tier (`maxFilesPerBucket = 0` forces all three rewrites; the
-    * meta table never grows, so it is left alone). Each table decides
-    * on its own files-per-bucket depth (appends write one file set per
-    * table per batch, but a batch can miss buckets in one table and not
-    * another, so depths drift apart). Returns per-table
-    * Some(fileCountAfter)/None: (postings, keys, members).
-    */
-  def compactVariantIndexBucketedIfNeeded(
-      spark: org.apache.spark.sql.SparkSession, tablePrefix: String,
-      maxFilesPerBucket: Int = 16): (Option[Int], Option[Int], Option[Int]) =
-    (graft.sources.Layout.compactBucketedIfNeeded(
-       spark, s"${tablePrefix}_postings", maxFilesPerBucket),
-     graft.sources.Layout.compactBucketedIfNeeded(
-       spark, s"${tablePrefix}_keys", maxFilesPerBucket),
-     graft.sources.Layout.compactBucketedIfNeeded(
-       spark, s"${tablePrefix}_members", maxFilesPerBucket))
-
   /** [[pairsAgainst]] served from a standing variant index
     * ([[writeVariantIndexBucketed]], possibly grown by
     * [[appendVariantIndexBucketed]]): only the BATCH side explodes at
@@ -588,8 +567,8 @@ object EditDistanceJoin {
   /** Every variant-index serve: the batch side's keyed rows, distinct
     * keys and variant postings meet the `<tablePrefix>_postings`/`_keys`/
     * `_members` tables — on the driver ([[driverServe]]) for a batch of
-    * at most [[ConnectedComponents]]' row cap. The index's `_meta`
-    * max_dist bounds the serve-time `maxDist`.
+    * at most [[ConnectedComponents]]' row cap. The index's published
+    * max_dist ([[indexedMaxDist]]) bounds the serve-time `maxDist`.
     */
   private def serveAgainst(left: DataFrame, leftId: String, leftKey: String,
                            maxDist: Int, tablePrefix: String,
@@ -610,14 +589,26 @@ object EditDistanceJoin {
         expandRight))
   }
 
-  /** The variant index's published `max_dist`, read from its `_meta`
-    * table's files on the driver (no Spark job).
+  /** The variant index's published `max_dist`, read on the driver (no
+    * Spark job) from its [[metaDir]] sidecar.
     */
   private def indexedMaxDist(spark: org.apache.spark.sql.SparkSession,
-                             tablePrefix: String): Int = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(s"${tablePrefix}_meta"))
-    StandingIndex.readMetaRow(spark, meta.location.toString).get[Int]("max_dist")
+                             tablePrefix: String): Int =
+    StandingIndex.readMetaRow(spark, metaDir(spark, tablePrefix))
+      .get[Int]("max_dist")
+
+  /** The variant index's `meta` sidecar dir: beside the `_postings`
+    * table's files, at the location the catalog resolved for them (a
+    * relative publish `dir` resolves under the warehouse dir, not the
+    * working dir), so publish and serve agree on it from `tablePrefix`
+    * alone.
+    */
+  private def metaDir(spark: org.apache.spark.sql.SparkSession,
+                      tablePrefix: String): String = {
+    val postings = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${tablePrefix}_postings"))
+    new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(postings.location).getParent, "meta").toString
   }
 
   /** [[serveAgainst]] on the driver, for a batch of at most

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Banding-parameter POLICY for the MinHash-LSH tier — the chooser that
   * turns "16 hashes, 4 bands of 4" from a pinned constant into a derived
-  * decision, the same move [[graft.sources.Layout.compactBucketedIfNeeded]]
+  * decision, the same move [[graft.sources.Layout.compactIfNeeded]]
   * made for compaction and [[Ann.pqSearchAuto]] made for PQ serving.
   *
   * Theory (standard S-curve analysis, Leskovec/Rajaraman/Ullman, "Mining

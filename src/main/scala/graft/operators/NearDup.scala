@@ -531,26 +531,6 @@ object NearDup {
   private def shingleSets(sh: DataFrame): DataFrame =
     sh.groupBy("id").agg(sort_array(collect_set(col("shingle"))).as("ss"))
 
-  /** COMPACTION for the LSH tier's table pair — the fourth lifecycle
-    * verb: each [[appendBandIndexBucketed]] adds a file set per bucket,
-    * and after N appends the serve scans N small files per bucket. The
-    * multi-table twin of [[graft.sources.Layout.compactBucketedIfNeeded]],
-    * so the nightly job needs one call per TIER, not one per table
-    * (`maxFilesPerBucket = 0` forces both rewrites). Each table decides
-    * on its own files-per-bucket depth (appends lay one file set on both
-    * tables per batch, but a batch whose rows miss some buckets skips
-    * those files, so depths can drift apart). Returns per-table
-    * Some(fileCountAfter) where the threshold fired, None where it
-    * didn't: (postings, sets).
-    */
-  def compactBandIndexBucketedIfNeeded(
-      spark: org.apache.spark.sql.SparkSession, tablePrefix: String,
-      maxFilesPerBucket: Int = 16): (Option[Int], Option[Int]) =
-    (graft.sources.Layout.compactBucketedIfNeeded(
-       spark, s"${tablePrefix}_postings", maxFilesPerBucket),
-     graft.sources.Layout.compactBucketedIfNeeded(
-       spark, s"${tablePrefix}_sets", maxFilesPerBucket))
-
   /** Incremental near-dup pairs of a new batch against a STANDING index
     * ([[writeBandIndexBucketed]], possibly grown by
     * [[appendBandIndexBucketed]]) — candidates from the batch's band keys

@@ -169,29 +169,12 @@ private[graft] object StandingIndex {
     } finally reader.close()
   }
 
-  /** Recursive listing of an index dir's parquet DATA files
-    * ([[graft.sources.Layout.isDataFile]], the predicate Layout's
-    * one-level walk shares) — the one walk behind the byte pricer, the
-    * footer counters and the compaction-depth counters, so their file
-    * filters can never drift from each other.
+  /** An index dir's parquet data files at any depth
+    * ([[graft.sources.Layout.dataFilesUnder]], the one recursive walk).
     */
-  def listDataFileStatuses(spark: SparkSession, dir: String)
-      : Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val it = root.getFileSystem(conf).listFiles(root, true)
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.LocatedFileStatus]
-    while (it.hasNext) {
-      val f = it.next()
-      if (graft.sources.Layout.isDataFile(f)) buf += f
-    }
-    buf.toSeq
-  }
-
   def listDataFiles(spark: SparkSession,
                     dir: String): Seq[org.apache.hadoop.fs.Path] =
-    listDataFileStatuses(spark, dir).map(_.getPath)
+    graft.sources.Layout.dataFilesUnder(spark, dir).map(_.getPath)
 
   /** Corpus size of an index dir from the parquet FOOTERS — a
     * driver-side metadata read (no Spark job), the cost class every
@@ -205,7 +188,7 @@ private[graft] object StandingIndex {
     * Spark job.
     */
   def dirDataBytes(spark: SparkSession, dir: String): Long =
-    listDataFileStatuses(spark, dir).map(_.getLen).sum
+    graft.sources.Layout.dataFilesUnder(spark, dir).map(_.getLen).sum
 
   /** (bytes, rows) of an index dir off ONE listing walk — for dispatch
     * sites that need both the byte price and the drift guard's corpus
@@ -214,7 +197,7 @@ private[graft] object StandingIndex {
     * from the footers of the same file list.
     */
   def dirStats(spark: SparkSession, dir: String): (Long, Long) = {
-    val statuses = listDataFileStatuses(spark, dir)
+    val statuses = graft.sources.Layout.dataFilesUnder(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
     var rows = 0L
     statuses.foreach { s =>
@@ -331,20 +314,6 @@ private[graft] object StandingIndex {
   def writeCells(codes: DataFrame, dir: String, mode: String): Unit =
     codes.repartition(col("cell"))
       .write.partitionBy("cell").mode(mode).parquet(dir)
-
-  /** The cell-partitioned compaction MECHANISM (one copy for every cell
-    * tier — PQ-by-cell and SQ8-by-cell route here): rewrite `rows` back
-    * to one file per cell through [[graft.sources.Layout.stagedSwap]]
-    * (crash window and recovery documented there). Run from the nightly
-    * maintenance window like every compact verb. Returns the post-swap
-    * data-file count.
-    */
-  def compactCellsStagingSwap(spark: SparkSession, dir: String,
-                              rows: DataFrame, verb: String): Int = {
-    graft.sources.Layout.stagedSwap(spark, dir, verb)(
-      writeCells(rows, _, "overwrite"))
-    listDataFiles(spark, dir).size
-  }
 
   /** Flat append with the empty-batch stray-file guard: an
     * unpartitioned append of an empty plan still lays down one empty

@@ -24,7 +24,7 @@ object Layout {
     * files ([[sizedRead]]). Returns the data file count written.
     */
   def compact(spark: SparkSession, inDir: String, outDir: String,
-              targetBytes: Long = 128L << 20): Int = {
+              targetBytes: Long = CompactTargetBytes): Int = {
     sizedRead(spark, inDir, targetBytes)
       .write.mode(SaveMode.Overwrite).parquet(outDir)
     // Report what actually landed (AQE/empty-partition elision may merge
@@ -73,20 +73,199 @@ object Layout {
       .filter(isDataFile)
   }
 
-  /** Data-file count of a plain (flat, unpartitioned) parquet dir — the
-    * compaction-trigger signal for the flat standing indexes (SQ8 codes,
-    * sign signatures): every batch append lays down one file, so after N
-    * daily appends a serve's stage-1 scan opens N files for the same
-    * bytes — the identical small-files drift [[filesPerBucket]] measures
-    * for bucketed tables, minus the bucket dimension (a flat dir IS one
-    * bucket).
+  /** The DATA files ([[isDataFile]]) under `dir` at any depth — the one
+    * recursive walk behind [[compactIfNeeded]]'s unit counts and the
+    * standing indexes' byte pricer and footer counters
+    * ([[graft.operators.StandingIndex]]), so their file filters can never
+    * drift from each other.
+    */
+  private[graft] def dataFilesUnder(spark: SparkSession, dir: String)
+      : Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(root, true)
+    val buf = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.hadoop.fs.LocatedFileStatus]
+    while (it.hasNext) {
+      val f = it.next()
+      if (isDataFile(f)) buf += f
+    }
+    buf.toSeq
+  }
+
+  /** Data-file count directly under a plain (flat, unpartitioned)
+    * parquet dir — what [[compact]] reports, and a flat dir's
+    * [[filesPerUnit]]: every batch append to a flat standing index (SQ8
+    * codes, sign signatures) lays down one file, so after N daily
+    * appends a serve's stage-1 scan opens N files for the same bytes.
     */
   def dataFileCount(spark: SparkSession, dir: String): Int =
     dataFiles(spark, dir).length
 
-  /** The swap every in-place compaction shares ([[compactDir]],
-    * [[compactBucketed]], the cell tiers'
-    * [[graft.operators.StandingIndex.compactCellsStagingSwap]]): an
+  /** The byte target of a flat dir's rewrite in [[compactIfNeeded]], and
+    * [[compact]]'s default: one file per ~128 MB of data.
+    */
+  private val CompactTargetBytes = 128L << 20
+
+  /** A standing layout as [[compactIfNeeded]] reads it off its target:
+    * where its files live and the data-file count of its deepest unit
+    * (bucket, partition, or the whole flat dir).
+    */
+  private sealed trait Units { def location: String; def depth: Int }
+  private final case class Buckets(table: String, location: String,
+      depth: Int, schema: org.apache.spark.sql.types.StructType,
+      spec: org.apache.spark.sql.catalyst.catalog.BucketSpec) extends Units
+  private final case class Partitions(location: String, column: String,
+      depth: Int) extends Units
+  private final case class FlatDir(location: String, depth: Int)
+      extends Units
+
+  /** A `name=value` partition directory name. */
+  private val PartitionDirName = """([^=]+)=.*""".r
+
+  /** The catalog decides: a catalog table must be bucketed, and its unit
+    * is the bucket ([[bucketDepth]]). Otherwise `target` is a parquet dir:
+    * data files all under one level of `name=value` dirs make it
+    * partitioned by `name` (one unit per partition); data files all at
+    * its root make it flat (the dir is the unit). Anything else (files
+    * both at the root and under partitions, two partition names, deeper
+    * nesting) is refused loudly, naming the dir: a per-unit count over a
+    * mixed layout would fire data-dependently and the rewrite would
+    * re-layout what it was not asked to.
+    */
+  private def unitsOf(spark: SparkSession, target: String): Units =
+    if (spark.sessionState.catalog.tableExists(
+        org.apache.spark.sql.catalyst.TableIdentifier(target))) {
+      val (meta, spec) = bucketedMeta(spark, target)
+      val location = meta.location.toString
+      Buckets(target, location, bucketDepth(spark, location), meta.schema,
+        spec)
+    } else {
+      val root = new org.apache.hadoop.fs.Path(target)
+      val top = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(root)
+      val perDir = dataFilesUnder(spark, target)
+        .groupBy(_.getPath.getParent).map { case (d, fs) => d -> fs.size }
+      def refuse(): Nothing = throw new IllegalArgumentException(
+        s"$target mixes parquet layouts or nests them deeper than one " +
+          "name=value level (data files under: " +
+          perDir.keys.map(_.toString).toSeq.sorted.mkString(", ") +
+          "); Layout.compactIfNeeded takes a bucketed catalog table, a dir " +
+          "partitioned one level deep, or a flat dir")
+      val columns = perDir.keySet.map {
+        case `top` => None
+        case d if d.getParent == top => d.getName match {
+          case PartitionDirName(c) => Some(c)
+          case _                   => refuse()
+        }
+        case _ => refuse()
+      }
+      val depth = if (perDir.isEmpty) 0 else perDir.values.max
+      columns.toSeq match {
+        case Seq() | Seq(None) => FlatDir(target, depth)
+        case Seq(Some(c))      => Partitions(target, c, depth)
+        case _                 => refuse()
+      }
+    }
+
+  /** Data-file count of the DEEPEST unit of `target` — the compaction
+    * trigger [[compactIfNeeded]] compares against its threshold: the
+    * deepest bucket of a bucketed catalog table ([[filesPerBucket]]), the
+    * deepest `name=value` partition of a partitioned dir, or the file
+    * count of a flat dir. Appends touch only the units their batch lands
+    * in, so the deepest unit, where a serve pays the per-file overhead,
+    * can run well ahead of the average; the max is what fires.
+    */
+  def filesPerUnit(spark: SparkSession, target: String): Int =
+    unitsOf(spark, target).depth
+
+  /** The one compaction verb of every standing layout. `target` is a
+    * catalog table name or a parquet dir, and the catalog decides which
+    * ([[unitsOf]]): a bucketed table (unit: the bucket), a dir
+    * partitioned one `name=value` level deep (unit: the partition) or a
+    * flat dir (unit: the dir). When the deepest unit holds more than
+    * `maxFilesPerUnit` data files ([[filesPerUnit]]), the target is
+    * rewritten in place to one file per unit, else nothing happens; `0`
+    * forces the rewrite on any target that holds data. Returns
+    * Some(data-file count after) if it ran, None if the target was under
+    * the threshold. The rewrite changes nothing a query can observe
+    * (LayoutSpec, AnnSpec):
+    *  - bucketed: the table is read as plain parquet and written ONCE,
+    *    bucketed and sorted under the table's own catalog spec (no
+    *    caller-supplied spec can drift from the table's), into the
+    *    staging dir under a temporary catalog name (a bucketed write goes
+    *    through the catalog); after the swap the table's file listing is
+    *    refreshed and the temporary entry dropped (an external entry: the
+    *    drop deletes no files; a crash leaves it, and the next compaction
+    *    overwrites it);
+    *  - partitioned: read as plain parquet with the partition column as
+    *    the dir names' strings, repartitioned by it and written
+    *    `partitionBy` it, one file per partition under the same dir
+    *    names;
+    *  - flat: rewritten to one file per ~128 MB of its data files'
+    *    bytes ([[sizedRead]]).
+    *
+    * Every layout goes through the one [[stagedSwap]] (crash window and
+    * recovery documented there).
+    *
+    * The default threshold of 16 is cited to measurement, not taste:
+    * IndexServeProbe prices the serve drift at ~20 appends as the point
+    * where the small-files overhead becomes visible next to the serve's
+    * own work (README "index lifecycle" ledger — a serve at 20 appends
+    * reads ~20x the file count for the same bytes), while a nightly
+    * append cadence means 16 files ≈ two weeks of batches. Call this from
+    * the nightly job that runs the appends, once per standing table or
+    * dir; it is deliberately NOT called inside the appends, because an
+    * append that sometimes costs a table-sized write would make the
+    * measured flat append exponents (ScaleProbe) unpredictable.
+    */
+  def compactIfNeeded(spark: SparkSession, target: String,
+                      maxFilesPerUnit: Int = 16): Option[Int] = {
+    val units = unitsOf(spark, target)
+    if (units.depth <= maxFilesPerUnit) None
+    else {
+      units match {
+        case Buckets(table, location, _, schema, spec) =>
+          val staged = s"${table}__compacting"
+          stagedSwap(spark, location) { staging =>
+            // read as plain parquet, not through the catalog: over a
+            // bucketed scan the planner drops the repartition below as
+            // already satisfied, then un-buckets the scan as unneeded,
+            // and every split task writes its own file per bucket
+            val writer = spark.read.schema(schema).parquet(location)
+              .repartition(spec.numBuckets, spec.bucketColumnNames.map(col): _*)
+              .write.mode(SaveMode.Overwrite).format("parquet")
+              .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
+                spec.bucketColumnNames.tail: _*)
+            (if (spec.sortColumnNames.nonEmpty)
+               writer.sortBy(spec.sortColumnNames.head,
+                 spec.sortColumnNames.tail: _*)
+             else writer)
+              .option("path", staging).saveAsTable(staged)
+          }
+          spark.catalog.refreshTable(table)
+          spark.sessionState.catalog.dropTable(
+            org.apache.spark.sql.catalyst.TableIdentifier(staged),
+            ignoreIfNotExists = true, purge = false)
+        case Partitions(dir, column, _) =>
+          // the partition column read back as the dir names' raw strings:
+          // an inferred type would rewrite `cell=007` as `cell=7`
+          val inferred = spark.read.parquet(dir).schema
+          val rows = spark.read.schema(org.apache.spark.sql.types.StructType(
+            inferred.map(f => if (f.name == column)
+              f.copy(dataType = org.apache.spark.sql.types.StringType) else f)))
+            .parquet(dir)
+          stagedSwap(spark, dir)(rows.repartition(col(column))
+            .write.mode(SaveMode.Overwrite).partitionBy(column).parquet(_))
+        case FlatDir(dir, _) =>
+          val sized = sizedRead(spark, dir, CompactTargetBytes)
+          stagedSwap(spark, dir)(sized.write.mode(SaveMode.Overwrite).parquet(_))
+      }
+      Some(dataFilesUnder(spark, units.location).size)
+    }
+  }
+
+  /** The swap every in-place compaction shares ([[compactIfNeeded]]): an
     * overwrite of `dir` would delete the very files its job reads, so
     * `write` materializes the compacted copy ONCE into
     * `dir__compact_staging`, then `dir` is deleted and staging renamed
@@ -98,51 +277,19 @@ object Layout {
     * recover by renaming it back; run from the nightly maintenance
     * window, never concurrent with serves.
     */
-  private[graft] def stagedSwap(spark: SparkSession, dir: String,
-                                verb: String)(write: String => Unit): Unit = {
+  private def stagedSwap(spark: SparkSession, dir: String)(
+      write: String => Unit): Unit = {
     val staging = dir.stripSuffix("/") + "__compact_staging"
     write(staging)
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root) && !fs.delete(root, true))
       throw new java.io.IOException(
-        s"$verb: delete of $dir failed; compacted copy left at staging")
+        s"compactIfNeeded: delete of $dir failed; compacted copy left at staging")
     if (!fs.rename(new org.apache.hadoop.fs.Path(staging), root))
       throw new java.io.IOException(
-        s"$verb: rename $staging -> $dir failed; compacted copy left at staging")
+        s"compactIfNeeded: rename $staging -> $dir failed; compacted copy left at staging")
   }
-
-  /** Compact a plain parquet dir IN PLACE — the shared flat-index
-    * maintenance verb ([[graft.operators.Ann.compactSq8Index]] /
-    * [[Ann.compactSignIndex]] wrap it onto their code/sig subdirs;
-    * [[compact]] stays the two-dir form for tables whose callers manage
-    * locations). Same [[sizedRead]] sizing as [[compact]], then the
-    * [[stagedSwap]] (crash window and recovery documented there).
-    * Returns the data file count after compaction.
-    */
-  def compactDir(spark: SparkSession, dir: String,
-                 targetBytes: Long = 128L << 20): Int = {
-    val sized = sizedRead(spark, dir, targetBytes)
-    stagedSwap(spark, dir, "compactDir")(
-      sized.write.mode(SaveMode.Overwrite).parquet(_))
-    dataFileCount(spark, dir)
-  }
-
-  /** The compaction POLICY to [[compactDir]]'s mechanism — the
-    * [[compactBucketedIfNeeded]] rule applied to flat dirs: compact when
-    * more than `maxFiles` data files have accumulated, else do nothing.
-    * Same default threshold of 16, cited to the same IndexServeProbe
-    * drift measurement (a flat serve reads EVERY file of the dir, so the
-    * dir's file count is exactly its per-file cost multiplier). Call
-    * from the nightly append job; deliberately not from inside the
-    * appends (append-cost predictability — the ScaleProbe exponents).
-    */
-  def compactDirIfNeeded(spark: SparkSession, dir: String,
-                         maxFiles: Int = 16,
-                         targetBytes: Long = 128L << 20): Option[Int] =
-    if (dataFileCount(spark, dir) > maxFiles)
-      Some(compactDir(spark, dir, targetBytes))
-    else None
 
   /** Catalog metadata of `tableName`, with its bucket spec required —
     * the shared precondition of every bucketed-table verb here (one
@@ -156,58 +303,6 @@ object Layout {
     (meta, meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
       s"$tableName has no bucket spec — this verb serves bucketed catalog " +
         "tables only (use compact(inDir, outDir) for plain parquet)")))
-  }
-
-  /** Compact a BUCKETED catalog table in place — the maintenance verb
-    * the incremental-publish tiers need
-    * ([[graft.operators.Dedup.appendKeyIndexBucketed]],
-    * [[graft.operators.NearDup.appendBandIndexBucketed]],
-    * [[graft.operators.EditDistanceJoin.appendVariantIndexBucketed]]):
-    * every bucketed append lays down one file SET per append under the
-    * table's bucket spec, so after N daily appends a serve scans N small
-    * files per bucket — the classic small-files regression, invisible at
-    * day 1 and dominant at day 365. This rewrites the table from itself
-    * under the IDENTICAL bucket/sort spec (read from the catalog, so no
-    * caller-supplied spec can drift from the table's), restoring one
-    * file per bucket while changing nothing a query can observe
-    * (content parity spec'd in LayoutSpec; the serve cost at 1 vs ~20
-    * appends, before and after compaction, is priced in
-    * IndexServeProbe).
-    *
-    * Mechanics: the bucketed, sorted files are written ONCE, into the
-    * [[stagedSwap]] staging dir beside the table's location under a
-    * temporary catalog name (a bucketed write goes through the catalog);
-    * the swap moves them into place, then the table's file listing is
-    * refreshed and the temporary entry dropped (an external entry: the
-    * drop deletes no files). Crash window and recovery are
-    * [[stagedSwap]]'s; a crash also leaves the temporary entry, which the
-    * next compaction overwrites. Returns the data file count after
-    * compaction.
-    */
-  def compactBucketed(spark: SparkSession, tableName: String): Int = {
-    val (meta, spec) = bucketedMeta(spark, tableName)
-    val location = meta.location.toString
-    val staged = s"${tableName}__compacting"
-    stagedSwap(spark, location, "compactBucketed") { staging =>
-      // read as plain parquet, not through the catalog: over a bucketed
-      // scan the planner drops the repartition below as already
-      // satisfied, then un-buckets the scan as unneeded, and every split
-      // task writes its own file per bucket
-      val writer = spark.read.schema(meta.schema).parquet(location)
-        .repartition(spec.numBuckets, spec.bucketColumnNames.map(col): _*)
-        .write.mode(SaveMode.Overwrite).format("parquet")
-        .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-          spec.bucketColumnNames.tail: _*)
-      (if (spec.sortColumnNames.nonEmpty)
-         writer.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-       else writer)
-        .option("path", staging).saveAsTable(staged)
-    }
-    spark.catalog.refreshTable(tableName)
-    spark.sessionState.catalog.dropTable(
-      org.apache.spark.sql.catalyst.TableIdentifier(staged),
-      ignoreIfNotExists = true, purge = false)
-    dataFileCount(spark, location)
   }
 
   /** Publish `df` as a BUCKETED catalog table — the one write every
@@ -260,23 +355,26 @@ object Layout {
   private val BucketedFileName = """.*_(\d+)(?:\..*)?$""".r
 
   /** Data-file count of the DEEPEST bucket of a bucketed catalog table —
-    * the compaction-trigger signal. Each bucketed append lays down one
-    * file per NON-EMPTY bucket per batch, so when batches systematically
-    * miss buckets (skewed keys) the deepest bucket's file count exceeds
-    * the table-wide average — and the deepest bucket is exactly where the
-    * small-files serve drift is worst. Parses the bucket id out of each
-    * data file's name ([[BucketedFileName]]) and takes the per-bucket
-    * MAX, so [[compactBucketedIfNeeded]] fires on the bucket that
-    * actually hurts, not on an average that hides skew (LayoutSpec's
+    * the bucketed form of [[filesPerUnit]]. Each bucketed append lays
+    * down one file per NON-EMPTY bucket per batch, so when batches
+    * systematically miss buckets (skewed keys) the deepest bucket's file
+    * count exceeds the table-wide average — and the deepest bucket is
+    * exactly where the small-files serve drift is worst. Parses the
+    * bucket id out of each data file's name ([[BucketedFileName]]) and
+    * takes the per-bucket MAX, so [[compactIfNeeded]] fires on the bucket
+    * that actually hurts, not on an average that hides skew (LayoutSpec's
     * skewed-append case: every batch hitting one bucket fires the policy
     * at the same depth as uniform appends would).
     */
-  def filesPerBucket(spark: SparkSession, tableName: String): Double = {
-    val (meta, _) = bucketedMeta(spark, tableName)
+  def filesPerBucket(spark: SparkSession, tableName: String): Double =
+    bucketDepth(spark, bucketedMeta(spark, tableName)._1.location.toString)
+      .toDouble
+
+  private def bucketDepth(spark: SparkSession, location: String): Int = {
     // data files only: hidden/in-progress files (they'd group into the
     // stray -1 bucket) could spuriously fire nightly compaction on files
     // that cost no serve anything
-    val perBucket = dataFiles(spark, meta.location.toString).toSeq
+    val perBucket = dataFiles(spark, location).toSeq
       .groupBy(_.getPath.getName match {
         // toLongOption, not toInt: the regex accepts ANY trailing digit
         // group, so a stray file whose name ends in a huge digit run
@@ -287,32 +385,8 @@ object Layout {
         case _                    => -1L // non-bucketed stray; still counted
       })
       .values.map(_.size)
-    if (perBucket.isEmpty) 0.0 else perBucket.max.toDouble
+    if (perBucket.isEmpty) 0 else perBucket.max
   }
-
-  /** The compaction POLICY to [[compactBucketed]]'s mechanism: compact
-    * when the table has accumulated more than `maxFilesPerBucket` data
-    * files per bucket, else do nothing. Returns Some(fileCountAfter) if
-    * compaction ran, None if the table was under the threshold.
-    *
-    * The default threshold of 16 is cited to measurement, not taste:
-    * IndexServeProbe prices the serve drift at ~20 appends as the point
-    * where the small-files overhead becomes visible next to the serve's
-    * own work (README "index lifecycle" ledger — serve at 20 appends
-    * reads ~20× the file count for the same bytes), while a nightly
-    * append cadence means 16 files ≈ two weeks of batches — compaction
-    * then costs one rewrite of the table against ~14 days of
-    * accumulated scan overhead. Call this from the same nightly job
-    * that runs the append verbs; it is deliberately NOT called inside
-    * the appends themselves, because an append that sometimes costs
-    * a table-sized write would make the measured flat append exponents
-    * (ScaleProbe) unpredictable for the scheduler.
-    */
-  def compactBucketedIfNeeded(spark: SparkSession, tableName: String,
-                              maxFilesPerBucket: Int = 16): Option[Int] =
-    if (filesPerBucket(spark, tableName) > maxFilesPerBucket)
-      Some(compactBucketed(spark, tableName))
-    else None
 
   /** Write `df` range-clustered on `cols`: repartitionByRange gives each
     * output file a disjoint key range (sampled range boundaries — one

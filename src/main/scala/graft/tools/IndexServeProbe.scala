@@ -37,6 +37,20 @@ object IndexServeProbe {
       (1 to runs).map { _ =>
         time(df.write.mode("overwrite").format("noop").save())._1
       }.min
+    // one nightly compaction call per table of a multi-table tier: each
+    // must fire, and each must no-op right after; returns the seconds
+    // and the file counts after, as "(a, b, ...)"
+    def policyPerTable(tier: String, prefix: String,
+                       tables: Seq[String]): (Double, String) = {
+      val (sec, fired) = time(tables.map(t =>
+        graft.sources.Layout.compactIfNeeded(spark, s"${prefix}_$t")))
+      val files = fired.zip(tables).map { case (f, t) =>
+        f.getOrElse(sys.error(s"$tier policy must fire: $t")) }
+      require(tables.forall(t =>
+        graft.sources.Layout.compactIfNeeded(spark, s"${prefix}_$t").isEmpty),
+        s"$tier policy must no-op right after compaction")
+      (sec, files.mkString("(", ", ", ")"))
+    }
 
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
@@ -191,7 +205,7 @@ object IndexServeProbe {
     // 7. COMPACTION (round 13): every bucketed append lays down one file
     // set per bucket, so day-N serving scans N file sets — this prices
     // the small-files drift (serve at 0 vs 20 appends) and what
-    // compactIndexBucketed buys back (serve after the in-place rewrite,
+    // compaction buys back (serve after the in-place rewrite,
     // one file per bucket again). Appends use suffixed/shifted keys so
     // each is genuinely novel per the append contract.
     locally {
@@ -212,17 +226,17 @@ object IndexServeProbe {
       val s20 = srvFp
       // round 14: compaction driven through the POLICY, not the bare
       // verb — 20 appends sit past the 16-files/bucket default
-      // threshold, so compactBucketedIfNeeded must fire here, and must
+      // threshold, so compactIfNeeded must fire here, and must
       // no-op immediately after (one file per bucket again). This is
       // the probe row that shows the trigger firing at the measured
       // drift point.
       val depth = graft.sources.Layout.filesPerBucket(spark, "idxprobe_fp_cmp")
       val (cSec, fired) = time(
-        graft.sources.Layout.compactBucketedIfNeeded(spark, "idxprobe_fp_cmp"))
+        graft.sources.Layout.compactIfNeeded(spark, "idxprobe_fp_cmp"))
       val files = fired.getOrElse(
         sys.error(s"policy must fire at 20 appends (depth $depth)"))
       require(graft.sources.Layout
-        .compactBucketedIfNeeded(spark, "idxprobe_fp_cmp").isEmpty,
+        .compactIfNeeded(spark, "idxprobe_fp_cmp").isEmpty,
         "policy must no-op right after compaction")
       val sAfter = srvFp
       println(f"[compact] fp_exact  serve 0app ${s0}%.2f s | 20app ${s20}%.2f s" +
@@ -245,17 +259,12 @@ object IndexServeProbe {
           "doc_id", "text", 3, "idxprobe_lsh_cmp")
       }
       val s20 = srvLsh
-      // through the tier POLICY: 20 appends must trip both tables
-      val (cSec, (pfO, sfO)) = time(
-        NearDup.compactBandIndexBucketedIfNeeded(spark, "idxprobe_lsh_cmp"))
-      val pf = pfO.getOrElse(sys.error("lsh policy must fire: postings"))
-      val sf_ = sfO.getOrElse(sys.error("lsh policy must fire: sets"))
-      require(NearDup.compactBandIndexBucketedIfNeeded(spark,
-        "idxprobe_lsh_cmp") == ((None, None)),
-        "lsh policy must no-op right after compaction")
+      // through the POLICY, one call per table: 20 appends must trip both
+      val (cSec, files) = policyPerTable("lsh", "idxprobe_lsh_cmp",
+        Seq("postings", "sets"))
       val sAfter = srvLsh
       println(f"[compact] lsh_bands serve 0app ${s0}%.2f s | 20app ${s20}%.2f s" +
-        f" | compact ${cSec}%.2f s -> ($pf, ${sf_}) files | after ${sAfter}%.2f s" +
+        f" | compact ${cSec}%.2f s -> $files files | after ${sAfter}%.2f s" +
         " | immediate re-check: no-op")
     }
     locally {
@@ -278,26 +287,19 @@ object IndexServeProbe {
           "c_custkey", "c_name", "idxprobe_var_cmp")
       }
       val s20 = srvVar
-      // through the tier POLICY: 20 appends must trip all three tables
-      val (cSec, (pfO, kfO, mfO)) = time(
-        EditDistanceJoin.compactVariantIndexBucketedIfNeeded(
-          spark, "idxprobe_var_cmp"))
-      val pf = pfO.getOrElse(sys.error("variant policy must fire: postings"))
-      val kf = kfO.getOrElse(sys.error("variant policy must fire: keys"))
-      val mf = mfO.getOrElse(sys.error("variant policy must fire: members"))
-      require(EditDistanceJoin.compactVariantIndexBucketedIfNeeded(spark,
-        "idxprobe_var_cmp") == ((None, None, None)),
-        "variant policy must no-op right after compaction")
+      // through the POLICY, one call per table: 20 appends must trip all three
+      val (cSec, files) = policyPerTable("variant", "idxprobe_var_cmp",
+        Seq("postings", "keys", "members"))
       val sAfter = srvVar
       println(f"[compact] variant   serve 0app ${s0}%.2f s | 20app ${s20}%.2f s" +
-        f" | compact ${cSec}%.2f s -> ($pf, $kf, $mf) files | after ${sAfter}%.2f s" +
+        f" | compact ${cSec}%.2f s -> $files files | after ${sAfter}%.2f s" +
         " | immediate re-check: no-op")
     }
     // round 15: the CELL-PARTITIONED PQ tier's compaction, through its
     // policy — per-cell file depth is the probe-bounded serve's per-file
     // cost multiplier (a serve reads nProbe cells' files), so this row
-    // prices the same 0-vs-20-append drift and what compactPqIndexByCell
-    // buys back, completing the verb-symmetry table.
+    // prices the same 0-vs-20-append drift and what compaction buys
+    // back, completing the verb-symmetry table.
     locally {
       val dir = s"$scratch/pq_cell_cmp"
       Ann.writePqIndexByCell(emb, "vec_id", "embedding", PqFixture.model,
@@ -313,15 +315,15 @@ object IndexServeProbe {
           "vec_id", "embedding", PqFixture.model, dir, IvfFixture.model)
       }
       val s20 = srvPq
-      val depth = Ann.pqFilesPerCell(spark, dir)
-      val (cSec, fired) = time(Ann.compactPqIndexByCellIfNeeded(spark, dir))
+      val depth = graft.sources.Layout.filesPerUnit(spark, dir)
+      val (cSec, fired) = time(graft.sources.Layout.compactIfNeeded(spark, dir))
       val files = fired.getOrElse(
         sys.error(s"pq-cell policy must fire at 20 appends (depth $depth)"))
-      require(Ann.compactPqIndexByCellIfNeeded(spark, dir).isEmpty,
+      require(graft.sources.Layout.compactIfNeeded(spark, dir).isEmpty,
         "pq-cell policy must no-op right after compaction")
       val sAfter = srvPq
       println(f"[compact] pq_cell   serve 0app ${s0}%.2f s | 20app ${s20}%.2f s" +
-        f" | policy fired at ${depth}%.1f files/cell (>16): " +
+        f" | policy fired at $depth%d files/cell (>16): " +
         f"compact ${cSec}%.2f s -> $files files | after ${sAfter}%.2f s" +
         " | immediate re-check: no-op")
     }

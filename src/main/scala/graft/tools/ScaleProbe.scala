@@ -214,6 +214,36 @@ object ScaleProbe {
       val n = f
       ((System.nanoTime() - t0) / 1e9, n)
     }
+    val factors = Seq(1, 4, 10)
+
+    /** The factor sweep every timed section shares: at each factor,
+      * materialize `mk(r)`, let `run` time one warm-up and one measured
+      * pass over it (returning warm-up s, measured s and, where the body
+      * counts, its rows), print the factor's line, and finally the 4x and
+      * 10x time ratios against 1x.
+      */
+    def sweep(name: String, mk: Int => DataFrame)
+             (run: (DataFrame, Int) => (Double, Double, Option[Long]))
+        : (String, Double, Double) = {
+      val times = factors.map { r =>
+        val d = mk(r).localCheckpoint(true) // materialize the input
+        val (warm, t, rows) = run(d, r)
+        d.unpersist()
+        println(f"[scale] $name%-22s ${r}%2dx  $t%7.2f s (warm-up $warm%6.2f)" +
+          rows.fold("")(n => s"  rows=$n"))
+        t
+      }
+      val r4 = times(1) / times(0)
+      val r10 = times(2) / times(0)
+      println(f"[scale] $name%-22s ratios: 4x -> ${r4}%5.2f, 10x -> ${r10}%5.2f")
+      (name, r4, r10)
+    }
+    /** A warm-up (JIT/codegen) pass, then the measured one. */
+    def warmThenTime(f: => Long): (Double, Double, Option[Long]) = {
+      val (warm, _) = time(f)
+      val (t, n) = time(f)
+      (warm, t, Some(n))
+    }
 
     val probes: Seq[(String, DataFrame => Long)] = Seq(
       "exact_dedup" -> (d => Dedup.exact(d, Seq("text")).count()),
@@ -360,23 +390,14 @@ object ScaleProbe {
     val only = args.toSet
     def keep(ps: Seq[(String, DataFrame => Long)]): Seq[(String, DataFrame => Long)] =
       if (only.isEmpty) ps else ps.filter(p => only(p._1))
-
-    val factors = Seq(1, 4, 10)
-    println(f"[scale] base corpus: $nBase rows ($sfDir)")
-    val results = keep(probes).map { case (name, f) =>
-      val times = factors.map { r =>
-        val d = replicate(r).localCheckpoint(true) // materialize the input
-        val (warm, _) = time(f(d))                 // warm the JIT/codegen path
-        val (t, n) = time(f(d))
-        d.unpersist()
-        println(f"[scale] $name%-22s ${r}%2dx  $t%7.2f s (warm-up $warm%6.2f)  rows=$n")
-        t
+    /** One section of counting probes, each swept over `mk`'s replicas. */
+    def sweepAll(ps: Seq[(String, DataFrame => Long)], mk: Int => DataFrame) =
+      keep(ps).map { case (name, f) =>
+        sweep(name, mk)((d, _) => warmThenTime(f(d)))
       }
-      val r4 = times(1) / times(0)
-      val r10 = times(2) / times(0)
-      println(f"[scale] $name%-22s ratios: 4x -> ${r4}%5.2f, 10x -> ${r10}%5.2f")
-      (name, r4, r10)
-    }
+
+    println(f"[scale] base corpus: $nBase rows ($sfDir)")
+    val results = sweepAll(probes, replicate)
     // ---- embedding family: replicate the embeddings table the same way.
     // Copies keep their vector VERBATIM, so every copy of a vector is an
     // exact duplicate (cos = 1) of its siblings — the bucket-join worst
@@ -424,20 +445,7 @@ object ScaleProbe {
           col("vec_id") % 20 === 0 && col("vec_id") < 10000000L, 5,
           Some(IvfFixture.model)).count())
     )
-    val embResults = keep(embProbes).map { case (name, f) =>
-      val times = factors.map { r =>
-        val d = replicateEmb(r).localCheckpoint(true)
-        val (warm, _) = time(f(d))
-        val (t, n) = time(f(d))
-        d.unpersist()
-        println(f"[scale] $name%-22s ${r}%2dx  $t%7.2f s (warm-up $warm%6.2f)  rows=$n")
-        t
-      }
-      val r4 = times(1) / times(0)
-      val r10 = times(2) / times(0)
-      println(f"[scale] $name%-22s ratios: 4x -> ${r4}%5.2f, 10x -> ${r10}%5.2f")
-      (name, r4, r10)
-    }
+    val embResults = sweepAll(embProbes, replicateEmb)
     // ---- event family: replicate events with per-copy user_id offsets —
     // users grow Rx with the SAME per-user event profile, so the
     // user-keyed operators (funnel's chained min-aggregates, retention's
@@ -457,20 +465,7 @@ object ScaleProbe {
       "retention" -> (d =>
         EventOps.retention(d, "user_id", "ts", 8).count())
     )
-    val evResults = keep(evProbes).map { case (name, f) =>
-      val times = factors.map { r =>
-        val d = replicateEv(r).localCheckpoint(true)
-        val (warm, _) = time(f(d))
-        val (t, n) = time(f(d))
-        d.unpersist()
-        println(f"[scale] $name%-22s ${r}%2dx  $t%7.2f s (warm-up $warm%6.2f)  rows=$n")
-        t
-      }
-      val r4 = times(1) / times(0)
-      val r10 = times(2) / times(0)
-      println(f"[scale] $name%-22s ratios: 4x -> ${r4}%5.2f, 10x -> ${r10}%5.2f")
-      (name, r4, r10)
-    }
+    val evResults = sweepAll(evProbes, replicateEv)
     // ---- graph family: PageRank / personalized PageRank / connected
     // components over the winnowing shared-fingerprint graph. Copies are
     // salted (not near-dups of each other), so the replicated graph is R
@@ -501,20 +496,7 @@ object ScaleProbe {
           pairs.select(col("id_a").as("src"), col("id_b").as("dst"))).count()
       })
     )
-    val graphResults = keep(graphProbes).map { case (name, f) =>
-      val times = factors.map { r =>
-        val d = replicate(r).localCheckpoint(true)
-        val (warm, _) = time(f(d))
-        val (t, n) = time(f(d))
-        d.unpersist()
-        println(f"[scale] $name%-22s ${r}%2dx  $t%7.2f s (warm-up $warm%6.2f)  rows=$n")
-        t
-      }
-      val r4 = times(1) / times(0)
-      val r10 = times(2) / times(0)
-      println(f"[scale] $name%-22s ratios: 4x -> ${r4}%5.2f, 10x -> ${r10}%5.2f")
-      (name, r4, r10)
-    }
+    val graphResults = sweepAll(graphProbes, replicate)
     // ---- standing-index SERVE tier (round-10 additions): the index
     // PUBLISH is untimed (the nightly build that write-once/serve-many
     // amortizes away); the timed body is one serve pass against the
@@ -544,23 +526,13 @@ object ScaleProbe {
     }
     def idxProbe(name: String, mk: Int => DataFrame)
                 (publish: (DataFrame, String, String) => Unit)
-                (serve: (DataFrame, String, String) => Long): (String, Double, Double) = {
-      val times = factors.map { r =>
-        val d = mk(r).localCheckpoint(true)
+                (serve: (DataFrame, String, String) => Long): (String, Double, Double) =
+      sweep(name, mk) { (d, r) =>
         val dir = s"$idxScratch/${name}_$r"
         val tbl = s"scaleidx_${name}_$r"
         publish(d, dir, tbl)
-        val (warm, _) = time(serve(d, dir, tbl))
-        val (t, n) = time(serve(d, dir, tbl))
-        d.unpersist()
-        println(f"[scale] $name%-22s ${r}%2dx  $t%7.2f s (warm-up $warm%6.2f)  rows=$n")
-        t
+        warmThenTime(serve(d, dir, tbl))
       }
-      val r4 = times(1) / times(0)
-      val r10 = times(2) / times(0)
-      println(f"[scale] $name%-22s ratios: 4x -> ${r4}%5.2f, 10x -> ${r10}%5.2f")
-      (name, r4, r10)
-    }
     val idxProbes: Seq[(String, () => (String, Double, Double))] = Seq(
       // standing LSH band index grows Rx; today's batch stays the base
       // copy's src0 slice — serve joins the batch's bands against the
@@ -722,23 +694,15 @@ object ScaleProbe {
     // exponent prices whether the plan pays a scan or a shuffle for it.
     def appendProbe(name: String, mk: Int => DataFrame)
                    (publish: (DataFrame, String, String) => Unit)
-                   (append: (String, String, Int) => Unit): (String, Double, Double) = {
-      val times = factors.map { r =>
-        val d = mk(r).localCheckpoint(true)
+                   (append: (String, String, Int) => Unit): (String, Double, Double) =
+      sweep(name, mk) { (d, r) =>
         val dir = s"$idxScratch/app_${name}_$r"
         val tbl = s"scaleapp_${name}_$r"
         publish(d, dir, tbl)
         val (warm, _) = time { append(dir, tbl, 1); 0L }
         val (t, _) = time { append(dir, tbl, 2); 0L }
-        d.unpersist()
-        println(f"[scale] $name%-22s ${r}%2dx  $t%7.2f s (warm-up $warm%6.2f)")
-        t
+        (warm, t, None)
       }
-      val r4 = times(1) / times(0)
-      val r10 = times(2) / times(0)
-      println(f"[scale] $name%-22s ratios: 4x -> ${r4}%5.2f, 10x -> ${r10}%5.2f")
-      (name, r4, r10)
-    }
     val appendProbes: Seq[(String, () => (String, Double, Double))] = Seq(
       // exact tier: batch = salted-text slice (all keys novel); the verb
       // distincts and bucket-appends the BATCH only
@@ -933,7 +897,7 @@ object ScaleProbe {
             rows(2)._1 / rows(0)._1))
     }
     // PQ cell tier: scan suffix is the dir itself (codes at the root);
-    // compact via the bare mechanism (returns the file count).
+    // compaction forced (threshold 0; returns the file count).
     val lifeResults = if (only.isEmpty || only("pq_cell_lifecycle")) {
       cellLifecycle(CellTier("pq_cell_lifecycle", "pq_cell", 650000000L,
         dir => new java.io.File(dir).getName,
@@ -941,7 +905,8 @@ object ScaleProbe {
           PqFixture.model, dir, IvfFixture.model),
         (d, dir) => Ann.appendPqIndexByCell(d, "vec_id", "embedding",
           PqFixture.model, dir, IvfFixture.model),
-        dir => Ann.compactPqIndexByCell(spark, dir),
+        dir => graft.sources.Layout.compactIfNeeded(spark, dir, 0)
+          .getOrElse(-1),
         (dir, np, queryId) =>
           Ann.pqSearchIndexed(embBase, "vec_id", "embedding",
             PqFixture.model, col("vec_id") === queryId, 5, dir,
@@ -964,8 +929,8 @@ object ScaleProbe {
           dir, IvfFixture.model); () },
         (d, dir) => Ann.appendSq8IndexByCell(d, "vec_id", "embedding",
           dir, IvfFixture.model),
-        dir => Ann.compactSq8IndexByCellIfNeeded(spark, dir,
-          maxFilesPerCell = 1).getOrElse(-1),
+        dir => graft.sources.Layout.compactIfNeeded(spark, s"$dir/codes", 1)
+          .getOrElse(-1),
         (dir, np, queryId) =>
           Ann.sq8SearchByCell(embBase, "vec_id", "embedding",
             col("vec_id") === queryId, 5, dir, IvfFixture.model,
@@ -988,20 +953,17 @@ object ScaleProbe {
       final case class FlatTier(name: String, sub: String,
         publish: (DataFrame, String) => Unit,
         append: (DataFrame, String) => Unit,
-        compactIfNeeded: String => Option[Int],
         serve: String => DataFrame)
       val tiers = Seq(
         FlatTier("sq8_lifecycle", "codes",
           (d, dir) => { Ann.writeSq8Index(d, "vec_id", "embedding", dir); () },
           (d, dir) => Ann.appendSq8Index(d, "vec_id", "embedding", dir),
-          dir => Ann.compactSq8IndexIfNeeded(spark, dir, maxFiles = 1),
           dir => Ann.sq8SearchIndexed(embBase, "vec_id", "embedding",
             col("vec_id") === queryId, 5, dir, 20)),
         FlatTier("sign_lifecycle", "sigs",
           (d, dir) => { Ann.writeSignIndex(d, "vec_id", "embedding", dir,
             candidates = 50); () },
           (d, dir) => Ann.appendSignIndex(d, "vec_id", "embedding", dir),
-          dir => Ann.compactSignIndexIfNeeded(spark, dir, maxFiles = 1),
           dir => Ann.hammingSearchIndexed(embBase, "vec_id", "embedding",
             col("vec_id") === queryId, 5, dir, candidates = 50,
             maxDriftFactor = 1000.0)))
@@ -1012,8 +974,9 @@ object ScaleProbe {
           val dir = s"$idxScratch/flat_${tier.name}_$r"
           tier.publish(embBase, dir)
           tier.append(saltedBatch(r, 850000000L), dir)
-          val nFiles = tier.compactIfNeeded(dir).getOrElse(
-            graft.sources.Layout.dataFileCount(spark, s"$dir/${tier.sub}"))
+          val codes = s"$dir/${tier.sub}"
+          val nFiles = graft.sources.Layout.compactIfNeeded(spark, codes, 1)
+            .getOrElse(graft.sources.Layout.dataFileCount(spark, codes))
           def serveOnce(): (Double, Long, Double) = {
             val df = tier.serve(dir)
             // collect, not count: count() runs a separate execution and
@@ -1109,20 +1072,8 @@ object ScaleProbe {
           element_at(vcol, (col("id") / 7 % 40 + 1).cast("int")),
           element_at(vcol, (col("id") / 191 % 40 + 1).cast("int")),
           (col("id") % 13).cast("string")).as("name"))
-      val times = factors.map { r =>
-        val d = diverseNames(2000L * r).localCheckpoint(true)
-        val (warm, _) = time(
-          Linker.similarityPairsBlocked(d, "name", 80.0).count())
-        val (t, n) = time(
-          Linker.similarityPairsBlocked(d, "name", 80.0).count())
-        d.unpersist()
-        println(f"[scale] ro_blocked             ${r}%2dx  $t%7.2f s (warm-up $warm%6.2f)  rows=$n")
-        t
-      }
-      val r4 = times(1) / times(0)
-      val r10 = times(2) / times(0)
-      println(f"[scale] ro_blocked             ratios: 4x -> ${r4}%5.2f, 10x -> ${r10}%5.2f")
-      Seq(("ro_blocked", r4, r10))
+      Seq(sweep("ro_blocked", r => diverseNames(2000L * r))((d, _) =>
+        warmThenTime(Linker.similarityPairsBlocked(d, "name", 80.0).count())))
     } else Seq.empty
     println("[scale] summary (time ratio vs data ratio; linear ops should sit at or below the data ratio once fixed overhead amortizes)")
     (results ++ embResults ++ evResults ++ graphResults ++ idxResults ++

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Ann
+import graft.sources.Layout
 import org.apache.spark.sql.functions._
 
 class AnnSpec extends SparkSpec {
@@ -924,8 +925,8 @@ class AnnSpec extends SparkSpec {
       .orderBy("query_id", "rank").collect().toSeq
     // compaction: the policy fires at depth 2 (publish + append files
     // in the appended cells) and the serve is unchanged
-    assert(Ann.compactSq8IndexByCellIfNeeded(spark, s"$dir/grown",
-      maxFilesPerCell = 1).nonEmpty)
+    assert(Layout.compactIfNeeded(spark, s"$dir/grown/codes",
+      1).nonEmpty)
     val afterCompact = Ann.sq8SearchByCell(emb, "vec_id", "embedding",
         pred, 5, s"$dir/grown", IvfFixture.model, nProbe = 8)
       .orderBy("query_id", "rank").collect().toSeq
@@ -1220,12 +1221,12 @@ class AnnSpec extends SparkSpec {
       "embedding", s"$dir/sq8")
     val sq8Before = Ann.sq8SearchIndexed(emb, "vec_id", "embedding", pred,
       5, s"$dir/sq8", 20).orderBy("query_id", "rank").collect().toSeq
-    val sq8Files = graft.sources.Layout.dataFileCount(spark, s"$dir/sq8/codes")
+    val sq8Files = Layout.dataFileCount(spark, s"$dir/sq8/codes")
     assert(sq8Files >= 2)
     // under threshold: no-op; past it: in-place rewrite, serve unchanged
-    assert(Ann.compactSq8IndexIfNeeded(spark, s"$dir/sq8",
-      maxFiles = 1000).isEmpty)
-    val n8 = Ann.compactSq8IndexIfNeeded(spark, s"$dir/sq8", maxFiles = 1)
+    assert(Layout.compactIfNeeded(spark, s"$dir/sq8/codes",
+      1000).isEmpty)
+    val n8 = Layout.compactIfNeeded(spark, s"$dir/sq8/codes", 1)
     assert(n8.nonEmpty && n8.get < sq8Files)
     val sq8After = Ann.sq8SearchIndexed(emb, "vec_id", "embedding", pred,
       5, s"$dir/sq8", 20).orderBy("query_id", "rank").collect().toSeq
@@ -1238,7 +1239,7 @@ class AnnSpec extends SparkSpec {
       "embedding", s"$dir/sign")
     val signBefore = Ann.hammingSearchIndexed(emb, "vec_id", "embedding",
       pred, 5, s"$dir/sign").orderBy("query_id", "rank").collect().toSeq
-    val nS = Ann.compactSignIndexIfNeeded(spark, s"$dir/sign", maxFiles = 1)
+    val nS = Layout.compactIfNeeded(spark, s"$dir/sign/sigs", 1)
     assert(nS.nonEmpty)
     assert(Ann.signIndexMeta(spark, s"$dir/sign") == meta)
     val signAfter = Ann.hammingSearchIndexed(emb, "vec_id", "embedding",
@@ -1622,10 +1623,10 @@ class AnnSpec extends SparkSpec {
   // The cell tier's compaction verb + policy, completing the per-tier
   // verb symmetry (publish/serve/append/compact — round-14 verdict #6):
   // appends deepen only the touched cells, the policy fires on the
-  // DEEPEST cell ([[Ann.pqFilesPerCell]] — same skew-honesty rule as
+  // DEEPEST cell (Layout.filesPerUnit — same skew-honesty rule as
   // Layout.filesPerBucket), and a firing restores one file per cell
   // while changing nothing a serve can observe, pruning included.
-  test("compactPqIndexByCell: policy fires on the deepest cell, serve and pruning survive") {
+  test("cell compaction: policy fires on the deepest cell, serve and pruning survive") {
     import graft.operators.{Ann, IvfFixture, PqFixture}
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Long)].collect().toSet
@@ -1637,22 +1638,20 @@ class AnnSpec extends SparkSpec {
       Ann.appendPqIndexByCell(emb.filter(col("vec_id") % 4 === r),
         "vec_id", "embedding", PqFixture.model, dir, IvfFixture.model)
     }
-    val depth = Ann.pqFilesPerCell(spark, dir)
+    val depth = Layout.filesPerUnit(spark, dir)
     assert(depth > 1 && depth <= 4, s"filesPerCell=$depth")
     val serveBefore = rows(Ann.pqSearchIndexed(emb, "vec_id", "embedding",
       PqFixture.model, pred, 5, dir, Some(IvfFixture.model), nProbe = 8))
     // under threshold: no-op, files untouched
     val filesBefore = pqDataFiles(dir).map(_.getPath).toSet
-    assert(Ann.compactPqIndexByCellIfNeeded(spark, dir,
-      maxFilesPerCell = 8).isEmpty)
+    assert(Layout.compactIfNeeded(spark, dir, 8).isEmpty)
     assert(pqDataFiles(dir).map(_.getPath).toSet == filesBefore)
     // over threshold: fires, one file per NON-EMPTY cell, serve
     // identical and still statically pruned (the layout survives)
     val nCells = pqDataFiles(dir).map(_.getParentFile.getName).toSet.size
-    val afterOpt = Ann.compactPqIndexByCellIfNeeded(spark, dir,
-      maxFilesPerCell = 1)
+    val afterOpt = Layout.compactIfNeeded(spark, dir, 1)
     assert(afterOpt.contains(nCells), s"$afterOpt vs $nCells cells")
-    assert(Ann.pqFilesPerCell(spark, dir) == 1.0)
+    assert(Layout.filesPerUnit(spark, dir) == 1)
     val served = Ann.pqSearchIndexed(emb, "vec_id", "embedding",
       PqFixture.model, col("vec_id") === 0, 5, dir,
       Some(IvfFixture.model), nProbe = 8)
@@ -1665,18 +1664,24 @@ class AnnSpec extends SparkSpec {
       PqFixture.model, pred, 5, dir, Some(IvfFixture.model),
       nProbe = 8)) == serveBefore)
     // idempotent: the nightly call right after sees 1 file/cell, no-ops
-    assert(Ann.compactPqIndexByCellIfNeeded(spark, dir,
-      maxFilesPerCell = 1).isEmpty)
-    // a FLAT index mis-pointed at the cell policy must fail at the FIRST
-    // nightly call with the routing answer — not fire data-dependently
-    // once total files cross the threshold and then crash in the verb
+    assert(Layout.compactIfNeeded(spark, dir, 1).isEmpty)
+    // a FLAT index is a flat target: its unit is the whole dir
     val flat = s"$dir0/flat"
     Ann.writePqIndex(emb, "vec_id", "embedding", PqFixture.model, flat,
       Some(IvfFixture.model))
+    assert(Layout.filesPerUnit(spark, flat) == Layout.dataFileCount(spark, flat))
+    // a flat index's files written into the cell index's root mix the two
+    // layouts: the policy must fail at the FIRST nightly call, naming the
+    // dir — not fire data-dependently once total files cross the
+    // threshold and then rewrite the mix under one layout's rule
+    new java.io.File(flat).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath,
+        java.nio.file.Paths.get(dir, f.getName)))
     val e = intercept[IllegalArgumentException] {
-      Ann.compactPqIndexByCellIfNeeded(spark, flat)
+      Layout.compactIfNeeded(spark, dir)
     }
     assert(e.getMessage.contains("Layout.compact"), e.getMessage)
+    assert(e.getMessage.contains(dir), e.getMessage)
   }
 
   // The round-15 dispatch-cost contract, pinned at the job level: with a

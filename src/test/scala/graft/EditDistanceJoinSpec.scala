@@ -290,6 +290,71 @@ class EditDistanceJoinSpec extends SparkSpec {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${tbl}_$t"))
   }
 
+  // The published max_dist is a sidecar the publish rewrites: a republish
+  // at a smaller maxDist over the same dir and tables must bind every
+  // later serve to the NEW bound, not the one the dir was first built at.
+  test("variant index republished at a smaller maxDist refuses a serve at the old one") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("left_id", "right_id", "dist")
+        .as[(Long, Long, Int)].collect().toSet
+    val c = Tables.customer(spark, sf0001)
+    val dict = c.select($"c_custkey", $"c_name")
+    val batch = c.filter($"c_custkey" % 10 === 0)
+      .select($"c_custkey".as("did"), $"c_name".as("dname"))
+    val dir = java.nio.file.Files.createTempDirectory("varidx_repub").toString
+    val tbl = "graft_spec_varidx_repub"
+    try {
+      EditDistanceJoin.writeVariantIndexBucketed(dict, "c_custkey", "c_name",
+        2, dir, tbl)
+      assert(rows(EditDistanceJoin.pairsAgainstIndexBucketed(
+        batch, "did", "dname", 2, tbl)).nonEmpty)
+      EditDistanceJoin.writeVariantIndexBucketed(dict, "c_custkey", "c_name",
+        1, dir, tbl)
+      assert(graft.operators.StandingIndex.listDataFiles(spark, s"$dir/meta")
+        .size == 1)
+      val e = intercept[IllegalArgumentException] {
+        EditDistanceJoin.pairsAgainstIndexBucketed(batch, "did", "dname", 2, tbl)
+      }
+      assert(e.getMessage.contains("<=1-deletion postings") &&
+        e.getMessage.contains("maxDist=2"), e.getMessage)
+      intercept[IllegalArgumentException] {
+        EditDistanceJoin.repsAgainstIndexBucketed(batch, "did", "dname", 2, tbl)
+      }
+      // at the republished bound it serves exactly
+      assert(rows(EditDistanceJoin.pairsAgainstIndexBucketed(
+          batch, "did", "dname", 1, tbl)) ==
+        rows(EditDistanceJoin.pairsAgainst(
+          batch, "did", "dname", dict, "c_custkey", "c_name", 1)))
+    } finally Seq("postings", "keys", "members")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${tbl}_$t"))
+  }
+
+  // A relative publish dir resolves under the warehouse dir for the
+  // catalog tables; the max_dist sidecar must land beside them, where
+  // the serve looks for it, not under the working dir.
+  test("variant index published under a relative dir serves: the sidecar sits beside its tables") {
+    val c = Tables.customer(spark, sf0001)
+    val dict = c.select($"c_custkey", $"c_name")
+    val batch = c.filter($"c_custkey" % 10 === 0)
+      .select($"c_custkey".as("did"), $"c_name".as("dname"))
+    val rel = s"graft_spec_relvar_${System.nanoTime()}"
+    val tbl = "graft_spec_varidx_rel"
+    try {
+      EditDistanceJoin.writeVariantIndexBucketed(dict, "c_custkey", "c_name",
+        1, rel, tbl)
+      assert(!new java.io.File(rel).exists(), s"$rel written under the working dir")
+      assert(EditDistanceJoin.pairsAgainstIndexBucketed(
+        batch, "did", "dname", 1, tbl).count() > 0)
+    } finally if (spark.catalog.tableExists(s"${tbl}_postings")) {
+      val root = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
+          s"${tbl}_postings")).location).getParent
+      Seq("postings", "keys", "members")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${tbl}_$t"))
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
+    }
+  }
+
   test("bucketed variant index: append equals monolithic rebuild, no index-side shuffle") {
     import org.apache.spark.sql.functions.{col, lit}
     def rows(df: org.apache.spark.sql.DataFrame) =

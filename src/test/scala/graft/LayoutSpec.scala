@@ -31,7 +31,7 @@ class LayoutSpec extends SparkSpec {
     assert(spark.read.parquet(compacted).count() == c.count())
   }
 
-  test("compactDir rewrites a flat dir in place: content parity, staging gone, policy thresholds") {
+  test("compactIfNeeded on a flat dir: content parity, staging gone, thresholds") {
     val dir = tmpDir("flat")
     val c = Tables.customer(spark, sf0001)
     c.repartition(8).write.mode("overwrite").parquet(dir)
@@ -40,10 +40,10 @@ class LayoutSpec extends SparkSpec {
     val before = spark.read.parquet(dir).orderBy("c_custkey").collect().toSeq
     assert(Layout.dataFileCount(spark, dir) >= 9)
     // under threshold: the policy must not touch the dir
-    assert(Layout.compactDirIfNeeded(spark, dir, maxFiles = 100).isEmpty)
+    assert(Layout.compactIfNeeded(spark, dir, 100).isEmpty)
     assert(Layout.dataFileCount(spark, dir) >= 9)
     // past threshold: one in-place rewrite to the byte-targeted count
-    val n = Layout.compactDirIfNeeded(spark, dir, maxFiles = 4)
+    val n = Layout.compactIfNeeded(spark, dir, 4)
     assert(n.nonEmpty && n.get == Layout.dataFileCount(spark, dir))
     assert(n.get < 9)
     // content parity and no staging leftovers
@@ -53,7 +53,71 @@ class LayoutSpec extends SparkSpec {
       .exists())
   }
 
-  test("compactBucketed rewrites an appended bucketed table in place: same serve, one file per bucket") {
+  // compactIfNeeded reads the layout off its target: a catalog table is
+  // bucketed (unit: the bucket), a dir with every data file one
+  // name=value level down is partitioned (unit: the partition), a dir
+  // with every data file at its root is flat (unit: the dir). Each
+  // layout no-ops at its depth, fires one under it, lands at one file per
+  // unit with its rows unchanged, and 0 forces it. Committer leftovers in
+  // a partition dir do not deepen it; a dir mixing root and partition
+  // files, or nesting two levels, is refused with its name.
+  test("compactIfNeeded reads the layout off its target; mixed dirs are refused") {
+    val c = Tables.customer(spark, sf0001)
+      .select("c_custkey", "c_name", "c_nationkey")
+    val root = tmpDir("detect")
+    val flat = s"$root/flat"
+    c.repartition(3).write.parquet(flat)
+    val part = s"$root/part"
+    // zero-padded names: the rewrite must keep them, not re-render an
+    // inferred int
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("cell", format_string("%03d", col("c_custkey") % 3))
+    Seq(0, 1).foreach(i => cells(c.filter(col("c_custkey") % 2 === i))
+      .repartition(col("cell")).write.mode("append").partitionBy("cell")
+      .parquet(part))
+    Seq("_SUCCESS", ".part-00000.parquet.crc", ".part-00009.parquet.tmp")
+      .foreach(n => java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(part, "cell=000", n), "x"))
+    val tbl = "graft_spec_detect_bucketed"
+    Layout.publishBucketed(c.filter(col("c_custkey") % 2 === 0),
+      "c_custkey", tbl, s"$root/b", 4)
+    Layout.appendBucketed(c.filter(col("c_custkey") % 2 === 1),
+      "c_custkey", tbl)
+    def rows(target: String) =
+      (if (target == tbl) spark.table(tbl) else spark.read.parquet(target))
+        .collect().map(_.toString).sorted.toSeq
+    try {
+      Seq(flat -> 3, part -> 2, tbl -> 2).foreach { case (target, depth) =>
+        assert(Layout.filesPerUnit(spark, target) == depth, target)
+        val before = rows(target)
+        assert(Layout.compactIfNeeded(spark, target, depth).isEmpty, target)
+        assert(Layout.filesPerUnit(spark, target) == depth, target)
+        assert(Layout.compactIfNeeded(spark, target, depth - 1).nonEmpty,
+          target)
+        assert(Layout.filesPerUnit(spark, target) == 1, target)
+        assert(Layout.compactIfNeeded(spark, target, 1).isEmpty, target)
+        assert(Layout.compactIfNeeded(spark, target, 0).nonEmpty, target)
+        assert(Layout.filesPerUnit(spark, target) == 1, target)
+        assert(rows(target) == before, target)
+      }
+      // one file per partition, under the same partition dirs
+      assert(new java.io.File(part).list().filter(_.startsWith("cell="))
+        .sorted.toSeq == Seq("cell=000", "cell=001", "cell=002"))
+      val mixed = s"$root/mixed"
+      c.write.parquet(mixed)
+      cells(c).write.mode("append").partitionBy("cell").parquet(mixed)
+      val nested = s"$root/nested"
+      cells(c).write.partitionBy("cell", "c_nationkey").parquet(nested)
+      Seq(mixed, nested).foreach { dir =>
+        val e = intercept[IllegalArgumentException](
+          Layout.compactIfNeeded(spark, dir, 0))
+        assert(e.getMessage.contains(dir), e.getMessage)
+        intercept[IllegalArgumentException](Layout.filesPerUnit(spark, dir))
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
+  test("bucketed compaction in place: same serve, one file per bucket") {
     import graft.operators.{Dedup, TextOps}
     val docs = Tables.documents(spark, sf0001)
     val fp = docs.select(col("doc_id"), col("source"),
@@ -74,7 +138,8 @@ class LayoutSpec extends SparkSpec {
       .as[(String, Long)].collect().toSet
     val filesBefore = parquetFiles(s"$dir/t").size
     assert(filesBefore > 4, s"appends must accumulate files, saw $filesBefore")
-    val filesAfter = Layout.compactBucketed(spark, tbl)
+    val filesAfter = Layout.compactIfNeeded(spark, tbl, 0)
+      .getOrElse(fail("0 forces compaction"))
     // one file per bucket restored, nothing a query can observe changed
     assert(filesAfter == 4, s"filesAfter=$filesAfter")
     assert(parquetFiles(s"$dir/t").size == 4)
@@ -101,7 +166,7 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  test("compactBucketed writes the table's bytes once: one staged bucketed write, then the swap") {
+  test("bucketed compaction writes the table's bytes once: one staged write, then the swap") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val dir = tmpDir("bonce")
     val tbl = "graft_spec_compact_once"
@@ -132,7 +197,8 @@ class LayoutSpec extends SparkSpec {
     val filesAfter = try {
       drain()
       written.set(0L)
-      val n = Layout.compactBucketed(spark, tbl)
+      val n = Layout.compactIfNeeded(spark, tbl, 0)
+        .getOrElse(fail("0 forces compaction"))
       drain()
       n
     } finally spark.sparkContext.removeSparkListener(l)
@@ -147,11 +213,11 @@ class LayoutSpec extends SparkSpec {
   }
 
   // The policy to the mechanism above: fires only past the threshold,
-  // and a firing is exactly one compactBucketed (one file per bucket,
+  // and a firing is exactly one bucketed rewrite (one file per bucket,
   // serve unchanged). Thresholds chosen so the SAME table exercises both
   // branches: 5 appends → 6 file sets → 6.0 files/bucket sits between
-  // maxFilesPerBucket=8 (no-op) and =4 (fires).
-  test("compactBucketedIfNeeded fires past the files-per-bucket threshold, no-ops under it") {
+  // maxFilesPerUnit=8 (no-op) and =4 (fires).
+  test("compactIfNeeded fires past the files-per-bucket threshold, no-ops under it") {
     import graft.operators.{Dedup, TextOps}
     val docs = Tables.documents(spark, sf0001)
     val fp = docs.select(col("doc_id"), col("source"),
@@ -173,19 +239,16 @@ class LayoutSpec extends SparkSpec {
       .as[(String, Long)].collect().toSet
     assert(before.nonEmpty)
     // under threshold: no-op, files untouched
-    assert(Layout.compactBucketedIfNeeded(spark, tbl,
-      maxFilesPerBucket = 8).isEmpty)
+    assert(Layout.compactIfNeeded(spark, tbl, 8).isEmpty)
     assert(parquetFiles(s"$dir/t").size == filesBefore)
     // over threshold: fires, one file per bucket, serve unchanged
-    assert(Layout.compactBucketedIfNeeded(spark, tbl,
-      maxFilesPerBucket = 4).contains(4))
+    assert(Layout.compactIfNeeded(spark, tbl, 4).contains(4))
     assert(parquetFiles(s"$dir/t").size == 4)
     val after = Dedup.incrementalAgainstIndex(batch, "fp", tbl)
       .as[(String, Long)].collect().toSet
     assert(after == before)
     // idempotent: a second nightly call sees 1 file/bucket and no-ops
-    assert(Layout.compactBucketedIfNeeded(spark, tbl,
-      maxFilesPerBucket = 4).isEmpty)
+    assert(Layout.compactIfNeeded(spark, tbl, 4).isEmpty)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
@@ -222,8 +285,7 @@ class LayoutSpec extends SparkSpec {
     assert(avg < 4.0, s"table average $avg must sit under the threshold " +
       "for this test to distinguish max from average")
     // fires on the deepest bucket where averaging would have no-op'd
-    assert(Layout.compactBucketedIfNeeded(spark, tbl,
-      maxFilesPerBucket = 4).contains(4))
+    assert(Layout.compactIfNeeded(spark, tbl, 4).contains(4))
     assert(Layout.filesPerBucket(spark, tbl) == 1.0)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
@@ -266,7 +328,7 @@ class LayoutSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
-  test("compactBandIndexBucketed: LSH serve identical across append + compact") {
+  test("LSH tier compaction: serve identical across append + compact") {
     import graft.operators.NearDup
     val docs = Tables.documents(spark, sf0001)
     val corpus = docs.filter($"source" =!= "src0" && $"source" =!= "src1")
@@ -279,19 +341,18 @@ class LayoutSpec extends SparkSpec {
     val before = NearDup.incrementalNearDupPairsBucketed(batch, "doc_id",
         "text", 3, 0.3, tbl)
       .as[(Long, Long, Long, Double)].collect().toSet
-    // tier POLICY: 1 append = 2 file sets/bucket — under a threshold of 8
-    // neither table fires; at 1 both do (and compact to 1 file/bucket)
-    assert(NearDup.compactBandIndexBucketedIfNeeded(spark, tbl,
-      maxFilesPerBucket = 8) == ((None, None)))
-    val (pFilesO, sFilesO) =
-      NearDup.compactBandIndexBucketedIfNeeded(spark, tbl,
-        maxFilesPerBucket = 1)
+    // the POLICY, one call per table: 1 append = 2 file sets/bucket —
+    // under a threshold of 8 neither table fires; at 1 both do (and
+    // compact to 1 file/bucket)
+    def compactBoth(max: Int) = Seq("postings", "sets").map(t =>
+      Layout.compactIfNeeded(spark, s"${tbl}_$t", max))
+    assert(compactBoth(8) == Seq(None, None))
+    val Seq(pFilesO, sFilesO) = compactBoth(1)
     val (pFiles, sFiles) = (pFilesO.getOrElse(fail("postings must fire")),
       sFilesO.getOrElse(fail("sets must fire")))
     assert(pFiles == 8 && sFiles == 8, s"($pFiles, $sFiles)")
     // idempotent: immediately after, 1 file/bucket no-ops even at 1
-    assert(NearDup.compactBandIndexBucketedIfNeeded(spark, tbl,
-      maxFilesPerBucket = 1) == ((None, None)))
+    assert(compactBoth(1) == Seq(None, None))
     val after = NearDup.incrementalNearDupPairsBucketed(batch, "doc_id",
         "text", 3, 0.3, tbl)
       .as[(Long, Long, Long, Double)].collect().toSet
@@ -320,16 +381,15 @@ class LayoutSpec extends SparkSpec {
       .collect().map(_.toString).toSet
     val before = serve
     assert(before.nonEmpty)
-    // 1 append = 2 file sets/bucket: no-op at 8, all three fire at 1
-    assert(EditDistanceJoin.compactVariantIndexBucketedIfNeeded(spark, tbl,
-      maxFilesPerBucket = 8) == ((None, None, None)))
-    val (pO, kO, mO) =
-      EditDistanceJoin.compactVariantIndexBucketedIfNeeded(spark, tbl,
-        maxFilesPerBucket = 1)
+    // one call per table: 1 append = 2 file sets/bucket: no-op at 8,
+    // all three fire at 1
+    def compactAll(max: Int) = Seq("postings", "keys", "members").map(t =>
+      Layout.compactIfNeeded(spark, s"${tbl}_$t", max))
+    assert(compactAll(8) == Seq(None, None, None))
+    val Seq(pO, kO, mO) = compactAll(1)
     assert(pO.nonEmpty && kO.nonEmpty && mO.nonEmpty, (pO, kO, mO))
     // idempotent, and nothing a serve can observe changed
-    assert(EditDistanceJoin.compactVariantIndexBucketedIfNeeded(spark, tbl,
-      maxFilesPerBucket = 1) == ((None, None, None)))
+    assert(compactAll(1) == Seq(None, None, None))
     assert(serve == before)
     Seq("postings", "keys", "members", "meta").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}_$t"))
