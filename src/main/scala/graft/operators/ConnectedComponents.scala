@@ -231,7 +231,9 @@ object ConnectedComponents {
   /** Largest input, in rows, the small-input driver paths take: the
     * batch side of the variant-index serves
     * ([[EditDistanceJoin.pairsAgainstIndexBucketed]],
-    * [[EditDistanceJoin.repsAgainstIndexBucketed]]), the keyed rows of
+    * [[EditDistanceJoin.repsAgainstIndexBucketed]]) and appends
+    * ([[EditDistanceJoin.appendVariantIndexBucketed]],
+    * [[Dedup.appendKeyIndexBucketed]]), the keyed rows of
     * [[EditDistanceJoin.idPairs]] and the batch edges of
     * [[incrementalAssign]] and [[mergeRepublish]]. At or under it the
     * input is collected once and the operation finishes on the driver,
@@ -250,24 +252,30 @@ object ConnectedComponents {
     * keeps [[run]]'s driver finish; the assign's input is the reps ∪
     * idPairs edges):
     *
-    * | batch rows | reps serve | idPairs | incrementalAssign (edges) |
-    * |---|---|---|---|
-    * | 120 | 729 / 1042 | 191 / 584 | 203 / 566 (190) |
-    * | 250 | 689 / 793 | 204 / 615 | 164 / 417 (411) |
-    * | 300 | 731 / 787 | 181 / 422 | 164 / 381 (491) |
-    * | 375 | 820 / 775 | 211 / 405 | 124 / 298 (563) |
-    * | 500 | 837 / 562 | 236 / 355 | 129 / 326 (795) |
-    * | 1000 | 1694 / 815 | 415 / 492 | 147 / 392 (1555) |
-    * | 2000 | 3277 / 951 | 649 / 598 | 178 / 380 (3096) |
+    * | batch rows | reps serve | idPairs | incrementalAssign (edges) | variant append | key append (novel rows) |
+    * |---|---|---|---|---|---|
+    * | 120 | 729 / 1042 | 191 / 584 | 203 / 566 (190) | 853 / 1401 | 291 / 387 (86) |
+    * | 250 | 689 / 793 | 204 / 615 | 164 / 417 (411) | 1034 / 1227 | 282 / 392 (183) |
+    * | 300 | 731 / 787 | 181 / 422 | 164 / 381 (491) | 973 / 1101 | 260 / 342 (213) |
+    * | 375 | 820 / 775 | 211 / 405 | 124 / 298 (563) | 1039 / 1097 | 304 / 375 (284) |
+    * | 500 | 837 / 562 | 236 / 355 | 129 / 326 (795) | 1218 / 1118 | 259 / 367 (355) |
+    * | 1000 | 1694 / 815 | 415 / 492 | 147 / 392 (1555) | 2136 / 1120 | 294 / 413 (732) |
+    * | 2000 | 3277 / 951 | 649 / 598 | 178 / 380 (3096) | 4178 / 1451 | 261 / 308 (1476) |
     *
     * The reps serve wins up to 300 rows and loses from 375 (earlier
     * runs read a tie at 300–375); `idPairs` wins up to 1,000 rows and
     * loses narrowly at 2,000, and the condensed CC wins at every size
-    * measured. So the one cap sits at the serve's crossover. perfbench's
-    * daily batches (120 rows, ~100–330 edges) fall under it, except the
-    * rare batch of more than 300 edges, whose labels take the
-    * distributed plan; `link_batch`'s `idPairs` (~1,900 rows) falls
-    * above it.
+    * measured. The appends (`append`, a later run at the same settings, each
+    * run into a fresh copy of the index and of a key index over the same
+    * names) cross over no earlier: the variant append wins up to 300
+    * rows, ties at 375 and loses from 500 (its postings, ~250 a novel
+    * key, are built and written from the driver), and the key append,
+    * one write task for a few hundred keys, wins at every size. So the
+    * one cap sits at the serve's crossover, and the appends lose nothing
+    * by sharing it. perfbench's daily batches (120 rows, ~100–330 edges)
+    * fall under it, except the rare batch of more than 300 edges, whose
+    * labels take the distributed plan; `link_batch`'s `idPairs` (~1,900
+    * rows) falls above it.
     */
   private val DriverMaxRows = 300
 
@@ -301,13 +309,19 @@ object ConnectedComponents {
 
   /** `df`'s rows (copied) when it has at most the row cap of them, else
     * None. One job, each partition returning at most cap + 1 rows; no
-    * job when the cap is 0.
+    * job when the cap is 0, or when `df`'s optimized plan is a local
+    * relation, whose rows are answered from the plan.
     */
   private[graft] def smallRows(df: DataFrame): Option[Array[InternalRow]] = {
     val cap = driverFinishCap.value.rows
     if (cap <= 0) None
     else {
-      val rows = withRows(df)(_.mapPartitions(_.take(cap + 1).map(_.copy())).collect())
+      val rows = df.queryExecution.optimizedPlan match {
+        case local: LocalRelation =>
+          local.data.iterator.take(cap + 1).map(_.copy()).toArray
+        case _ =>
+          withRows(df)(_.mapPartitions(_.take(cap + 1).map(_.copy())).collect())
+      }
       if (rows.length <= cap) Some(rows) else None
     }
   }

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Exact deduplication operators.
   *
@@ -136,11 +138,33 @@ object Dedup {
     * distinct-ed here, so append(corpus) ∪ append(novel batch) holds
     * exactly the distinct keys of corpus ∪ batch (parity-spec'd;
     * q_dedup_incr_appended shares the monolithic form's oracle).
+    *
+    * A batch of at most [[ConnectedComponents]]' row cap is distinct-ed
+    * on the driver instead (no job when the batch is already a local
+    * frame) and written by one task
+    * ([[graft.sources.Layout.appendBucketed]]): the same rows and files
+    * as the distributed plan (DriverPathSpec). Only key types whose
+    * value equality is Spark's grouping equality take that path.
     */
   def appendKeyIndexBucketed(novelBatch: DataFrame, key: String,
-                             tableName: String): Unit =
-    graft.sources.Layout.appendBucketed(novelBatch.select(key).distinct(),
-      key, tableName)
+                             tableName: String): Unit = {
+    val keys = novelBatch.select(key)
+    val plan = keys.distinct()
+    val keyType = keys.schema.head.dataType
+    val driverDistinct = keyType match {
+      // StringType matches the default (binary) collation only
+      case StringType | ByteType | ShortType | IntegerType | LongType | BooleanType |
+           DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+      case _ => false
+    }
+    val local = if (!driverDistinct) None
+      else ConnectedComponents.smallRows(keys).map { rows =>
+        ConnectedComponents.localFrame(plan.sparkSession, plan.schema,
+          rows.map(r => if (r.isNullAt(0)) null else r.get(0, keyType)).distinct
+            .map(InternalRow(_)).toSeq)
+      }
+    graft.sources.Layout.appendBucketed(local.getOrElse(plan), key, tableName)
+  }
 
   /** Streaming twin of content-fingerprint dedup ([[TextOps.fingerprintGroups]]
     * collapsed to survivors): first-ARRIVAL document per md5-of-normalized-

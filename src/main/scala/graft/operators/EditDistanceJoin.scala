@@ -463,6 +463,16 @@ object EditDistanceJoin {
     *    members, so appending members first would make every batch key
     *    look standing and silently skip the keys/postings writes.
     *
+    * Once novelty is pinned the three appends are independent and run
+    * concurrently ([[Par.sections]]); a failed one is rethrown whole
+    * after the others finish, which may each have landed. A batch of at
+    * most [[ConnectedComponents]]' row cap is folded on the driver
+    * ([[driverAppendSlices]]): it is collected once, its novelty comes
+    * from one broadcast probe of `members` instead of the anti join,
+    * and the three slices are written as local frames, each by one task
+    * ([[graft.sources.Layout.appendBucketed]]) — the same rows and the
+    * same files per bucket as the distributed plan (DriverPathSpec).
+    *
     * Exactness vs [[writeVariantIndexBucketed]] over corpus ∪ batch:
     * id-level serve output ([[pairsAgainstIndexBucketed]]) is IDENTICAL
     * — gids never reach it (parity-spec'd in EditDistanceJoinSpec;
@@ -484,13 +494,48 @@ object EditDistanceJoin {
     // Novelty is PINNED before any table mutates: the anti join reads
     // `members`, and appending members first would make every batch key
     // look standing (nothing novel -> postings silently skipped).
-    val novel = novelKeysAgainstMembers(bk, tablePrefix)
-      .localCheckpoint(true)
+    val (members, keys, postings) = ConnectedComponents.smallRows(bk)
+      .fold {
+        val novel = novelKeysAgainstMembers(bk, tablePrefix).localCheckpoint(true)
+        (bk, novel, variantPostings(novel, maxDist))
+      }(driverAppendSlices(_, bk, tablePrefix, maxDist))
     // each table's bucket count comes from the catalog, not a parameter
-    graft.sources.Layout.appendBucketed(bk, "key", s"${tablePrefix}_members")
-    graft.sources.Layout.appendBucketed(novel, "gid", s"${tablePrefix}_keys")
-    graft.sources.Layout.appendBucketed(variantPostings(novel, maxDist), "__v",
-      s"${tablePrefix}_postings")
+    def append(df: DataFrame, key: String, t: String): () => Unit =
+      () => graft.sources.Layout.appendBucketed(df, key, s"${tablePrefix}_$t")
+    Par.sections(append(members, "key", "members"), append(keys, "gid", "keys"),
+      append(postings, "__v", "postings"))
+  }
+
+  /** [[appendVariantIndexBucketed]]'s (members, keys, postings) slices
+    * for collected keyed rows, as local frames with the distributed
+    * plan's schemas: the distinct keys with gid = min id
+    * ([[distinctKeys]]; null when all of a key's ids are null, as `min`
+    * gives), novelty from one broadcast probe of `members` by the batch
+    * keys ([[ConnectedComponents.probe]]), and each novel key's postings
+    * from [[deletionVariantHashes]] with its `numChars` length.
+    */
+  private def driverAppendSlices(rows: Array[InternalRow], bk: DataFrame,
+                                 tablePrefix: String, maxDist: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val spark = bk.sparkSession
+    val idType = bk.schema("id").dataType
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val keys = rows.groupBy(_.getUTF8String(1)).toSeq.map { case (k, rs) =>
+      val ids = rs.filterNot(_.isNullAt(0)).map(_.get(0, idType))
+      (k, if (ids.isEmpty) null else ids.min(ord))
+    }
+    val standing = ConnectedComponents.probe(
+        spark.table(s"${tablePrefix}_members").select("key"), "key", keys.map(_._1))
+      .map(_.getUTF8String(0)).toSet
+    val novel = keys.filterNot(k => standing(k._1))
+    val dk = distinctKeys(bk)
+    def local(plan: DataFrame, out: Seq[InternalRow]): DataFrame =
+      ConnectedComponents.localFrame(spark, plan.schema, out)
+    (local(bk, rows.toSeq),
+      local(dk, novel.map { case (k, g) => InternalRow(k, g) }),
+      local(variantPostings(dk, maxDist),
+        for ((k, g) <- novel; v <- deletionVariantHashes(k.toString, maxDist))
+          yield InternalRow(g, k.numChars, v)))
   }
 
   /** The append's novelty check, shaped for the standing side: the

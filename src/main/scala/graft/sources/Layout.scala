@@ -327,11 +327,19 @@ object Layout {
   /** Append `df` to a table [[publishBucketed]] wrote, under the table's
     * own bucket count ([[bucketCountOf]]) and the same one-file-per-bucket
     * pre-write repartition: each append adds at most one file per bucket.
+    * An input whose optimized plan is a local relation (a batch the
+    * driver already holds) is written from ONE partition instead: one
+    * task writes one file per non-empty bucket, the same files, with no
+    * shuffle.
     */
   def appendBucketed(df: DataFrame, key: String, tableName: String): Unit = {
     val n = bucketCountOf(df.sparkSession, tableName)
-    df.repartition(n, col(key))
-      .write.mode(SaveMode.Append).format("parquet")
+    val laidOut = df.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        df.coalesce(1)
+      case _ => df.repartition(n, col(key))
+    }
+    laidOut.write.mode(SaveMode.Append).format("parquet")
       .bucketBy(n, key).sortBy(key)
       .saveAsTable(tableName)
   }

@@ -1,9 +1,11 @@
 package graft.tools
 
 import graft.Graft
-import graft.operators.{ConnectedComponents, EditDistanceJoin}
+import graft.operators.{ConnectedComponents, Dedup, EditDistanceJoin}
 import graft.operators.ConnectedComponents.DriverCaps
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 /** Times each driver path against its distributed plan, for the
@@ -23,14 +25,22 @@ import org.apache.spark.sql.functions._
   *    seeded pseudo-words; a batch mixes standing names, 1–2-edit
   *    variants of them and new names. maxDist is 2, the largest any
   *    query row uses.
+  *  - `append`: the same batches folded into a copy of the same index
+  *    (`DriverMaxRows`, which the appends share with the serves):
+  *    `appendVariantIndexBucketed` of the batch, and
+  *    `Dedup.appendKeyIndexBucketed` of its novel rows, held on the
+  *    driver as a daily job holds them, into a key index over the same
+  *    names. Every run, warm ones included, appends to a fresh copy of
+  *    the published tables (copied outside the timing), so no run
+  *    reads another's files.
   *
   * Each cell is the median of 5 timed runs after one warm run per path;
   * outputs go to the noop sink. Sizes past a cap still take the driver
   * path here, so a table can look past it.
   *
-  * Usage: `runMain graft.tools.DriverCrossoverProbe [cc|serve] [n,n,...]`
-  * (defaults: both parts; cc 10000,100000,200000,400000 edges, serve
-  * 120,250,300,375,500,1000,2000 rows).
+  * Usage: `runMain graft.tools.DriverCrossoverProbe [cc|serve|append]
+  * [n,n,...]` (defaults: all parts; cc 10000,100000,200000,400000 edges,
+  * serve and append 120,250,300,375,500,1000,2000 rows).
   */
 object DriverCrossoverProbe {
   def main(args: Array[String]): Unit = {
@@ -41,13 +51,15 @@ object DriverCrossoverProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Graft.enableOptimizations(spark)
-    val parts = args.headOption.filter(Set("cc", "serve")).toSeq
-    val sizes = args.dropWhile(Set("cc", "serve")).headOption
+    val names = Set("cc", "serve", "append")
+    val parts = args.headOption.filter(names).toSeq
+    val sizes = args.dropWhile(names).headOption
       .map(_.split(",").map(_.toLong).toSeq)
+    def batchSizes = sizes.getOrElse(Seq(120L, 250L, 300L, 375L, 500L, 1000L, 2000L))
     if (parts.isEmpty || parts.contains("cc"))
       ccTable(spark, sizes.getOrElse(Seq(10000L, 100000L, 200000L, 400000L)))
-    if (parts.isEmpty || parts.contains("serve"))
-      serveTable(spark, sizes.getOrElse(Seq(120L, 250L, 300L, 375L, 500L, 1000L, 2000L)))
+    if (parts.isEmpty || parts.contains("serve")) serveTable(spark, batchSizes)
+    if (parts.isEmpty || parts.contains("append")) appendTable(spark, batchSizes)
     spark.stop()
   }
 
@@ -60,13 +72,14 @@ object DriverCrossoverProbe {
 
   /** One table row: 5 timed runs per side after a warm run each, the
     * driver path under `driver`'s caps, the distributed plan under
-    * `distributed`'s.
+    * `distributed`'s; `fresh` runs untimed before each.
     */
-  private def row(label: String, driver: DriverCaps, distributed: DriverCaps)(
-      body: => Unit): Unit = {
+  private def row(label: String, driver: DriverCaps, distributed: DriverCaps,
+                  fresh: () => Unit = () => ())(body: => Unit): Unit = {
     def med(x: Seq[Double]): Double = x.sorted.apply(x.size / 2)
-    timed(driver)(body); timed(distributed)(body)
-    val runs = (1 to 5).map(_ => (timed(driver)(body), timed(distributed)(body)))
+    def run(caps: DriverCaps): Double = { fresh(); timed(caps)(body) }
+    run(driver); run(distributed)
+    val runs = (1 to 5).map(_ => (run(driver), run(distributed)))
     val (d, l) = (runs.map(_._1), runs.map(_._2))
     println(f"[xo] $label%-28s driver_ms=${med(d)}%8.0f " +
       f"distributed_ms=${med(l)}%8.0f  driver=${d.map(_.round).mkString("/")} " +
@@ -99,17 +112,20 @@ object DriverCrossoverProbe {
     }
   }
 
-  private def serveTable(spark: SparkSession, sizes: Seq[Long]): Unit = {
-    import spark.implicits._
-    val rnd = new scala.util.Random(17)
-    val syllables = Seq("ka", "ro", "vel", "ti", "bra", "mun", "se", "dor",
+  /** Seeded pseudo-word company names: an 8,000-name dictionary, and
+    * batches that mix dictionary names, 1–2-edit variants of them and new
+    * names.
+    */
+  private final class Names(seed: Int) {
+    private val rnd = new scala.util.Random(seed)
+    private val syllables = Seq("ka", "ro", "vel", "ti", "bra", "mun", "se", "dor",
       "li", "an", "zu", "pe", "gor", "ni", "sta", "wen")
-    def word(): String =
+    private def word(): String =
       (1 to 2 + rnd.nextInt(3)).map(_ => syllables(rnd.nextInt(syllables.size))).mkString
-    def name(): String =
+    private def name(): String =
       (1 to 1 + rnd.nextInt(3)).map(_ => word().capitalize).mkString(" ") +
         Seq(" GmbH", " Ltd", " AG", " SA")(rnd.nextInt(4))
-    def edit(s: String): String = {
+    private def edit(s: String): String = {
       val i = rnd.nextInt(s.length)
       rnd.nextInt(3) match {
         case 0 => s.substring(0, i) + s.substring(i + 1)
@@ -117,8 +133,23 @@ object DriverCrossoverProbe {
         case _ => s.substring(0, i) + "q" + s.substring(i + 1)
       }
     }
-    val dict = (0 until 8000).map(_ => name())
-    val corpus = dict.zipWithIndex.map { case (n, i) => (i.toLong, n) }
+    val dict: IndexedSeq[String] = (0 until 8000).map(_ => name())
+    /** n (id, name) rows, ids from 1,000,000 up. */
+    def batch(n: Long): Seq[(Long, String)] = (0L until n).map { i =>
+      val base = dict(rnd.nextInt(dict.size))
+      (1000000L + i, rnd.nextInt(4) match {
+        case 0 => base
+        case 1 => edit(base)
+        case 2 => edit(edit(base))
+        case _ => name()
+      })
+    }
+  }
+
+  private def serveTable(spark: SparkSession, sizes: Seq[Long]): Unit = {
+    import spark.implicits._
+    val names = new Names(17)
+    val corpus = names.dict.zipWithIndex.map { case (n, i) => (i.toLong, n) }
       .toDF("id", "name").localCheckpoint(true)
     val table = "driver_xo_var"
     val dir = java.nio.file.Files.createTempDirectory("driver_xo").toString
@@ -129,15 +160,7 @@ object DriverCrossoverProbe {
           .select(col("id_a").as("src"), col("id_b").as("dst")))
       .localCheckpoint(true)
     for (n <- sizes) {
-      val batch = (0L until n).map { i =>
-        val base = dict(rnd.nextInt(dict.size))
-        (1000000L + i, rnd.nextInt(4) match {
-          case 0 => base
-          case 1 => edit(base)
-          case 2 => edit(edit(base))
-          case _ => name()
-        })
-      }.toDF("id", "name").localCheckpoint(true)
+      val batch = names.batch(n).toDF("id", "name").localCheckpoint(true)
       def edges(): DataFrame =
         EditDistanceJoin.repsAgainstIndexBucketed(batch, "id", "name", 2, table)
           .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
@@ -158,5 +181,57 @@ object DriverCrossoverProbe {
     }
     Seq("postings", "keys", "members", "meta")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${table}_$t"))
+  }
+
+  private def appendTable(spark: SparkSession, sizes: Seq[Long]): Unit = {
+    import spark.implicits._
+    val names = new Names(17)
+    val corpus = names.dict.zipWithIndex.map { case (n, i) => (i.toLong, n) }
+      .toDF("id", "name").localCheckpoint(true)
+    val dir = java.nio.file.Files.createTempDirectory("driver_xo_append").toString
+    val (base, table) = ("driver_xo_base", "driver_xo_app")
+    val variantTables = Seq("postings", "keys", "members")
+    EditDistanceJoin.writeVariantIndexBucketed(corpus, "id", "name", 2,
+      s"$dir/base/var", base)
+    Dedup.writeKeyIndexBucketed(corpus, "name", s"$dir/base/key", s"${base}_key")
+    val catalog = spark.sessionState.catalog
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(dir).getFileSystem(conf)
+    var copies = 0
+    /** `table`'s four tables re-registered over a fresh copy of the base
+      * indexes' files (the variant tier's `meta` sidecar included).
+      */
+    def fresh(): Unit = {
+      fs.delete(new Path(s"$dir/copy"), true)
+      copies += 1
+      val to = s"$dir/copy/$copies"
+      for (sub <- Seq("var", "key"))
+        FileUtil.copy(fs, new Path(s"$dir/base/$sub"), fs, new Path(s"$to/$sub"), false, conf)
+      for ((from, at) <- variantTables.map(t => (t, s"var/$t")) :+ ("key" -> "key")) {
+        val meta = catalog.getTableMetadata(TableIdentifier(s"${base}_$from"))
+        val id = meta.identifier.copy(table = s"${table}_$from")
+        catalog.dropTable(id, ignoreIfNotExists = true, purge = false)
+        catalog.createTable(meta.copy(identifier = id,
+          storage = meta.storage.copy(locationUri = Some(new Path(s"$to/$at").toUri))),
+          ignoreIfExists = false)
+      }
+    }
+    val dict = names.dict.toSet
+    val (driver, distributed) =
+      (defaults.copy(rows = Int.MaxValue - 1), defaults.copy(rows = 0))
+    for (n <- sizes) {
+      val rows = names.batch(n)
+      // the batch as a daily job reads it; its novel rows as the driver
+      // holds them after the key serve
+      val batch = rows.toDF("id", "name").localCheckpoint(true)
+      val novel = rows.filterNot(r => dict(r._2)).toDF("id", "name")
+      row(s"variant append rows=$n", driver, distributed, () => fresh())(
+        EditDistanceJoin.appendVariantIndexBucketed(batch, "id", "name", table))
+      row(s"key append rows=$n (${novel.count()} novel)", driver, distributed,
+        () => fresh())(Dedup.appendKeyIndexBucketed(novel, "name", s"${table}_key"))
+    }
+    for (p <- Seq(base, table); t <- variantTables :+ "key")
+      spark.sql(s"DROP TABLE IF EXISTS ${p}_$t")
+    fs.delete(new Path(dir), true)
   }
 }

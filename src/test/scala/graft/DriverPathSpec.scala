@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{ConnectedComponents, EditDistanceJoin, StandingIndex}
+import graft.operators.{ConnectedComponents, Dedup, EditDistanceJoin, StandingIndex}
 import graft.sources.Layout
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, ResolvedHint}
@@ -110,6 +110,109 @@ class DriverPathSpec extends SparkSpec {
       assert(e.getMessage.contains("holds <=2-deletion postings"), e.getMessage)
       dropIndex(prefix)
     }
+  }
+
+  /** The variant index's three tables and the key index's one. */
+  private def indexTables(prefix: String): Seq[String] =
+    Seq("postings", "keys", "members").map(t => s"${prefix}_$t") :+ s"${prefix}_fp"
+
+  /** Both indexes published from `dict` under `prefix`. */
+  private def publishBoth(dict: DataFrame, maxDist: Int, dir: String,
+                          prefix: String): Unit = {
+    EditDistanceJoin.writeVariantIndexBucketed(dict, "id", "name", maxDist,
+      s"$dir/$prefix", prefix)
+    Dedup.writeKeyIndexBucketed(dict, "name", s"$dir/${prefix}_fp", s"${prefix}_fp")
+  }
+
+  /** The day's fold into both indexes, as a daily job runs it: the
+    * batch's novel rows come to the driver first, then both appends.
+    */
+  private def appendBoth(day: DataFrame, prefix: String): Unit = {
+    val novel = heldOnDriver(Dedup.incrementalAgainstIndex(day, "name", s"${prefix}_fp"))
+    EditDistanceJoin.appendVariantIndexBucketed(day, "id", "name", prefix)
+    Dedup.appendKeyIndexBucketed(novel, "name", s"${prefix}_fp")
+  }
+
+  /** `df` collected and handed back as a local frame. */
+  private def heldOnDriver(df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  private def dropBoth(prefix: String): Unit = {
+    dropIndex(prefix)
+    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_fp")
+  }
+
+  test("index appends: the driver path lands the same rows and files as the distributed plan") {
+    for (t <- idTypes) withClue(s"[$t ids] ") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_driver_append").toString
+      // one index per path, published alike
+      val (driver, distributed) = ("graft_spec_append_driver", "graft_spec_append_plan")
+      Seq(driver, distributed).foreach(publishBoth(frame(dictRows, t), 2, dir, _))
+      // day 1, a local frame: the serve batch (a duplicated batch key,
+      // an existing key under a new id, a null key, astral-plane keys)
+      // plus keys whose ids are all null, one of them astral
+      val day1 = (batchRows.map { case (i, n) => (Option(i), n) } ++
+          Seq((None, "Ghost Co"), (None, "Ghost Co"), (None, "x😀z")))
+        .toDF("id", "name").select(col("id").cast(t).as("id"), col("name"))
+      // day 2, a checkpoint (its rows come back in a job): an all-null
+      // key of day 1 under a real id, an existing astral key, a new name
+      val day2 = frame(Seq((301L, "Ghost Co"), (302L, "x😀y"), (303L, "Brand New")), t)
+        .localCheckpoint(true)
+      for ((label, day) <- Seq("day 1" -> day1, "day 2" -> day2,
+                               "empty" -> day1.limit(0))) withClue(s"$label: ") {
+        appendBoth(day, driver)
+        ConnectedComponents.onStarLoop(appendBoth(day, distributed))
+        for ((d, p) <- indexTables(driver).zip(indexTables(distributed))) {
+          assert(rowBag(spark.table(d)) == rowBag(spark.table(p)), d)
+          assert(Layout.filesPerBucket(spark, d) == Layout.filesPerBucket(spark, p), d)
+        }
+        for (dist <- Seq(1, 2)) {
+          def reps(prefix: String) = rowBag(EditDistanceJoin.repsAgainstIndexBucketed(
+            frame(batchRows, t), "id", "name", dist, prefix))
+          def pairs(prefix: String) = rowBag(EditDistanceJoin.pairsAgainstIndexBucketed(
+            frame(batchRows, t), "id", "name", dist, prefix))
+          assert(reps(driver) == reps(distributed), s"reps maxDist=$dist")
+          assert(pairs(driver) == pairs(distributed), s"pairs maxDist=$dist")
+        }
+        def novel(prefix: String) = rowBag(Dedup.incrementalAgainstIndex(
+          frame(batchRows, t), "name", s"${prefix}_fp"))
+        assert(novel(driver) == novel(distributed))
+      }
+      // the appends reached the serves: day 2's new name matches itself;
+      // day 1's all-null keys stand with a null gid, which Ghost Co keeps
+      // when day 2 brings it a real id (novelty is by key)
+      assert(rowBag(EditDistanceJoin.pairsAgainstIndexBucketed(day2, "id", "name", 1,
+          driver).select(col("left_key"), col("right_key"))).contains(Seq("Brand New", "Brand New")))
+      assert(rowBag(spark.table(s"${driver}_keys").filter(col("gid").isNull)
+        .select("key")).keySet == Set(Seq("Ghost Co"), Seq("x😀z")))
+      Seq(driver, distributed).foreach(dropBoth)
+    }
+  }
+
+  test("an index append fails whole, naming the table whose catalog entry is gone, on both paths") {
+    val dict = frame(dictRows, "int")
+    val batch = frame(batchRows, "int")
+    val prefix = "graft_spec_append_gone"
+    for (table <- indexTables(prefix); distributed <- Seq(false, true))
+      withClue(s"[$table, distributed=$distributed] ") {
+        val dir = java.nio.file.Files.createTempDirectory("graft_append_gone").toString
+        publishBoth(dict, 1, dir, prefix)
+        val members = spark.table(s"${prefix}_members").count()
+        // an external table: the drop keeps its files
+        spark.sql(s"DROP TABLE $table")
+        def append(): Unit =
+          if (table.endsWith("_fp")) Dedup.appendKeyIndexBucketed(batch, "name", table)
+          else EditDistanceJoin.appendVariantIndexBucketed(batch, "id", "name", prefix)
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          if (distributed) ConnectedComponents.onStarLoop(append()) else append())
+        assert(e.getMessage.contains(s"`$table`"), e.getMessage)
+        assert(e.getSuppressed.forall(!_.getMessage.contains(s"`$table`")))
+        // the concurrent appends ran to completion before the failure
+        // surfaced: with `_keys` gone, `_members` still took the batch
+        if (table.endsWith("_keys"))
+          assert(spark.table(s"${prefix}_members").count() == members + batchRows.count(_._2 != null))
+        dropBoth(prefix)
+      }
   }
 
   test("the driver serve reads each standing table through a broadcast join, never a literal IN list") {
@@ -300,6 +403,61 @@ class DriverPathSpec extends SparkSpec {
     assert(driverJobs <= 9, s"$driverJobs jobs on the driver path")
     assert(driverJobs < planJobs, s"driver path $driverJobs jobs vs plan $planJobs")
     dropIndex(prefix)
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      drain(jobs)
+      val j0 = jobs.get()
+      body
+      drain(jobs)
+      jobs.get() - j0
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("smallRows answers a local frame from its plan with no job, under and over the cap") {
+    val under = (1 to 5).toDF("x").select(($"x" * 2).as("x"))
+    val over = (1 to 301).toDF("x")
+    var rows: Option[Seq[Int]] = None
+    assert(jobsIn {
+      rows = ConnectedComponents.smallRows(under).map(_.map(_.getInt(0)).toSeq)
+      assert(ConnectedComponents.smallRows(over).isEmpty)
+    } == 0)
+    assert(rows.contains(Seq(2, 4, 6, 8, 10)))
+    // any other plan's rows come back in one job
+    val pinned = under.localCheckpoint(true)
+    assert(jobsIn(assert(ConnectedComponents.smallRows(pinned).map(_.length).contains(5))) == 1)
+  }
+
+  test("one 120-row batch's index appends run in at most 6 jobs (variant) and 1 job (key)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_driver_append_jobs").toString
+    val (driver, distributed) = ("graft_spec_append_jobs", "graft_spec_append_jobs_plan")
+    Seq(driver, distributed).foreach(publishBoth(syntheticDict, 1, dir, _))
+    // the batch as a daily job reads it (its rows come back in a job),
+    // and its novel rows as the driver holds them after the key serve
+    val batch = syntheticBatch.localCheckpoint(true)
+    val novel = heldOnDriver(Dedup.incrementalAgainstIndex(batch, "name", s"${driver}_fp"))
+    def appends(prefix: String): (Int, Int) =
+      (jobsIn(EditDistanceJoin.appendVariantIndexBucketed(batch, "id", "name", prefix)),
+        jobsIn(Dedup.appendKeyIndexBucketed(novel, "name", s"${prefix}_fp")))
+    val (driverVar, driverKey) = appends(driver)
+    val (planVar, planKey) = ConnectedComponents.onStarLoop(appends(distributed))
+    for ((d, p) <- indexTables(driver).zip(indexTables(distributed)))
+      assert(rowBag(spark.table(d)) == rowBag(spark.table(p)), d)
+    info(s"jobs, driver path / distributed plan: variant append $driverVar / $planVar, " +
+      s"key append $driverKey / $planKey")
+    assert(driverVar <= 6, s"$driverVar jobs for the variant append on the driver path")
+    assert(driverKey == 1, s"$driverKey jobs for the key append on the driver path")
+    assert(driverVar < planVar, s"variant append: driver path $driverVar jobs vs plan $planVar")
+    assert(driverKey < planKey, s"key append: driver path $driverKey jobs vs plan $planKey")
+    Seq(driver, distributed).foreach(dropBoth)
   }
 
   test("serve -> assign -> republish is identical at 3 and at 4 shuffle partitions, on both paths") {
