@@ -1014,7 +1014,7 @@ object Ann {
     */
   private[graft] def indexVecCount(spark: org.apache.spark.sql.SparkSession,
                                    indexDir: String, m: Int): Long = {
-    val rows = parquetRowCount(spark, indexDir)
+    val rows = StandingIndex.parquetRowCount(spark, indexDir)
     // The m-rows-per-vector contract is the whole basis of this count:
     // a non-multiple total means the dir is not a code index (or holds
     // leftovers of a partially-committed write) — integer division would
@@ -1024,16 +1024,6 @@ object Ann {
         s"of m=$m — not a code index for this model, or a partial write")
     rows / m
   }
-
-  /** Row count of a parquet directory from its FOOTERS — the shared
-    * driver-side metadata read behind [[indexVecCount]], the sign
-    * tier's drift guard and [[annSearchAuto]]'s footer pricing: no
-    * Spark job, no data pages, one footer open per data file (bounded
-    * by the compaction policies).
-    */
-  private[graft] def parquetRowCount(spark: org.apache.spark.sql.SparkSession,
-                                     dir: String): Long =
-    StandingIndex.parquetRowCount(spark, dir)
 
   def pqSearchAuto(emb: DataFrame, idCol: String, embCol: String,
                    model: PqModel, queryPred: Column, k: Int,
@@ -1623,7 +1613,7 @@ object Ann {
         .select(col(idCol).as("vec_id"), col("cell"),
           sq8QuantCol(col(embCol), s).as("qv")),
       s"$dir/codes", "overwrite")
-    val n = parquetRowCount(emb.sparkSession, s"$dir/codes")
+    val n = StandingIndex.parquetRowCount(emb.sparkSession, s"$dir/codes")
     StandingIndex.publishMetaRow(emb.sparkSession, s"$dir/scale", Seq(
       "scale" -> StandingIndex.MetaDouble(s),
       "candidates" -> StandingIndex.MetaInt(candidates),
@@ -1692,7 +1682,8 @@ object Ann {
     val np = if (nProbe > 0) nProbe else meta.nProbe
     meta.nVectors.foreach { published =>
       StandingIndex.requireWithinDriftBar(
-        parquetRowCount(spark, s"$dir/codes"), published, maxDriftFactor,
+        StandingIndex.parquetRowCount(spark, s"$dir/codes"), published,
+        maxDriftFactor,
         "ivf-sq8", dir, "routed recall at the published (nProbe, C) is " +
           "corpus-dependent through the centroids",
         "IvfSq8Tune", "writeSq8IndexByCell")
@@ -1900,7 +1891,7 @@ object Ann {
       .write.mode("overwrite").parquet(s"$dir/sigs")
     // publish-time corpus size from the just-written FOOTERS — no second
     // scan, same driver-side metadata read the serve's drift guard uses
-    val n = parquetRowCount(emb.sparkSession, s"$dir/sigs")
+    val n = StandingIndex.parquetRowCount(emb.sparkSession, s"$dir/sigs")
     StandingIndex.publishMetaRow(emb.sparkSession, s"$dir/meta", Seq(
       "dims" -> StandingIndex.MetaInt(dims),
       "lanes" -> StandingIndex.MetaInt(lanes),
@@ -1980,7 +1971,8 @@ object Ann {
     val meta = signIndexMeta(spark, dir)
     val c = if (candidates > 0) candidates else meta.candidates
     StandingIndex.requireWithinDriftBar(
-      parquetRowCount(spark, s"$dir/sigs"), meta.nVectors, maxDriftFactor,
+      StandingIndex.parquetRowCount(spark, s"$dir/sigs"), meta.nVectors,
+      maxDriftFactor,
       "sign", dir,
       s"recall at the published C=${meta.candidates} is corpus-dependent",
       "QuantTune", "writeSignIndex")
@@ -2047,17 +2039,6 @@ object Ann {
       case None => ("sq8", "fused")
     }
 
-  // The dispatch-side drift rule (excluded past the bar — the sign
-  // tier's measured 0.31 recall loss per decade is why the bar exists)
-  // and the dispatch-time byte pricer both live in [[StandingIndex]];
-  // local aliases keep the dispatch body readable.
-  private def driftExcluded(n: Long, published: Long, bar: Double)
-      : Boolean = StandingIndex.driftExcluded(n, published, bar)
-
-  private def dirDataBytes(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Long =
-    StandingIndex.dirDataBytes(spark, dir)
-
   /** Cost/recall-aware cross-tier serve: top-k neighbors of the query
     * set under `recallFloor`, served from the cheapest standing tier
     * that clears it. Pass whichever standing indexes exist — none is
@@ -2122,7 +2103,7 @@ object Ann {
       val m = sq8IndexMeta(spark, d)
       val recall = m.recall.getOrElse(
         if (m.candidates >= 20) Sq8FrozenRecall else 0.0)
-      standing += (("sq8", dirDataBytes(spark, s"$d/codes"), recall))
+      standing += (("sq8", StandingIndex.dirDataBytes(spark, s"$d/codes"), recall))
     }
     signDir.foreach { d =>
       val meta = signIndexMeta(spark, d)
@@ -2132,7 +2113,7 @@ object Ann {
       // throw — the tier stops qualifying instead (footer-count read,
       // the same driver-side metadata the serve's guard uses)
       val (sigBytes, sigRows) = StandingIndex.dirStats(spark, s"$d/sigs")
-      if (!driftExcluded(sigRows, meta.nVectors, SignRetuneBar))
+      if (!StandingIndex.driftExcluded(sigRows, meta.nVectors, SignRetuneBar))
         standing += (("sign", sigBytes, meta.recall.getOrElse(0.0)))
     }
     pqDir.foreach { d =>
@@ -2140,7 +2121,7 @@ object Ann {
       val (_, form) = pqServeBranch(n, hasIndex = true, pqCoarse.isDefined,
         PqExhaustiveCrossover)
       val recall = if (form == "probed") PqProbedFrozenRecall else 1.0
-      standing += (("pq", dirDataBytes(spark, d), recall))
+      standing += (("pq", StandingIndex.dirDataBytes(spark, d), recall))
     }
     ivfSq8Dir.foreach { d =>
       // routed recall is corpus-dependent through the centroids, so only
@@ -2166,7 +2147,7 @@ object Ann {
       // tier, not crash on the model mismatch the retune just created
       // (round-18 review)
       val drifted = m.nVectors.exists(pub =>
-        driftExcluded(codeRows, pub, SignRetuneBar))
+        StandingIndex.driftExcluded(codeRows, pub, SignRetuneBar))
       if (!drifted) {
         // a mispaired model on a NON-drifted index is a caller BUG, not
         // drift — fail loudly (the pqDir/pqModel pairing rule) rather

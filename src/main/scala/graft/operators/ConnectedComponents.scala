@@ -276,6 +276,22 @@ object ConnectedComponents {
     * fall under it, except the rare batch of more than 300 edges, whose
     * labels take the distributed plan; `link_batch`'s `idPairs` (~1,900
     * rows) falls above it.
+    *
+    * Re-measured with the variant driver paths on one kernel
+    * (`EditDistanceJoin.DriverKeys`), `serve` and `append` at 120,300,375
+    * rows: two runs each of the kernel and of the separate spellings at
+    * `541abdf`, alternating on one 4-vCPU VM that read every path up to
+    * 1.4x slower than the table (driver path ms, kernel / `541abdf`; the
+    * 300- and 375-row batches are other draws than the table's):
+    *
+    * | batch rows | reps serve | idPairs | variant append | key append |
+    * |---|---|---|---|---|
+    * | 120 | 806, 786 / 746, 1051 | 213, 236 / 264, 269 | 1098, 990 / 861, 1136 | 310, 299 / 418, 330 |
+    * | 300 | 866, 899 / 838, 1038 | 250, 305 / 243, 307 | 1090, 984 / 1141, 1215 | 294, 282 / 284, 300 |
+    * | 375 | 919, 1033 / 1073, 1101 | 281, 315 / 287, 282 | 1154, 1080 / 1168, 1193 | 295, 233 / 260, 281 |
+    *
+    * The reps serve still wins at 300 rows (866 / 882 and 899 / 923 ms
+    * against its distributed plan) and loses at 375, so the cap stands.
     */
   private val DriverMaxRows = 300
 

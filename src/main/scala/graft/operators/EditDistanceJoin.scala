@@ -262,50 +262,86 @@ object EditDistanceJoin {
               maxDist: Int): DataFrame = {
     val keyed = keyedRows(df, idCol, keyCol)
     val plan = halfIdPairs(keyed, maxDist).select("id_a", "id_b")
-    ConnectedComponents.smallRows(keyed)
-      .flatMap(driverIdPairs(_, keyed.schema("id").dataType, plan, maxDist))
-      .getOrElse(plan)
+    driverKeys(keyed, maxDist).fold(plan)(driverIdPairs(_, plan))
   }
 
-  /** [[idPairs]] on the driver, for keyed rows at most
-    * [[ConnectedComponents]]' row cap: the same steps as [[halfIdPairs]]
-    * over the collected rows — distinct keys with gid = min id, variant
-    * hashes from [[deletionVariantHashes]], the half-ordered gid_a <
-    * gid_b candidates within the `numChars` length band, the verify
-    * with Spark's own `UTF8String.levenshteinDistance(_, maxDist)`, and
-    * the cross- and intra-group expansions oriented id_a < id_b — into a
-    * local frame with `plan`'s schema. None (the distributed plan runs)
-    * when an id is null, the one case the orientation rules would need
-    * Spark's null semantics for.
+  /** The driver form of [[distinctKeys]], [[variantPostings]] and the
+    * candidate/verify half of [[matchAgainstPostings]], over keyed rows
+    * collected under [[ConnectedComponents]]' row cap ([[driverKeys]]):
+    * the one spelling of the variant rules that [[driverIdPairs]],
+    * [[driverServe]] and [[driverAppendSlices]] share. It holds the
+    * distinct keys; each key's ids in input order, nulls included, and
+    * its gid (the min non-null id, null when every id is null, as `min`
+    * gives); the keys' `numChars` lengths; and their variant hashes
+    * ([[deletionVariantHashes]]), computed once and only for the keys a
+    * path asks about.
+    *
+    * `verified` is the kernel. Only keys with a gid can match, as on the
+    * distributed plans, whose gid re-attach drops a null gid. Each (gid,
+    * key, len, hash) posting meets the keys indexed under its hash within
+    * the length band, and each distinct (key index, gid, posting key)
+    * candidate that `keep` accepts is verified once with Spark's own
+    * `UTF8String.levenshteinDistance(_, maxDist)`, which returns the
+    * distance itself when it is within the bound.
     */
-  private def driverIdPairs(rows: Array[InternalRow], idType: DataType,
-                            plan: DataFrame,
-                            maxDist: Int): Option[DataFrame] =
-    if (rows.exists(_.isNullAt(0))) None
-    else {
-      val ord = TypeUtils.getInterpretedOrdering(idType)
-      val groups = rows.groupBy(_.getUTF8String(1)).toArray
-      val keys = groups.map(_._1)
-      val ids = groups.map(_._2.map(_.get(0, idType)))
-      val gid = ids.map(_.min(ord))
-      val lens = keys.map(_.numChars)
-      val byHash = mutable.LongMap.empty[List[Int]]
-      for (i <- keys.indices; v <- deletionVariantHashes(keys(i).toString, maxDist))
-        byHash(v) = i :: byHash.getOrElse(v, Nil)
-      val cand = mutable.HashSet.empty[(Int, Int)]
-      for (sharing <- byHash.valuesIterator if sharing.lengthCompare(1) > 0;
-           a <- sharing; b <- sharing
-           if ord.lt(gid(a), gid(b)) && math.abs(lens(a) - lens(b)) <= maxDist)
-        cand += ((a, b))
-      val out = mutable.ArrayBuffer.empty[InternalRow]
-      for ((a, b) <- cand
-           if keys(a).levenshteinDistance(keys(b), maxDist) >= 0;
-           x <- ids(a); y <- ids(b))
-        out += (if (ord.lt(x, y)) InternalRow(x, y) else InternalRow(y, x))
-      for (g <- ids; x <- g; y <- g if ord.lt(x, y)) out += InternalRow(x, y)
-      Some(ConnectedComponents.localFrame(plan.sparkSession, plan.schema,
-        out.toSeq))
+  private final class DriverKeys(val rows: Array[InternalRow], idType: DataType,
+                                 val maxDist: Int) {
+    val ord: Ordering[Any] = TypeUtils.getInterpretedOrdering(idType)
+    val idsOf: Map[UTF8String, Seq[Any]] =
+      rows.toSeq.groupMap(_.getUTF8String(1))(_.get(0, idType))
+    val keys: IndexedSeq[UTF8String] = idsOf.keys.toIndexedSeq
+    def ids(i: Int): Seq[Any] = idsOf(keys(i))
+    val gids: IndexedSeq[Any] =
+      keys.map(idsOf(_).filter(_ != null).minOption(ord).orNull)
+    val lens: IndexedSeq[Int] = keys.map(_.numChars)
+    val matchable: Seq[Int] = keys.indices.filter(gids(_) != null)
+    private val variants = mutable.HashMap.empty[Int, Array[Long]]
+    private def hashes(i: Int): Array[Long] = variants.getOrElseUpdate(i,
+      deletionVariantHashes(keys(i).toString, maxDist))
+    /** The (gid, key, len, hash) postings of the keys `of`. */
+    def postings(of: Seq[Int]): Iterator[(Any, UTF8String, Int, Long)] =
+      for (i <- of.iterator; v <- hashes(i).iterator)
+        yield (gids(i), keys(i), lens(i), v)
+    lazy val byHash: mutable.LongMap[List[Int]] = {
+      val m = mutable.LongMap.empty[List[Int]]
+      for (i <- matchable; v <- hashes(i)) m(v) = i :: m.getOrElse(v, Nil)
+      m
     }
+    def verified(posted: Iterator[(Any, UTF8String, Int, Long)],
+                 keep: (Int, Any) => Boolean = (_, _) => true)
+        : Seq[(Int, Any, UTF8String, Int)] = {
+      val cand = mutable.LinkedHashSet.empty[(Int, Any, UTF8String)]
+      for ((g, key, len, v) <- posted; i <- byHash.getOrElse(v, Nil)
+           if math.abs(lens(i) - len) <= maxDist && keep(i, g))
+        cand += ((i, g, key))
+      for ((i, g, key) <- cand.toSeq;
+           d = keys(i).levenshteinDistance(key, maxDist) if d >= 0)
+        yield (i, g, key, d)
+    }
+  }
+
+  /** `keyed` on the driver, if it has at most the row cap's rows. */
+  private def driverKeys(keyed: DataFrame, maxDist: Int): Option[DriverKeys] =
+    ConnectedComponents.smallRows(keyed)
+      .map(new DriverKeys(_, keyed.schema("id").dataType, maxDist))
+
+  /** [[idPairs]] on the driver ([[DriverKeys]]): the keys' own postings
+    * under [[halfIdPairs]]' half order gid_a < gid_b, and each verified
+    * key pair expanded to its groups' ids. A cross pair (x, y) keeps its
+    * order only when both ids are non-null and x < y, else it is (y, x),
+    * the distributed plan's `when(__ia < __ib)`; intra-group pairs skip
+    * null ids. A local frame with `plan`'s schema.
+    */
+  private def driverIdPairs(dk: DriverKeys, plan: DataFrame): DataFrame = {
+    def lt(x: Any, y: Any) = x != null && y != null && dk.ord.lt(x, y)
+    val cross = for ((a, _, kb, _) <- dk.verified(dk.postings(dk.matchable),
+                       (a, gb) => dk.ord.lt(dk.gids(a), gb));
+                     x <- dk.ids(a); y <- dk.idsOf(kb))
+      yield if (lt(x, y)) InternalRow(x, y) else InternalRow(y, x)
+    val intra = for (i <- dk.keys.indices; x <- dk.ids(i); y <- dk.ids(i)
+                     if lt(x, y)) yield InternalRow(x, y)
+    ConnectedComponents.localFrame(plan.sparkSession, plan.schema, cross ++ intra)
+  }
 
   /** Cross-table edit-distance match: every `left` row paired with every
     * `right` (dictionary) row within lev <= maxDist — the master-data /
@@ -467,11 +503,12 @@ object EditDistanceJoin {
     * concurrently ([[Par.sections]]); a failed one is rethrown whole
     * after the others finish, which may each have landed. A batch of at
     * most [[ConnectedComponents]]' row cap is folded on the driver
-    * ([[driverAppendSlices]]): it is collected once, its novelty comes
-    * from one broadcast probe of `members` instead of the anti join,
-    * and the three slices are written as local frames, each by one task
-    * ([[graft.sources.Layout.appendBucketed]]) — the same rows and the
-    * same files per bucket as the distributed plan (DriverPathSpec).
+    * ([[driverAppendSlices]]) in 6 jobs: the batch collect (none for a
+    * local frame), the broadcast and the collect of one `members` probe
+    * instead of the anti join (in Spark 4.1.2 a broadcast join against a
+    * local relation runs its own job), and three writes of local frames,
+    * one task each ([[graft.sources.Layout.appendBucketed]]): the same
+    * rows and files per bucket as the distributed plan (DriverPathSpec).
     *
     * Exactness vs [[writeVariantIndexBucketed]] over corpus ∪ batch:
     * id-level serve output ([[pairsAgainstIndexBucketed]]) is IDENTICAL
@@ -494,11 +531,11 @@ object EditDistanceJoin {
     // Novelty is PINNED before any table mutates: the anti join reads
     // `members`, and appending members first would make every batch key
     // look standing (nothing novel -> postings silently skipped).
-    val (members, keys, postings) = ConnectedComponents.smallRows(bk)
+    val (members, keys, postings) = driverKeys(bk, maxDist)
       .fold {
         val novel = novelKeysAgainstMembers(bk, tablePrefix).localCheckpoint(true)
         (bk, novel, variantPostings(novel, maxDist))
-      }(driverAppendSlices(_, bk, tablePrefix, maxDist))
+      }(driverAppendSlices(_, bk, tablePrefix))
     // each table's bucket count comes from the catalog, not a parameter
     def append(df: DataFrame, key: String, t: String): () => Unit =
       () => graft.sources.Layout.appendBucketed(df, key, s"${tablePrefix}_$t")
@@ -507,35 +544,26 @@ object EditDistanceJoin {
   }
 
   /** [[appendVariantIndexBucketed]]'s (members, keys, postings) slices
-    * for collected keyed rows, as local frames with the distributed
-    * plan's schemas: the distinct keys with gid = min id
-    * ([[distinctKeys]]; null when all of a key's ids are null, as `min`
-    * gives), novelty from one broadcast probe of `members` by the batch
-    * keys ([[ConnectedComponents.probe]]), and each novel key's postings
-    * from [[deletionVariantHashes]] with its `numChars` length.
+    * of the batch on the driver ([[DriverKeys]]), as local frames with
+    * the distributed plan's schemas: novelty from one broadcast probe of
+    * `members` ([[ConnectedComponents.probe]]), then the novel keys with
+    * their gids (null ones too) and their postings.
     */
-  private def driverAppendSlices(rows: Array[InternalRow], bk: DataFrame,
-                                 tablePrefix: String, maxDist: Int)
+  private def driverAppendSlices(dk: DriverKeys, bk: DataFrame,
+                                 tablePrefix: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = bk.sparkSession
-    val idType = bk.schema("id").dataType
-    val ord = TypeUtils.getInterpretedOrdering(idType)
-    val keys = rows.groupBy(_.getUTF8String(1)).toSeq.map { case (k, rs) =>
-      val ids = rs.filterNot(_.isNullAt(0)).map(_.get(0, idType))
-      (k, if (ids.isEmpty) null else ids.min(ord))
-    }
     val standing = ConnectedComponents.probe(
-        spark.table(s"${tablePrefix}_members").select("key"), "key", keys.map(_._1))
+        spark.table(s"${tablePrefix}_members").select("key"), "key", dk.keys)
       .map(_.getUTF8String(0)).toSet
-    val novel = keys.filterNot(k => standing(k._1))
-    val dk = distinctKeys(bk)
+    val novel = dk.keys.indices.filterNot(i => standing(dk.keys(i)))
+    val keys = distinctKeys(bk)
     def local(plan: DataFrame, out: Seq[InternalRow]): DataFrame =
       ConnectedComponents.localFrame(spark, plan.schema, out)
-    (local(bk, rows.toSeq),
-      local(dk, novel.map { case (k, g) => InternalRow(k, g) }),
-      local(variantPostings(dk, maxDist),
-        for ((k, g) <- novel; v <- deletionVariantHashes(k.toString, maxDist))
-          yield InternalRow(g, k.numChars, v)))
+    (local(bk, dk.rows.toSeq),
+      local(keys, novel.map(i => InternalRow(dk.keys(i), dk.gids(i)))),
+      local(variantPostings(keys, dk.maxDist), dk.postings(novel)
+        .map { case (g, _, len, v) => InternalRow(g, len, v) }.toSeq))
   }
 
   /** The append's novelty check, shaped for the standing side: the
@@ -629,9 +657,8 @@ object EditDistanceJoin {
     val plan = matchAgainstPostings(lk, variantPostings(ldk, maxDist), ldk,
       table("postings"), table("keys"), table("members"), maxDist,
       expandRight)
-    ConnectedComponents.smallRows(lk).fold(plan)(
-      driverServe(_, lk.schema("id").dataType, plan, table, maxDist,
-        expandRight))
+    driverKeys(lk, maxDist).fold(plan)(
+      driverServe(_, plan, table, expandRight))
   }
 
   /** The variant index's published `max_dist`, read on the driver (no
@@ -656,71 +683,42 @@ object EditDistanceJoin {
       new org.apache.hadoop.fs.Path(postings.location).getParent, "meta").toString
   }
 
-  /** [[serveAgainst]] on the driver, for a batch of at most
-    * [[ConnectedComponents]]' row cap: the batch's keys, lengths
-    * (`numChars`) and variant hashes ([[deletionVariantHashes]]) are
-    * computed here, and the standing tables are read only through
-    * broadcast joins against local relations: `_postings` by the
-    * batch's hashes, broadcast in turn against `_keys` by gid, and for
-    * the pairs form `_members` by the verified keys
-    * ([[ConnectedComponents.probe]]). The candidate, band,
-    * verify (Spark's own `UTF8String.levenshteinDistance`) and
-    * expansion rules are [[matchAgainstPostings]]'s; a batch key whose
-    * ids are all null has no gid there and matches nothing here either.
-    * Returns a local frame with `plan`'s schema.
+  /** [[serveAgainst]] on the driver ([[DriverKeys]]), reading the
+    * standing tables only through broadcast joins against local
+    * relations: `_postings` by the batch's hashes, broadcast in turn
+    * against `_keys` by gid (each posting meets all its gid's keys, as
+    * [[matchAgainstPostings]]' re-attach), and for the pairs form
+    * `_members` by the verified keys ([[ConnectedComponents.probe]]).
     */
-  private def driverServe(lk: Array[InternalRow], idType: DataType,
-                          plan: DataFrame, table: String => DataFrame,
-                          maxDist: Int, expandRight: Boolean): DataFrame = {
-    val byKey = lk.groupBy(_.getUTF8String(1))
-      .filter(_._2.exists(!_.isNullAt(0))).toArray
-    val keys = byKey.map(_._1)
-    val lens = keys.map(_.numChars)
-    val variants = keys.map(k => deletionVariantHashes(k.toString, maxDist))
-    // one query for postings and keys: the postings that share a batch
-    // hash, joined to their keys
+  private def driverServe(dk: DriverKeys, plan: DataFrame,
+                          table: String => DataFrame,
+                          expandRight: Boolean): DataFrame = {
     val postings = table("postings")
     val keyTable = table("keys")
     val gidType = keyTable.schema("gid").dataType
     val hashes = ConnectedComponents.probeKeys(postings.sparkSession,
-      LongType, variants.flatten.distinct.toSeq)
+      LongType, dk.byHash.keys.toSeq)
     val matched = postings.join(broadcast(hashes),
       postings("__v") === hashes("__probe"), "left_semi")
-    val posted = if (keys.isEmpty) Array.empty[InternalRow]
+    val posted = if (dk.matchable.isEmpty) Array.empty[InternalRow]
       else ConnectedComponents.collectRows(keyTable
           .join(broadcast(matched), keyTable("gid") === matched("gid"))
           .select(keyTable("gid"), keyTable("key"), matched("__len"),
             matched("__v")))
-    // one pass over the postings: each one's batch keys by hash, kept
-    // within the length band, gives the distinct (batch key, gid)
-    // candidates and the candidate gids' keys
-    val batchByHash = mutable.LongMap.empty[List[Int]]
-    for (i <- keys.indices; v <- variants(i))
-      batchByHash(v) = i :: batchByHash.getOrElse(v, Nil)
-    val cand = mutable.HashSet.empty[(Int, Any)]
-    val rightKeys = mutable.HashMap.empty[Any, mutable.Set[UTF8String]]
-    for (p <- posted; i <- batchByHash.getOrElse(p.getLong(3), Nil)
-         if math.abs(lens(i) - p.getInt(2)) <= maxDist) {
-      val g = p.get(0, gidType)
-      cand += ((i, g))
-      rightKeys.getOrElseUpdate(g, mutable.HashSet.empty) += p.getUTF8String(1)
-    }
-    val verified = for ((i, g) <- cand.toSeq; rk <- rightKeys(g)
-                        if keys(i).levenshteinDistance(rk, maxDist) >= 0)
-      yield (i, rk, g, keys(i).levenshteinDistance(rk))
-    def leftIds(i: Int) = byKey(i)._2.iterator.map(_.get(0, idType))
+    val verified = dk.verified(posted.iterator.map(p =>
+      (p.get(0, gidType), p.getUTF8String(1), p.getInt(2), p.getLong(3))))
     val out = if (expandRight) {
       val members = table("members").select("id", "key")
       val memberType = members.schema("id").dataType
       val byRightKey = ConnectedComponents.probe(members, "key",
-          verified.map(_._2).distinct)
+          verified.map(_._3).distinct)
         .groupBy(_.getUTF8String(1))
-      for ((i, rk, _, d) <- verified; l <- leftIds(i);
+      for ((i, _, rk, d) <- verified; l <- dk.ids(i);
            m <- byRightKey.getOrElse(rk, Array.empty))
-        yield InternalRow(l, keys(i), m.get(0, memberType), rk, d)
+        yield InternalRow(l, dk.keys(i), m.get(0, memberType), rk, d)
     } else
-      for ((i, rk, g, d) <- verified; l <- leftIds(i))
-        yield InternalRow(l, keys(i), g, rk, d)
+      for ((i, g, rk, d) <- verified; l <- dk.ids(i))
+        yield InternalRow(l, dk.keys(i), g, rk, d)
     ConnectedComponents.localFrame(plan.sparkSession, plan.schema, out)
   }
 

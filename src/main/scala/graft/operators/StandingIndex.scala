@@ -178,7 +178,9 @@ private[graft] object StandingIndex {
 
   /** Corpus size of an index dir from the parquet FOOTERS — a
     * driver-side metadata read (no Spark job), the cost class every
-    * dispatch input and drift guard is held to.
+    * dispatch input and drift guard is held to: behind
+    * [[Ann.indexVecCount]], the ANN tiers' drift guards and
+    * [[Ann.annSearchAuto]]'s footer pricing.
     */
   def parquetRowCount(spark: SparkSession, dir: String): Long =
     dirStats(spark, dir)._2

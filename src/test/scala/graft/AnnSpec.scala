@@ -1115,7 +1115,7 @@ class AnnSpec extends SparkSpec {
         "— re-run graft.tools.QuantTune and republish " +
         "(writeSignIndex) before serving"))
     // AT the bar is within it — the guard fires strictly past it, the
-    // same predicate dispatch uses to exclude (Ann.driftExcluded)
+    // same predicate dispatch uses to exclude (StandingIndex.driftExcluded)
     StandingIndex.requireWithinDriftBar(200L, 100L, 2.0, "ivf-sq8", "/d",
       "routing", "IvfSq8Tune", "writeSq8IndexByCell")
   }

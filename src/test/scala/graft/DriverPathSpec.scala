@@ -70,6 +70,10 @@ class DriverPathSpec extends SparkSpec {
     (109L, "Nowhere Inc"), (110L, "Initec"), (111L, "Zzyzx Ltd."))
 
   private def frame(rows: Seq[(Long, String)], idType: String): DataFrame =
+    withNullIds(rows.map { case (i, n) => (Option(i), n) }, idType)
+
+  /** `frame` whose rows may carry a null id (None). */
+  private def withNullIds(rows: Seq[(Option[Long], String)], idType: String): DataFrame =
     rows.toDF("id", "name").select(col("id").cast(idType).as("id"), col("name"))
 
   private def dropIndex(prefix: String): Unit =
@@ -82,7 +86,11 @@ class DriverPathSpec extends SparkSpec {
       val dir = java.nio.file.Files.createTempDirectory("graft_driver_serve").toString
       EditDistanceJoin.writeVariantIndexBucketed(frame(dictRows, t), "id", "name",
         2, dir, prefix)
-      val batch = frame(batchRows, t)
+      // plus null ids: one in the duplicated batch key, and one alone
+      // under a key one edit from a standing name, which matches nothing
+      // on either path (its key has no gid)
+      val batch = withNullIds(batchRows.map { case (i, n) => (Option(i), n) } ++
+        Seq((None, "Acme Gmbh"), (None, "Umbrella Corp.")), t)
       def serves(day: String): Unit = for (d <- Seq(1, 2)) {
         val reps = onBothPaths(s"$day reps maxDist=$d")(
           EditDistanceJoin.repsAgainstIndexBucketed(batch, "id", "name", d, prefix))
@@ -151,9 +159,8 @@ class DriverPathSpec extends SparkSpec {
       // day 1, a local frame: the serve batch (a duplicated batch key,
       // an existing key under a new id, a null key, astral-plane keys)
       // plus keys whose ids are all null, one of them astral
-      val day1 = (batchRows.map { case (i, n) => (Option(i), n) } ++
-          Seq((None, "Ghost Co"), (None, "Ghost Co"), (None, "x😀z")))
-        .toDF("id", "name").select(col("id").cast(t).as("id"), col("name"))
+      val day1 = withNullIds(batchRows.map { case (i, n) => (Option(i), n) } ++
+        Seq((None, "Ghost Co"), (None, "Ghost Co"), (None, "x😀z")), t)
       // day 2, a checkpoint (its rows come back in a job): an all-null
       // key of day 1 under a real id, an existing astral key, a new name
       val day2 = frame(Seq((301L, "Ghost Co"), (302L, "x😀y"), (303L, "Brand New")), t)
@@ -254,14 +261,33 @@ class DriverPathSpec extends SparkSpec {
       assert(rows.size > 3)
       onBothPaths("empty")(EditDistanceJoin.idPairs(df.limit(0), "id", "name", d))
     }
-    // a null id takes the distributed plan, whose null orientation rules
-    // the driver path does not repeat
-    val withNullId = frame(batchRows :+ ((0L, "Acme GmbH")), "int")
-      .select(when(col("id") === 0, lit(null)).otherwise(col("id")).as("id"), col("name"))
-    val got = EditDistanceJoin.idPairs(withNullId, "id", "name", 1)
-    assert(!isLocal(got))
-    assert(rowBag(got) ==
-      rowBag(ConnectedComponents.onStarLoop(EditDistanceJoin.idPairs(withNullId, "id", "name", 1))))
+  }
+
+  test("idPairs with null ids: the driver path orients and skips them as the distributed plan does") {
+    // null ids in both duplicated groups of a verified cross pair (Acme
+    // GmbH, gid 1, and Acme Gmbh, gid 102), so each side of it carries a
+    // null; Zzyzx Ltd. under a null id only, so its key has no gid and
+    // never pairs with Zzyzx Ltd; and a key of two null ids
+    val rows = (dictRows ++ batchRows).map {
+      case (111L, n) => (None, n)
+      case (i, n) => (Option(i), n)
+    } ++ Seq((None, "Acme GmbH"), (None, "Acme Gmbh"), (None, "Ghost Co"), (None, "Ghost Co"))
+    for (t <- idTypes) {
+      val Seq(one, seven, oneOhTwo) = frame(Seq((1L, ""), (7L, ""), (102L, "")), t)
+        .collect().toSeq.map(_.get(0))
+      for (d <- Seq(1, 2)) withClue(s"[$t ids, maxDist=$d] ") {
+        val got = onBothPaths("idPairs")(
+          EditDistanceJoin.idPairs(withNullIds(rows, t), "id", "name", d))
+        // a null on the smaller gid's side gives (y, null), one on the
+        // larger's (null, x), one on each (null, null)
+        for (p <- Seq(Seq(oneOhTwo, null), Seq(null, one), Seq(null, null)))
+          assert(got.contains(p), s"$p in ${got.keys}")
+        // the cross pair's 2 + 4 + 1 null-holding pairs and no others:
+        // intra-group pairs skip null ids
+        assert(got.filter(_._1.contains(null)).values.sum == 7, got.keys)
+        assert(!got.keys.exists(_.contains(seven)), got.keys)
+      }
+    }
   }
 
   test("incrementalAssign and mergeRepublish: the driver path equals the distributed plan") {
@@ -453,6 +479,9 @@ class DriverPathSpec extends SparkSpec {
       assert(rowBag(spark.table(d)) == rowBag(spark.table(p)), d)
     info(s"jobs, driver path / distributed plan: variant append $driverVar / $planVar, " +
       s"key append $driverKey / $planKey")
+    // the variant append's 6: the batch collect, the `_members` probe's
+    // broadcast and its collect (a broadcast join against a local
+    // relation runs its own job in Spark 4.1.2), and the three writes
     assert(driverVar <= 6, s"$driverVar jobs for the variant append on the driver path")
     assert(driverKey == 1, s"$driverKey jobs for the key append on the driver path")
     assert(driverVar < planVar, s"variant append: driver path $driverVar jobs vs plan $planVar")
