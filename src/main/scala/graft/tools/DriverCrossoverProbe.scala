@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
+import scala.util.Random
+
 /** Times each driver path against its distributed plan, for the
   * crossover tables behind the caps in `ConnectedComponents`:
   *
@@ -34,8 +36,11 @@ import org.apache.spark.sql.functions._
   *    the published tables (copied outside the timing), so no run
   *    reads another's files.
   *
-  * Each cell is the median of 5 timed runs after one warm run per path;
-  * outputs go to the noop sink. Sizes past a cap still take the driver
+  * Each part first runs the rows of its first size once per path,
+  * untimed. Then each cell is the median of 5 timed runs after one more
+  * warm run per path; outputs go to the noop sink. A size's batch is
+  * drawn from an RNG seeded by the size, so it is the same whichever
+  * sizes are listed with it. Sizes past a cap still take the driver
   * path here, so a table can look past it.
   *
   * Usage: `runMain graft.tools.DriverCrossoverProbe [cc|serve|append]
@@ -72,21 +77,31 @@ object DriverCrossoverProbe {
 
   /** One table row: 5 timed runs per side after a warm run each, the
     * driver path under `driver`'s caps, the distributed plan under
-    * `distributed`'s; `fresh` runs untimed before each.
+    * `distributed`'s; `fresh` runs untimed before each. A `warm` row
+    * runs each side once and prints nothing.
     */
   private def row(label: String, driver: DriverCaps, distributed: DriverCaps,
-                  fresh: () => Unit = () => ())(body: => Unit): Unit = {
+                  warm: Boolean, fresh: () => Unit = () => ())(body: => Unit): Unit = {
     def med(x: Seq[Double]): Double = x.sorted.apply(x.size / 2)
     def run(caps: DriverCaps): Double = { fresh(); timed(caps)(body) }
     run(driver); run(distributed)
-    val runs = (1 to 5).map(_ => (run(driver), run(distributed)))
-    val (d, l) = (runs.map(_._1), runs.map(_._2))
-    println(f"[xo] $label%-28s driver_ms=${med(d)}%8.0f " +
-      f"distributed_ms=${med(l)}%8.0f  driver=${d.map(_.round).mkString("/")} " +
-      s"distributed=${l.map(_.round).mkString("/")}")
+    if (!warm) {
+      val runs = (1 to 5).map(_ => (run(driver), run(distributed)))
+      val (d, l) = (runs.map(_._1), runs.map(_._2))
+      println(f"[xo] $label%-28s driver_ms=${med(d)}%8.0f " +
+        f"distributed_ms=${med(l)}%8.0f  driver=${d.map(_.round).mkString("/")} " +
+        s"distributed=${l.map(_.round).mkString("/")}")
+    }
   }
 
   private val defaults = ConnectedComponents.driverFinishCap.value
+
+  /** A part's cases, led by its `first` ones flagged warm: they run
+    * untimed before any timed row, so the first timed size is not still
+    * warming.
+    */
+  private def withWarmUp[A](first: Seq[A], all: Seq[A]): Seq[(A, Boolean)] =
+    first.map(_ -> true) ++ all.map(_ -> false)
 
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -105,10 +120,11 @@ object DriverCrossoverProbe {
           .localCheckpoint(true)
         (spark.range(e / 2 * 3).toDF("id").localCheckpoint(true), ed)
     }
-    for (shape <- Seq("random", "paths"); e <- sizes) {
+    val cases = for (shape <- Seq("random", "paths"); e <- sizes) yield (shape, e)
+    for (((shape, e), warm) <- withWarmUp(cases.filter(_._2 == sizes.head), cases)) {
       val (v, ed) = graph(shape, e)
       row(s"cc $shape edges=$e", defaults.copy(edges = Long.MaxValue),
-        defaults.copy(edges = 0L))(noop(ConnectedComponents.run(v, ed)))
+        defaults.copy(edges = 0L), warm)(noop(ConnectedComponents.run(v, ed)))
     }
   }
 
@@ -117,15 +133,14 @@ object DriverCrossoverProbe {
     * names.
     */
   private final class Names(seed: Int) {
-    private val rnd = new scala.util.Random(seed)
     private val syllables = Seq("ka", "ro", "vel", "ti", "bra", "mun", "se", "dor",
       "li", "an", "zu", "pe", "gor", "ni", "sta", "wen")
-    private def word(): String =
+    private def word(rnd: Random): String =
       (1 to 2 + rnd.nextInt(3)).map(_ => syllables(rnd.nextInt(syllables.size))).mkString
-    private def name(): String =
-      (1 to 1 + rnd.nextInt(3)).map(_ => word().capitalize).mkString(" ") +
+    private def name(rnd: Random): String =
+      (1 to 1 + rnd.nextInt(3)).map(_ => word(rnd).capitalize).mkString(" ") +
         Seq(" GmbH", " Ltd", " AG", " SA")(rnd.nextInt(4))
-    private def edit(s: String): String = {
+    private def edit(rnd: Random, s: String): String = {
       val i = rnd.nextInt(s.length)
       rnd.nextInt(3) match {
         case 0 => s.substring(0, i) + s.substring(i + 1)
@@ -133,16 +148,24 @@ object DriverCrossoverProbe {
         case _ => s.substring(0, i) + "q" + s.substring(i + 1)
       }
     }
-    val dict: IndexedSeq[String] = (0 until 8000).map(_ => name())
-    /** n (id, name) rows, ids from 1,000,000 up. */
-    def batch(n: Long): Seq[(Long, String)] = (0L until n).map { i =>
-      val base = dict(rnd.nextInt(dict.size))
-      (1000000L + i, rnd.nextInt(4) match {
-        case 0 => base
-        case 1 => edit(base)
-        case 2 => edit(edit(base))
-        case _ => name()
-      })
+    val dict: IndexedSeq[String] = {
+      val rnd = new Random(seed)
+      (0 until 8000).map(_ => name(rnd))
+    }
+    /** n (id, name) rows, ids from 1,000,000 up, drawn from an RNG seeded
+      * by n.
+      */
+    def batch(n: Long): Seq[(Long, String)] = {
+      val rnd = new Random(n)
+      (0L until n).map { i =>
+        val base = dict(rnd.nextInt(dict.size))
+        (1000000L + i, rnd.nextInt(4) match {
+          case 0 => base
+          case 1 => edit(rnd, base)
+          case 2 => edit(rnd, edit(rnd, base))
+          case _ => name(rnd)
+        })
+      }
     }
   }
 
@@ -159,7 +182,7 @@ object DriverCrossoverProbe {
         EditDistanceJoin.idPairs(corpus, "id", "name", 2)
           .select(col("id_a").as("src"), col("id_b").as("dst")))
       .localCheckpoint(true)
-    for (n <- sizes) {
+    for ((n, warm) <- withWarmUp(sizes.take(1), sizes)) {
       val batch = names.batch(n).toDF("id", "name").localCheckpoint(true)
       def edges(): DataFrame =
         EditDistanceJoin.repsAgainstIndexBucketed(batch, "id", "name", 2, table)
@@ -171,15 +194,15 @@ object DriverCrossoverProbe {
       // condensed CC's run() keeps its own driver finish
       val (driver, distributed) =
         (defaults.copy(rows = Int.MaxValue - 1), defaults.copy(rows = 0))
-      row(s"reps rows=$n", driver, distributed)(noop(
+      row(s"reps rows=$n", driver, distributed, warm)(noop(
         EditDistanceJoin.repsAgainstIndexBucketed(batch, "id", "name", 2, table)))
-      row(s"idPairs rows=$n", driver, distributed)(noop(
+      row(s"idPairs rows=$n", driver, distributed, warm)(noop(
         EditDistanceJoin.idPairs(batch, "id", "name", 2)))
       val e = ConnectedComponents.onStarLoop(edges())
-      row(s"incrementalAssign edges=${e.count()}", driver, distributed)(noop(
+      row(s"incrementalAssign edges=${e.count()}", driver, distributed, warm)(noop(
         ConnectedComponents.incrementalAssign(standing, batch.select("id"), e)))
     }
-    Seq("postings", "keys", "members", "meta")
+    Seq("postings", "keys", "members")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${table}_$t"))
   }
 
@@ -219,16 +242,16 @@ object DriverCrossoverProbe {
     val dict = names.dict.toSet
     val (driver, distributed) =
       (defaults.copy(rows = Int.MaxValue - 1), defaults.copy(rows = 0))
-    for (n <- sizes) {
+    for ((n, warm) <- withWarmUp(sizes.take(1), sizes)) {
       val rows = names.batch(n)
       // the batch as a daily job reads it; its novel rows as the driver
       // holds them after the key serve
       val batch = rows.toDF("id", "name").localCheckpoint(true)
       val novel = rows.filterNot(r => dict(r._2)).toDF("id", "name")
-      row(s"variant append rows=$n", driver, distributed, () => fresh())(
+      row(s"variant append rows=$n", driver, distributed, warm, () => fresh())(
         EditDistanceJoin.appendVariantIndexBucketed(batch, "id", "name", table))
       row(s"key append rows=$n (${novel.count()} novel)", driver, distributed,
-        () => fresh())(Dedup.appendKeyIndexBucketed(novel, "name", s"${table}_key"))
+        warm, () => fresh())(Dedup.appendKeyIndexBucketed(novel, "name", s"${table}_key"))
     }
     for (p <- Seq(base, table); t <- variantTables :+ "key")
       spark.sql(s"DROP TABLE IF EXISTS ${p}_$t")

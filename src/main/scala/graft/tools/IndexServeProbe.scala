@@ -1,19 +1,17 @@
 package graft.tools
 
 import graft.{GraftLocalDir, Tables}
-import graft.operators.{Ann, ConnectedComponents, Dedup, EditDistanceJoin, IvfFixture, NearDup, PqFixture, Winnow}
+import graft.operators.{Ann, Dedup, EditDistanceJoin, IvfFixture, NearDup, PqFixture}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Publish/serve cost split for the standing-index tiers (dev
-  * scratch). By fixture convention every `*_indexed` / `*_incr_*` BENCH
-  * query re-pays its index PUBLISH inside the timed body, so the
-  * write-once/serve-many win is invisible in BENCH numbers (q_pq_search
-  * vs q_pq_search_indexed reads as a wash). This probe times the two
-  * phases separately: publish once (what the nightly index build pays),
-  * then serve repeatedly against the standing index (what every batch
-  * pays forever after) — the number pair a 100 TB operator actually
-  * budgets. Serve runs materialize through the noop sink like Bench.
+/** Small-files drift of the standing-index tiers (dev scratch): serve
+  * at 0 and at 20 daily appends, then `Layout.compactIfNeeded` through
+  * its 16-file trigger (which must fire at 20 appends and no-op right
+  * after), then serve again. This prices the drift the trigger is set
+  * against. Serve runs materialize through the noop sink like Bench.
+  * The publish/serve split per tier is printed by
+  * `graft.tools.ScaleProbe`'s standing-index tiers, at 1x/4x/10x.
   */
 object IndexServeProbe {
   def main(args: Array[String]): Unit = {
@@ -54,155 +52,8 @@ object IndexServeProbe {
 
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
-    val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
 
-    // 1. exact fingerprint key index (q_dedup_incr_indexed's tiers)
-    locally {
-      val fp = docs.select(col("doc_id"), col("source"),
-        graft.operators.TextOps.fingerprint(col("text")).as("fp"))
-      val (pub, _) = time(Dedup.writeKeyIndexBucketed(
-        fp.filter(col("source") =!= "src0"), "fp",
-        s"$scratch/fp_idx", "idxprobe_fp"))
-      val srv = serveMin(3)(Dedup.incrementalAgainstIndex(
-        fp.filter(col("source") === "src0").select("doc_id", "fp"),
-        "fp", "idxprobe_fp"))
-      results += (("fp_exact", pub, srv))
-    }
-
-    // 2. LSH band index, bucketed catalog form (q_near_dedup_incr_bucketed)
-    locally {
-      val (pub, _) = time(NearDup.writeBandIndexBucketed(
-        docs.filter(col("source") =!= "src0"), "doc_id", "text", 3,
-        s"$scratch/lsh_idx", "idxprobe_lsh"))
-      val srv = serveMin(3)(NearDup.incrementalNearDupPairsBucketed(
-        docs.filter(col("source") === "src0"), "doc_id", "text", 3, 0.5,
-        "idxprobe_lsh"))
-      results += (("lsh_bands", pub, srv))
-    }
-
-    // 2b. the INCREMENTAL PUBLISH verbs (round 12): for these rows the
-    // columns read (monolithic nightly rebuild, batch append) — the
-    // publish-side saving write-once/serve-many buys when the nightly
-    // job appends the day's accepted batch instead of re-distincting /
-    // re-shingling the corpus.
-    locally {
-      NearDup.writeBandIndexBucketed(
-        docs.filter(col("source") =!= "src0" && col("source") =!= "src1"),
-        "doc_id", "text", 3, s"$scratch/lsh_a0", "idxprobe_lsh_a0")
-      val (reb, _) = time(NearDup.writeBandIndexBucketed(
-        docs.filter(col("source") =!= "src0"), "doc_id", "text", 3,
-        s"$scratch/lsh_reb", "idxprobe_lsh_reb"))
-      val (app, _) = time(NearDup.appendBandIndexBucketed(
-        docs.filter(col("source") === "src1"), "doc_id", "text", 3,
-        "idxprobe_lsh_a0"))
-      results += (("lsh_append", reb, app))
-    }
-    locally {
-      val fp = docs.select(col("doc_id"), col("source"),
-        graft.operators.TextOps.fingerprint(col("text")).as("fp"))
-      Dedup.writeKeyIndexBucketed(
-        fp.filter(col("source") =!= "src0" && col("source") =!= "src1"),
-        "fp", s"$scratch/fp_a0", "idxprobe_fp_a0")
-      val (reb, _) = time(Dedup.writeKeyIndexBucketed(
-        fp.filter(col("source") =!= "src0"), "fp",
-        s"$scratch/fp_reb", "idxprobe_fp_reb"))
-      // the anti join producing the survivors is the SERVE's cost (it
-      // ran anyway to admit the batch) — materialize it untimed so the
-      // append row prices only the publish increment, the write
-      val novel = Dedup.incrementalAgainstIndex(
-        fp.filter(col("source") === "src1").select("doc_id", "fp"),
-        "fp", "idxprobe_fp_a0").localCheckpoint(true)
-      val (app, _) = time(
-        Dedup.appendKeyIndexBucketed(novel, "fp", "idxprobe_fp_a0"))
-      results += (("fp_append", reb, app))
-    }
-
-    // 3. eval-suite 13-gram contamination index (q_decontam_indexed)
-    locally {
-      val (pub, _) = time(Winnow.writeEvalNgramIndex(
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-        s"$scratch/ngram_idx"))
-      val srv = serveMin(3)(Winnow.ngramContaminationAgainstIndex(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        s"$scratch/ngram_idx"))
-      results += (("eval_13gram", pub, srv))
-    }
-
-    // 4. deletion-variant dictionary index (q_dict_match_indexed)
-    locally {
-      val parts = Tables.part(spark, sfDir)
-      val dirty = parts.filter(col("p_partkey") % 5 === 0)
-        .select(col("p_partkey").as("dirty_id"),
-          concat(
-            expr("substring(p_name, 1, CAST((p_partkey DIV 5) % length(p_name) AS INT))"),
-            expr("substring(p_name, CAST((p_partkey DIV 5) % length(p_name) AS INT) + 2)"))
-            .as("dirty_name"))
-      val (pub, _) = time(EditDistanceJoin.writeVariantIndexBucketed(
-        parts.select(col("p_partkey"), col("p_name")), "p_partkey", "p_name",
-        1, s"$scratch/var_idx", "idxprobe_var"))
-      val srv = serveMin(3)(EditDistanceJoin.pairsAgainstIndexBucketed(
-        dirty, "dirty_id", "dirty_name", 1, "idxprobe_var"))
-      results += (("dict_variants", pub, srv))
-    }
-
-    // 5. standing CC labels + variant index -> incremental component
-    // assignment (q_cluster_cc_incremental re-pays BOTH publishes
-    // in-bench; this row prices the serve alone)
-    locally {
-      val c = Tables.customer(spark, sfDir)
-      val corpus = c.filter(col("c_custkey") % 3 =!= 0)
-      val batch = c.filter(col("c_custkey") % 3 === 0)
-      val (pub, _) = time {
-        ConnectedComponents.run(
-            corpus.select(col("c_custkey").as("id")),
-            graft.operators.EditDistanceJoin
-              .idPairs(corpus, "c_custkey", "c_name", 1)
-              .select(col("id_a").as("src"), col("id_b").as("dst")))
-          .write.mode("overwrite").parquet(s"$scratch/cc_labels")
-        EditDistanceJoin.writeVariantIndexBucketed(
-          corpus.select(col("c_custkey"), col("c_name")),
-          "c_custkey", "c_name", 1, s"$scratch/cc_var_idx", "idxprobe_cc_var")
-      }
-      val standing = spark.read.parquet(s"$scratch/cc_labels")
-      def edges = {
-        val cross = EditDistanceJoin.repsAgainstIndexBucketed(
-            batch.select(col("c_custkey"), col("c_name")),
-            "c_custkey", "c_name", 1, "idxprobe_cc_var")
-          .select(col("left_id").as("src"), col("right_rep_id").as("dst"))
-        val intra = EditDistanceJoin.idPairs(batch, "c_custkey", "c_name", 1)
-          .select(col("id_a").as("src"), col("id_b").as("dst"))
-        cross.unionByName(intra)
-      }
-      val srv = serveMin(3)(ConnectedComponents.incrementalAssign(standing,
-        batch.select(col("c_custkey").as("id")), edges))
-      results += (("cc_assign", pub, srv))
-      // the lifecycle's third phase: the NIGHTLY republish folding the
-      // batch into the standing labels (condensed CC again + one
-      // corpus-linear relabel join + the new standing write)
-      val rep = (1 to 3).map { i =>
-        time(ConnectedComponents.mergeRepublish(standing,
-            batch.select(col("c_custkey").as("id")), edges)
-          .write.mode("overwrite").parquet(s"$scratch/cc_labels_next$i"))._1
-      }.min
-      results += (("cc_republish", pub, rep))
-    }
-
-    // 6. IVFPQ code index (q_pq_search_indexed)
-    locally {
-      val (pub, _) = time(Ann.writePqIndex(emb, "vec_id", "embedding",
-        PqFixture.model, s"$scratch/pq_idx", Some(IvfFixture.model)))
-      val srv = serveMin(3)(Ann.pqSearchIndexed(emb, "vec_id", "embedding",
-        PqFixture.model, col("vec_id") % 50 === 0, 5, s"$scratch/pq_idx",
-        Some(IvfFixture.model)))
-      results += (("pq_codes", pub, srv))
-    }
-
-    println(f"${"tier"}%-12s ${"publish_s"}%9s ${"serve_s"}%9s ${"serve/pub"}%9s")
-    results.foreach { case (t, p, s) =>
-      println(f"$t%-12s $p%9.2f $s%9.2f ${s / p}%9.2f")
-    }
-
-    // 7. COMPACTION (round 13): every bucketed append lays down one file
+    // COMPACTION (round 13): every bucketed append lays down one file
     // set per bucket, so day-N serving scans N file sets — this prices
     // the small-files drift (serve at 0 vs 20 appends) and what
     // compaction buys back (serve after the in-place rewrite,

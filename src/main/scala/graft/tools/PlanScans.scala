@@ -25,8 +25,12 @@ object PlanScans {
   /** (numFiles, bytes) planned for the scans whose root path ends with
     * `suffix`, off the EXECUTED plan of an already-collected df.
     */
-  def scanOf(df: DataFrame, suffix: String): (Long, Long) = {
-    val scans = allScans(df.queryExecution.executedPlan)
+  def scanOf(df: DataFrame, suffix: String): (Long, Long) =
+    scanOf(df.queryExecution.executedPlan, suffix)
+
+  /** The same off an executed plan, e.g. a noop-sink write's. */
+  def scanOf(plan: SparkPlan, suffix: String): (Long, Long) = {
+    val scans = allScans(plan)
       .filter(_.relation.location.rootPaths.exists(_.toString.endsWith(suffix)))
     (scans.flatMap(_.metrics.get("numFiles").map(_.value)).sum,
       scans.flatMap(_.metrics.get("filesSize").map(_.value)).sum)

@@ -40,4 +40,13 @@ class ToolReferenceSpec extends AnyFunSuite {
     assert(dangling.isEmpty,
       dangling.map { case (at, n) => s"$at: graft.tools.$n" }.mkString("\n"))
   }
+
+  test("every row ScaleProbe sweeps is a SparkEntry row") {
+    // a renamed or mistyped row fails here instead of dropping out of
+    // the sweep
+    val rows = graft.tools.ScaleProbe.rows
+    assert(rows.nonEmpty)
+    val unknown = rows.filterNot(SparkEntry.queries.keySet)
+    assert(unknown.isEmpty, unknown)
+  }
 }
