@@ -233,13 +233,14 @@ object ConnectedComponents {
     * ([[EditDistanceJoin.pairsAgainstIndexBucketed]],
     * [[EditDistanceJoin.repsAgainstIndexBucketed]]) and appends
     * ([[EditDistanceJoin.appendVariantIndexBucketed]],
-    * [[Dedup.appendKeyIndexBucketed]]), the keyed rows of
-    * [[EditDistanceJoin.idPairs]] and the batch edges of
-    * [[incrementalAssign]] and [[mergeRepublish]]. At or under it the
-    * input is collected once and the operation finishes on the driver,
-    * touching standing tables only through broadcast probes; above it
-    * the distributed plan runs, after the one capped collect that
-    * found the input too big.
+    * [[Dedup.appendKeyIndexBucketed]]) and the batch edges of
+    * [[incrementalAssign]] and [[mergeRepublish]]
+    * ([[EditDistanceJoin.idPairs]] has its own budget,
+    * [[IdPairsMaxPostings]]). At or under it the input is collected once
+    * and the operation finishes on the driver, touching standing tables
+    * only through broadcast probes; above it the distributed plan runs,
+    * after the one bounded collect ([[smallRows]]) that found the input
+    * too big.
     *
     * The cap is the measured crossover of the variant serve, the one
     * driver path whose cost grows fast with the batch: a batch key
@@ -252,20 +253,19 @@ object ConnectedComponents {
     * keeps [[run]]'s driver finish; the assign's input is the reps ∪
     * idPairs edges):
     *
-    * | batch rows | reps serve | idPairs | incrementalAssign (edges) | variant append | key append (novel rows) |
-    * |---|---|---|---|---|---|
-    * | 120 | 729 / 1042 | 191 / 584 | 203 / 566 (190) | 853 / 1401 | 291 / 387 (86) |
-    * | 250 | 689 / 793 | 204 / 615 | 164 / 417 (411) | 1034 / 1227 | 282 / 392 (183) |
-    * | 300 | 731 / 787 | 181 / 422 | 164 / 381 (491) | 973 / 1101 | 260 / 342 (213) |
-    * | 375 | 820 / 775 | 211 / 405 | 124 / 298 (563) | 1039 / 1097 | 304 / 375 (284) |
-    * | 500 | 837 / 562 | 236 / 355 | 129 / 326 (795) | 1218 / 1118 | 259 / 367 (355) |
-    * | 1000 | 1694 / 815 | 415 / 492 | 147 / 392 (1555) | 2136 / 1120 | 294 / 413 (732) |
-    * | 2000 | 3277 / 951 | 649 / 598 | 178 / 380 (3096) | 4178 / 1451 | 261 / 308 (1476) |
+    * | batch rows | reps serve | incrementalAssign (edges) | variant append | key append (novel rows) |
+    * |---|---|---|---|---|
+    * | 120 | 729 / 1042 | 203 / 566 (190) | 853 / 1401 | 291 / 387 (86) |
+    * | 250 | 689 / 793 | 164 / 417 (411) | 1034 / 1227 | 282 / 392 (183) |
+    * | 300 | 731 / 787 | 164 / 381 (491) | 973 / 1101 | 260 / 342 (213) |
+    * | 375 | 820 / 775 | 124 / 298 (563) | 1039 / 1097 | 304 / 375 (284) |
+    * | 500 | 837 / 562 | 129 / 326 (795) | 1218 / 1118 | 259 / 367 (355) |
+    * | 1000 | 1694 / 815 | 147 / 392 (1555) | 2136 / 1120 | 294 / 413 (732) |
+    * | 2000 | 3277 / 951 | 178 / 380 (3096) | 4178 / 1451 | 261 / 308 (1476) |
     *
     * The reps serve wins up to 300 rows and loses from 375 (earlier
-    * runs read a tie at 300–375); `idPairs` wins up to 1,000 rows and
-    * loses narrowly at 2,000, and the condensed CC wins at every size
-    * measured. The appends (`append`, a later run at the same settings, each
+    * runs read a tie at 300–375), and the condensed CC wins at every
+    * size measured. The appends (`append`, a later run at the same settings, each
     * run into a fresh copy of the index and of a key index over the same
     * names) cross over no earlier: the variant append wins up to 300
     * rows, ties at 375 and loses from 500 (its postings, ~250 a novel
@@ -274,8 +274,7 @@ object ConnectedComponents {
     * one cap sits at the serve's crossover, and the appends lose nothing
     * by sharing it. perfbench's daily batches (120 rows, ~100–330 edges)
     * fall under it, except the rare batch of more than 300 edges, whose
-    * labels take the distributed plan; `link_batch`'s `idPairs` (~1,900
-    * rows) falls above it.
+    * labels take the distributed plan.
     *
     * Re-measured with the variant driver paths on one kernel
     * (`EditDistanceJoin.DriverKeys`), `serve` and `append` at 120,300,375
@@ -284,36 +283,71 @@ object ConnectedComponents {
     * 1.4x slower than the table (driver path ms, kernel / `541abdf`; the
     * 300- and 375-row batches are other draws than the table's):
     *
-    * | batch rows | reps serve | idPairs | variant append | key append |
-    * |---|---|---|---|---|
-    * | 120 | 806, 786 / 746, 1051 | 213, 236 / 264, 269 | 1098, 990 / 861, 1136 | 310, 299 / 418, 330 |
-    * | 300 | 866, 899 / 838, 1038 | 250, 305 / 243, 307 | 1090, 984 / 1141, 1215 | 294, 282 / 284, 300 |
-    * | 375 | 919, 1033 / 1073, 1101 | 281, 315 / 287, 282 | 1154, 1080 / 1168, 1193 | 295, 233 / 260, 281 |
+    * | batch rows | reps serve | variant append | key append |
+    * |---|---|---|---|
+    * | 120 | 806, 786 / 746, 1051 | 1098, 990 / 861, 1136 | 310, 299 / 418, 330 |
+    * | 300 | 866, 899 / 838, 1038 | 1090, 984 / 1141, 1215 | 294, 282 / 284, 300 |
+    * | 375 | 919, 1033 / 1073, 1101 | 1154, 1080 / 1168, 1193 | 295, 233 / 260, 281 |
     *
     * The reps serve still wins at 300 rows (866 / 882 and 899 / 923 ms
     * against its distributed plan) and loses at 375, so the cap stands.
     */
   private val DriverMaxRows = 300
 
-  /** The driver paths' caps: normalized edges for [[run]]'s driver
-    * finish, input rows for the small-input paths ([[DriverMaxRows]]).
+  /** Largest input [[EditDistanceJoin.idPairs]] links on the driver, in
+    * variant postings: the sum over its keyed rows of
+    * [[EditDistanceJoin.postingsOf]] their code points, so the postings
+    * the distributed plan would explode. Rows alone do not size the
+    * work: a 20-character name brings ~20 postings at maxDist 1 and ~220
+    * at maxDist 2.
+    *
+    * [[graft.tools.DriverCrossoverProbe]] `idpairs` times `idPairs` on
+    * both paths over a checkpointed corpus of pseudo-word company names
+    * (half new, the rest exact copies and 1–2-edit variants of earlier
+    * rows); local[4] with 4 shuffle partitions on a 4-vCPU container,
+    * median of 5 after each path is warmed until two consecutive runs
+    * agree within 15% (ms, driver path / distributed plan):
+    *
+    * | maxDist | rows | postings (a row) | driver / distributed |
+    * |---|---|---|---|
+    * | 2 | 2,000 | 493,118 (246) | 525 / 1149 |
+    * | 2 | 5,000 | 1,101,962 (220) | 836 / 1269 |
+    * | 2 | 10,000 | 2,242,976 (224) | 1421 / 1610 |
+    * | 2 | 20,000 | 4,538,016 (226) | 2480 / 2580 |
+    * | 1 | 20,000 | 407,107 (20) | 342 / 598 |
+    * | 1 | 50,000 | 1,012,669 (20) | 981 / 1111 |
+    * | 1 | 100,000 | 2,039,382 (20) | 2060 / 1831 |
+    * | 1 | 200,000 | 4,079,930 (20) | 5176 / 3081 |
+    *
+    * At maxDist 2 the paths tie near 4.5M postings; at maxDist 1, where
+    * the same postings are ten times the rows and the per-row collect
+    * dominates, between 1M and 2M. The budget sits at the lower one.
+    * perfbench's inputs fall under it: `link_batch`'s ~1,900 keys at
+    * maxDist 2 (~495k postings) and `daily_serve`'s corpus at maxDist 1
+    * (~150k).
     */
-  private[graft] final case class DriverCaps(edges: Long, rows: Int)
+  private val IdPairsMaxPostings = 1000000L
 
-  /** The driver paths' caps on the current thread: [[DriverFinishMaxEdges]]
-    * and [[DriverMaxRows]] unless a spec or probe overrides them. A seam,
-    * not a user option: it moves only the path choices, never a conf,
-    * so the plans of other joins stay as they are.
+  /** The driver paths' caps: normalized edges for [[run]]'s driver
+    * finish, input rows for the small-input paths ([[DriverMaxRows]]),
+    * and postings for `idPairs` ([[IdPairsMaxPostings]]).
     */
-  private[graft] val driverFinishCap =
-    new scala.util.DynamicVariable(DriverCaps(DriverFinishMaxEdges, DriverMaxRows))
+  private[graft] final case class DriverCaps(edges: Long, rows: Int, postings: Long)
+
+  /** The driver paths' caps on the current thread: [[DriverFinishMaxEdges]],
+    * [[DriverMaxRows]] and [[IdPairsMaxPostings]] unless a spec or probe
+    * overrides them. A seam, not a user option: it moves only the path
+    * choices, never a conf, so the plans of other joins stay as they are.
+    */
+  private[graft] val driverFinishCap = new scala.util.DynamicVariable(
+    DriverCaps(DriverFinishMaxEdges, DriverMaxRows, IdPairsMaxPostings))
 
   /** Runs `body` with every driver path off: CC runs it starts on this
     * thread take the star loop, and the serves, `idPairs` and the
     * condensed CC take their distributed plans.
     */
   private[graft] def onStarLoop[T](body: => T): T =
-    driverFinishCap.withValue(DriverCaps(0L, 0))(body)
+    driverFinishCap.withValue(DriverCaps(0L, 0, 0L))(body)
 
   /** `f` over `df`'s internal rows, run as one SQL execution, so the
     * driver paths' collects reach listeners and the UI like any action.
@@ -323,23 +357,74 @@ object ConnectedComponents {
     SQLExecution.withNewExecutionId(qe, Some("collect"))(f(qe.toRdd))
   }
 
-  /** `df`'s rows (copied) when it has at most the row cap of them, else
-    * None. One job, each partition returning at most cap + 1 rows; no
-    * job when the cap is 0, or when `df`'s optimized plan is a local
-    * relation, whose rows are answered from the plan.
+  /** `df`'s rows (copied) when their total `weight` is at most `budget`
+    * (by default one a row against the row cap), else None: the one
+    * bounded collect of every driver path. No job when the budget is 0,
+    * or when `df`'s optimized plan is a local relation, whose rows are
+    * answered from the plan. Otherwise partitions are read in waves, one
+    * job each: the first 4x the default parallelism's partitions, each
+    * later one 4x larger. (A first wave of the default parallelism alone
+    * would cost a daily serve a second job: its edges are two local
+    * frames' scans, one partition a core each, pinned as one frame.) A
+    * task stops once its rows' weight passes the budget left after the
+    * earlier waves, and the collect stops once the running weight passes
+    * the budget, so an input over it costs one wave, not a read of every
+    * partition. A task also stops once its rows pass its share of
+    * `spark.driver.maxResultSize` (half of it, split over the wave's
+    * tasks): a stopped task returns no rows, so no wave's results grow
+    * with the partition count, and an input whose rows the driver could
+    * not take runs the distributed plan instead of failing.
     */
-  private[graft] def smallRows(df: DataFrame): Option[Array[InternalRow]] = {
-    val cap = driverFinishCap.value.rows
-    if (cap <= 0) None
-    else {
-      val rows = df.queryExecution.optimizedPlan match {
-        case local: LocalRelation =>
-          local.data.iterator.take(cap + 1).map(_.copy()).toArray
-        case _ =>
-          withRows(df)(_.mapPartitions(_.take(cap + 1).map(_.copy())).collect())
+  private[graft] def smallRows(df: DataFrame, budget: Long = driverFinishCap.value.rows,
+                               weight: InternalRow => Long = _ => 1L)
+      : Option[Array[InternalRow]] =
+    if (budget <= 0) None
+    else df.queryExecution.optimizedPlan match {
+      case local: LocalRelation =>
+        within(local.data.iterator, budget, Long.MaxValue, weight).map(_._1)
+      case _ => withRows(df) { rdd =>
+        val sc = rdd.sparkContext
+        val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+        val out = Array.newBuilder[InternalRow]
+        var total = 0L
+        var from = 0
+        var width = 4L * math.max(sc.defaultParallelism, 1)
+        while (total <= budget && from < rdd.getNumPartitions) {
+          val wave = from until math.min(from + width, rdd.getNumPartitions.toLong).toInt
+          val left = budget - total
+          val maxBytes = if (maxResult > 0) maxResult / 2 / wave.size else Long.MaxValue
+          val got = sc.runJob(rdd,
+            (rows: Iterator[InternalRow]) => within(rows, left, maxBytes, weight), wave)
+          if (got.contains(None)) total = Long.MaxValue
+          else got.foreach { case Some((rows, w)) => out ++= rows; total += w; case None => }
+          from = wave.end
+          width *= 4
+        }
+        if (total <= budget) Some(out.result()) else None
       }
-      if (rows.length <= cap) Some(rows) else None
     }
+
+  /** `rows` (copied) and their total weight, or None once the weight
+    * passes `left` or the rows' bytes (their unsafe size plus a row's
+    * share of serialization) pass `maxBytes`.
+    */
+  private def within(rows: Iterator[InternalRow], left: Long, maxBytes: Long,
+                     weight: InternalRow => Long): Option[(Array[InternalRow], Long)] = {
+    val out = Array.newBuilder[InternalRow]
+    var w = 0L
+    var bytes = 0L
+    while (rows.hasNext) {
+      val r = rows.next()
+      val rw = weight(r)
+      bytes += (r match {
+        case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow => u.getSizeInBytes
+        case _ => 0
+      }) + 32
+      if (rw > left - w || bytes > maxBytes) return None
+      w += rw
+      out += r.copy()
+    }
+    Some((out.result(), w))
   }
 
   /** Every row of `df`, copied, in one collect. */

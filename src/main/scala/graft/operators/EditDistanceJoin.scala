@@ -39,7 +39,9 @@ object EditDistanceJoin {
   case object Naive extends Strategy
   case object DeletionNeighborhood extends Strategy
 
-  /** All ≤k-deletion variants of s (including s itself), distinct.
+  /** All ≤k-deletion variants of s (including s itself), distinct: the
+    * reference spelling of [[deletionVariantHashes]], kept for its
+    * property spec and the superset property in EditDistanceJoinSpec.
     *
     * Deletions remove whole CODE POINTS, not UTF-16 units: Spark's and
     * DuckDB's `levenshtein` count code points, so a supplementary-plane
@@ -70,10 +72,11 @@ object EditDistanceJoin {
     seen.toArray
   }
 
-  /** FNV-1a 64-bit over UTF-16 units. Only used to give each deletion
-    * variant a narrow join key, so the only property needed is
-    * determinism; a collision only ADDS a candidate pair, which the exact
-    * levenshtein verify then removes.
+  /** FNV-1a 64-bit over UTF-16 units: each deletion variant's narrow
+    * join key, spelled over a whole string as the reference for
+    * [[deletionVariantHashes]]' running form. The only property needed
+    * is determinism; a collision only ADDS a candidate pair, which the
+    * exact levenshtein verify then removes.
     */
   private[graft] def fnv1a64(s: String): Long = {
     var h = 0xcbf29ce484222325L
@@ -96,9 +99,81 @@ object EditDistanceJoin {
     * Dedup on the hash is exact enough: two distinct variants of the SAME
     * row that collide would have produced identical join keys anyway, so
     * emitting the hash once loses no candidate.
+    *
+    * No variant string is built: each deletion combination's hash comes
+    * from a running [[fnv1a64]] prefix state into a pre-sized long[],
+    * which is then sorted and made unique, so the result is
+    * `deletionVariants(s, k).map(fnv1a64).distinct` as a set, in
+    * ascending order (property-spec'd in EditDistanceJoinSpec).
     */
-  private[graft] def deletionVariantHashes(s: String, k: Int): Array[Long] =
-    deletionVariants(s, k).map(fnv1a64)
+  private[graft] def deletionVariantHashes(s: String, k: Int): Array[Long] = {
+    val cps = s.codePoints().toArray
+    val n = cps.length
+    // fnv1a64's step over the UTF-16 units of code points [from, until)
+    def feed(h0: Long, from: Int, until: Int): Long = {
+      var h = h0
+      var p = from
+      while (p < until) {
+        val c = cps(p)
+        if (c < Character.MIN_SUPPLEMENTARY_CODE_POINT) h = (h ^ c) * 0x100000001b3L
+        else {
+          h = (h ^ Character.highSurrogate(c)) * 0x100000001b3L
+          h = (h ^ Character.lowSurrogate(c)) * 0x100000001b3L
+        }
+        p += 1
+      }
+      h
+    }
+    var out = new Array[Long](math.min(postingsOf(n, k), 1L << 16).toInt)
+    var m = 0
+    // Every deletion set, once per distinct left-packed form within a run
+    // of equal code points (deleting the second of "aa" gives what
+    // deleting the first does): `h` is the running FNV-1a state over the
+    // kept code points before `from`, and the code point before `from`
+    // was deleted when `afterDeletion`. Recursion depth is at most k + 1.
+    def emit(from: Int, h: Long, left: Int, afterDeletion: Boolean): Unit = {
+      if (m == out.length) out = java.util.Arrays.copyOf(out, m * 2)
+      out(m) = feed(h, from, n)
+      m += 1
+      if (left > 0) {
+        var kept = h
+        var p = from
+        while (p < n) {
+          if (p == 0 || (p == from && afterDeletion) || cps(p - 1) != cps(p))
+            emit(p + 1, kept, left - 1, afterDeletion = true)
+          kept = feed(kept, p, p + 1)
+          p += 1
+        }
+      }
+    }
+    emit(0, 0xcbf29ce484222325L, k, afterDeletion = false)
+    java.util.Arrays.sort(out, 0, m)
+    var u = 0
+    var i = 0
+    while (i < m) {
+      if (u == 0 || out(i) != out(u - 1)) { out(u) = out(i); u += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(out, u)
+  }
+
+  /** Σ_{d ≤ k} C(n, d), saturating at Long.MaxValue: the deletion
+    * combinations of an n-code-point key, so the most postings it can
+    * bring at maxDist k.
+    */
+  private[graft] def postingsOf(n: Int, k: Int): Long = {
+    var c = 1L
+    var sum = 1L
+    var d = 1
+    while (d <= math.min(k, n)) {
+      if (c > Long.MaxValue / (n - d + 1)) return Long.MaxValue
+      c = c * (n - d + 1) / d
+      if (sum > Long.MaxValue - c) return Long.MaxValue
+      sum += c
+      d += 1
+    }
+    sum
+  }
 
   /** Verified UNDIRECTED id pairs (id_a < id_b) with lev <= maxDist — the
     * shared core of [[pairs]] and [[linkedAggregate]].
@@ -257,66 +332,170 @@ object EditDistanceJoin {
     * re-attach runs inside the shared core, where the verify needs the
     * keys anyway; this form just drops them). `df` must have unique
     * values in idCol (same contract as [[pairs]]).
+    *
+    * An input of at most [[ConnectedComponents]]' postings budget
+    * (`IdPairsMaxPostings`: the sum over keyed rows of [[postingsOf]]
+    * their code points, the variant postings the distributed plan would
+    * explode) is linked on the driver instead ([[driverIdPairs]]): one
+    * bounded collect ([[ConnectedComponents.smallRows]], one job for an
+    * input of up to 4x the default parallelism's partitions, none for a
+    * local frame), then the primitive kernel of [[DriverKeys]]. Above the
+    * budget, or when the pairs would outnumber it, the plan runs.
     */
   def idPairs(df: DataFrame, idCol: String, keyCol: String,
               maxDist: Int): DataFrame = {
     val keyed = keyedRows(df, idCol, keyCol)
     val plan = halfIdPairs(keyed, maxDist).select("id_a", "id_b")
-    driverKeys(keyed, maxDist).fold(plan)(driverIdPairs(_, plan))
+    val budget = ConnectedComponents.driverFinishCap.value.postings
+    ConnectedComponents.smallRows(keyed, budget,
+        r => postingsOf(r.getUTF8String(1).numChars, maxDist))
+      .flatMap(rows => driverIdPairs(
+        new DriverKeys(rows, keyed.schema("id").dataType, maxDist), plan, budget))
+      .getOrElse(plan)
   }
 
   /** The driver form of [[distinctKeys]], [[variantPostings]] and the
-    * candidate/verify half of [[matchAgainstPostings]], over keyed rows
-    * collected under [[ConnectedComponents]]' row cap ([[driverKeys]]):
-    * the one spelling of the variant rules that [[driverIdPairs]],
-    * [[driverServe]] and [[driverAppendSlices]] share. It holds the
-    * distinct keys; each key's ids in input order, nulls included, and
-    * its gid (the min non-null id, null when every id is null, as `min`
-    * gives); the keys' `numChars` lengths; and their variant hashes
-    * ([[deletionVariantHashes]]), computed once and only for the keys a
+    * candidate/verify half of [[matchAgainstPostings]], over collected
+    * keyed rows: the one spelling of the variant rules that
+    * [[driverIdPairs]], [[driverServe]] and [[driverAppendSlices]]
+    * share. It numbers the distinct keys in input order; holds each key's
+    * rows as a chain of row indices (so its ids in input order, nulls
+    * included), its gid (the min non-null id, null when every id is null,
+    * as `min` gives) and its `numChars` length; and computes a key's
+    * variant hashes ([[deletionVariantHashes]]) once, only for the keys a
     * path asks about.
     *
-    * `verified` is the kernel. Only keys with a gid can match, as on the
-    * distributed plans, whose gid re-attach drops a null gid. Each (gid,
-    * key, len, hash) posting meets the keys indexed under its hash within
-    * the length band, and each distinct (key index, gid, posting key)
-    * candidate that `keep` accepts is verified once with Spark's own
+    * The kernel is primitive. Only keys with a gid can match, as on the
+    * distributed plans, whose gid re-attach drops a null gid. Their
+    * postings are chained by hash (a `LongMap` head, an `int[]` next);
+    * each probing posting meets the keys chained under its hash within
+    * the length band, and the candidates that `keep` accepts are packed
+    * into `long` (key index, posted index) pairs, sorted, made unique and
+    * verified once each with Spark's own
     * `UTF8String.levenshteinDistance(_, maxDist)`, which returns the
     * distance itself when it is within the bound.
     */
   private final class DriverKeys(val rows: Array[InternalRow], idType: DataType,
                                  val maxDist: Int) {
     val ord: Ordering[Any] = TypeUtils.getInterpretedOrdering(idType)
-    val idsOf: Map[UTF8String, Seq[Any]] =
-      rows.toSeq.groupMap(_.getUTF8String(1))(_.get(0, idType))
-    val keys: IndexedSeq[UTF8String] = idsOf.keys.toIndexedSeq
-    def ids(i: Int): Seq[Any] = idsOf(keys(i))
-    val gids: IndexedSeq[Any] =
-      keys.map(idsOf(_).filter(_ != null).minOption(ord).orNull)
-    val lens: IndexedSeq[Int] = keys.map(_.numChars)
-    val matchable: Seq[Int] = keys.indices.filter(gids(_) != null)
-    private val variants = mutable.HashMap.empty[Int, Array[Long]]
-    private def hashes(i: Int): Array[Long] = variants.getOrElseUpdate(i,
-      deletionVariantHashes(keys(i).toString, maxDist))
-    /** The (gid, key, len, hash) postings of the keys `of`. */
-    def postings(of: Seq[Int]): Iterator[(Any, UTF8String, Int, Long)] =
-      for (i <- of.iterator; v <- hashes(i).iterator)
-        yield (gids(i), keys(i), lens(i), v)
-    lazy val byHash: mutable.LongMap[List[Int]] = {
-      val m = mutable.LongMap.empty[List[Int]]
-      for (i <- matchable; v <- hashes(i)) m(v) = i :: m.getOrElse(v, Nil)
-      m
+    private val keyOf = new Array[Int](rows.length)
+    val keys: Array[UTF8String] = {
+      val index = mutable.HashMap.empty[UTF8String, Int]
+      val out = mutable.ArrayBuffer.empty[UTF8String]
+      for (r <- rows.indices) {
+        val key = rows(r).getUTF8String(1)
+        keyOf(r) = index.getOrElseUpdate(key, { out += key; out.length - 1 })
+      }
+      out.toArray
     }
-    def verified(posted: Iterator[(Any, UTF8String, Int, Long)],
-                 keep: (Int, Any) => Boolean = (_, _) => true)
+    // each key's first row and each row's next of the same key (-1 ends)
+    private val firstRow = Array.fill(keys.length)(-1)
+    private val nextRow = Array.fill(rows.length)(-1)
+    /** Rows per key. */
+    val sizes = new Array[Int](keys.length)
+    locally {
+      val lastRow = new Array[Int](keys.length)
+      for (r <- rows.indices) {
+        val i = keyOf(r)
+        if (firstRow(i) < 0) firstRow(i) = r else nextRow(lastRow(i)) = r
+        lastRow(i) = r
+        sizes(i) += 1
+      }
+    }
+    /** Key i's ids in input order, nulls included. */
+    def ids(i: Int): Iterator[Any] =
+      Iterator.iterate(firstRow(i))(nextRow(_)).takeWhile(_ >= 0).map(rows(_).get(0, idType))
+    val gids: Array[Any] =
+      Array.tabulate(keys.length)(ids(_).filter(_ != null).minOption(ord).orNull)
+    val lens: Array[Int] = keys.map(_.numChars)
+    val matchable: Array[Int] = keys.indices.filter(gids(_) != null).toArray
+    private val variants = new Array[Array[Long]](keys.length)
+    def hashes(i: Int): Array[Long] = {
+      if (variants(i) == null)
+        variants(i) = deletionVariantHashes(keys(i).toString, maxDist)
+      variants(i)
+    }
+
+    /** The matchable keys' postings: posting p is hash `hash(p)` of key
+      * `key(p)`; `head(v)` is the last posting of hash v and `next(p)`
+      * the one chained before p (-1 ends).
+      */
+    private final class Postings {
+      val key: Array[Int] = matchable.flatMap(i => Array.fill(hashes(i).length)(i))
+      val hash: Array[Long] = matchable.flatMap(hashes)
+      val next = new Array[Int](key.length)
+      val head = new mutable.LongMap[Int](key.length)
+      for (p <- key.indices) {
+        next(p) = head.getOrElse(hash(p), -1)
+        head(hash(p)) = p
+      }
+    }
+    private lazy val postings = new Postings
+    /** Every hash the matchable keys post. */
+    def postedHashes: Seq[Long] = postings.head.keys.toSeq
+
+    /** Verified (key index, posted index, distance) triples of the
+      * probing postings p: posted key `of(p)` (`postedKey`,
+      * `postedLen`), hash `hash(p)`.
+      */
+    private def verified(of: Array[Int], hash: Array[Long],
+                         postedKey: Array[UTF8String], postedLen: Array[Int],
+                         keep: (Int, Int) => Boolean): Array[(Int, Int, Int)] = {
+      val cand = new mutable.ArrayBuilder.ofLong
+      var p = 0
+      while (p < of.length) {
+        val j = of(p)
+        var q = postings.head.getOrElse(hash(p), -1)
+        while (q >= 0) {
+          val i = postings.key(q)
+          if (math.abs(lens(i) - postedLen(j)) <= maxDist && keep(i, j))
+            cand += (i.toLong << 32) | j
+          q = postings.next(q)
+        }
+        p += 1
+      }
+      val packed = cand.result()
+      java.util.Arrays.sort(packed)
+      val out = mutable.ArrayBuilder.make[(Int, Int, Int)]
+      p = 0
+      while (p < packed.length) {
+        if (p == 0 || packed(p) != packed(p - 1)) {
+          val (i, j) = ((packed(p) >>> 32).toInt, packed(p).toInt)
+          val d = keys(i).levenshteinDistance(postedKey(j), maxDist)
+          if (d >= 0) out += ((i, j, d))
+        }
+        p += 1
+      }
+      out.result()
+    }
+
+    /** Verified key pairs (a, b, distance) under [[halfIdPairs]]' half
+      * order gid_a < gid_b, from the keys' own postings.
+      */
+    def selfPairs(): Array[(Int, Int, Int)] = {
+      val rank = Array.fill(keys.length)(-1)
+      val byGid = matchable.sortWith((a, b) => ord.lt(gids(a), gids(b)))
+      for (r <- byGid.indices)
+        rank(byGid(r)) = if (r > 0 && !ord.lt(gids(byGid(r - 1)), gids(byGid(r))))
+          rank(byGid(r - 1)) else r
+      verified(postings.key, postings.hash, keys, lens, (a, b) => rank(a) < rank(b))
+    }
+
+    /** Verified (key index, posting gid, posting key, distance) of
+      * standing (gid, key, len, hash) postings.
+      */
+    def against(posted: Iterator[(Any, UTF8String, Int, Long)])
         : Seq[(Int, Any, UTF8String, Int)] = {
-      val cand = mutable.LinkedHashSet.empty[(Int, Any, UTF8String)]
-      for ((g, key, len, v) <- posted; i <- byHash.getOrElse(v, Nil)
-           if math.abs(lens(i) - len) <= maxDist && keep(i, g))
-        cand += ((i, g, key))
-      for ((i, g, key) <- cand.toSeq;
-           d = keys(i).levenshteinDistance(key, maxDist) if d >= 0)
-        yield (i, g, key, d)
+      val index = mutable.HashMap.empty[(Any, UTF8String), Int]
+      val (gid, key, len) = (mutable.ArrayBuffer.empty[Any],
+        mutable.ArrayBuffer.empty[UTF8String], mutable.ArrayBuilder.make[Int])
+      val (of, hash) = (mutable.ArrayBuilder.make[Int], new mutable.ArrayBuilder.ofLong)
+      for ((g, k, l, v) <- posted) {
+        of += index.getOrElseUpdate((g, k), { gid += g; key += k; len += l; gid.length - 1 })
+        hash += v
+      }
+      verified(of.result(), hash.result(), key.toArray, len.result(), (_, _) => true)
+        .toSeq.map { case (i, j, d) => (i, gid(j), key(j), d) }
     }
   }
 
@@ -325,22 +504,29 @@ object EditDistanceJoin {
     ConnectedComponents.smallRows(keyed)
       .map(new DriverKeys(_, keyed.schema("id").dataType, maxDist))
 
-  /** [[idPairs]] on the driver ([[DriverKeys]]): the keys' own postings
-    * under [[halfIdPairs]]' half order gid_a < gid_b, and each verified
-    * key pair expanded to its groups' ids. A cross pair (x, y) keeps its
+  /** [[idPairs]] on the driver ([[DriverKeys]]): the verified key pairs,
+    * each expanded to its groups' ids. A cross pair (x, y) keeps its
     * order only when both ids are non-null and x < y, else it is (y, x),
     * the distributed plan's `when(__ia < __ib)`; intra-group pairs skip
-    * null ids. A local frame with `plan`'s schema.
+    * null ids. A local frame with `plan`'s schema, or None when the pairs
+    * could outnumber `budget`: the driver holds no output bigger than the
+    * postings it would accept as input.
     */
-  private def driverIdPairs(dk: DriverKeys, plan: DataFrame): DataFrame = {
+  private def driverIdPairs(dk: DriverKeys, plan: DataFrame,
+                            budget: Long): Option[DataFrame] = {
     def lt(x: Any, y: Any) = x != null && y != null && dk.ord.lt(x, y)
-    val cross = for ((a, _, kb, _) <- dk.verified(dk.postings(dk.matchable),
-                       (a, gb) => dk.ord.lt(dk.gids(a), gb));
-                     x <- dk.ids(a); y <- dk.idsOf(kb))
-      yield if (lt(x, y)) InternalRow(x, y) else InternalRow(y, x)
-    val intra = for (i <- dk.keys.indices; x <- dk.ids(i); y <- dk.ids(i)
-                     if lt(x, y)) yield InternalRow(x, y)
-    ConnectedComponents.localFrame(plan.sparkSession, plan.schema, cross ++ intra)
+    val verified = dk.selfPairs()
+    val bound = verified.iterator.map { case (a, b, _) => dk.sizes(a).toLong * dk.sizes(b) }.sum +
+      dk.sizes.iterator.map(f => f.toLong * (f - 1) / 2).sum
+    if (bound > budget) None
+    else {
+      val cross = for ((a, b, _) <- verified.iterator; x <- dk.ids(a); y <- dk.ids(b))
+        yield if (lt(x, y)) InternalRow(x, y) else InternalRow(y, x)
+      val intra = for (i <- dk.keys.indices.iterator if dk.sizes(i) > 1;
+                       x <- dk.ids(i); y <- dk.ids(i) if lt(x, y)) yield InternalRow(x, y)
+      Some(ConnectedComponents.localFrame(plan.sparkSession, plan.schema,
+        (cross ++ intra).toSeq))
+    }
   }
 
   /** Cross-table edit-distance match: every `left` row paired with every
@@ -554,7 +740,7 @@ object EditDistanceJoin {
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = bk.sparkSession
     val standing = ConnectedComponents.probe(
-        spark.table(s"${tablePrefix}_members").select("key"), "key", dk.keys)
+        spark.table(s"${tablePrefix}_members").select("key"), "key", dk.keys.toSeq)
       .map(_.getUTF8String(0)).toSet
     val novel = dk.keys.indices.filterNot(i => standing(dk.keys(i)))
     val keys = distinctKeys(bk)
@@ -562,8 +748,8 @@ object EditDistanceJoin {
       ConnectedComponents.localFrame(spark, plan.schema, out)
     (local(bk, dk.rows.toSeq),
       local(keys, novel.map(i => InternalRow(dk.keys(i), dk.gids(i)))),
-      local(variantPostings(keys, dk.maxDist), dk.postings(novel)
-        .map { case (g, _, len, v) => InternalRow(g, len, v) }.toSeq))
+      local(variantPostings(keys, dk.maxDist),
+        for (i <- novel; v <- dk.hashes(i)) yield InternalRow(dk.gids(i), dk.lens(i), v)))
   }
 
   /** The append's novelty check, shaped for the standing side: the
@@ -697,7 +883,7 @@ object EditDistanceJoin {
     val keyTable = table("keys")
     val gidType = keyTable.schema("gid").dataType
     val hashes = ConnectedComponents.probeKeys(postings.sparkSession,
-      LongType, dk.byHash.keys.toSeq)
+      LongType, dk.postedHashes)
     val matched = postings.join(broadcast(hashes),
       postings("__v") === hashes("__probe"), "left_semi")
     val posted = if (dk.matchable.isEmpty) Array.empty[InternalRow]
@@ -705,7 +891,7 @@ object EditDistanceJoin {
           .join(broadcast(matched), keyTable("gid") === matched("gid"))
           .select(keyTable("gid"), keyTable("key"), matched("__len"),
             matched("__v")))
-    val verified = dk.verified(posted.iterator.map(p =>
+    val verified = dk.against(posted.iterator.map(p =>
       (p.get(0, gidType), p.getUTF8String(1), p.getInt(2), p.getLong(3))))
     val out = if (expandRight) {
       val members = table("members").select("id", "key")

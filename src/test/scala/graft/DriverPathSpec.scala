@@ -290,6 +290,79 @@ class DriverPathSpec extends SparkSpec {
     }
   }
 
+  /** Over 300 keyed rows: the synthetic dictionary, then the hand-made
+    * rows (duplicated keys, astral-plane keys, null keys) under ids past
+    * it, a null id in a duplicated key, and a key of two null ids.
+    */
+  private def overRowCap(idType: String): DataFrame = withNullIds(
+    syntheticDict.as[(Long, String)].collect().toSeq.map { case (i, n) => (Option(i), n) } ++
+      (dictRows ++ batchRows).map { case (i, n) => (Option(i + 100000L), n) } ++
+      Seq((None, "Acme Gmbh"), (None, "Ghost Co"), (None, "Ghost Co")), idType)
+
+  /** The postings `idPairs` counts for `df`'s keys at maxDist `d`. */
+  private def postingsIn(df: DataFrame, d: Int): Long =
+    df.select("name").as[Option[String]].collect().flatten
+      .map(n => EditDistanceJoin.postingsOf(n.codePointCount(0, n.length), d)).sum
+
+  test("idPairs above the row cap and within the postings budget: the driver path equals the distributed plan at 3 and 4 shuffle partitions") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try for (t <- idTypes; d <- Seq(1, 2)) withClue(s"[$t ids, maxDist=$d] ") {
+      val df = overRowCap(t).localCheckpoint(true)
+      assert(df.filter(col("name").isNotNull).count() > 300)
+      val byParts = for (parts <- Seq(3, 4)) yield {
+        spark.conf.set(key, parts.toString)
+        onBothPaths(s"idPairs, $parts shuffle partitions")(
+          EditDistanceJoin.idPairs(df, "id", "name", d))
+      }
+      assert(byParts.distinct.size == 1)
+      // intra-group, null-holding and astral-plane pairs all reach it
+      val got = byParts.head
+      assert(got.keys.exists(_.contains(null)) && got.size > 20, got.size)
+      val Seq(five, six) = frame(Seq((100005L, ""), (100006L, "")), t)
+        .collect().toSeq.map(_.get(0))
+      assert(got.contains(Seq(five, six)), "x😀y ~ x😀😀y")
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("idPairs takes the driver path up to its postings budget and the distributed plan past it") {
+    val df = overRowCap("int").localCheckpoint(true)
+    for (d <- Seq(1, 2)) withClue(s"[maxDist=$d] ") {
+      val postings = postingsIn(df, d)
+      def at(budget: Long) = ConnectedComponents.driverFinishCap.withValue(
+          ConnectedComponents.driverFinishCap.value.copy(postings = budget))(
+        EditDistanceJoin.idPairs(df, "id", "name", d))
+      assert(isLocal(at(postings)), s"$postings postings, budget $postings")
+      assert(!isLocal(at(postings - 1)), s"$postings postings, budget ${postings - 1}")
+      assert(rowBag(at(postings)) == rowBag(at(postings - 1)))
+    }
+    // a flooded key: 120 rows bring 360 postings at maxDist 1, but 7,140
+    // intra-group pairs, which the driver does not hold
+    val flood = frame((1L to 120L).map(i => (i, "ab")), "int").localCheckpoint(true)
+    val budget = ConnectedComponents.driverFinishCap.value.copy(postings = postingsIn(flood, 1))
+    val pairs = ConnectedComponents.driverFinishCap.withValue(budget)(
+      EditDistanceJoin.idPairs(flood, "id", "name", 1))
+    assert(!isLocal(pairs) && pairs.count() == 120 * 119 / 2)
+  }
+
+  test("idPairs on the driver path collects its input in one job, and a local frame in none") {
+    val pinned = syntheticDict.localCheckpoint(true)
+    assert(pinned.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
+    for (d <- Seq(1, 2)) withClue(s"[maxDist=$d] ") {
+      assert(jobsIn(assert(isLocal(EditDistanceJoin.idPairs(pinned, "id", "name", d)))) == 1)
+      assert(jobsIn(assert(isLocal(EditDistanceJoin.idPairs(syntheticDict, "id", "name", d)))) == 0)
+    }
+  }
+
+  test("idPairs over 200 partitions takes the distributed plan under a 1m spark.driver.maxResultSize") {
+    import org.apache.spark.graftbridge.ContextConfBridge
+    val df = spark.range(0L, 200000L, 1L, 200).select(col("id"), col("id").cast("string").as("name"))
+    ContextConfBridge.withConf(spark.sparkContext, "spark.driver.maxResultSize", "1m") {
+      // the plan itself runs more tasks than this limit takes results of
+      assert(!isLocal(EditDistanceJoin.idPairs(df, "id", "name", 1)))
+    }
+  }
+
   test("incrementalAssign and mergeRepublish: the driver path equals the distributed plan") {
     // standing {1,2} label 1, {5,6} label 5, {8} alone
     val standingRows = Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L), (8L, 8L))

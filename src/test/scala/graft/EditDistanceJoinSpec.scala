@@ -28,6 +28,26 @@ class EditDistanceJoinSpec extends SparkSpec {
     assert(fromExpr == expected)
   }
 
+  test("property: the running-hash generator equals its reference spelling") {
+    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Prop.forAll
+    val genStr = for {
+      n <- Gen.choose(0, 12)
+      cs <- Gen.listOfN(n, Gen.oneOf("a", "b", "é", "😀"))
+    } yield cs.mkString
+    val prop = forAll(genStr, Gen.choose(0, 3)) { (s, k) =>
+      val got = EditDistanceJoin.deletionVariantHashes(s, k)
+      val want = deletionVariants(s, k).map(EditDistanceJoin.fnv1a64).distinct
+      Prop(got.toSet == want.toSet && got.length == got.distinct.length)
+        .label(s"s='$s' k=$k")
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(1000), prop)
+    assert(res.passed, res.status.toString)
+    assert(EditDistanceJoin.postingsOf(12, 3) == 1 + 12 + 66 + 220)
+    assert(EditDistanceJoin.postingsOf(2, 3) == 4)
+  }
+
   // The correctness heart of the SymSpell join, as a property: for ANY
   // string a and ANY b produced by <= k random edits of a, the two
   // <=k-deletion neighborhoods share a variant — so the equi-join on
